@@ -23,6 +23,14 @@ from epicsarchiver_spark.sources import points_store, pvlist
 class PVArchEngine:
     """Query surface over a points store + dimension tables.
 
+    Single-series reads (``get_data``, ``get_value_at_time`` and the
+    plots built on them) scan one bucket per run when ``points`` carries
+    the store's recorded bucket count — ``read_points`` attaches it to
+    the ``bucket`` column from the store's ``_buckets`` record. Without
+    that record (a legacy store, or a frame that dropped ``bucket``) they
+    filter on ``pvname`` only: the engine never prunes with a bucket
+    count it did not read from the store.
+
     Parameters
     ----------
     spark : SparkSession
@@ -74,8 +82,7 @@ class PVArchEngine:
         t0, t1 = self._window(tmin, tmax)
         if lookback == "auto":
             lookback = self._default_lookback()
-        series = self.points.filter(F.col("pvname") == pvname)
-        out = timeseries.get_data(series, t0, t1, lookback=lookback)
+        out = timeseries.get_data(self._series(pvname), t0, t1, lookback=lookback)
         if with_current and self._cache is not None:
             out = timeseries.with_current(
                 out, self._cache.filter(F.col("pvname") == pvname)
@@ -91,9 +98,7 @@ class PVArchEngine:
         if lookback == "auto":
             lookback = self._default_lookback()
         row = (
-            timeseries.value_at_time(
-                self.points.filter(F.col("pvname") == pvname), t, lookback=lookback
-            )
+            timeseries.value_at_time(self._series(pvname), t, lookback=lookback)
             .select("time", "value")
             .head()
         )
@@ -258,6 +263,14 @@ class PVArchEngine:
         return bool(row.alive) if row is not None else False
 
     # --- helpers ---
+
+    def _series(self, pvname: str) -> DataFrame:
+        """One series' points, bucket-pruned iff the store recorded its
+        bucket count (see the class docstring)."""
+        n_buckets = points_store.buckets_of_frame(self.points)
+        if n_buckets is None:
+            return self.points.filter(F.col("pvname") == pvname)
+        return points_store.series_filter(self.points, pvname, n_buckets)
 
     def _window(self, tmin, tmax) -> tuple[float, float]:
         """Resolve each bound INDEPENDENTLY — mixed windows like

@@ -53,9 +53,14 @@ def get_spark(app_name: str = "epicsarchiver-spark", shuffle_partitions: int | N
         # whose output exceeds ~1 GB of concurrent batches dies in
         # netty's direct arena — found by tools/scale_probe.py at ×10
         # data). Cluster deployments size executors explicitly instead.
+        # Listing stays on the driver: Spark lists a level of more than
+        # 32 sibling dirs (each 128-bucket run of the points store) with
+        # a job, whose tasks would run in this same JVM anyway, so that
+        # job only adds a launch per run to every store open.
         builder = (
             builder.master(f"local[{cores}]")
             .config("spark.ui.enabled", "false")
+            .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
             .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
             .config(
                 "spark.driver.extraJavaOptions", "-XX:MaxDirectMemorySize=8g"

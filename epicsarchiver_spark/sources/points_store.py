@@ -6,6 +6,7 @@ zarr columnar bolt-on (archiver.py:542-608). Engine layout: ONE parquet
 dataset,
 
     points/run=<run>/bucket=<xxhash64(pvname) % N>/*.parquet
+    points/_buckets                      (N, the store's bucket record)
 
 - ``run`` partition column  → the reference's run rotation becomes a
   metadata no-op; time-range queries prune runs via the runs dimension
@@ -15,6 +16,18 @@ dataset,
   a single-series query scans 1/N of each run. Within a file, rows are
   sorted by (pvname, time) so parquet row-group min/max stats prune
   further and range reads are sequential.
+- ``_buckets`` → N is recorded once, by the first write into an empty
+  or absent store (``write_points`` / ``streaming.ingest.archive_query``);
+  later writes with another N are refused, since they would spread one
+  series over two buckets. The ``_`` prefix keeps it out of Spark's file
+  listing. ``read_points`` attaches the recorded N to the ``bucket``
+  column's metadata, and ``api.PVArchEngine`` prunes single-series reads
+  with ``series_filter`` only from that recorded N: a store written
+  before the record existed (or a frame without ``bucket``) is read by
+  ``pvname`` alone, never with an assumed ``DEFAULT_BUCKETS``.
+- Listing the store is driver-side in local mode (``session.get_spark``
+  raises Spark's parallel partition-discovery threshold there), so an
+  open costs directory listings, not a listing job per run.
 - At cluster scale the same layout bucket-aligns the shuffle for
   per-series windows; local tests keep N small.
 """
@@ -25,10 +38,73 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 128
+BUCKETS_FILE = "_buckets"  # the store's bucket record, at its root
+BUCKETS_META = "n_buckets"  # read_points' metadata key on the bucket column
 
 
 def bucket_of(name_col, n_buckets: int = DEFAULT_BUCKETS):
     return F.pmod(F.xxhash64(name_col), F.lit(n_buckets)).cast("int")
+
+
+def _fs(spark: SparkSession, path: str):
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
+
+
+def _holds_data(spark: SparkSession, path: str) -> bool | None:
+    """Whether the store directory holds an entry Spark's reader lists
+    (``_``/``.`` entries are bookkeeping: the bucket record,
+    ``_SUCCESS``, checksums); None if there is no such directory."""
+    fs, P = _fs(spark, path)
+    if not fs.exists(P(path)):
+        return None
+    return any(
+        not st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(P(path))
+    )
+
+
+def recorded_buckets(spark: SparkSession, path: str) -> int | None:
+    """The store's recorded bucket count, or None (absent or legacy store)."""
+    fs, P = _fs(spark, path)
+    rec = P(f"{path}/{BUCKETS_FILE}")
+    if not fs.exists(rec):
+        return None
+    jio = spark._jvm.java.io
+    reader = jio.BufferedReader(jio.InputStreamReader(fs.open(rec), "UTF-8"))
+    try:
+        return int(reader.readLine())
+    finally:
+        reader.close()
+
+
+def claim_buckets(spark: SparkSession, path: str, n_buckets: int) -> bool:
+    """Check a write of ``n_buckets`` against the store's record. Raises
+    on a mismatch; returns True iff the store holds neither data nor a
+    record, i.e. the write about to land should stamp ``n_buckets``. A
+    store with data but no record stays unrecorded: its count is
+    unknown."""
+    rec = recorded_buckets(spark, path)
+    if rec is not None:
+        if rec != n_buckets:
+            raise ValueError(
+                f"store {path} records {rec} buckets; refusing to write with "
+                f"{n_buckets} (one series would span two buckets)"
+            )
+        return False
+    return not _holds_data(spark, path)
+
+
+def stamp_buckets(spark: SparkSession, path: str, n_buckets: int) -> None:
+    """Write the store's bucket record (creating the store directory).
+    Written aside and renamed in, so a crash never leaves a torn record."""
+    fs, P = _fs(spark, path)
+    tmp = P(f"{path}/{BUCKETS_FILE}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(f"{int(n_buckets)}\n".encode()))
+    finally:
+        out.close()
+    fs.rename(tmp, P(f"{path}/{BUCKETS_FILE}"))
 
 
 def write_points(
@@ -40,7 +116,15 @@ def write_points(
 ) -> None:
     """S10/S15 — append a (pvname, time, value, ...) frame to the store.
     Adds run/bucket partition columns and sorts within partitions by
-    (pvname, time) for row-group stat pruning + sequential range reads."""
+    (pvname, time) for row-group stat pruning + sequential range reads.
+    The first write into an empty or absent store records ``n_buckets``;
+    a later write with another count raises ``ValueError``. A static
+    overwrite replaces the whole store, record included."""
+    spark = points.sparkSession
+    replaces = mode == "overwrite" and (
+        spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
+    )
+    stamp = replaces or claim_buckets(spark, path, n_buckets)
     out = points.withColumn("bucket", bucket_of(F.col("pvname"), n_buckets))
     if run is not None:
         out = out.withColumn("run", F.lit(run))
@@ -51,6 +135,8 @@ def write_points(
         .partitionBy("run", "bucket")
         .parquet(path)
     )
+    if stamp:
+        stamp_buckets(spark, path, n_buckets)
 
 
 # Data columns then partition columns in partition-spec order — the
@@ -69,26 +155,41 @@ def read_points(spark: SparkSession, path: str) -> DataFrame:
     carry an inferred schema, so return an empty frame with the
     canonical layout instead; a nonexistent path still fails loudly
     (a typo'd --store must never read as an empty archive). The empty
-    case rides the read's own failure (no extra FS round-trips on the
-    every-query hot path)."""
+    case rides the read's own failure (no extra listing on the
+    every-query hot path); only hidden entries (the bucket record,
+    ``_SUCCESS``, checksums) may sit in an empty store. The recorded
+    bucket count, if any, rides on the ``bucket`` column's metadata
+    (``BUCKETS_META``) for ``api.PVArchEngine``'s pruned reads."""
+    n_buckets = recorded_buckets(spark, path)
     try:
-        return spark.read.parquet(path)
+        pts = spark.read.parquet(path)
     except Exception:
-        jvm = spark._jvm
-        P = jvm.org.apache.hadoop.fs.Path
-        fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(P(path)) and len(fs.listStatus(P(path))) == 0:
-            return spark.createDataFrame([], POINTS_READ_SCHEMA)
-        raise
+        if _holds_data(spark, path) is not False:
+            raise
+        pts = spark.createDataFrame([], POINTS_READ_SCHEMA)
+    if n_buckets is None:
+        return pts
+    return pts.select(
+        *(
+            F.col(c).alias(c, metadata={BUCKETS_META: n_buckets}) if c == "bucket" else c
+            for c in pts.columns
+        )
+    )
+
+
+def buckets_of_frame(points: DataFrame) -> int | None:
+    """The bucket count ``read_points`` recorded on ``points``' bucket
+    column, or None (no record, or no bucket column)."""
+    if "bucket" not in points.columns:
+        return None
+    return points.schema["bucket"].metadata.get(BUCKETS_META)
 
 
 def list_runs(spark: SparkSession, path: str) -> list[str]:
     """The store's run partitions, name-sorted (run names are zero-padded
     or date-stamped, so lexical order IS chronological order — the same
     invariant ``rotate_runs`` maintains)."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, P = _fs(spark, path)
     if not fs.exists(P(path)):
         return []
     return sorted(
@@ -154,9 +255,7 @@ def prune_runs(
         victims = [r for r in runs[:-1] if r < before]
     if not victims:
         return []
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, P = _fs(spark, path)
     for r in victims:
         fs.delete(P(f"{path}/run={r}"), True)
     return victims
@@ -205,10 +304,7 @@ def compact_store(
     compact only rotated runs, which are immutable.
 
     Returns {partition: files_after} for the partitions rewritten."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(conf)
+    fs, P = _fs(spark, path)
 
     result: dict[str, int] = {}
     for run_status in fs.listStatus(P(path)):

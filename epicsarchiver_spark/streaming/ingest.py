@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from epicsarchiver_spark.sources import points_store
+
 EVENT_SCHEMA = StructType(
     [
         StructField("pvname", StringType()),
@@ -72,18 +74,24 @@ def ingest_state_partitions(
     micro-batch for data that filled four — the r13 driver measured the
     ingest bench FASTER at 8 cores than at 32 (scaling 0.54) purely on
     this. One partition per ~64 MB of input (floor 4) keeps partitions
-    in the guide §2.2 size band at any scale: a 100 TB/day feed gets
-    ~10⁶ partitions' worth of daily volume spread over its real
-    parallelism, a bench-sized backfill gets the floor. Override with
+    in the guide §2.2 size band; a bench-sized backfill gets the floor.
+    The ceiling is 3 × ``session.default_parallelism()`` (the top of the
+    2-3 × cores band ``session.get_spark`` gives for cluster shuffles):
+    past it the per-batch fixed costs
+    outrun the parallelism that could absorb them, and the count is
+    pinned for the checkpoint's lifetime, so a 100 TB backfill gets 96
+    partitions at 32 cores, not 1.6 M. Override with
     $SPARK_GRAFT_INGEST_STATE_PARTITIONS where the deployment knows
-    better (e.g. sizing for a future volume on day one — the count is
-    fixed for the checkpoint's lifetime)."""
+    better (e.g. sizing for a future volume on day one)."""
     import os
+
+    from epicsarchiver_spark.session import default_parallelism
 
     env = os.environ.get("SPARK_GRAFT_INGEST_STATE_PARTITIONS")
     if env:
         return max(1, int(env))
-    return max(int(floor), int(input_bytes) // int(bytes_per_partition))
+    ceiling = max(int(floor), 3 * default_parallelism())
+    return min(ceiling, max(int(floor), int(input_bytes) // int(bytes_per_partition)))
 
 
 def ingest_session(spark, input_bytes: int, **kw):
@@ -924,9 +932,14 @@ def archive_query(
 ) -> Any:
     """S15 — append the compressed stream to the points store, hashed into
     series buckets (the reference's 128 pvdat tables as a partition
-    column, epicsarchiver/schema.py:21-23)."""
+    column, epicsarchiver/schema.py:21-23). An empty or absent store
+    records ``buckets`` here, before the stream starts; a store that
+    records another count raises ``ValueError``."""
+    spark = compressed.sparkSession
+    if points_store.claim_buckets(spark, points_path, buckets):
+        points_store.stamp_buckets(spark, points_path, buckets)
     bucketed = compressed.withColumn(
-        "bucket", F.pmod(F.xxhash64("pvname"), F.lit(buckets)).cast("int")
+        "bucket", points_store.bucket_of(F.col("pvname"), buckets)
     )
     return (
         bucketed.writeStream.outputMode("append")

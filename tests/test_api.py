@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from epicsarchiver_spark.api import PVArchEngine
 from epicsarchiver_spark.sources.points_store import read_points, write_points
@@ -232,3 +233,82 @@ def test_get_similar_pvs_uses_sax_index(engine, spark, tmp_path):
         "SIM:q", 0.0, 140.0, 10.0, limit=2, words=spark.read.parquet(path)
     ).collect()
     assert sorted(out2) == sorted(out)
+
+
+@pytest.fixture(scope="module")
+def twin_stores(spark, tmp_path_factory):
+    """The same 2-run, 2-bucket points in two stores: one with its bucket
+    record, one without (a store written before the record existed).
+    Each PV samples every 50 s with its own phase; run_002 starts at
+    t = 2500."""
+    import os
+
+    root = tmp_path_factory.mktemp("twin")
+    pvs = [f"T{i}:val" for i in range(6)]
+    paths = {}
+    for kind in ("recorded", "legacy"):
+        path = str(root / kind)
+        for run, lo, hi in (("run_001", 0, 2500), ("run_002", 2500, 5000)):
+            rows = [
+                (pv, float(t + i), float((t + i) % 17))
+                for i, pv in enumerate(pvs)
+                for t in range(lo, hi, 50)
+            ]
+            pdf = pd.DataFrame(rows, columns=["pvname", "time", "value"])
+            write_points(spark.createDataFrame(pdf), path, run=run, n_buckets=2)
+        paths[kind] = path
+    for name in ("_buckets", "._buckets.crc"):
+        os.remove(os.path.join(paths["legacy"], name))
+    engines = {
+        k: PVArchEngine(spark, read_points(spark, p)) for k, p in paths.items()
+    }
+    return pvs, engines
+
+
+def test_facade_reads_prune_buckets_only_from_the_record(twin_stores, monkeypatch):
+    """get_data / get_value_at_time plans carry a bucket PartitionFilter
+    on a store that records its bucket count, and none on one that does
+    not (the engine never assumes a count)."""
+    from epicsarchiver_spark.operators import timeseries
+    from epicsarchiver_spark.plans import scan_partition_filters
+
+    pvs, engines = twin_stores
+    seen = []
+    real = timeseries.value_at_time
+
+    def spy(*a, **kw):  # keeps the as-of frame get_value_at_time collects
+        seen.append(real(*a, **kw))
+        return seen[-1]
+
+    monkeypatch.setattr(timeseries, "value_at_time", spy)
+    for kind, pruned in (("recorded", True), ("legacy", False)):
+        eng = engines[kind]
+        eng.get_value_at_time(pvs[0], 1234.0)
+        for df in (eng.get_data(pvs[0], 1000.0, 3000.0), seen[-1]):
+            has = any("bucket" in f for f in scan_partition_filters(df))
+            assert has == pruned, (kind, scan_partition_filters(df))
+
+
+def test_pruned_facade_reads_match_unpruned(twin_stores, spark):
+    """Every PV, including PVs that share a bucket, reads the same rows
+    from both stores: windows spanning the run boundary, a window whose
+    only row is the pre-window seed from the older run, and as-of
+    lookups between samples."""
+    from epicsarchiver_spark.sources.points_store import bucket_of
+
+    pvs, engines = twin_stores
+    buckets = spark.createDataFrame([(p,) for p in pvs], "pvname string").select(
+        bucket_of(F.col("pvname"), 2).alias("b")
+    )
+    assert buckets.distinct().count() < len(pvs)  # some PVs share a bucket
+    rec, leg = engines["recorded"], engines["legacy"]
+    for pv in pvs:
+        for t0, t1 in ((1000.0, 3000.0), (2470.0, 2499.0), (0.0, 5000.0)):
+            got = [tuple(r) for r in rec.get_data(pv, t0, t1).collect()]
+            want = [tuple(r) for r in leg.get_data(pv, t0, t1).collect()]
+            assert got == want and got, (pv, t0, t1)
+        # the (2470, 2499) window holds no sample: the seed comes from run_001
+        seed = rec.get_data(pv, 2470.0, 2499.0).collect()
+        assert len(seed) == 1 and seed[0].run == "run_001"
+        for t in (2499.0, 4321.0):
+            assert rec.get_value_at_time(pv, t) == leg.get_value_at_time(pv, t) is not None

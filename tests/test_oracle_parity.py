@@ -87,21 +87,27 @@ def parity_outcomes(spark, duck):
     from concurrent.futures import ThreadPoolExecutor
 
     workers = max(1, int(os.environ.get("SPARK_GRAFT_PARITY_WORKERS", "8")))
-    outcomes: dict[str, BaseException | None] = {}
+    outcomes: dict[str, Exception | None] = {}
 
     def run(name: str):
         cursor = duck.cursor()
         try:
             _compare_gate(spark, cursor, name)
             return name, None
-        except BaseException as exc:  # re-raised in the gate's own test
+        except (KeyboardInterrupt, SystemExit):
+            raise  # an interrupt aborts the run, it is not a gate failure
+        except Exception as exc:  # re-raised in the gate's own test
             return name, exc
         finally:
             cursor.close()
 
     with ThreadPoolExecutor(max_workers=workers) as pool:
-        for name, exc in pool.map(run, sorted(ORACLES)):
-            outcomes[name] = exc
+        try:
+            for name, exc in pool.map(run, sorted(ORACLES)):
+                outcomes[name] = exc
+        except BaseException:
+            pool.shutdown(wait=False, cancel_futures=True)  # drop the queued gates
+            raise
     return outcomes
 
 

@@ -14,11 +14,14 @@ from epicsarchiver_spark.plans import (
     scan_partition_filters,
 )
 from epicsarchiver_spark.sources.points_store import (
+    BUCKETS_META,
     bucket_of,
     range_read_store,
     read_points,
+    recorded_buckets,
     runs_for_window,
     series_filter,
+    stamp_buckets,
     write_points,
 )
 
@@ -297,3 +300,102 @@ def test_rollup_artifact_is_mergeable_and_incremental(spark, tmp_path):
     assert got == want
     # n totals match the raw row count
     assert sum(r[2] for r in got) == 400
+
+
+def _pts(spark, pvs=("PV:A", "PV:B"), t0=0):
+    pdf = pd.DataFrame(
+        [(pv, float(t), 1.0) for pv in pvs for t in range(t0, t0 + 100, 10)],
+        columns=["pvname", "time", "value"],
+    )
+    return spark.createDataFrame(pdf)
+
+
+def test_bucket_record_rides_on_the_read(spark, store):
+    """The first write stamps the store's bucket count; read_points hands
+    it on as metadata of the bucket column, and the frame still prunes."""
+    assert recorded_buckets(spark, store) == N_BUCKETS
+    pts = read_points(spark, store)
+    assert pts.schema["bucket"].metadata == {BUCKETS_META: N_BUCKETS}
+    assert pts.columns == ["pvname", "time", "value", "run", "bucket"]
+    pf = scan_partition_filters(series_filter(pts, "PV:A", N_BUCKETS))
+    assert any("bucket" in f for f in pf), pf
+
+
+def test_write_refuses_mismatched_bucket_count(spark, tmp_path):
+    """Appending with another bucket count would spread one PV over two
+    buckets, and pruned reads would then drop its rows: refused."""
+    path = str(tmp_path / "store")
+    write_points(_pts(spark), path, run="r1", n_buckets=4)
+    with pytest.raises(ValueError, match="records 4 buckets"):
+        write_points(_pts(spark, t0=100), path, run="r1", n_buckets=8)
+    write_points(_pts(spark, t0=100), path, run="r2", n_buckets=4)
+    assert read_points(spark, path).count() == 40
+    # a static overwrite replaces the whole store, so it re-records
+    write_points(_pts(spark), path, run="r1", n_buckets=8, mode="overwrite")
+    assert recorded_buckets(spark, path) == 8
+    assert read_points(spark, path).count() == 20
+
+
+def test_store_without_record_is_never_stamped(spark, tmp_path):
+    """A store that holds data but no record has an unknown count: later
+    writes leave it unrecorded and its reads carry no bucket metadata."""
+    import os
+
+    path = str(tmp_path / "store")
+    write_points(_pts(spark), path, run="r1", n_buckets=4)
+    for name in ("_buckets", "._buckets.crc"):
+        os.remove(os.path.join(path, name))
+    write_points(_pts(spark, t0=100), path, run="r1", n_buckets=4)
+    assert recorded_buckets(spark, path) is None
+    assert read_points(spark, path).schema["bucket"].metadata == {}
+
+
+def test_archive_query_records_and_checks_bucket_count(spark, tmp_path):
+    """The streaming sink stamps an empty store before it starts and
+    refuses a store that records another count."""
+    from epicsarchiver_spark.streaming.ingest import EVENT_SCHEMA, archive_query
+
+    (tmp_path / "events").mkdir()
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(tmp_path / "events"))
+    path = str(tmp_path / "store")
+    archive_query(stream, path, str(tmp_path / "ckpt"), buckets=16)
+    assert recorded_buckets(spark, path) == 16
+    with pytest.raises(ValueError, match="records 16 buckets"):
+        archive_query(stream, path, str(tmp_path / "ckpt2"), buckets=128)
+
+
+def test_empty_store_probe_ignores_hidden_entries(spark, tmp_path):
+    """A bootstrapped store holding only hidden entries (the bucket
+    record, _SUCCESS, checksums) reads as the canonical empty frame; a
+    visible non-parquet entry or a missing path still raises."""
+    path = tmp_path / "store"
+    stamp_buckets(spark, str(path), 32)
+    (path / "_SUCCESS").write_text("")
+    (path / ".part.crc").write_text("")
+    pts = read_points(spark, str(path))
+    assert pts.count() == 0
+    assert pts.columns == ["pvname", "time", "value", "run", "bucket"]
+    assert pts.schema["bucket"].metadata == {BUCKETS_META: 32}
+    (path / "notes.txt").write_text("not parquet")
+    with pytest.raises(Exception):
+        read_points(spark, str(path))
+    with pytest.raises(Exception):
+        read_points(spark, str(tmp_path / "missing"))
+
+
+def test_store_open_lists_on_the_driver(spark, tmp_path):
+    """A 2-run x 128-bucket store sits above Spark's parallel listing
+    threshold (32 dirs); in local mode read_points lists it on the
+    driver, so an open launches at most one job (schema inference), not
+    one listing job per run."""
+    path = str(tmp_path / "store")
+    names = [f"PV:{i:03d}" for i in range(600)]
+    for run in ("r1", "r2"):
+        write_points(_pts(spark, names), path, run=run)
+    sc = spark.sparkContext
+    sc.setJobGroup("store-open-probe", "read_points listing probe")
+    try:
+        read_points(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("store-open-probe")) <= 1

@@ -1887,27 +1887,42 @@ def test_ingest_state_partitions_sized_by_volume(monkeypatch):
     """r14: state partitions derive from input volume (floor 4, one per
     ~64 MB), never from core count — the per-partition micro-batch
     fixed costs made the 32-core ingest bench slower than the 8-core
-    one. Env override wins when set."""
+    one. Volume is capped at 3 × the session's parallelism (the count
+    is pinned into the checkpoint for good). Env override wins when
+    set."""
     from epicsarchiver_spark.streaming.ingest import ingest_state_partitions
 
     monkeypatch.delenv("SPARK_GRAFT_INGEST_STATE_PARTITIONS", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "64")
     assert ingest_state_partitions(0) == 4
     assert ingest_state_partitions(100 * 1024 * 1024) == 4
     assert ingest_state_partitions(10 * 1024**3) == 160
-    assert ingest_state_partitions(100 * 1024**4) == 1638400  # 100 TB
     monkeypatch.setenv("SPARK_GRAFT_INGEST_STATE_PARTITIONS", "12")
     assert ingest_state_partitions(10 * 1024**3) == 12
 
 
-def test_ingest_session_pins_sized_shuffle_partitions(spark):
+def test_ingest_state_partitions_capped_by_parallelism(monkeypatch):
+    """The docstring's 100 TB backfill: 1 638 400 partitions by volume,
+    capped at 3 × cores (96 at 32 cores); the floor still wins on one
+    core."""
+    from epicsarchiver_spark.streaming.ingest import ingest_state_partitions
+
+    monkeypatch.delenv("SPARK_GRAFT_INGEST_STATE_PARTITIONS", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    assert ingest_state_partitions(100 * 1024**4) == 96  # 100 TB
+    assert ingest_state_partitions(10 * 1024**3) == 96
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "1")
+    assert ingest_state_partitions(100 * 1024**4) == 4
+
+
+def test_ingest_session_pins_sized_shuffle_partitions(spark, monkeypatch):
     """The sibling session carries the data-derived shuffle-partition
     conf while the caller's session keeps its own value — the stream
     pins state partitions from the sibling at start."""
-    import os
-
     from epicsarchiver_spark.streaming.ingest import ingest_session
 
-    os.environ.pop("SPARK_GRAFT_INGEST_STATE_PARTITIONS", None)
+    monkeypatch.delenv("SPARK_GRAFT_INGEST_STATE_PARTITIONS", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "128")  # ceiling 384: volume decides
     before = spark.conf.get("spark.sql.shuffle.partitions")
     s2 = ingest_session(spark, 20 * 1024**3)
     assert s2.conf.get("spark.sql.shuffle.partitions") == "320"
