@@ -288,10 +288,7 @@ def bench_ingest(spark, tmp: str) -> float:
     # the sizing rule is scale-adaptive, the stream runs on a sibling
     # session so the bench session's conf is untouched). Timing
     # methodology unchanged: same timed region, same availableNow run.
-    src_bytes = sum(
-        f.stat().st_size for f in __import__("pathlib").Path(src).glob("*.parquet")
-    )
-    s_ing = ingest_session(spark, src_bytes)
+    s_ing = ingest_session(spark, src)
     stream = s_ing.readStream.schema("pvname string, time double, value double").parquet(src)
     t0 = time.perf_counter()
     q = (
@@ -323,7 +320,7 @@ def bench_store(spark, tmp: str) -> dict[str, float]:
     name = pts.select("pvname").head().pvname
     t0 = time.perf_counter()
     for _ in range(5):
-        range_read_store(spark, path, name, 1.7045e9, 1.7055e9, n_buckets=32).write.format(
+        range_read_store(spark, path, name, 1.7045e9, 1.7055e9).write.format(
             "noop"
         ).mode("overwrite").save()
     t_read = (time.perf_counter() - t0) / 5

@@ -82,7 +82,8 @@ class PVArchEngine:
         t0, t1 = self._window(tmin, tmax)
         if lookback == "auto":
             lookback = self._default_lookback()
-        out = timeseries.get_data(self._series(pvname), t0, t1, lookback=lookback)
+        series = points_store.series_of(self.points, pvname)
+        out = timeseries.get_data(series, t0, t1, lookback=lookback)
         if with_current and self._cache is not None:
             out = timeseries.with_current(
                 out, self._cache.filter(F.col("pvname") == pvname)
@@ -97,8 +98,9 @@ class PVArchEngine:
         get_data); the reference itself scans only [t-60, t+1]."""
         if lookback == "auto":
             lookback = self._default_lookback()
+        series = points_store.series_of(self.points, pvname)
         row = (
-            timeseries.value_at_time(self._series(pvname), t, lookback=lookback)
+            timeseries.value_at_time(series, t, lookback=lookback)
             .select("time", "value")
             .head()
         )
@@ -263,14 +265,6 @@ class PVArchEngine:
         return bool(row.alive) if row is not None else False
 
     # --- helpers ---
-
-    def _series(self, pvname: str) -> DataFrame:
-        """One series' points, bucket-pruned iff the store recorded its
-        bucket count (see the class docstring)."""
-        n_buckets = points_store.buckets_of_frame(self.points)
-        if n_buckets is None:
-            return self.points.filter(F.col("pvname") == pvname)
-        return points_store.series_filter(self.points, pvname, n_buckets)
 
     def _window(self, tmin, tmax) -> tuple[float, float]:
         """Resolve each bound INDEPENDENTLY — mixed windows like

@@ -441,7 +441,11 @@ def cmd_archive(args) -> int:
     archive`` / ``pvarch restart archive``, ref pvarch.py:196-202; the
     checkpoint resumes exactly-once)."""
     from epicsarchiver_spark import daemon
-    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+    from epicsarchiver_spark.streaming.ingest import (
+        archive_query,
+        compressed_stream,
+        ingest_session,
+    )
 
     if args.follow and (pid := daemon.already_running(args.checkpoint, "archive")):
         print(
@@ -450,7 +454,11 @@ def cmd_archive(args) -> int:
         )
         return 1
     spark = _spark("archive")
-    stream = spark.readStream.schema(
+    # a bounded drain's input is what is there now, so size the state
+    # partitions (pinned into the checkpoint) from it; a daemon's start
+    # bytes say nothing of its future input, so it keeps the session's
+    s_in = spark if args.follow else ingest_session(spark, args.events)
+    stream = s_in.readStream.schema(
         "pvname string, time double, value double"
     ).parquet(args.events)
     q = archive_query(
@@ -1480,6 +1488,7 @@ def cmd_land(args) -> int:
 
     from epicsarchiver_spark.functions.text import fingerprint64
     from epicsarchiver_spark.streaming.curation import curated_doc_stream, landing_query
+    from epicsarchiver_spark.streaming.ingest import ingest_session
 
     if args.follow and not args.watermark_col:
         print(
@@ -1499,12 +1508,15 @@ def cmd_land(args) -> int:
             )
             return 1
     spark = _spark("land")
-    schema = spark.read.parquet(args.docs).schema
-    stream = spark.readStream.schema(schema).parquet(args.docs)
+    # the dedup state is pinned into the checkpoint like archive's: sized
+    # from the input only for a bounded drain (see cmd_archive)
+    s_in = spark if args.follow else ingest_session(spark, args.docs)
+    schema = s_in.read.parquet(args.docs).schema
+    stream = s_in.readStream.schema(schema).parquet(args.docs)
     corpus_fp = None
     if args.corpus:
         corpus_fp = (
-            spark.read.parquet(args.corpus)
+            s_in.read.parquet(args.corpus)
             .select(fingerprint64(F.col("text")).alias("fp"))
             .distinct()
         )

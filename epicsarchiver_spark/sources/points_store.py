@@ -13,9 +13,17 @@ dataset,
   (J2 interval join done driver-side against a tiny table).
 - ``bucket`` partition column → the reference's 128-table fan-out
   ("eliminating more than 99% of the data", doc/setup.rst:238-241):
-  a single-series query scans 1/N of each run. Within a file, rows are
-  sorted by (pvname, time) so parquet row-group min/max stats prune
-  further and range reads are sequential.
+  a single-series query scans 1/N of each run. Files written by
+  ``write_points`` (and rewritten by ``compact_store``) are sorted by
+  (pvname, time), so parquet row-group min/max stats prune further and
+  range reads are sequential. The streamed store
+  (``streaming.ingest.archive_query``) gets one file per touched bucket
+  per micro-batch; within it each series' points are contiguous and
+  time-ordered, but series are not sorted by pvname (streaming plans
+  cannot sort), so row-group pruning on pvname is weaker there. Nothing
+  compacts or re-sorts a streamed store yet: ``compact_store`` walks
+  only ``run=`` directories, and the streamed store has ``bucket=`` at
+  its root, listed in the file sink's ``_spark_metadata`` manifest.
 - ``_buckets`` → N is recorded once, by the first write into an empty
   or absent store (``write_points`` / ``streaming.ingest.archive_query``);
   later writes with another N are refused, since they would spread one
@@ -273,6 +281,17 @@ def series_filter(
     )
 
 
+def series_of(points: DataFrame, pvname: str) -> DataFrame:
+    """One series of a ``read_points`` frame: bucket-pruned with the
+    store's recorded count (``buckets_of_frame``), or by ``pvname``
+    alone when the store records none — never with an assumed count,
+    which would silently drop every series whose bucket differs."""
+    n_buckets = buckets_of_frame(points)
+    if n_buckets is None:
+        return points.filter(F.col("pvname") == pvname)
+    return series_filter(points, pvname, n_buckets)
+
+
 def runs_for_window(runs: DataFrame, t0: float, t1: float) -> DataFrame:
     """J2 — interval join: runs whose [start_time, stop_time] overlaps
     [t0, t1] (ref epicsarchiver/archiver.py:104-110 dbs_for_time).
@@ -287,13 +306,17 @@ def compact_store(
     runs: list[str] | None = None,
     target_file_bytes: int = 256 * 1024 * 1024,
 ) -> dict[str, int]:
-    """Small-file compaction for the points store. Streaming append (S15)
-    commits one parquet file per micro-batch per bucket — after months of
-    ingest a run's bucket dir holds thousands of KB-sized files and the
-    scan cost is dominated by file-open overhead, the classic streaming
+    """Small-file compaction for a ``run=/bucket=`` points store: every
+    append adds files to each (run, bucket) dir it touches — after
+    months of appends a bucket dir holds thousands of KB-sized files and
+    the scan cost is dominated by file-open overhead, the classic
     small-file problem. Compaction rewrites each (run, bucket) partition
     as ~size/target_file_bytes files, re-sorted by (pvname, time) so
     row-group min/max stats prune again (appends interleave series).
+    Only ``run=`` directories are walked, so a store written by the
+    streaming ``archive_query`` (``bucket=`` at its root, one file per
+    touched bucket per micro-batch, listed in the sink's manifest) is
+    not compacted.
 
     Runs one partition-dir at a time with the same crash-safe two-rename
     swap as the cache upsert: rewrite to ``<dir>.tmp``, park the old dir at
@@ -357,13 +380,12 @@ def range_read_store(
     t0: float,
     t1: float,
     runs: DataFrame | None = None,
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """get_data against the store: bucket-pruned, run-pruned, stat-pruned
     single-series range scan (the §3.2 read path, minus the early-point
-    seed which operators.timeseries.get_data adds)."""
-    pts = read_points(spark, path)
-    pts = series_filter(pts, pvname, n_buckets)
+    seed which operators.timeseries.get_data adds). Buckets are pruned
+    with the store's recorded count only (``series_of``)."""
+    pts = series_of(read_points(spark, path), pvname)
     if runs is not None:
         run_names = [r.db for r in runs_for_window(runs, t0, t1).collect()]
         pts = pts.filter(F.col("run").isin(run_names))

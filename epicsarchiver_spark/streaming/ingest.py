@@ -94,19 +94,25 @@ def ingest_state_partitions(
     return min(ceiling, max(int(floor), int(input_bytes) // int(bytes_per_partition)))
 
 
-def ingest_session(spark, input_bytes: int, **kw):
+def ingest_session(spark, source: int | str, **kw):
     """A sibling SparkSession (shared SparkContext, own SQL conf) whose
     ``spark.sql.shuffle.partitions`` is sized by
     :func:`ingest_state_partitions` — the supported way to give ONE
     streaming query a data-derived state-partition count without
     mutating the caller's session (the conf is read at stream start and
     pinned into the checkpoint; batch queries on the original session
-    keep their own setting). Build the ``readStream`` on the returned
-    session."""
+    keep their own setting). ``source`` is the input's size in bytes, or
+    its path, whose bytes are measured now through the Hadoop FS (0 when
+    absent) — a fit for a bounded drain, whose input is what is there at
+    start. Build the ``readStream`` on the returned session."""
+    if isinstance(source, str):
+        path = spark._jvm.org.apache.hadoop.fs.Path(source)
+        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+        source = fs.getContentSummary(path).getLength() if fs.exists(path) else 0
     s2 = spark.newSession()
     s2.conf.set(
         "spark.sql.shuffle.partitions",
-        str(ingest_state_partitions(input_bytes, **kw)),
+        str(ingest_state_partitions(source, **kw)),
     )
     return s2
 
@@ -934,7 +940,19 @@ def archive_query(
     series buckets (the reference's 128 pvdat tables as a partition
     column, epicsarchiver/schema.py:21-23). An empty or absent store
     records ``buckets`` here, before the stream starts; a store that
-    records another count raises ``ValueError``."""
+    records another count raises ``ValueError``.
+
+    The rows are clustered by ``bucket`` ahead of the file sink, so a
+    micro-batch writes at most one parquet file per touched bucket
+    rather than one per (state partition × bucket). The sink stage has
+    as many tasks as the query's shuffle-partition count, which the
+    checkpoint pins; the exchange is stateless, so a checkpoint written
+    without it resumes unchanged. Streaming plans cannot sort: each
+    series' points are contiguous and time-ordered within a file (one
+    state partition owns each key and the kernel emits per key), but
+    files are not sorted by ``pvname``, and nothing compacts or re-sorts
+    a streamed store yet (``points_store.compact_store`` walks only
+    ``run=`` stores; see ROADMAP)."""
     spark = compressed.sparkSession
     if points_store.claim_buckets(spark, points_path, buckets):
         points_store.stamp_buckets(spark, points_path, buckets)
@@ -942,7 +960,8 @@ def archive_query(
         "bucket", points_store.bucket_of(F.col("pvname"), buckets)
     )
     return (
-        bucketed.writeStream.outputMode("append")
+        bucketed.repartition("bucket")
+        .writeStream.outputMode("append")
         .format("parquet")
         .option("path", points_path)
         .option("checkpointLocation", checkpoint)

@@ -307,6 +307,52 @@ def test_archive_and_cache_daemon_cli(spark, tmp_path, capsys):
     assert got == {("D:a", 300.0, 300.0), ("D:b", 300.0, 300.0)}
 
 
+def _offset_log_conf(checkpoint: str) -> dict:
+    """The SQL conf a stream pinned into its checkpoint at batch 0."""
+    import json
+
+    with open(os.path.join(checkpoint, "offsets", "0")) as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]
+
+
+def test_archive_and_land_streams_size_state_partitions(spark, tmp_path, monkeypatch, capsys):
+    """Bounded `archive` and `land` drains build their stateful streams
+    on a sibling session sized from the input's bytes
+    (ingest_state_partitions: the floor of 4 for a tiny input), and that
+    count is what the checkpoint pins — not the caller session's
+    core-derived default. (A --follow daemon keeps the session's count:
+    test_daemon_stop_restart_lifecycle.)"""
+    import pandas as pd
+
+    monkeypatch.delenv("SPARK_GRAFT_INGEST_STATE_PARTITIONS", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "4"
+
+    src = tmp_path / "events_in"
+    src.mkdir()
+    pd.DataFrame(
+        [("S:a", float(t), float(t)) for t in range(0, 400, 100)],
+        columns=["pvname", "time", "value"],
+    ).to_parquet(src / "b0.parquet", index=False)
+    ck_a = str(tmp_path / "ck_a")
+    argv = ["--store", str(tmp_path / "store"), "archive", str(src), "--checkpoint", ck_a]
+    assert cli.main([*argv, "--buckets", "4"]) == 0
+    assert _offset_log_conf(ck_a)[key] == "4"
+
+    docs = tmp_path / "docs_in"
+    docs.mkdir()
+    pd.DataFrame(
+        [(1, "the quick brown fox jumps over a lazy dog " * 8, "web")],
+        columns=["doc_id", "text", "source"],
+    ).to_parquet(docs / "b0.parquet", index=False)
+    ck_l = str(tmp_path / "ck_land")
+    assert cli.main(["land", str(docs), "--out", str(tmp_path / "out"), "--checkpoint", ck_l]) == 0
+    assert _offset_log_conf(ck_l)[key] == "4"
+    assert spark.conf.get(key) == before
+    capsys.readouterr()
+
+
 def test_daemon_stop_restart_lifecycle(spark, tmp_path, capsys):
     """pvarch arch stop/restart analog (ref pvarch.py:196-202): a live
     --follow archive daemon writes its pidfile, refuses a duplicate
@@ -370,6 +416,10 @@ def test_daemon_stop_restart_lifecycle(spark, tmp_path, capsys):
     assert not th.is_alive() and rc["first"] == 0
     assert daemon.read_pid(ck, "archive") is None
     assert not daemon.stop_requested(ck, "archive")
+    # a daemon's input is not what is there at start: its state
+    # partitions keep the session's count, not one sized from b0
+    key = "spark.sql.shuffle.partitions"
+    assert _offset_log_conf(ck)[key] == spark.conf.get(key)
     n1 = n_points(store)
 
     # restart = stop (no-op here) + start with the SAME checkpoint;

@@ -80,7 +80,7 @@ def test_range_read_with_run_pruning(spark, store):
             }
         )
     )
-    q = range_read_store(spark, store, "PV:B", 100.0, 500.0, runs=runs, n_buckets=N_BUCKETS)
+    q = range_read_store(spark, store, "PV:B", 100.0, 500.0, runs=runs)
     rows = q.collect()
     assert len(rows) == 41  # t = 100,110,...,500
     assert {r.run for r in rows} == {"run_001"}
@@ -348,6 +348,31 @@ def test_store_without_record_is_never_stamped(spark, tmp_path):
     write_points(_pts(spark, t0=100), path, run="r1", n_buckets=4)
     assert recorded_buckets(spark, path) is None
     assert read_points(spark, path).schema["bucket"].metadata == {}
+
+
+def test_range_read_store_prunes_with_the_recorded_count(spark, tmp_path):
+    """Every series of a 32-bucket store reads back: pruning uses the
+    store's record, never an assumed 128 (pmod(h, 128) != pmod(h, 32)
+    for most names); an unrecorded store is read by pvname alone."""
+    import os
+
+    names = [f"RR:{i:02d}" for i in range(12)]
+    path = str(tmp_path / "store32")
+    df = spark.createDataFrame(
+        [(n, float(t), float(t)) for n in names for t in range(0, 50, 10)],
+        "pvname string, time double, value double",
+    )
+    write_points(df, path, run="run_001", n_buckets=32)
+
+    def count(name):
+        return range_read_store(spark, path, name, 0.0, 100.0).count()
+
+    assert [count(n) for n in names] == [5] * len(names)
+    pf = scan_partition_filters(range_read_store(spark, path, names[0], 0.0, 100.0))
+    assert any("bucket" in f for f in pf), pf
+    for name in ("_buckets", "._buckets.crc"):
+        os.remove(os.path.join(path, name))
+    assert [count(n) for n in names] == [5] * len(names)
 
 
 def test_archive_query_records_and_checks_bucket_count(spark, tmp_path):

@@ -107,16 +107,20 @@ def test_streaming_matches_batch_spec(spark, events_dir, tmp_path):
     # identical failure mode at the deadline).
     import time as _time
 
+    # Once the count is reached, keep polling until the row SET is the
+    # same on two consecutive polls, so a late extra row still shows.
     expect = batch_spec(synth_events())
     deadline = _time.monotonic() + 120
     got: set = set()
+    prev: set | None = None
     while _time.monotonic() < deadline:
         got = {
             (r.pvname, r.time, r.value)
             for r in spark.sql("select * from compressed_out").collect()
         }
-        if len(got) >= len(expect):
+        if len(got) >= len(expect) and got == prev:
             break
+        prev = got
         _time.sleep(0.5)
     q.stop()
     assert got == expect
@@ -705,6 +709,136 @@ def test_archive_append_exactly_once_across_restarts(spark, tmp_path):
     ).to_parquet(src / "p1.parquet", index=False)
     third = run_once()
     assert third == first | {("X", 200.0, 4.0)}  # only the new event, once
+
+
+def _two_batch_events(src, n_pvs: int = 200) -> pd.DataFrame:
+    """Two source files (one micro-batch each under maxFilesPerTrigger=1)
+    over ``n_pvs`` series. Each series has a burst held in limbo at the
+    end of the first file and flushed by the second, and ends on a
+    direct save, so nothing is pending when the stream drains and the
+    archived rows equal ``batch_spec`` of all events."""
+    parts = []
+    for i, times in enumerate(((0.0, 2.0, 30.0, 31.0), (60.0, 100.0))):
+        rows = [
+            (f"M:{k:03d}", t, float(k + 3 * j + 10 * i))
+            for k in range(n_pvs)
+            for j, t in enumerate(times)
+        ]
+        pdf = pd.DataFrame(rows, columns=["pvname", "time", "value"])
+        pdf.to_parquet(src / f"b{i}.parquet", index=False)
+        parts.append(pdf)
+    return pd.concat(parts, ignore_index=True)
+
+
+def _archived(spark, out) -> list[tuple]:
+    return [
+        (r.pvname, r.time, r.value)
+        for r in spark.read.parquet(out).select("pvname", "time", "value").collect()
+    ]
+
+
+def _files_per_dir_per_batch(out) -> list[dict[str, int]]:
+    """From the file sink's manifest log: per committed batch, the number
+    of data files written into each partition directory."""
+    import collections
+    import json
+    import os
+
+    log = os.path.join(out, "_spark_metadata")
+    batches = []
+    for name in sorted((n for n in os.listdir(log) if n.isdigit()), key=int):
+        with open(os.path.join(log, name)) as fh:
+            paths = [json.loads(line)["path"] for line in fh.read().splitlines()[1:]]
+        batches.append(
+            collections.Counter(p.rsplit("/", 2)[-2] for p in paths)
+        )
+    return batches
+
+
+def test_archive_stream_writes_one_file_per_bucket_per_batch(spark, tmp_path):
+    """The archive sink clusters each micro-batch by bucket: at most one
+    data file per bucket directory per batch (not one per state
+    partition), and the archived rows still equal the batch spec."""
+    import os
+
+    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+
+    src = tmp_path / "fb_events"
+    src.mkdir()
+    events = _two_batch_events(src)
+    out = str(tmp_path / "fb_points")
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
+    )
+    q = (
+        archive_query(
+            compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
+            out, str(tmp_path / "fb_ckpt"), buckets=16,
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+
+    per_batch = _files_per_dir_per_batch(out)
+    assert len(per_batch) == 2
+    for counts in per_batch:
+        assert counts and max(counts.values()) == 1, counts
+    for d in os.listdir(out):
+        if d.startswith("bucket="):
+            data = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+            assert len(data) <= 2, (d, data)
+    got = _archived(spark, out)
+    assert len(got) == len(set(got))
+    assert set(got) == batch_spec(events)
+
+
+def test_archive_resumes_checkpoint_of_unclustered_writer(spark, tmp_path):
+    """A store and checkpoint written by the writer without the bucket
+    clustering (the file sink straight off the stateful stage) resume
+    under ``archive_query``: the held limbo entries of batch one flush in
+    batch two from the same state, a replay appends nothing, and no
+    point is lost or duplicated."""
+    from epicsarchiver_spark.sources import points_store
+    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+
+    src = tmp_path / "rs_events"
+    src.mkdir()
+    events = _two_batch_events(src, n_pvs=40)
+    later = src / "b1.parquet"
+    held = tmp_path / "b1.parquet"
+    later.rename(held)
+    out, ckpt = str(tmp_path / "rs_points"), str(tmp_path / "rs_ckpt")
+
+    def unclustered_writer(compressed, buckets=16):
+        points_store.stamp_buckets(spark, out, buckets)
+        return (
+            compressed.withColumn("bucket", points_store.bucket_of(F.col("pvname"), buckets))
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .partitionBy("bucket")
+        )
+
+    def run(build):
+        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
+        q = (
+            build(compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(180)
+        assert q.exception() is None
+        return _archived(spark, out)
+
+    first = run(unclustered_writer)
+    held.rename(later)
+    resumed = run(lambda c: archive_query(c, out, ckpt, buckets=16))
+    assert len(resumed) == len(set(resumed))
+    assert set(resumed) == batch_spec(events)
+    assert set(first) < set(resumed)
+    assert sorted(run(lambda c: archive_query(c, out, ckpt, buckets=16))) == sorted(resumed)
 
 
 def test_upsert_jdbc_parity_with_parquet_lane(spark, tmp_path):
