@@ -29,7 +29,11 @@ class PVArchEngine:
     the ``bucket`` column from the store's ``_buckets`` record. Without
     that record (a legacy store, or a frame that dropped ``bucket``) they
     filter on ``pvname`` only: the engine never prunes with a bucket
-    count it did not read from the store.
+    count it did not read from the store. Each such read is one scan in
+    one partition: ``get_data`` finds its early-point seed with a
+    ``lead`` over the same scan (``timeseries.series_get_data``), so it
+    plans no Exchange and runs as one Spark job, as does
+    ``get_value_at_time``.
 
     Parameters
     ----------
@@ -83,11 +87,11 @@ class PVArchEngine:
         if lookback == "auto":
             lookback = self._default_lookback()
         series = points_store.series_of(self.points, pvname)
-        out = timeseries.get_data(series, t0, t1, lookback=lookback)
+        out = timeseries.series_get_data(series, t0, t1, lookback=lookback)
         if with_current and self._cache is not None:
             out = timeseries.with_current(
                 out, self._cache.filter(F.col("pvname") == pvname)
-            )
+            ).coalesce(1)
         return out.orderBy("time")
 
     def get_value_at_time(
@@ -98,7 +102,7 @@ class PVArchEngine:
         get_data); the reference itself scans only [t-60, t+1]."""
         if lookback == "auto":
             lookback = self._default_lookback()
-        series = points_store.series_of(self.points, pvname)
+        series = points_store.series_of(self.points, pvname).coalesce(1)
         row = (
             timeseries.value_at_time(series, t, lookback=lookback)
             .select("time", "value")

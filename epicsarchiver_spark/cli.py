@@ -244,12 +244,16 @@ def cmd_compact(args) -> int:
     from epicsarchiver_spark.sources.points_store import compact_store
 
     spark = _spark("compact")
-    done = compact_store(
-        spark,
-        args.store,
-        runs=args.runs or None,
-        target_file_bytes=args.target_mb * 1024 * 1024,
-    )
+    try:
+        done = compact_store(
+            spark,
+            args.store,
+            runs=args.runs or None,
+            target_file_bytes=args.target_mb * 1024 * 1024,
+        )
+    except ValueError as ex:
+        print(str(ex), file=sys.stderr)
+        return 1
     for part, n in sorted(done.items()):
         print(f"{part}: -> {n} file(s)")
     print(f"compacted {len(done)} partition(s)")
@@ -1628,11 +1632,11 @@ def cmd_import_ascii(args) -> int:
     # count from the landed store — the text archive parses exactly once
     from pyspark.sql import functions as F
 
-    from epicsarchiver_spark.sources.points_store import read_points
+    from epicsarchiver_spark.sources.points_store import read_points, series_of
 
     n = (
-        read_points(spark, args.store)
-        .filter((F.col("run") == args.run) & (F.col("pvname") == args.pv))
+        series_of(read_points(spark, args.store), args.pv)
+        .filter(F.col("run") == args.run)
         .count()
     )
     print(f"imported {n} points for {args.pv} from {args.path} (run={args.run})")

@@ -63,9 +63,51 @@ def get_data(
     (ref epicsarchiver/archiver.py:149-223). The reference's per-run loop
     + zarr/SQL dual path collapses into one partition-pruned scan + union.
     ``lookback`` bounds the seed scan (see early_point).
+
+    Bulk reads keep this two-branch plan: over many series, a single
+    scan with a per-series ``lead`` (``series_get_data``) would shuffle
+    every row of the lookback, while the seed branch's row_number = 1
+    plans as a ``WindowGroupLimit`` that shuffles one row per series per
+    partition.
     """
     return range_read(points, t0, t1, key).unionByName(
         early_point(points, t0, key, lookback=lookback)
+    )
+
+
+def series_get_data(
+    series: DataFrame,
+    t0: float,
+    t1: float,
+    key: str = "pvname",
+    lookback: float | None = None,
+) -> DataFrame:
+    """``get_data`` for ONE series (a frame already filtered to it) and
+    t0 <= t1: the same rows, from one scan in one partition.
+
+    The scan covers [t0 - lookback, t1] (``time <= t1`` when unbounded)
+    and is coalesced to one partition. Each row with t0 <= time <= t1 is
+    kept, plus the one row before t0 whose ``lead(time)`` over the
+    series order (``order_cols``: time, then the event_id tiebreak) is
+    null or >= t0 — the last pre-window row, early_point's seed, with
+    the same tiebreak. The single partition satisfies the window's and a
+    downstream ``orderBy("time")``'s distributions, so the plan has no
+    Exchange (both sorts are local) and one job runs it. Meant for a
+    single series: every scanned row goes through one task.
+    """
+    in_range = F.col("time") <= t1
+    if lookback is not None:
+        in_range &= F.col("time") >= t0 - max(lookback, 0.0)
+    scan = series.filter(in_range)
+    nxt = F.lead("time").over(Window.partitionBy(key).orderBy(*order_cols(series)))
+    return (
+        scan.coalesce(1)
+        .withColumn("_next", nxt)
+        .filter(
+            F.col("time").between(t0, t1)
+            | ((F.col("time") < t0) & (F.col("_next").isNull() | (F.col("_next") >= t0)))
+        )
+        .drop("_next")
     )
 
 

@@ -6,7 +6,7 @@ zarr columnar bolt-on (archiver.py:542-608). Engine layout: ONE parquet
 dataset,
 
     points/run=<run>/bucket=<xxhash64(pvname) % N>/*.parquet
-    points/_buckets                      (N, the store's bucket record)
+    points/_buckets                      (the store's record: N, data schema)
 
 - ``run`` partition column  → the reference's run rotation becomes a
   metadata no-op; time-range queries prune runs via the runs dimension
@@ -21,33 +21,45 @@ dataset,
   per micro-batch; within it each series' points are contiguous and
   time-ordered, but series are not sorted by pvname (streaming plans
   cannot sort), so row-group pruning on pvname is weaker there. Nothing
-  compacts or re-sorts a streamed store yet: ``compact_store`` walks
-  only ``run=`` directories, and the streamed store has ``bucket=`` at
-  its root, listed in the file sink's ``_spark_metadata`` manifest.
-- ``_buckets`` → N is recorded once, by the first write into an empty
-  or absent store (``write_points`` / ``streaming.ingest.archive_query``);
-  later writes with another N are refused, since they would spread one
-  series over two buckets. The ``_`` prefix keeps it out of Spark's file
-  listing. ``read_points`` attaches the recorded N to the ``bucket``
-  column's metadata, and ``api.PVArchEngine`` prunes single-series reads
-  with ``series_filter`` only from that recorded N: a store written
-  before the record existed (or a frame without ``bucket``) is read by
+  compacts or re-sorts a streamed store yet: its files are listed in
+  the file sink's ``_spark_metadata`` manifest, so ``compact_store``
+  refuses it.
+- ``_buckets`` → the store's record, written once by the first write
+  into an empty or absent store (``write_points`` /
+  ``streaming.ingest.archive_query``): line 1 is N, line 2 the data
+  columns' schema as JSON (nullable, without ``run``/``bucket``). Later
+  writes with another N, or other data column names or types, are
+  refused: the first would spread one series over two buckets, the
+  second would not read back under the recorded schema. The ``_``
+  prefix keeps it out of Spark's file listing.
+- ``read_points`` attaches the recorded N to the ``bucket`` column's
+  metadata, and ``api.PVArchEngine`` prunes single-series reads with
+  ``series_filter`` only from that recorded N: a store written before
+  the record existed (or a frame without ``bucket``) is read by
   ``pvname`` alone, never with an assumed ``DEFAULT_BUCKETS``.
-- Listing the store is driver-side in local mode (``session.get_spark``
-  raises Spark's parallel partition-discovery threshold there), so an
-  open costs directory listings, not a listing job per run.
+- An open launches no Spark job: ``read_points`` hands the recorded
+  schema to the reader, so no parquet footer is read to infer it, and
+  listing is driver-side in local mode (``session.get_spark`` raises
+  Spark's parallel partition-discovery threshold there), so an open
+  costs directory listings and one small record read. A store without
+  a schema line (recorded before the record held one) is read by
+  inference, one footer-reading job per open.
 - At cluster scale the same layout bucket-aligns the shuffle for
   per-series windows; local tests keep N small.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 DEFAULT_BUCKETS = 128
-BUCKETS_FILE = "_buckets"  # the store's bucket record, at its root
+BUCKETS_FILE = "_buckets"  # the store's record (bucket count, data schema), at its root
 BUCKETS_META = "n_buckets"  # read_points' metadata key on the bucket column
+PARTITION_COLS = ("run", "bucket")
 
 
 def bucket_of(name_col, n_buckets: int = DEFAULT_BUCKETS):
@@ -71,48 +83,85 @@ def _holds_data(spark: SparkSession, path: str) -> bool | None:
     )
 
 
-def recorded_buckets(spark: SparkSession, path: str) -> int | None:
-    """The store's recorded bucket count, or None (absent or legacy store)."""
+def read_record(spark: SparkSession, path: str) -> tuple[int | None, StructType | None]:
+    """The store's record: (bucket count, data-column schema). Both are
+    None without a record (an absent store, or one written before the
+    record existed); the schema alone is None for a one-line record
+    (written before the record held the schema)."""
     fs, P = _fs(spark, path)
     rec = P(f"{path}/{BUCKETS_FILE}")
     if not fs.exists(rec):
-        return None
+        return None, None
     jio = spark._jvm.java.io
     reader = jio.BufferedReader(jio.InputStreamReader(fs.open(rec), "UTF-8"))
     try:
-        return int(reader.readLine())
+        n_buckets, schema = reader.readLine(), reader.readLine()
     finally:
         reader.close()
+    return int(n_buckets), StructType.fromJson(json.loads(schema)) if schema else None
 
 
-def claim_buckets(spark: SparkSession, path: str, n_buckets: int) -> bool:
-    """Check a write of ``n_buckets`` against the store's record. Raises
-    on a mismatch; returns True iff the store holds neither data nor a
-    record, i.e. the write about to land should stamp ``n_buckets``. A
-    store with data but no record stays unrecorded: its count is
-    unknown."""
-    rec = recorded_buckets(spark, path)
+def data_schema(schema: StructType) -> StructType:
+    """The data columns a store write lands: every column but the
+    partition columns, nullable (as a parquet read types them)."""
+    return StructType(
+        [
+            StructField(f.name, f.dataType, True, f.metadata)
+            for f in schema
+            if f.name not in PARTITION_COLS
+        ]
+    )
+
+
+def _column_types(schema: StructType) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in schema}
+
+
+def claim_buckets(
+    spark: SparkSession, path: str, n_buckets: int, schema: StructType | None = None
+) -> bool:
+    """Check a write of ``n_buckets`` buckets and ``schema`` data columns
+    (``data_schema``) against the store's record. Raises ``ValueError``
+    on a bucket-count mismatch, or when the column names and types
+    differ from a recorded schema; returns True iff the store holds
+    neither data nor a record, i.e. the write about to land should stamp
+    the record. A store with data but no record stays unrecorded: its
+    count is unknown."""
+    rec, rec_schema = read_record(spark, path)
     if rec is not None:
         if rec != n_buckets:
             raise ValueError(
                 f"store {path} records {rec} buckets; refusing to write with "
                 f"{n_buckets} (one series would span two buckets)"
             )
+        if schema is not None and rec_schema is not None:
+            have, want = _column_types(rec_schema), _column_types(schema)
+            if have != want:
+                raise ValueError(
+                    f"store {path} records data columns {have}; refusing to "
+                    f"write {want} (its reads use the recorded schema)"
+                )
         return False
     return not _holds_data(spark, path)
 
 
-def stamp_buckets(spark: SparkSession, path: str, n_buckets: int) -> None:
-    """Write the store's bucket record (creating the store directory).
-    Written aside and renamed in, so a crash never leaves a torn record."""
+def stamp_buckets(
+    spark: SparkSession, path: str, n_buckets: int, schema: StructType | None = None
+) -> None:
+    """Write the store's record (creating the store directory): the
+    bucket count, then the data-column schema as JSON when given.
+    Written aside and renamed in, so a crash never leaves a torn record;
+    an existing record is not replaced (the rename raises)."""
     fs, P = _fs(spark, path)
     tmp = P(f"{path}/{BUCKETS_FILE}.tmp")
+    lines = [str(int(n_buckets))] + ([schema.json()] if schema is not None else [])
     out = fs.create(tmp, True)
     try:
-        out.write(bytearray(f"{int(n_buckets)}\n".encode()))
+        out.write(bytearray("".join(f"{line}\n" for line in lines).encode()))
     finally:
         out.close()
-    fs.rename(tmp, P(f"{path}/{BUCKETS_FILE}"))
+    if not fs.rename(tmp, P(f"{path}/{BUCKETS_FILE}")):
+        raise OSError(f"store {path}: could not record its buckets (a record exists?)")
 
 
 def write_points(
@@ -125,14 +174,16 @@ def write_points(
     """S10/S15 — append a (pvname, time, value, ...) frame to the store.
     Adds run/bucket partition columns and sorts within partitions by
     (pvname, time) for row-group stat pruning + sequential range reads.
-    The first write into an empty or absent store records ``n_buckets``;
-    a later write with another count raises ``ValueError``. A static
-    overwrite replaces the whole store, record included."""
+    The first write into an empty or absent store records ``n_buckets``
+    and the data columns' schema; a later write with another count or
+    other data columns raises ``ValueError``. A static overwrite
+    replaces the whole store, record included."""
     spark = points.sparkSession
+    schema = data_schema(points.schema)
     replaces = mode == "overwrite" and (
         spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
     )
-    stamp = replaces or claim_buckets(spark, path, n_buckets)
+    stamp = replaces or claim_buckets(spark, path, n_buckets, schema)
     out = points.withColumn("bucket", bucket_of(F.col("pvname"), n_buckets))
     if run is not None:
         out = out.withColumn("run", F.lit(run))
@@ -144,7 +195,7 @@ def write_points(
         .parquet(path)
     )
     if stamp:
-        stamp_buckets(spark, path, n_buckets)
+        stamp_buckets(spark, path, n_buckets, schema)
 
 
 # Data columns then partition columns in partition-spec order — the
@@ -158,22 +209,33 @@ POINTS_READ_SCHEMA = "pvname string, time double, value double, run string, buck
 
 
 def read_points(spark: SparkSession, path: str) -> DataFrame:
-    """Read the store. A freshly-bootstrapped store (``pvarch init``)
-    is an existing directory with no parquet yet — zero rows can't
-    carry an inferred schema, so return an empty frame with the
-    canonical layout instead; a nonexistent path still fails loudly
-    (a typo'd --store must never read as an empty archive). The empty
-    case rides the read's own failure (no extra listing on the
-    every-query hot path); only hidden entries (the bucket record,
-    ``_SUCCESS``, checksums) may sit in an empty store. The recorded
-    bucket count, if any, rides on the ``bucket`` column's metadata
-    (``BUCKETS_META``) for ``api.PVArchEngine``'s pruned reads."""
-    n_buckets = recorded_buckets(spark, path)
+    """Read the store. With a recorded schema the read is given it, so
+    opening the store reads no parquet footer and launches no Spark job;
+    the partition columns are still inferred from the paths. A store
+    without one (unrecorded, or a one-line record) is read by inference.
+    A freshly-bootstrapped store (``pvarch init``, or ``archive_query``
+    before its first batch) is an existing directory with no parquet yet
+    — zero rows can't carry an inferred schema, and a given schema lists
+    no partition column — so return an empty frame with the canonical
+    layout instead; a nonexistent path still fails loudly (a typo'd
+    --store must never read as an empty archive). The empty case rides
+    the read itself (no extra listing on the every-query hot path); only
+    hidden entries (the record, ``_SUCCESS``, checksums) may sit in an
+    empty store. The recorded bucket count, if any, rides on the
+    ``bucket`` column's metadata (``BUCKETS_META``) for
+    ``api.PVArchEngine``'s pruned reads."""
+    n_buckets, schema = read_record(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        pts = spark.read.parquet(path)
+        pts = reader.parquet(path)
+        # a given schema reads an empty store without error, but no
+        # partition directory was listed
+        empty = "bucket" not in pts.columns and _holds_data(spark, path) is False
     except Exception:
         if _holds_data(spark, path) is not False:
             raise
+        empty = True
+    if empty:
         pts = spark.createDataFrame([], POINTS_READ_SCHEMA)
     if n_buckets is None:
         return pts
@@ -313,10 +375,11 @@ def compact_store(
     small-file problem. Compaction rewrites each (run, bucket) partition
     as ~size/target_file_bytes files, re-sorted by (pvname, time) so
     row-group min/max stats prune again (appends interleave series).
-    Only ``run=`` directories are walked, so a store written by the
-    streaming ``archive_query`` (``bucket=`` at its root, one file per
-    touched bucket per micro-batch, listed in the sink's manifest) is
-    not compacted.
+    A store written by the streaming ``archive_query`` (``bucket=`` at
+    its root, one file per touched bucket per micro-batch, listed in the
+    sink's ``_spark_metadata`` manifest) raises ``ValueError``: its
+    readers see only the files the manifest lists, so rewriting its
+    files without the manifest would hide them.
 
     Runs one partition-dir at a time with the same crash-safe two-rename
     swap as the cache upsert: rewrite to ``<dir>.tmp``, park the old dir at
@@ -328,6 +391,12 @@ def compact_store(
 
     Returns {partition: files_after} for the partitions rewritten."""
     fs, P = _fs(spark, path)
+    if fs.exists(P(f"{path}/_spark_metadata")):
+        raise ValueError(
+            f"store {path} is a streaming file-sink store (it holds "
+            "_spark_metadata): it cannot be compacted until compaction also "
+            "rewrites the sink manifest (ROADMAP: compaction of the streamed store)"
+        )
 
     result: dict[str, int] = {}
     for run_status in fs.listStatus(P(path)):

@@ -939,8 +939,9 @@ def archive_query(
     """S15 — append the compressed stream to the points store, hashed into
     series buckets (the reference's 128 pvdat tables as a partition
     column, epicsarchiver/schema.py:21-23). An empty or absent store
-    records ``buckets`` here, before the stream starts; a store that
-    records another count raises ``ValueError``.
+    records ``buckets`` and the data columns' schema here, before the
+    stream starts; a store that records another count or other data
+    columns raises ``ValueError``.
 
     The rows are clustered by ``bucket`` ahead of the file sink, so a
     micro-batch writes at most one parquet file per touched bucket
@@ -951,11 +952,12 @@ def archive_query(
     series' points are contiguous and time-ordered within a file (one
     state partition owns each key and the kernel emits per key), but
     files are not sorted by ``pvname``, and nothing compacts or re-sorts
-    a streamed store yet (``points_store.compact_store`` walks only
-    ``run=`` stores; see ROADMAP)."""
+    a streamed store yet (``points_store.compact_store`` refuses a
+    file-sink store; see ROADMAP)."""
     spark = compressed.sparkSession
-    if points_store.claim_buckets(spark, points_path, buckets):
-        points_store.stamp_buckets(spark, points_path, buckets)
+    schema = points_store.data_schema(compressed.schema)
+    if points_store.claim_buckets(spark, points_path, buckets, schema):
+        points_store.stamp_buckets(spark, points_path, buckets, schema)
     bucketed = compressed.withColumn(
         "bucket", points_store.bucket_of(F.col("pvname"), buckets)
     )

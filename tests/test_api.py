@@ -312,3 +312,59 @@ def test_pruned_facade_reads_match_unpruned(twin_stores, spark):
         assert len(seed) == 1 and seed[0].run == "run_001"
         for t in (2499.0, 4321.0):
             assert rec.get_value_at_time(pv, t) == leg.get_value_at_time(pv, t) is not None
+
+
+def _series_frames(spark):
+    """Two interleaved series; P has a tie at the last pre-window time
+    and ties inside the window, with an event_id tiebreak (``eid``) or
+    without one (``plain``, whose tied pre-window rows are identical so
+    any pick of the seed is the same row)."""
+    base = [(float(t), float(t % 7)) for t in range(0, 1001, 100)]
+    plain = [("P", t, v) for t, v in base] + [("Q", t + 50.0, -v) for t, v in base]
+    plain += [("P", 200.0, 4.0), ("P", 500.0, 9.0), ("P", 500.0, 8.0)]
+    eid = [(pv, t, v, i) for i, (pv, t, v) in enumerate(plain)]
+    eid += [("P", 200.0, 3.5, 1000), ("P", 200.0, 3.25, 999)]
+    return {
+        "plain": spark.createDataFrame(plain, "pvname string, time double, value double"),
+        "eid": spark.createDataFrame(
+            eid, "pvname string, time double, value double, event_id long"
+        ),
+    }
+
+
+@pytest.mark.parametrize("kind", ["plain", "eid"])
+@pytest.mark.parametrize(
+    "t0, t1, lookback",
+    [
+        (250.0, 650.0, None),  # seed at 200 (tied)
+        (250.0, 650.0, 100.0),  # bounded lookback keeps the seed
+        (250.0, 650.0, 30.0),  # bounded lookback drops it
+        (-100.0, 350.0, None),  # no pre-window point
+        (1500.0, 2000.0, None),  # only pre-window points: the seed alone
+        (1500.0, 2000.0, 700.0),
+        (300.0, 700.0, None),  # points exactly at t0 and at t1
+        (500.0, 500.0, 86400.0),  # a one-instant window on tied points
+    ],
+)
+def test_single_series_read_matches_bulk_get_data(spark, kind, t0, t1, lookback):
+    """PVArchEngine.get_data's one-scan read returns the rows of the
+    two-branch timeseries.get_data, time-ordered, with ties in event_id
+    order when the frame carries one."""
+    from epicsarchiver_spark.operators import timeseries
+
+    pts = _series_frames(spark)[kind]
+    cache = pts.filter(F.col("time") == 1000.0).withColumn("time", F.lit(3000.0))
+    eng = PVArchEngine(spark, pts, cache=cache)
+    ref = timeseries.get_data(pts.filter(F.col("pvname") == "P"), t0, t1, lookback=lookback)
+    for with_current in (False, True):
+        want = ref
+        if with_current:
+            want = timeseries.with_current(ref, cache.filter(F.col("pvname") == "P"))
+        want = [tuple(r) for r in want.orderBy("time").collect()]
+        got = [
+            tuple(r)
+            for r in eng.get_data("P", t0, t1, with_current=with_current, lookback=lookback).collect()
+        ]
+        assert sorted(got) == sorted(want) and got, (with_current, got, want)
+        key = (lambda r: (r[1], r[3])) if kind == "eid" else (lambda r: r[1])
+        assert got == sorted(got, key=key), got

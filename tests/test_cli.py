@@ -87,6 +87,27 @@ def test_compact_cli(spark, tmp_path, capsys):
     assert read_points(spark, path).count() == 4
 
 
+def test_compact_cli_refuses_a_streamed_store(spark, tmp_path, capsys):
+    """`pvarch compact` on a store written by `pvarch archive` (a file
+    sink with a _spark_metadata manifest) exits non-zero with the reason
+    instead of reporting 0 partitions compacted; the store is intact."""
+    src = tmp_path / "events_in"
+    src.mkdir()
+    pd.DataFrame(
+        [("S:a", float(t), float(t)) for t in range(0, 400, 100)],
+        columns=["pvname", "time", "value"],
+    ).to_parquet(src / "b0.parquet", index=False)
+    path = str(tmp_path / "store")
+    argv = ["--store", path, "archive", str(src), "--checkpoint", str(tmp_path / "ck")]
+    assert cli.main([*argv, "--buckets", "4"]) == 0
+    n = read_points(spark, path).count()
+    capsys.readouterr()
+    assert cli.main(["--store", path, "compact"]) == 1
+    out, err = capsys.readouterr()
+    assert "_spark_metadata" in err and "compacted" not in out
+    assert read_points(spark, path).count() == n > 0
+
+
 def test_next_rotates_runs(spark, tmp_path, capsys):
     """pvarch next (ref pvarch.py:204-216): first call seeds the runs
     dimension; later calls close the open run and increment the name."""
@@ -772,6 +793,32 @@ def test_import_ascii_cli_roundtrip(spark, store, tmp_path, capsys):
 
     rows = {r.time: r.value for r in read_points(spark, store2).collect()}
     assert rows == {1000.5: 1.25, 1001.0: 2.5}
+
+
+def test_import_ascii_counts_from_one_bucket(spark, store, tmp_path, capsys, monkeypatch):
+    """import_ascii's landed-row count reads the PV's bucket only (a
+    bucket PartitionFilter from the store's record) and counts the same
+    rows as before: those of the PV in the imported run."""
+    from epicsarchiver_spark.plans import scan_partition_filters
+    from epicsarchiver_spark.sources import points_store
+
+    seen = []
+    real = points_store.series_of
+
+    def spy(*a, **kw):
+        seen.append(real(*a, **kw))
+        return seen[-1]
+
+    monkeypatch.setattr(points_store, "series_of", spy)
+    p = tmp_path / "ascii"
+    p.mkdir()
+    (p / "part-0.txt").write_text("1000.500  1.25  20010909 014640\n1001.000  2.50  20010909 014641\n")
+    store2 = str(tmp_path / "store_ascii")
+    for pv, run in (("CLI:x.VAL", "run_001"), ("CLI:y.VAL", "run_001"), ("CLI:x.VAL", "run_002")):
+        assert cli.main(["--store", store2, "import_ascii", str(p), "--pv", pv, "--run", run]) == 0
+        assert "imported 2 points" in capsys.readouterr().out
+    assert len(seen) == 3
+    assert all(any("bucket" in f for f in scan_partition_filters(df)) for df in seen)
 
 
 def test_bpe_cli_prints_merges(spark, tmp_path, capsys):

@@ -72,8 +72,10 @@ def _compare_gate(spark, cursor, name) -> None:
 
 
 @pytest.fixture(scope="session")
-def parity_outcomes(spark, duck):
-    """Run EVERY gate's comparison once, a few at a time from driver
+def parity_outcomes(request, spark, duck):
+    """Run every SELECTED gate's comparison once (all of them in a full
+    run; only the gates whose ``test_query_matches_oracle`` items were
+    collected under ``-k`` or a node id), a few at a time from driver
     threads (guide §2.6: Spark happily runs several jobs in one
     application — sequential gates at sf0.01 left most of the cores idle
     in each gate's straggler tail, and the suite's ~25 min of oracle
@@ -88,6 +90,11 @@ def parity_outcomes(spark, duck):
 
     workers = max(1, int(os.environ.get("SPARK_GRAFT_PARITY_WORKERS", "8")))
     outcomes: dict[str, Exception | None] = {}
+    selected = sorted(
+        item.callspec.params["name"]
+        for item in request.session.items
+        if getattr(item, "function", None) is test_query_matches_oracle
+    )
 
     def run(name: str):
         cursor = duck.cursor()
@@ -103,7 +110,7 @@ def parity_outcomes(spark, duck):
 
     with ThreadPoolExecutor(max_workers=workers) as pool:
         try:
-            for name, exc in pool.map(run, sorted(ORACLES)):
+            for name, exc in pool.map(run, selected):
                 outcomes[name] = exc
         except BaseException:
             pool.shutdown(wait=False, cancel_futures=True)  # drop the queued gates

@@ -249,6 +249,52 @@ def test_facade_defaults_to_heartbeat_lookback(spark, tmp_path):
     assert "1000.0" not in unbounded, unbounded  # only the range bounds remain
 
 
+def _jobs_and_tasks(spark, group: str, action):
+    """Run ``action`` under a fresh job group; (result, jobs, tasks)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+    return out, len(jobs), sum(st.getStageInfo(s).numTasks for s in stages)
+
+
+def test_single_series_reads_run_one_scan_in_one_job(spark, tmp_path):
+    """On a recorded 2-run store, PVArchEngine.get_data plans one parquet
+    scan and no Exchange, and its collect is one job of one task (the
+    seed comes from the same scan); get_value_at_time is one job too."""
+    import pandas as pd
+
+    from epicsarchiver_spark.api import PVArchEngine
+    from epicsarchiver_spark.sources.points_store import read_points, write_points
+
+    path = str(tmp_path / "pts")
+    for run, lo in (("run_001", 0), ("run_002", 2500)):
+        pdf = pd.DataFrame(
+            [(pv, float(t), 1.0) for pv in ("P1", "P2", "P3") for t in range(lo, lo + 2500, 50)],
+            columns=["pvname", "time", "value"],
+        )
+        write_points(spark.createDataFrame(pdf), path, run=run, n_buckets=4)
+    eng = PVArchEngine(spark, read_points(spark, path))
+
+    df = eng.get_data("P1", 2400.0, 2600.0)
+    rows, jobs, tasks = _jobs_and_tasks(spark, "single-pv-get-data", df.collect)
+    assert [r.time for r in rows] == [2350.0 + 50 * i for i in range(6)]
+    assert (jobs, tasks) == (1, 1)
+    plan = explain_str(df)
+    assert "Exchange" not in plan, plan
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+
+    got, jobs, _ = _jobs_and_tasks(
+        spark, "single-pv-value-at", lambda: eng.get_value_at_time("P1", 2512.0)
+    )
+    assert got == (2500.0, 1.0) and jobs == 1
+
+
 def test_vocab_topk_is_take_ordered_no_count_distinct(spark):
     """vocabulary_topk: the final top-k must plan as
     TakeOrderedAndProject (per-partition heaps, no global sort) and df

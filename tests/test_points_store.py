@@ -15,10 +15,13 @@ from epicsarchiver_spark.plans import (
 )
 from epicsarchiver_spark.sources.points_store import (
     BUCKETS_META,
+    POINTS_READ_SCHEMA,
     bucket_of,
+    compact_store,
+    data_schema,
+    read_record,
     range_read_store,
     read_points,
-    recorded_buckets,
     runs_for_window,
     series_filter,
     stamp_buckets,
@@ -313,7 +316,7 @@ def _pts(spark, pvs=("PV:A", "PV:B"), t0=0):
 def test_bucket_record_rides_on_the_read(spark, store):
     """The first write stamps the store's bucket count; read_points hands
     it on as metadata of the bucket column, and the frame still prunes."""
-    assert recorded_buckets(spark, store) == N_BUCKETS
+    assert read_record(spark, store)[0] == N_BUCKETS
     pts = read_points(spark, store)
     assert pts.schema["bucket"].metadata == {BUCKETS_META: N_BUCKETS}
     assert pts.columns == ["pvname", "time", "value", "run", "bucket"]
@@ -332,7 +335,7 @@ def test_write_refuses_mismatched_bucket_count(spark, tmp_path):
     assert read_points(spark, path).count() == 40
     # a static overwrite replaces the whole store, so it re-records
     write_points(_pts(spark), path, run="r1", n_buckets=8, mode="overwrite")
-    assert recorded_buckets(spark, path) == 8
+    assert read_record(spark, path)[0] == 8
     assert read_points(spark, path).count() == 20
 
 
@@ -346,7 +349,7 @@ def test_store_without_record_is_never_stamped(spark, tmp_path):
     for name in ("_buckets", "._buckets.crc"):
         os.remove(os.path.join(path, name))
     write_points(_pts(spark, t0=100), path, run="r1", n_buckets=4)
-    assert recorded_buckets(spark, path) is None
+    assert read_record(spark, path)[0] is None
     assert read_points(spark, path).schema["bucket"].metadata == {}
 
 
@@ -384,7 +387,7 @@ def test_archive_query_records_and_checks_bucket_count(spark, tmp_path):
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(tmp_path / "events"))
     path = str(tmp_path / "store")
     archive_query(stream, path, str(tmp_path / "ckpt"), buckets=16)
-    assert recorded_buckets(spark, path) == 16
+    assert read_record(spark, path)[0] == 16
     with pytest.raises(ValueError, match="records 16 buckets"):
         archive_query(stream, path, str(tmp_path / "ckpt2"), buckets=128)
 
@@ -411,8 +414,8 @@ def test_empty_store_probe_ignores_hidden_entries(spark, tmp_path):
 def test_store_open_lists_on_the_driver(spark, tmp_path):
     """A 2-run x 128-bucket store sits above Spark's parallel listing
     threshold (32 dirs); in local mode read_points lists it on the
-    driver, so an open launches at most one job (schema inference), not
-    one listing job per run."""
+    driver and reads with the recorded schema, so an open launches no
+    job: no listing job per run, no footer read to infer the schema."""
     path = str(tmp_path / "store")
     names = [f"PV:{i:03d}" for i in range(600)]
     for run in ("r1", "r2"):
@@ -423,4 +426,133 @@ def test_store_open_lists_on_the_driver(spark, tmp_path):
         read_points(spark, path)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("store-open-probe")) <= 1
+    assert len(sc.statusTracker().getJobIdsForGroup("store-open-probe")) == 0
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _restamp(spark, path, n_buckets, schema=None):
+    """Replace the store's record (stamp_buckets never overwrites one)."""
+    import os
+
+    for name in ("_buckets", "._buckets.crc"):
+        os.remove(os.path.join(path, name))
+    stamp_buckets(spark, path, n_buckets, schema)
+
+
+def test_record_holds_the_data_schema(spark, store):
+    """The first write records the data columns' schema (nullable, no
+    partition columns) on the record's second line; the read given it
+    has the schema inference gives, bucket metadata included, and the
+    same rows. A one-line record (written before the record held the
+    schema) reads by inference."""
+    n, schema = read_record(spark, store)
+    assert n == N_BUCKETS
+    assert schema.simpleString() == "struct<pvname:string,time:double,value:double>"
+    assert all(f.nullable for f in schema)
+    recorded = read_points(spark, store)
+    rows = _rows(recorded)
+    _restamp(spark, store, N_BUCKETS)  # the one-line record
+    try:
+        assert read_record(spark, store) == (N_BUCKETS, None)
+        inferred = read_points(spark, store)
+        assert inferred.schema == recorded.schema
+        assert inferred.schema["bucket"].metadata == {BUCKETS_META: N_BUCKETS}
+        assert _rows(inferred) == rows and len(rows) == 800
+    finally:
+        _restamp(spark, store, N_BUCKETS, schema)
+
+
+def test_write_refuses_mismatched_data_columns(spark, tmp_path):
+    """An append whose data columns differ in name or type from the
+    record is refused, as a bucket-count mismatch is; the same columns
+    in another order append."""
+    path = str(tmp_path / "store")
+    write_points(_pts(spark), path, run="r1", n_buckets=4)
+    with pytest.raises(ValueError, match="records data columns"):
+        write_points(
+            _pts(spark, t0=100).withColumn("value", F.col("value").cast("string")),
+            path, run="r1", n_buckets=4,
+        )
+    with pytest.raises(ValueError, match="records data columns"):
+        write_points(_pts(spark, t0=100).withColumn("event_id", F.lit(1)), path, run="r1", n_buckets=4)
+    write_points(_pts(spark, t0=100).select("value", "time", "pvname"), path, run="r2", n_buckets=4)
+    assert _rows(read_points(spark, path).select("pvname", "time", "value")) == sorted(
+        _rows(_pts(spark)) + _rows(_pts(spark, t0=100))
+    )
+
+
+def test_stamped_store_without_data_reads_empty(spark, tmp_path):
+    """A store stamped with a schema but holding no data file — an
+    archive_query store before its first batch, and after a run with no
+    batch — reads as the canonical empty frame, in no job."""
+    from epicsarchiver_spark.streaming.ingest import EVENT_SCHEMA, archive_query
+
+    (tmp_path / "events").mkdir()
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(tmp_path / "events"))
+    path = str(tmp_path / "store")
+    writer = archive_query(stream, path, str(tmp_path / "ckpt"), buckets=16)
+    assert read_record(spark, path)[1] == data_schema(EVENT_SCHEMA)
+
+    def check():
+        pts = read_points(spark, path)
+        assert pts.columns == [f.split()[0] for f in POINTS_READ_SCHEMA.split(", ")]
+        assert pts.schema["bucket"].metadata == {BUCKETS_META: 16}
+        assert pts.count() == 0
+
+    check()
+    q = writer.trigger(availableNow=True).start()
+    assert q.awaitTermination(120)
+    assert (tmp_path / "store" / "_spark_metadata").is_dir()
+    check()
+
+
+@pytest.fixture(scope="module")
+def streamed_store(spark, tmp_path_factory):
+    """A 4-bucket store written by the archive stream (one batch)."""
+    from epicsarchiver_spark.streaming.ingest import (
+        EVENT_SCHEMA,
+        archive_query,
+        compressed_stream,
+    )
+
+    root = tmp_path_factory.mktemp("streamed")
+    (root / "events").mkdir()
+    pd.DataFrame(
+        {"pvname": ["X", "Y", "X"], "time": [0.0, 50.0, 100.0], "value": [1.0, 2.0, 3.0]}
+    ).to_parquet(root / "events" / "p0.parquet", index=False)
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(root / "events"))
+    path = str(root / "store")
+    q = (
+        archive_query(compressed_stream(stream, 5.0, 0.0, flush_ms=None), path, str(root / "ckpt"), buckets=4)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    return path
+
+
+def test_streamed_store_reads_with_the_recorded_schema(spark, streamed_store):
+    """A file-sink store reads the same schema and rows with its recorded
+    schema as by inference from its manifest's files."""
+    _, schema = read_record(spark, streamed_store)
+    recorded = read_points(spark, streamed_store)
+    rows = _rows(recorded)
+    _restamp(spark, streamed_store, 4)
+    try:
+        inferred = read_points(spark, streamed_store)
+        assert inferred.schema == recorded.schema
+        assert recorded.columns == ["pvname", "time", "value", "bucket"]
+        assert _rows(inferred) == rows
+        assert [r[:3] for r in rows] == [("X", 0.0, 1.0), ("X", 100.0, 3.0), ("Y", 50.0, 2.0)]
+    finally:
+        _restamp(spark, streamed_store, 4, schema)
+
+
+def test_compact_refuses_a_streamed_store(spark, streamed_store):
+    """compact_store fails loudly on a file-sink store (its readers see
+    only the files its manifest lists) instead of compacting nothing."""
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        compact_store(spark, streamed_store)
