@@ -23,6 +23,25 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
 
 
+def local_jvm_memory(phys_bytes: int | None = None) -> tuple[str, str]:
+    """Default (heap, direct memory) of the local-mode JVM, as JVM sizes.
+
+    Rule: the JVM gets at most 5/8 of physical memory, half of it as
+    heap and an eighth as direct memory (Arrow and netty buffers),
+    capped at 16g and 8g; the other 3/8 stays with the Python workers
+    of the pandas UDFs, the driver's Python process and the OS. A heap
+    allowed to outgrow the machine gets the JVM killed: with a 16g heap
+    on a 15 GB box without swap the kernel killed it at 15.2 GB RSS.
+    Floors 1g / 512m. ``phys_bytes`` defaults to this machine's."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):  # no sysconf: the caps
+            phys_bytes = 1 << 40
+    mib = phys_bytes >> 20
+    return f"{min(max(mib // 2, 1024), 16384)}m", f"{min(max(mib // 8, 512), 8192)}m"
+
+
 def get_spark(app_name: str = "epicsarchiver-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or get) the tuned SparkSession.
 
@@ -53,17 +72,18 @@ def get_spark(app_name: str = "epicsarchiver-spark", shuffle_partitions: int | N
         # whose output exceeds ~1 GB of concurrent batches dies in
         # netty's direct arena — found by tools/scale_probe.py at ×10
         # data). Cluster deployments size executors explicitly instead.
+        # Both are sized from physical memory (``local_jvm_memory``);
+        # $SPARK_GRAFT_DRIVER_MEM sets the heap instead.
         # Listing stays on the driver: Spark lists a level of more than
         # 32 sibling dirs (each 128-bucket run of the points store) with
         # a job, whose tasks would run in this same JVM anyway, so that
         # job only adds a launch per run to every store open.
+        heap, direct = local_jvm_memory()
         builder = (
             builder.master(f"local[{cores}]")
             .config("spark.ui.enabled", "false")
             .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-            .config(
-                "spark.driver.extraJavaOptions", "-XX:MaxDirectMemorySize=8g"
-            )
+            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
+            .config("spark.driver.extraJavaOptions", f"-XX:MaxDirectMemorySize={direct}")
         )
     return builder.getOrCreate()

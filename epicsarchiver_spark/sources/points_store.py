@@ -43,7 +43,9 @@ dataset,
   Spark's parallel partition-discovery threshold there), so an open
   costs directory listings and one small record read. A store without
   a schema line (recorded before the record held one) is read by
-  inference, one footer-reading job per open.
+  inference, one footer-reading job per open, until its next write
+  (``claim_buckets``) adds the line, provided the inferred schema is
+  the write's.
 - At cluster scale the same layout bucket-aligns the shuffle for
   per-series windows; local tests keep N small.
 """
@@ -126,7 +128,12 @@ def claim_buckets(
     differ from a recorded schema; returns True iff the store holds
     neither data nor a record, i.e. the write about to land should stamp
     the record. A store with data but no record stays unrecorded: its
-    count is unknown."""
+    count is unknown.
+
+    A one-line record (written before the record held the schema) gains
+    ``schema`` here when the schema inferred from the store's data
+    equals it, so later opens read no footer; otherwise it stays as it
+    is, and its reads keep inferring."""
     rec, rec_schema = read_record(spark, path)
     if rec is not None:
         if rec != n_buckets:
@@ -134,7 +141,10 @@ def claim_buckets(
                 f"store {path} records {rec} buckets; refusing to write with "
                 f"{n_buckets} (one series would span two buckets)"
             )
-        if schema is not None and rec_schema is not None:
+        if schema is not None and rec_schema is None:
+            if _inferred(spark, path) == schema:
+                stamp_buckets(spark, path, n_buckets, schema, replace=True)
+        elif schema is not None:
             have, want = _column_types(rec_schema), _column_types(schema)
             if have != want:
                 raise ValueError(
@@ -145,13 +155,28 @@ def claim_buckets(
     return not _holds_data(spark, path)
 
 
+def _inferred(spark: SparkSession, path: str) -> StructType | None:
+    """The data schema Spark infers from the store's files (one
+    footer-reading job); None if it cannot (e.g. no data file)."""
+    try:
+        return data_schema(spark.read.parquet(path).schema)
+    except Exception:  # noqa: BLE001 - unreadable data: no schema to record
+        return None
+
+
 def stamp_buckets(
-    spark: SparkSession, path: str, n_buckets: int, schema: StructType | None = None
+    spark: SparkSession,
+    path: str,
+    n_buckets: int,
+    schema: StructType | None = None,
+    replace: bool = False,
 ) -> None:
     """Write the store's record (creating the store directory): the
     bucket count, then the data-column schema as JSON when given.
-    Written aside and renamed in, so a crash never leaves a torn record;
-    an existing record is not replaced (the rename raises)."""
+    Written aside and renamed in, so a crash never leaves a torn record.
+    An existing record is replaced only with ``replace``, by one
+    overwriting rename (a crash leaves the old record or the new one);
+    otherwise the rename raises."""
     fs, P = _fs(spark, path)
     tmp = P(f"{path}/{BUCKETS_FILE}.tmp")
     lines = [str(int(n_buckets))] + ([schema.json()] if schema is not None else [])
@@ -160,7 +185,14 @@ def stamp_buckets(
         out.write(bytearray("".join(f"{line}\n" for line in lines).encode()))
     finally:
         out.close()
-    if not fs.rename(tmp, P(f"{path}/{BUCKETS_FILE}")):
+    dst = P(f"{path}/{BUCKETS_FILE}")
+    if replace:
+        hfs = spark._jvm.org.apache.hadoop.fs
+        overwrite = spark.sparkContext._gateway.new_array(hfs.Options.Rename, 1)
+        overwrite[0] = hfs.Options.Rename.OVERWRITE
+        ctx = hfs.FileContext.getFileContext(dst.toUri(), spark._jsc.hadoopConfiguration())
+        ctx.rename(tmp, dst, overwrite)
+    elif not fs.rename(tmp, dst):
         raise OSError(f"store {path}: could not record its buckets (a record exists?)")
 
 

@@ -6,21 +6,26 @@ timeout). A notification fires only on the ok→alarm *transition*, and only
 if ``now > last_notice + timeout``; staying in alarm does not re-fire.
 
 Spark formulation: broadcast-join the (small) rules table onto the event
-stream, then a keyed stateful transition detector per (pvname, alert_id)
-via ``applyInPandasWithState``. State = (status, last_notice) — the exact
-fields the reference keeps (cache.py:754-770). "Mail" is a sink table of
-notification records (side-effect-free engine; delivery is an edge
-concern)."""
+stream, then a keyed stateful transition detector per (pvname, alert_id).
+State = (status, last_notice) — the exact fields the reference keeps
+(cache.py:754-770). "Mail" is a sink table of notification records
+(side-effect-free engine; delivery is an edge concern).
+
+Every stream here (alert, outlier, flatline, ewma, holt, discord, hw,
+cusum) runs on ``fold.keyed_fold``, the keyed-fold primitive shared with
+the compressor: it owns the state store call, cold-state init, the null
+guard, the stable time sort (ties fold in arrival order), state
+write-back and the output frame. Each stream keeps its config checks,
+its state tuple and CSV codec, its output schema and a step function
+that folds one key's time-ordered rows over its state."""
 
 from __future__ import annotations
 
 import math
-from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -30,6 +35,8 @@ from pyspark.sql.types import (
 )
 
 import operator as _op
+
+from epicsarchiver_spark.streaming.fold import keyed_fold
 
 _OPS = {
     "eq": _op.eq,
@@ -87,23 +94,25 @@ def evaluate_transitions(
     return out, status, last_notice
 
 
-def _alert_kernel():
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - no timeouts registered
-            yield from ()
-            return
-        status, last_notice = state.get if state.exists else ("ok", float("-inf"))
-        rows = pd.concat(list(pdfs)) if pdfs else pd.DataFrame()
-        if len(rows):
-            rows = rows.sort_values("time")
-            out, status, last_notice = evaluate_transitions(rows, status, last_notice)
-            state.update((status, last_notice))
-            if out:
-                yield pd.DataFrame(out)
+def _alert_step(key: tuple, state: tuple, rows):
+    out, status, last_notice = evaluate_transitions(rows.sorted_frame(), *state)
+    cols = ("time", "value", "trippoint", "compare")
+    return (status, last_notice), _columns(cols, [[n[c] for c in cols] for n in out])
 
-    return fn
+
+def _columns(names, rows) -> dict | None:
+    """A step's emitted row tuples as its ``out`` columns; None if none."""
+    return dict(zip(names, map(list, zip(*rows)))) if rows else None
+
+
+def _round6(x: float) -> float:
+    """Round half away from zero to 6 dp in explicit IEEE steps — the
+    batch operators' rounding (``operators.timeseries``)."""
+    return (
+        math.floor(abs(x) * 1e6 + 0.5)
+        * (1.0 if x > 0 else -1.0 if x < 0 else 0.0)
+        / 1e6
+    )
 
 
 def alert_stream(events: DataFrame, rules: DataFrame) -> DataFrame:
@@ -113,12 +122,13 @@ def alert_stream(events: DataFrame, rules: DataFrame) -> DataFrame:
     joined = events.join(
         F.broadcast(rules.filter(F.col("active") == "yes")), "pvname"
     ).select("alert_id", "pvname", "time", "value", "trippoint", "compare", "timeout")
-    return joined.groupBy("alert_id", "pvname").applyInPandasWithState(
-        _alert_kernel(),
-        outputStructType=NOTIFY_SCHEMA,
-        stateStructType=ALERT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        joined,
+        ["alert_id", "pvname"],
+        _alert_step,
+        output_schema=NOTIFY_SCHEMA,
+        state_schema=ALERT_STATE_SCHEMA,
+        init=lambda key: ("ok", float("-inf")),
     )
 
 
@@ -181,61 +191,22 @@ def outlier_stream(
         raise ValueError("window must be >= 2 (window=1 can never flag)")
     win, kk = window, k
 
-    def kernel(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pvname = key[0]
-        if state.exists:
-            ts_csv, vs_csv = state.get
-            buf_t = [float(x) for x in ts_csv.split(",")] if ts_csv else []
-            buf_v = [float(x) for x in vs_csv.split(",")] if vs_csv else []
-        else:
-            buf_t, buf_v = [], []
-        chunks = list(pdfs)
-        rows = (
-            chunks[0]
-            if len(chunks) == 1
-            else (pd.concat(chunks) if chunks else pd.DataFrame())
+    def step(key: tuple, state: tuple, rows):
+        buf_t, buf_v = ([float(x) for x in csv.split(",")] if csv else [] for csv in state)
+        flags, buf_t, buf_v = _rolling_flags(
+            rows.time.tolist(), rows.col("value").tolist(), buf_t, buf_v, win, kk
         )
-        if len(rows):
-            # a null time/value row must not wedge the batch in an
-            # at-least-once retry loop (same guard as the JDBC lane)
-            rows = rows.dropna(subset=["time", "value"])
-        if len(rows):
-            t_arr = rows["time"].to_numpy()
-            order = t_arr.argsort(kind="stable")
-            flags, buf_t, buf_v = _rolling_flags(
-                t_arr[order].tolist(),
-                rows["value"].to_numpy()[order].tolist(),
-                buf_t,
-                buf_v,
-                win,
-                kk,
-            )
-            state.update(
-                (
-                    ",".join(repr(x) for x in buf_t),
-                    ",".join(repr(x) for x in buf_v),
-                )
-            )
-            if flags:
-                yield pd.DataFrame(
-                    {
-                        "pvname": pvname,
-                        "time": [f[0] for f in flags],
-                        "value": [f[1] for f in flags],
-                        "med": [f[2] for f in flags],
-                        "mad": [f[3] for f in flags],
-                        "n_win": [f[4] for f in flags],
-                    }
-                )
+        state = (",".join(repr(x) for x in buf_t), ",".join(repr(x) for x in buf_v))
+        return state, _columns(("time", "value", "med", "mad", "n_win"), flags)
 
-    return events.groupBy("pvname").applyInPandasWithState(
-        kernel,
-        outputStructType=OUTLIER_SCHEMA,
-        stateStructType=_OUTLIER_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        events,
+        ["pvname"],
+        step,
+        output_schema=OUTLIER_SCHEMA,
+        state_schema=_OUTLIER_STATE_SCHEMA,
+        init=lambda key: ("", ""),
+        required=("time", "value"),
     )
 
 
@@ -281,59 +252,35 @@ def flatline_stream(
     micro-batch boundaries (the run carries between batches)."""
     mp, ms, qm = int(min_points), float(min_duration_s), float(quantum)
 
-    def kernel(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pvname = key[0]
-        if state.exists:
-            q, start_t, n, last_t, alerted = state.get
-            alerted = bool(alerted)
-        else:
-            q, start_t, n, last_t, alerted = None, 0.0, 0, 0.0, False
-        chunks = list(pdfs)
-        rows = (
-            chunks[0]
-            if len(chunks) == 1
-            else (pd.concat(chunks) if chunks else pd.DataFrame())
-        )
-        if len(rows):
-            rows = rows.dropna(subset=["time", "value"])
+    def step(key: tuple, state: tuple, rows):
+        q, start_t, n, last_t, alerted = state
         out = []
-        if len(rows):
-            rows = rows.sort_values("time", kind="stable")
-            for t, v in zip(rows["time"].tolist(), rows["value"].tolist()):
-                # HALF_UP like the batch twin's F.round — python round()
-                # is half-even and would disagree at half-quantum values
-                x = v / qm
-                qv = int(math.floor(abs(x) + 0.5) * (1 if x >= 0 else -1))
-                if q is None or qv != q:
-                    if alerted:
-                        out.append(
-                            (pvname, "released", t, v, n, last_t - start_t)
-                        )
-                    q, start_t, n, alerted = qv, t, 1, False
-                else:
-                    n += 1
-                last_t = t
-                if not alerted and n >= mp and (t - start_t) >= ms:
-                    out.append((pvname, "stuck", t, v, n, t - start_t))
-                    alerted = True
-            state.update((q, start_t, n, last_t, 1 if alerted else 0))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "pvname", "kind", "time", "value",
-                    "run_points", "run_seconds",
-                ],
-            )
+        for t, v in zip(rows.time.tolist(), rows.col("value").tolist()):
+            # HALF_UP like the batch twin's F.round — python round() is
+            # half-even and would disagree at half-quantum values
+            x = v / qm
+            qv = int(math.floor(abs(x) + 0.5) * (1 if x >= 0 else -1))
+            if q is None or qv != q:
+                if alerted:
+                    out.append(("released", t, v, n, last_t - start_t))
+                q, start_t, n, alerted = qv, t, 1, 0
+            else:
+                n += 1
+            last_t = t
+            if not alerted and n >= mp and (t - start_t) >= ms:
+                out.append(("stuck", t, v, n, t - start_t))
+                alerted = 1
+        cols = ("kind", "time", "value", "run_points", "run_seconds")
+        return (q, start_t, n, last_t, alerted), _columns(cols, out)
 
-    return events.groupBy("pvname").applyInPandasWithState(
-        kernel,
-        outputStructType=FLATLINE_SCHEMA,
-        stateStructType=_FLATLINE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        events,
+        ["pvname"],
+        step,
+        output_schema=FLATLINE_SCHEMA,
+        state_schema=_FLATLINE_STATE_SCHEMA,
+        init=lambda key: (None, 0.0, 0, 0.0, 0),
+        required=("time", "value"),
     )
 
 
@@ -363,22 +310,49 @@ def _half_up_6dp(x: float) -> float:
     return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
 
 
-def _load_qbuf(state: "GroupState") -> list[int | None]:
-    """Quantized-value window buffer from CSV state; ``n`` marks a
-    NULL-value slot (it occupies a window position, exactly like the
-    batch operators' row frame, but contributes nothing to the dot
-    product — collect_list-skips-NULLs parity)."""
-    if not state.exists:
-        return []
-    (qs_csv,) = state.get
-    if not qs_csv:
-        return []
-    return [None if tok == "n" else int(tok) for tok in qs_csv.split(",")]
+def _qbuf_stream(
+    events: DataFrame,
+    span: int,
+    quantum: float,
+    output_schema: StructType,
+    emit,
+) -> DataFrame:
+    """The smoothing streams' fold (ewma, holt, hw): each event's value
+    enters its series' trailing ``span`` window of quantized values,
+    and the event is re-emitted with ``emit(window)``, the columns after
+    ``value``. A NULL value occupies a window slot as ``None`` (an ``n``
+    in the state CSV), exactly like the batch operators' row frame, but
+    contributes nothing to the sums — collect_list-skips-NULLs parity.
+    State per series is the last ``span``−1 slots as one CSV."""
+    spn, qm = int(span), float(quantum)
+    names = [f.name for f in output_schema.fields[3:]]
 
+    def step(key: tuple, state: tuple, rows):
+        (qs_csv,) = state
+        buf = [None if tok == "n" else int(tok) for tok in qs_csv.split(",")] if qs_csv else []
+        out = {c: [] for c in ("time", "value", *names)}
+        for t, v in zip(rows.time.tolist(), rows.col("value").tolist()):
+            isnull = pd.isna(v)
+            buf.append(None if isnull else _half_up_long(v / qm))
+            buf = buf[-spn:]
+            out["time"].append(t)
+            out["value"].append(None if isnull else v)
+            for c, x in zip(names, emit(buf)):
+                out[c].append(x)
+        state = (",".join("n" if x is None else str(x) for x in buf[-(spn - 1):]),)
+        return state, {
+            "time": out["time"],
+            **{c: pd.array(out[c], dtype="Float64") for c in ("value", *names)},
+        }
 
-def _save_qbuf(state: "GroupState", buf: list[int | None], span: int) -> None:
-    state.update(
-        (",".join("n" if x is None else str(x) for x in buf[-(span - 1):]),)
+    return keyed_fold(
+        events,
+        ["pvname"],
+        step,
+        output_schema=output_schema,
+        state_schema=_EWMA_STATE_SCHEMA,
+        init=lambda key: ("",),
+        required=("time",),
     )
 
 
@@ -416,59 +390,17 @@ def ewma_stream(
         (alpha_den - alpha_num) ** age * alpha_den ** (span - 1 - age)
         for age in range(span)
     ]
-    spn, qm = int(span), float(quantum)
+    qm = float(quantum)
 
-    def kernel(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pvname = key[0]
-        buf = _load_qbuf(state)
-        chunks = list(pdfs)
-        rows = (
-            chunks[0]
-            if len(chunks) == 1
-            else (pd.concat(chunks) if chunks else pd.DataFrame())
-        )
-        if len(rows):
-            rows = rows.dropna(subset=["time"])
-        if len(rows):
-            t_arr = rows["time"].to_numpy()
-            v_raw = rows["value"].to_numpy()
-            order = t_arr.argsort(kind="stable")
-            out_t, out_v, out_e = [], [], []
-            for idx in order:
-                t = float(t_arr[idx])
-                isnull = pd.isna(v_raw[idx])
-                v = None if isnull else float(v_raw[idx])
-                buf.append(None if isnull else _half_up_long(v / qm))
-                buf = buf[-spn:]
-                vals = [x for x in buf if x is not None]
-                n = len(vals)
-                out_t.append(t)
-                out_v.append(v)
-                if n:
-                    num = sum(vals[j] * wt[n - 1 - j] for j in range(n))
-                    den = sum(wt[:n])
-                    out_e.append(_half_up_6dp(num / den * qm))
-                else:
-                    out_e.append(None)
-            _save_qbuf(state, buf, spn)
-            yield pd.DataFrame(
-                {
-                    "pvname": pvname,
-                    "time": out_t,
-                    "value": pd.array(out_v, dtype="Float64"),
-                    "ewma": pd.array(out_e, dtype="Float64"),
-                }
-            )
+    def emit(buf):
+        vals = [x for x in buf if x is not None]
+        n = len(vals)
+        if not n:
+            return (None,)
+        num = sum(vals[j] * wt[n - 1 - j] for j in range(n))
+        return (_half_up_6dp(num / sum(wt[:n]) * qm),)
 
-    return events.groupBy("pvname").applyInPandasWithState(
-        kernel,
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _qbuf_stream(events, span, quantum, EWMA_SCHEMA, emit)
 
 
 HOLT_SCHEMA = StructType(
@@ -508,81 +440,28 @@ def holt_stream(
 
     State per series is the last ``span``−1 quantized values (the
     ewma_stream posture: a CSV of ≤7 longs — bytes per PV)."""
-    import math
-
     from epicsarchiver_spark.operators.timeseries import _holt_tables
 
     if span < 2:
         raise ValueError("span must be >= 2")
     WL, WB, DEN = _holt_tables(alpha_num, alpha_den, beta_num, beta_den, span)
-    spn, qm, h = int(span), float(quantum), int(horizon)
+    qm, h = float(quantum), int(horizon)
 
-    def r6(x: float) -> float:
+    def emit(buf):
+        vals = [x for x in buf if x is not None]
+        L = len(vals)
+        if not L:
+            return (None, None, None)
+        num_l = sum(vals[i] * WL[L - 1][i] for i in range(L))
+        num_b = sum(vals[i] * WB[L - 1][i] for i in range(L))
+        den = float(DEN[L - 1])
         return (
-            math.floor(abs(x) * 1e6 + 0.5)
-            * (1.0 if x > 0 else -1.0 if x < 0 else 0.0)
-            / 1e6
+            _round6(float(num_l) / den * qm),
+            _round6(float(num_b) / den * qm),
+            _round6(float(num_l + h * num_b) / den * qm),
         )
 
-    def kernel(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pvname = key[0]
-        buf = _load_qbuf(state)
-        chunks = list(pdfs)
-        rows = (
-            chunks[0]
-            if len(chunks) == 1
-            else (pd.concat(chunks) if chunks else pd.DataFrame())
-        )
-        if len(rows):
-            rows = rows.dropna(subset=["time"])
-        if len(rows):
-            t_arr = rows["time"].to_numpy()
-            v_raw = rows["value"].to_numpy()
-            order = t_arr.argsort(kind="stable")
-            out = {"time": [], "value": [], "level": [], "trend": [], "forecast": []}
-            for idx in order:
-                isnull = pd.isna(v_raw[idx])
-                v = None if isnull else float(v_raw[idx])
-                buf.append(None if isnull else _half_up_long(v / qm))
-                buf = buf[-spn:]
-                vals = [x for x in buf if x is not None]
-                L = len(vals)
-                out["time"].append(float(t_arr[idx]))
-                out["value"].append(v)
-                if L:
-                    num_l = sum(vals[i] * WL[L - 1][i] for i in range(L))
-                    num_b = sum(vals[i] * WB[L - 1][i] for i in range(L))
-                    den = float(DEN[L - 1])
-                    out["level"].append(r6(float(num_l) / den * qm))
-                    out["trend"].append(r6(float(num_b) / den * qm))
-                    out["forecast"].append(
-                        r6(float(num_l + h * num_b) / den * qm)
-                    )
-                else:
-                    out["level"].append(None)
-                    out["trend"].append(None)
-                    out["forecast"].append(None)
-            _save_qbuf(state, buf, spn)
-            yield pd.DataFrame(
-                {
-                    "pvname": pvname,
-                    "time": out["time"],
-                    **{
-                        c: pd.array(out[c], dtype="Float64")
-                        for c in ("value", "level", "trend", "forecast")
-                    },
-                }
-            )
-
-    return events.groupBy("pvname").applyInPandasWithState(
-        kernel,
-        outputStructType=HOLT_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _qbuf_stream(events, span, quantum, HOLT_SCHEMA, emit)
 
 
 DISCORD_SCHEMA = StructType(
@@ -638,13 +517,6 @@ def discord_stream(
     win, nseg, qm = int(window), int(n_segments), float(quantum)
     ss = win // nseg
 
-    def r6(x: float) -> float:
-        return (
-            math.floor(abs(x) * 1e6 + 0.5)
-            * (1.0 if x > 0 else -1.0 if x < 0 else 0.0)
-            / 1e6
-        )
-
     def word_of(qs: list[int]) -> str:
         sw = sum(qs)
         sww = sum(x * x for x in qs)
@@ -656,7 +528,7 @@ def discord_stream(
                 praw = (float(sum(qs[j * ss : (j + 1) * ss])) / float(ss) - mu) / sig
             else:
                 praw = 0.0
-            paa = r6(praw)
+            paa = _round6(praw)
             sym = letters[0]
             for i, bp in enumerate(bps):
                 if not (paa < bp):
@@ -664,67 +536,34 @@ def discord_stream(
             out.append(sym)
         return "".join(out)
 
-    def kernel(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pvname = key[0]
-        if state.exists:
-            buf_csv, counts_csv = state.get
-            buf = (
-                [
-                    (float(p.split(":")[0]), int(p.split(":")[1]))
-                    for p in buf_csv.split(";")
-                ]
-                if buf_csv
-                else []
-            )
-            counts = (
-                {
-                    p.split(":")[0]: int(p.split(":")[1])
-                    for p in counts_csv.split(";")
-                }
-                if counts_csv
-                else {}
-            )
-        else:
-            buf, counts = [], {}
-        chunks = list(pdfs)
-        rows = (
-            chunks[0]
-            if len(chunks) == 1
-            else (pd.concat(chunks) if chunks else pd.DataFrame())
+    def step(key: tuple, state: tuple, rows):
+        buf_csv, counts_csv = state
+        buf = [
+            (float(t), int(q)) for t, q in (p.split(":") for p in buf_csv.split(";") if p)
+        ]
+        counts = {w: int(c) for w, c in (p.split(":") for p in counts_csv.split(";") if p)}
+        out = []
+        for t, v in zip(rows.time.tolist(), rows.col("value").tolist()):
+            buf.append((t, _half_up_long(v / qm)))
+            if len(buf) == win:
+                w = word_of([q for _t, q in buf])
+                counts[w] = counts.get(w, 0) + 1
+                out.append((buf[0][0], w, counts[w]))
+                buf = buf[1:]
+        state = (
+            ";".join(f"{t!r}:{q}" for t, q in buf),
+            ";".join(f"{w}:{c}" for w, c in sorted(counts.items())),
         )
-        if len(rows):
-            rows = rows.dropna(subset=["time", "value"])
-        if len(rows):
-            t_arr = rows["time"].to_numpy()
-            v_arr = rows["value"].to_numpy()
-            order = t_arr.argsort(kind="stable")
-            out = {"time": [], "word": [], "n_seen": []}
-            for idx in order:
-                buf.append((float(t_arr[idx]), _half_up_long(float(v_arr[idx]) / qm)))
-                if len(buf) == win:
-                    w = word_of([q for _t, q in buf])
-                    counts[w] = counts.get(w, 0) + 1
-                    out["time"].append(buf[0][0])
-                    out["word"].append(w)
-                    out["n_seen"].append(counts[w])
-                    buf = buf[1:]
-            state.update(
-                (
-                    ";".join(f"{t!r}:{q}" for t, q in buf),
-                    ";".join(f"{w}:{c}" for w, c in sorted(counts.items())),
-                )
-            )
-            if out["time"]:
-                yield pd.DataFrame({"pvname": pvname, **out})
+        return state, _columns(("time", "word", "n_seen"), out)
 
-    return events.groupBy("pvname").applyInPandasWithState(
-        kernel,
-        outputStructType=DISCORD_SCHEMA,
-        stateStructType=_DISCORD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        events,
+        ["pvname"],
+        step,
+        output_schema=DISCORD_SCHEMA,
+        state_schema=_DISCORD_STATE_SCHEMA,
+        init=lambda key: ("", ""),
+        required=("time", "value"),
     )
 
 
@@ -767,8 +606,6 @@ def hw_stream(
 
     State per series is the last ``span``−1 quantized values — a CSV
     of ≤11 longs at the default, bytes per PV."""
-    import math
-
     from epicsarchiver_spark.operators.timeseries import _hw_tables
 
     WL, WB, WS, den = _hw_tables(
@@ -777,71 +614,17 @@ def hw_stream(
     )
     spn, qm, dden = int(span), float(quantum), float(den)
 
-    def r6(x: float) -> float:
-        return (
-            math.floor(abs(x) * 1e6 + 0.5)
-            * (1.0 if x > 0 else -1.0 if x < 0 else 0.0)
-            / 1e6
+    def emit(buf):
+        if len(buf) < spn or any(x is None for x in buf):
+            return (None, None, None, None)
+        nl = sum(buf[i] * WL[i] for i in range(spn))
+        nb = sum(buf[i] * WB[i] for i in range(spn))
+        ns = sum(buf[i] * WS[i] for i in range(spn))
+        return tuple(
+            _round6(float(x) / dden * qm) for x in (nl, nb, ns, nl + nb + ns)
         )
 
-    def kernel(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pvname = key[0]
-        buf = _load_qbuf(state)
-        chunks = list(pdfs)
-        rows = (
-            chunks[0]
-            if len(chunks) == 1
-            else (pd.concat(chunks) if chunks else pd.DataFrame())
-        )
-        if len(rows):
-            rows = rows.dropna(subset=["time"])
-        if len(rows):
-            t_arr = rows["time"].to_numpy()
-            v_raw = rows["value"].to_numpy()
-            order = t_arr.argsort(kind="stable")
-            out = {
-                "time": [], "value": [], "level": [], "trend": [],
-                "season": [], "forecast": [],
-            }
-            for idx in order:
-                isnull = pd.isna(v_raw[idx])
-                v = None if isnull else float(v_raw[idx])
-                buf.append(None if isnull else _half_up_long(v / qm))
-                buf = buf[-spn:]
-                out["time"].append(float(t_arr[idx]))
-                out["value"].append(v)
-                if len(buf) == spn and all(x is not None for x in buf):
-                    nl = sum(buf[i] * WL[i] for i in range(spn))
-                    nb = sum(buf[i] * WB[i] for i in range(spn))
-                    ns = sum(buf[i] * WS[i] for i in range(spn))
-                    out["level"].append(r6(float(nl) / dden * qm))
-                    out["trend"].append(r6(float(nb) / dden * qm))
-                    out["season"].append(r6(float(ns) / dden * qm))
-                    out["forecast"].append(r6(float(nl + nb + ns) / dden * qm))
-                else:
-                    for c in ("level", "trend", "season", "forecast"):
-                        out[c].append(None)
-            _save_qbuf(state, buf, spn)
-            yield pd.DataFrame(
-                {
-                    "pvname": pvname,
-                    "time": out["time"],
-                    **{
-                        c: pd.array(out[c], dtype="Float64")
-                        for c in ("value", "level", "trend", "season", "forecast")
-                    },
-                }
-            )
-
-    return events.groupBy("pvname").applyInPandasWithState(
-        kernel,
-        outputStructType=HW_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _qbuf_stream(events, span, quantum, HW_SCHEMA, emit)
 
 
 CUSUM_SCHEMA = StructType(
@@ -910,64 +693,43 @@ def cusum_stream(
     tq_default = None if target is None else _half_up_long(target / quantum)
     qm = float(quantum)
 
-    def kernel(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pvname = key[0]
+    def target_of(pvname: str) -> int | None:
         tmap = targets.value if hasattr(targets, "value") else targets
         if tmap is not None and pvname in tmap:
-            tq = _half_up_long(float(tmap[pvname]) / qm)
-        elif tq_default is not None:
-            tq = tq_default
-        else:
-            return
-        cu, minu, psu, cd, mind, psd = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0)
-        )
-        chunks = list(pdfs)
-        rows = (
-            chunks[0]
-            if len(chunks) == 1
-            else (pd.concat(chunks) if chunks else pd.DataFrame())
-        )
-        if len(rows):
-            rows = rows.dropna(subset=["time", "value"])
-        if len(rows):
-            t_arr = rows["time"].to_numpy()
-            v_arr = rows["value"].to_numpy()
-            order = t_arr.argsort(kind="stable")
-            out_t, out_side, out_s = [], [], []
-            for idx in order:
-                t = float(t_arr[idx])
-                q = _half_up_long(float(v_arr[idx]) / qm)
-                cu += q - (tq + kq)
-                minu = min(minu, cu)
-                su = cu - minu
-                if su > hq and psu <= hq:
-                    out_t.append(t), out_side.append("up"), out_s.append(su)
-                psu = su
-                cd += (tq - kq) - q
-                mind = min(mind, cd)
-                sd = cd - mind
-                if sd > hq and psd <= hq:
-                    out_t.append(t), out_side.append("down"), out_s.append(sd)
-                psd = sd
-            state.update((cu, minu, psu, cd, mind, psd))
-            if out_t:
-                yield pd.DataFrame(
-                    {
-                        "pvname": pvname,
-                        "time": out_t,
-                        "side": out_side,
-                        "s_scaled": out_s,
-                        "n": 1,
-                    }
-                )
+            return _half_up_long(float(tmap[pvname]) / qm)
+        return tq_default
 
-    return events.groupBy("pvname").applyInPandasWithState(
-        kernel,
-        outputStructType=CUSUM_SCHEMA,
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def step(key: tuple, state: tuple, rows):
+        tq = target_of(key[0])
+        if tq is None:
+            return state, None
+        cu, minu, psu, cd, mind, psd = state
+        out = []
+        for t, v in zip(rows.time.tolist(), rows.col("value").tolist()):
+            q = _half_up_long(v / qm)
+            cu += q - (tq + kq)
+            minu = min(minu, cu)
+            su = cu - minu
+            if su > hq and psu <= hq:
+                out.append((t, "up", su, 1))
+            psu = su
+            cd += (tq - kq) - q
+            mind = min(mind, cd)
+            sd = cd - mind
+            if sd > hq and psd <= hq:
+                out.append((t, "down", sd, 1))
+            psd = sd
+        state = (cu, minu, psu, cd, mind, psd)
+        return state, _columns(("time", "side", "s_scaled", "n"), out)
+
+    # a series with no target (not in the map, no scalar) keeps no state
+    # and emits nothing
+    return keyed_fold(
+        events,
+        ["pvname"],
+        step,
+        output_schema=CUSUM_SCHEMA,
+        state_schema=_CUSUM_STATE_SCHEMA,
+        init=lambda key: None if target_of(key[0]) is None else (0, 0, 0, 0, 0, 0),
+        required=("time", "value"),
     )

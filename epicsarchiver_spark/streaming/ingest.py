@@ -7,8 +7,10 @@ applying deadtime/deadband/limbo compression before appending points
 Streaming queries over one event stream:
 
 - ``compressed_stream``   : the stateful deadtime/deadband/limbo operator
-  (W1/W2) via ``applyInPandasWithState`` keyed by series — Spark has no
-  built-in debounce, this is the one genuinely custom operator.
+  (W1/W2), keyed by series — Spark has no built-in debounce. It runs on
+  ``fold.keyed_fold``, the keyed-fold primitive every stateful stream
+  kernel shares; this module keeps the compressor's step
+  (``_compress_step``), its cold-state seeds and its timer hooks.
 - ``latest_value_query``  : last-per-key cache upsert via ``foreachBatch``
   merge into a parquet "cache" table (S14).
 - ``archive_query``       : compressed stream appended to the points
@@ -23,12 +25,10 @@ tests/test_streaming.py with sentinel tail events).
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
+from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from epicsarchiver_spark.sources import points_store
+from epicsarchiver_spark.streaming.fold import keyed_fold
 
 EVENT_SCHEMA = StructType(
     [
@@ -68,7 +69,7 @@ def ingest_state_partitions(
     count to ``spark.sql.shuffle.partitions`` at first start (it is
     written into the checkpoint), and every micro-batch then pays a
     fixed cost PER state partition (store open + delta commit + Arrow
-    setup for the applyInPandasWithState kernel) regardless of how many
+    setup for the keyed-fold kernel) regardless of how many
     rows it carries. With partitions = cores (the batch default), a
     bounded backfill on a 32-core box paid 32 of those fixed costs per
     micro-batch for data that filled four — the r13 driver measured the
@@ -133,9 +134,9 @@ def _compress_step(
 ):
     """One pass of the reference compression over time-sorted events given
     incoming per-series state; returns (out_t, out_v, new state 4-tuple).
-    The single copy of the W1 branch logic — the applyInPandasWithState
-    kernel wraps it, and tests/test_compress_kernel.py drives it
-    directly for batching-invariance proofs."""
+    The single copy of the W1 branch logic — the stream's fold step
+    wraps it, and tests/test_compress_kernel.py drives it directly for
+    batching-invariance proofs."""
     out_t: list = []
     out_v: list = []
     for t, v in zip(times, values):
@@ -160,7 +161,7 @@ def _compress_step(
     return out_t, out_v, last_t, last_v, pend_t, pend_v
 
 
-def _compress_kernel(
+def _compress_fold(
     deadtime: float,
     deadband: float,
     flush_ms: int | None,
@@ -168,7 +169,8 @@ def _compress_kernel(
     seeds=None,
     seed_col: str | None = None,
 ):
-    """Build the applyInPandasWithState kernel closed over the config.
+    """The compressor's hooks for ``fold.keyed_fold``, closed over the
+    config: ``dict(init=, step=[, on_timeout=, timer_ms=])``.
 
     ``seeds`` — optional {pvname: (last_t, last_v)} warm-start map (plain
     dict, or a ``pyspark.Broadcast`` of one — the broadcast ships once
@@ -184,84 +186,61 @@ def _compress_kernel(
     ignored (checkpoint wins). Seed rows never reach the compressor as
     events."""
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pvname = key[0]
+    def init(key: tuple) -> tuple:
         seed_map = seeds.value if hasattr(seeds, "value") else seeds
-        if state.exists:
-            last_t, last_v, pend_t, pend_v = state.get
-        else:
-            last_t = last_v = pend_t = pend_v = None
-            if seed_map is not None and pvname in seed_map:
-                # warm start: continue the deadtime window from the last
-                # archived point; the seed itself is NOT re-emitted
-                last_t, last_v = seed_map[pvname]
+        if seed_map is not None and key[0] in seed_map:
+            # warm start: continue the deadtime window from the last
+            # archived point; the seed itself is NOT re-emitted
+            last_t, last_v = seed_map[key[0]]
+            return last_t, last_v, None, None
+        return None, None, None, None
 
-        out_t: list[float] = []
-        out_v: list[float] = []
+    def step(key: tuple, state: tuple, rows):
+        last_t, last_v, pend_t, pend_v = state
+        # numpy + bulk .tolist(): iterating pandas Series pays ~3× per
+        # element, and .tolist() yields plain floats so the state tuple
+        # never carries numpy scalars into Arrow serialization
+        t_arr, v_arr = rows.time, rows.col("value")
+        if seed_col is not None and seed_col in rows.frame.columns:
+            is_seed = rows.frame[seed_col].fillna(False).astype(bool).to_numpy()[rows.order]
+            if is_seed.any():
+                if last_t is None:
+                    newest = is_seed.nonzero()[0][-1]
+                    last_t, last_v = float(t_arr[newest]), float(v_arr[newest])
+                t_arr, v_arr = t_arr[~is_seed], v_arr[~is_seed]
+        out_t, out_v, *state = _compress_step(
+            last_t, last_v, pend_t, pend_v,
+            t_arr.tolist(), v_arr.tolist(), deadtime, deadband,
+        )
+        return tuple(state), ({"time": out_t, "value": out_v} if out_t else None)
 
-        def arm_timer(has_pending: bool) -> None:
-            if flush_ms is not None and has_pending:
-                state.setTimeoutDuration(flush_ms)
-            elif heartbeat_s is not None and last_t is not None:
-                state.setTimeoutDuration(int(_heartbeat_jitter(pvname, heartbeat_s) * 1000))
+    hooks = {"init": init, "step": step}
+    if flush_ms is None and heartbeat_s is None:
+        return hooks
 
-        if state.hasTimedOut:
-            if pend_t is not None:
-                # flush the limbo tail (ref archiver.py:404-414: pending
-                # entry becomes a real point once the window elapses)
-                out_t.append(pend_t)
-                out_v.append(pend_v)
-                last_t, last_v = pend_t, pend_v
-                pend_t = pend_v = None
-            elif heartbeat_s is not None and last_t is not None:
-                # W3 forced heartbeat: silent series re-emits its held
-                # value at the current processing time, guaranteeing the
-                # staleness floor (ref archiver.py:419-440)
-                now_s = state.getCurrentProcessingTimeMs() / 1000.0
-                out_t.append(now_s)
-                out_v.append(last_v)
-                last_t = now_s
-            state.update((last_t, last_v, pend_t, pend_v))
-            arm_timer(False)
-        else:
-            chunks = list(pdfs)
-            rows = (
-                chunks[0]
-                if len(chunks) == 1
-                else (pd.concat(chunks) if chunks else pd.DataFrame())
-            )
-            if seed_col is not None and len(rows) and seed_col in rows.columns:
-                is_seed = rows[seed_col].fillna(False).astype(bool)
-                seed_rows = rows[is_seed]
-                rows = rows[~is_seed]
-                if last_t is None and len(seed_rows):
-                    srow = seed_rows.sort_values("time").iloc[-1]
-                    last_t, last_v = float(srow["time"]), float(srow["value"])
-            if len(rows):
-                # numpy argsort + bulk .tolist(): the per-group python
-                # cost IS this lane's scale cost (one fn call per key per
-                # batch); iterating pandas Series pays ~3× per element,
-                # and .tolist() yields plain floats so the state tuple
-                # never carries numpy scalars into Arrow serialization
-                t_arr = rows["time"].to_numpy()
-                order = t_arr.argsort(kind="stable")
-                out_t, out_v, last_t, last_v, pend_t, pend_v = _compress_step(
-                    last_t, last_v, pend_t, pend_v,
-                    t_arr[order].tolist(),
-                    rows["value"].to_numpy()[order].tolist(),
-                    deadtime, deadband,
-                )
-            state.update((last_t, last_v, pend_t, pend_v))
-            arm_timer(pend_t is not None)
+    def on_timeout(key: tuple, state: tuple, now_ms: int):
+        last_t, last_v, pend_t, pend_v = state
+        if pend_t is not None:
+            # flush the limbo tail (ref archiver.py:404-414: pending
+            # entry becomes a real point once the window elapses)
+            return (pend_t, pend_v, None, None), {"time": [pend_t], "value": [pend_v]}
+        if heartbeat_s is not None and last_t is not None:
+            # W3 forced heartbeat: silent series re-emits its held value
+            # at the current processing time, guaranteeing the staleness
+            # floor (ref archiver.py:419-440)
+            now_s = now_ms / 1000.0
+            return (now_s, last_v, None, None), {"time": [now_s], "value": [last_v]}
+        return state, None
 
-        if out_t:
-            yield pd.DataFrame({"pvname": pvname, "time": out_t, "value": out_v})
+    def timer_ms(key: tuple, state: tuple) -> int | None:
+        last_t, _last_v, pend_t, _pend_v = state
+        if flush_ms is not None and pend_t is not None:
+            return flush_ms
+        if heartbeat_s is not None and last_t is not None:
+            return int(_heartbeat_jitter(key[0], heartbeat_s) * 1000)
+        return None
 
-    return fn
+    return {**hooks, "on_timeout": on_timeout, "timer_ms": timer_ms}
 
 
 def compressed_stream(
@@ -331,16 +310,12 @@ def compressed_stream(
     the same contract — restart continuity without re-emitting first
     events — fully distributed via ``seed_col`` at any series count.
     """
-    use_timers = flush_ms is not None or heartbeat_s is not None
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout if use_timers else GroupStateTimeout.NoTimeout
-    )
-    return events.groupBy("pvname").applyInPandasWithState(
-        _compress_kernel(deadtime, deadband, flush_ms, heartbeat_s, seeds, seed_col),
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_fold(
+        events,
+        ["pvname"],
+        output_schema=OUT_SCHEMA,
+        state_schema=STATE_SCHEMA,
+        **_compress_fold(deadtime, deadband, flush_ms, heartbeat_s, seeds, seed_col),
     )
 
 

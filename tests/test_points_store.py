@@ -556,3 +556,49 @@ def test_compact_refuses_a_streamed_store(spark, streamed_store):
     only the files its manifest lists) instead of compacting nothing."""
     with pytest.raises(ValueError, match="_spark_metadata"):
         compact_store(spark, streamed_store)
+
+
+def _open_jobs(spark, path):
+    """Spark jobs one ``read_points`` open of ``path`` launches."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"store-open-{uuid.uuid4()}"
+    sc.setJobGroup(group, "read_points open")
+    try:
+        read_points(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_line_record_gains_the_schema_on_the_next_write(spark, tmp_path):
+    """A store recorded before the record held the schema infers it on
+    every open; the next append, whose columns equal the inferred ones,
+    replaces the record with the two-line one, after which an open
+    launches no job and reads the same rows."""
+    import os
+
+    path = str(tmp_path / "store")
+    write_points(_pts(spark), path, run="r1", n_buckets=4)
+    schema = read_record(spark, path)[1]
+    _restamp(spark, path, 4)  # the one-line record
+    assert _open_jobs(spark, path) == 1
+    write_points(_pts(spark, t0=100), path, run="r1", n_buckets=4)
+    assert read_record(spark, path) == (4, schema)
+    names = os.listdir(path)
+    assert "._buckets.crc" in names and not [n for n in names if ".tmp" in n]
+    assert _open_jobs(spark, path) == 0
+    assert _rows(read_points(spark, path).select("pvname", "time", "value")) == sorted(
+        _rows(_pts(spark)) + _rows(_pts(spark, t0=100))
+    )
+
+
+def test_one_line_record_stays_when_inference_disagrees(spark, tmp_path):
+    """An append whose data columns differ from what inference reads off
+    the store (here: the same columns in another order) leaves a
+    one-line record as it is."""
+    path = str(tmp_path / "store")
+    write_points(_pts(spark), path, run="r1", n_buckets=4)
+    _restamp(spark, path, 4)
+    write_points(_pts(spark, t0=100).select("value", "time", "pvname"), path, run="r2", n_buckets=4)
+    assert read_record(spark, path) == (4, None)

@@ -413,6 +413,56 @@ def test_alert_stream(spark, tmp_path):
     assert got == {(1, "A", 10.0), (1, "A", 30.0), (2, "B", 10.0)}
 
 
+def test_alert_stream_folds_tied_times_in_arrival_order(spark, tmp_path):
+    """64 rows of one (alert, pv) key over 8 distinct timestamps: which
+    tied row comes last decides whether the next instant's alarm fires,
+    so the stream must fold ties in arrival order, as the reference and
+    ``evaluate_transitions`` on the arrival-ordered rows do (a quicksort
+    reorders ties once a key has more than 16 rows)."""
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    n = 64
+    events = pd.DataFrame(
+        {
+            "pvname": "A",
+            "time": rng.integers(0, 8, n).astype(float),
+            # alarm (9.x) or ok (1.x); the hundredths name the row
+            "value": np.where(rng.random(n) < 0.5, 9.0, 1.0) + np.arange(n) / 100,
+        }
+    )
+    path = tmp_path / "ev"
+    path.mkdir()
+    events.to_parquet(path / "p.parquet", index=False)
+    rule = {"alert_id": 1, "trippoint": 5.0, "compare": "gt", "timeout": 0.0}
+    rules = spark.createDataFrame(pd.DataFrame([{**rule, "pvname": "A", "active": "yes"}]))
+
+    def spec(rows: pd.DataFrame) -> list[tuple]:
+        out, *_ = evaluate_transitions(rows.assign(**rule), "ok", -math.inf)
+        return [(n["time"], n["value"]) for n in out]
+
+    want = spec(events.sort_values("time", kind="stable"))
+    # the tie order matters: the same rows with each instant's ties
+    # reversed notify differently
+    assert want != spec(events.iloc[::-1].sort_values("time", kind="stable"))
+
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(path))
+    q = (
+        alert_stream(stream, rules)
+        .writeStream.format("memory")
+        .queryName("alerts_ties")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(
+        (r.time, r.value) for r in spark.sql("select * from alerts_ties").collect()
+    )
+    assert got == sorted(want)
+
+
 def test_dedup_stream_drops_redelivered_events(spark, tmp_path):
     """W10 analog: replaying overlapping micro-batches must not duplicate
     points downstream — dropDuplicatesWithinWatermark on (pvname, time)."""
