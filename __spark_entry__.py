@@ -644,7 +644,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             score_col="cosine_sim",
             id_col="vec_id",
         ).withColumnRenamed("vec_id", "doc_id")
-        return text_ops.rrf_fuse(
+        fused = text_ops.rrf_fuse(
             {
                 "lex": lex.select("doc_id", "rank"),
                 "qld": qld.select("doc_id", "rank"),
@@ -652,6 +652,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             },
             k=20,
         )
+        # k rows: checkpoint them off the shared base, then release it
+        # (qld_topk's discipline) rather than leak it for the session
+        out = fused.localCheckpoint(eager=True)
+        base.unpersist()
+        return out
 
     q["doc_hybrid_rrf3"] = _doc_hybrid_rrf3
 

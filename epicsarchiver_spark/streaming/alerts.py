@@ -118,13 +118,14 @@ def _round6(x: float) -> float:
 def alert_stream(events: DataFrame, rules: DataFrame) -> DataFrame:
     """Notifications stream: events (pvname, time, value) × rules
     (alert_id, pvname, compare, trippoint, timeout, active). Rules are
-    broadcast (small dimension); state keyed by (alert_id, pvname)."""
+    broadcast (small dimension); state keyed by (pvname, alert_id), so
+    a PV's rules share its key group."""
     joined = events.join(
         F.broadcast(rules.filter(F.col("active") == "yes")), "pvname"
     ).select("alert_id", "pvname", "time", "value", "trippoint", "compare", "timeout")
     return keyed_fold(
         joined,
-        ["alert_id", "pvname"],
+        ["pvname", "alert_id"],
         _alert_step,
         output_schema=NOTIFY_SCHEMA,
         state_schema=ALERT_STATE_SCHEMA,

@@ -37,7 +37,7 @@ from pyspark.sql.types import (
 )
 
 from epicsarchiver_spark.sources import points_store
-from epicsarchiver_spark.streaming.fold import keyed_fold
+from epicsarchiver_spark.streaming.fold import GROUPS, keyed_fold, refuse_per_key_state
 
 EVENT_SCHEMA = StructType(
     [
@@ -68,8 +68,8 @@ def ingest_state_partitions(
     not core count. A streaming query pins its state-store partition
     count to ``spark.sql.shuffle.partitions`` at first start (it is
     written into the checkpoint), and every micro-batch then pays a
-    fixed cost PER state partition (store open + delta commit + Arrow
-    setup for the keyed-fold kernel) regardless of how many
+    fixed cost PER state partition (store open + delta commit + one
+    kernel call per key group) regardless of how many
     rows it carries. With partitions = cores (the batch default), a
     bounded backfill on a 32-core box paid 32 of those fixed costs per
     micro-batch for data that filled four — the r13 driver measured the
@@ -81,7 +81,10 @@ def ingest_state_partitions(
     past it the per-batch fixed costs
     outrun the parallelism that could absorb them, and the count is
     pinned for the checkpoint's lifetime, so a 100 TB backfill gets 96
-    partitions at 32 cores, not 1.6 M. Override with
+    partitions at 32 cores, not 1.6 M. Whatever the sizing, the count
+    is at most ``fold.GROUPS``: the keyed fold keeps its state per key
+    group, so a partition beyond the group count would hold no state
+    and only add its fixed costs. Override with
     $SPARK_GRAFT_INGEST_STATE_PARTITIONS where the deployment knows
     better (e.g. sizing for a future volume on day one)."""
     import os
@@ -90,8 +93,8 @@ def ingest_state_partitions(
 
     env = os.environ.get("SPARK_GRAFT_INGEST_STATE_PARTITIONS")
     if env:
-        return max(1, int(env))
-    ceiling = max(int(floor), 3 * default_parallelism())
+        return min(GROUPS, max(1, int(env)))
+    ceiling = min(GROUPS, max(int(floor), 3 * default_parallelism()))
     return min(ceiling, max(int(floor), int(input_bytes) // int(bytes_per_partition)))
 
 
@@ -916,29 +919,34 @@ def archive_query(
     column, epicsarchiver/schema.py:21-23). An empty or absent store
     records ``buckets`` and the data columns' schema here, before the
     stream starts; a store that records another count or other data
-    columns raises ``ValueError``.
+    columns raises ``ValueError``, and so does a checkpoint that holds
+    per-key fold state (:func:`fold.refuse_per_key_state`).
 
-    The rows are clustered by ``bucket`` ahead of the file sink, so a
-    micro-batch writes at most one parquet file per touched bucket
-    rather than one per (state partition × bucket). The sink stage has
-    as many tasks as the query's shuffle-partition count, which the
-    checkpoint pins; the exchange is stateless, so a checkpoint written
-    without it resumes unchanged. Streaming plans cannot sort: each
-    series' points are contiguous and time-ordered within a file (one
-    state partition owns each key and the kernel emits per key), but
-    files are not sorted by ``pvname``, and nothing compacts or re-sorts
-    a streamed store yet (``points_store.compact_store`` refuses a
-    file-sink store; see ROADMAP)."""
+    At the default count (``buckets`` = ``fold.GROUPS``) a bucket is one
+    key group of the fold, so each bucket's rows come out of one state
+    partition in one kernel call: a micro-batch writes at most one
+    parquet file per touched bucket with no exchange beyond the fold's,
+    and every file is sorted by (``pvname``, ``time``). Another count
+    clusters the rows by ``bucket`` ahead of the file sink (one more
+    exchange, as many sink tasks as the query's shuffle-partition count,
+    which the checkpoint pins) for the same one file per touched bucket;
+    there a file holds each series' points contiguous and time-ordered,
+    not sorted by ``pvname``. The bucket exchange is stateless, so a
+    checkpoint written with or without it resumes unchanged. Nothing
+    compacts a streamed store yet (``points_store.compact_store`` refuses
+    a file-sink store; see ROADMAP)."""
     spark = compressed.sparkSession
+    refuse_per_key_state(spark, checkpoint)
     schema = points_store.data_schema(compressed.schema)
     if points_store.claim_buckets(spark, points_path, buckets, schema):
         points_store.stamp_buckets(spark, points_path, buckets, schema)
     bucketed = compressed.withColumn(
         "bucket", points_store.bucket_of(F.col("pvname"), buckets)
     )
+    if buckets != GROUPS:
+        bucketed = bucketed.repartition("bucket")
     return (
-        bucketed.repartition("bucket")
-        .writeStream.outputMode("append")
+        bucketed.writeStream.outputMode("append")
         .format("parquet")
         .option("path", points_path)
         .option("checkpointLocation", checkpoint)

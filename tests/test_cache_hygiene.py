@@ -88,3 +88,22 @@ def test_embedding_verdicts_releases_assignment(spark):
             vecs, threshold=0.4, drop_frac=0.2, n_cells=4, dim=8
         ),
     )
+
+
+def test_hybrid_rrf3_releases_shared_match_base(spark):
+    """The three-lane hybrid gate persists one query_match_base frame for
+    its two keyword lanes; once the query's rows are out, no persisted
+    RDD is left beyond the localCheckpoint artifacts that hold the
+    result (the shared base is released)."""
+    import __spark_entry__ as entry
+    from tests.conftest import SF_SMOKE
+
+    def persisted() -> dict:
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k): m.get(k) for k in m.keySet().toArray()}
+
+    before = set(persisted())
+    df = entry.queries()["doc_hybrid_rrf3"](spark, SF_SMOKE)
+    assert df.count() > 0
+    left = {k: v for k, v in persisted().items() if k not in before}
+    assert all(v.rdd().isCheckpointed() for v in left.values()), sorted(left)

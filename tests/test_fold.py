@@ -1,6 +1,7 @@
 """The keyed-fold primitive (``streaming/fold.py``): the package drives
-Structured Streaming's keyed state store from one call site, and every
-stream's state layout stays the one its existing checkpoints hold."""
+Structured Streaming's keyed state store from one call site, every
+stream's state layout is the pinned key-group layout, and the group
+driver folds each key as the per-key fold did."""
 
 from __future__ import annotations
 
@@ -30,20 +31,44 @@ def test_state_store_is_driven_from_one_call_site():
     assert [site.split(":")[0] for site in sites] == ["streaming/fold.py"], sites
 
 
-# each stream's state struct as its checkpoints record it (the JSON of
-# the parent commit's schemas); a change here strands the state of every
-# running query
-QBUF = '{"fields":[{"metadata":{},"name":"qs_csv","nullable":true,"type":"string"}],"type":"struct"}'
+# each stream's state struct as its checkpoints record it: one row per
+# key group, holding the key columns and every per-key state field as
+# arrays (plus the per-key timer deadlines when the stream has timers);
+# a change here strands the state of every running query
+def _layout(*fields: tuple[str, str]) -> str:
+    return (
+        '{"fields":['
+        + ",".join(
+            '{"metadata":{},"name":"%s","nullable":true,"type":'
+            '{"containsNull":true,"elementType":"%s","type":"array"}}' % f
+            for f in fields
+        )
+        + '],"type":"struct"}'
+    )
+
+
+PV = ("pvname", "string")
+QBUF = _layout(PV, ("qs_csv", "string"))
+COMPRESS = (
+    PV, ("last_t", "double"), ("last_v", "double"), ("pend_t", "double"), ("pend_v", "double"),
+)
 STATE_LAYOUTS = {
-    "alert": '{"fields":[{"metadata":{},"name":"status","nullable":true,"type":"string"},{"metadata":{},"name":"last_notice","nullable":true,"type":"double"}],"type":"struct"}',
-    "outlier": '{"fields":[{"metadata":{},"name":"times","nullable":true,"type":"string"},{"metadata":{},"name":"values","nullable":true,"type":"string"}],"type":"struct"}',
-    "flatline": '{"fields":[{"metadata":{},"name":"q","nullable":true,"type":"long"},{"metadata":{},"name":"start_t","nullable":true,"type":"double"},{"metadata":{},"name":"n","nullable":true,"type":"long"},{"metadata":{},"name":"last_t","nullable":true,"type":"double"},{"metadata":{},"name":"alerted","nullable":true,"type":"long"}],"type":"struct"}',
+    "alert": _layout(PV, ("alert_id", "long"), ("status", "string"), ("last_notice", "double")),
+    "outlier": _layout(PV, ("times", "string"), ("values", "string")),
+    "flatline": _layout(
+        PV, ("q", "long"), ("start_t", "double"), ("n", "long"), ("last_t", "double"),
+        ("alerted", "long"),
+    ),
     "ewma": QBUF,
     "holt": QBUF,
     "hw": QBUF,
-    "discord": '{"fields":[{"metadata":{},"name":"buf_csv","nullable":true,"type":"string"},{"metadata":{},"name":"counts_csv","nullable":true,"type":"string"}],"type":"struct"}',
-    "cusum": '{"fields":[{"metadata":{},"name":"cu","nullable":true,"type":"long"},{"metadata":{},"name":"minu","nullable":true,"type":"long"},{"metadata":{},"name":"psu","nullable":true,"type":"long"},{"metadata":{},"name":"cd","nullable":true,"type":"long"},{"metadata":{},"name":"mind","nullable":true,"type":"long"},{"metadata":{},"name":"psd","nullable":true,"type":"long"}],"type":"struct"}',
-    "compress": '{"fields":[{"metadata":{},"name":"last_t","nullable":true,"type":"double"},{"metadata":{},"name":"last_v","nullable":true,"type":"double"},{"metadata":{},"name":"pend_t","nullable":true,"type":"double"},{"metadata":{},"name":"pend_v","nullable":true,"type":"double"}],"type":"struct"}',
+    "discord": _layout(PV, ("buf_csv", "string"), ("counts_csv", "string")),
+    "cusum": _layout(
+        PV, ("cu", "long"), ("minu", "long"), ("psu", "long"), ("cd", "long"),
+        ("mind", "long"), ("psd", "long"),
+    ),
+    "compress": _layout(*COMPRESS),
+    "compress_timers": _layout(*COMPRESS, ("_due_ms", "long")),
 }
 
 
@@ -74,7 +99,7 @@ def _streams(events, spark):
     }
 
 
-@pytest.mark.parametrize("name", [*STATE_LAYOUTS, "compress_timers"])
+@pytest.mark.parametrize("name", list(STATE_LAYOUTS))
 def test_stream_state_schema_is_the_checkpointed_layout(spark, tmp_path, name):
     """Read off each stream's analyzed plan: the state struct and the
     timeout conf its stateful operator records in a checkpoint."""
@@ -89,5 +114,109 @@ def test_stream_state_schema_is_the_checkpointed_layout(spark, tmp_path, name):
             todo.append(it.next())
     (op,) = [n for n in nodes if n.nodeName() == "FlatMapGroupsInPandasWithState"]
     got = StructType.fromJson(json.loads(op.stateType().json())).json()
-    assert got == STATE_LAYOUTS[name.split("_")[0]]
+    assert got == STATE_LAYOUTS[name]
     assert op.timeout().toString() == timeout
+
+
+class _GroupState:
+    """A stand-in for Spark's GroupState around one group's state row."""
+
+    def __init__(self, row=None, now_ms=0, timed_out=False):
+        self.row, self.now, self.hasTimedOut = row, now_ms, timed_out
+        self.timeout_ms = None
+
+    @property
+    def exists(self):
+        return self.row is not None
+
+    @property
+    def get(self):
+        return self.row
+
+    def getCurrentProcessingTimeMs(self):
+        return self.now
+
+    def update(self, row):
+        self.row = row
+
+    def setTimeoutDuration(self, ms):
+        assert ms > 0
+        self.timeout_ms = ms
+
+
+def _compress_kernel(**kw):
+    from epicsarchiver_spark.streaming.fold import group_kernel
+
+    return group_kernel(
+        ["pvname"],
+        columns=ingest.OUT_SCHEMA.fieldNames(),
+        n_fields=len(ingest.STATE_SCHEMA.fields),
+        **ingest._compress_fold(5.0, 0.5, **kw),
+    )
+
+
+def _call(fn, gs, *frames) -> pd.DataFrame:
+    out = list(fn((0,), iter(frames), gs))
+    return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
+
+
+def test_group_kernel_folds_each_key_as_alone():
+    """One group of 60 series over three micro-batches (ties, gaps, new
+    series in every batch): each series' rows equal the compressor step
+    run on that series alone, a batch's rows come out in (pvname, time)
+    order, and the state row keeps its series sorted."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    fn, gs = _compress_kernel(flush_ms=None), _GroupState()
+    alone = {}
+    for b in range(3):
+        n = 400
+        frame = pd.DataFrame(
+            {
+                "pvname": [f"S{k:02d}" for k in rng.integers(0, 20 * (b + 1), n)],
+                "time": np.round(rng.uniform(100 * b, 100 * b + 90, n), 0),
+                "value": rng.integers(0, 4, n).astype(float),
+            }
+        )
+        got = _call(fn, gs, frame.iloc[:150], frame.iloc[150:])
+        want = []
+        for pv, rows in frame.sort_values("time", kind="stable").groupby("pvname"):
+            state = alone.get(pv, (None, None, None, None))
+            out_t, out_v, *state = ingest._compress_step(
+                *state, rows["time"].tolist(), rows["value"].tolist(), 5.0, 0.5
+            )
+            alone[pv] = tuple(state)
+            want += [(pv, t, v) for t, v in zip(out_t, out_v)]
+        assert list(got.itertuples(index=False, name=None)) == want
+    keys, *fields = gs.row
+    assert keys == sorted(alone)
+    assert list(zip(*fields)) == [alone[k] for k in keys]
+
+
+def test_group_kernel_fires_only_due_keys():
+    """Per-key deadlines in one group: the group timer is armed at the
+    earliest; on timeout only the due series flushes its limbo entry
+    with its original timestamp, and a due series without rows also
+    fires when another series' rows call the group."""
+    fn, gs = _compress_kernel(flush_ms=1000), _GroupState()
+    gs.now = 10_000
+    first = pd.DataFrame(
+        {"pvname": ["A", "A", "B"], "time": [0.0, 1.0, 0.0], "value": [1.0, 2.0, 5.0]}
+    )
+    got = _call(fn, gs, first)
+    assert list(got.itertuples(index=False, name=None)) == [("A", 0.0, 1.0), ("B", 0.0, 5.0)]
+    assert gs.row[-1] == [11_000, 0] and gs.timeout_ms == 1000  # only A has a deadline
+
+    gs.now, gs.hasTimedOut = 11_001, True
+    got = _call(fn, gs)
+    assert list(got.itertuples(index=False, name=None)) == [("A", 1.0, 2.0)]
+    assert gs.row[-1] == [0, 0]
+
+    # A goes to limbo again; its deadline passes while only C has rows
+    gs.hasTimedOut, gs.now = False, 20_000
+    _call(fn, gs, pd.DataFrame({"pvname": ["A"], "time": [2.0], "value": [9.0]}))
+    gs.now = 30_000
+    got = _call(fn, gs, pd.DataFrame({"pvname": ["C"], "time": [0.0], "value": [3.0]}))
+    assert list(got.itertuples(index=False, name=None)) == [("A", 2.0, 9.0), ("C", 0.0, 3.0)]
+    assert gs.row[0] == ["A", "B", "C"] and gs.row[-1] == [0, 0, 0]

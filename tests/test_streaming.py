@@ -209,6 +209,109 @@ def test_heartbeat_timer_emits_held_value(spark, tmp_path):
     assert all(r.time > 1e9 for r in beats)  # stamped at processing time
 
 
+def _same_group_names(spark, prefix: str) -> list[str]:
+    """Two series names that hash to one bucket of the default store (one
+    key group of the keyed fold)."""
+    import collections
+
+    from epicsarchiver_spark.sources.points_store import bucket_of
+
+    names = spark.createDataFrame([(f"{prefix}{i}",) for i in range(600)], "pvname string")
+    by = collections.defaultdict(list)
+    for r in names.select("pvname", bucket_of(F.col("pvname")).alias("b")).collect():
+        by[r.b].append(r.pvname)
+    return next(sorted(v)[:2] for v in by.values() if len(v) >= 2)
+
+
+def test_limbo_flush_timer_fires_live_for_one_series_of_a_group(spark, tmp_path):
+    """Continuous mode with ``flush_ms``: of two series in one key group,
+    the one whose last event sits in limbo flushes it once, with its
+    original timestamp, in a later micro-batch at least ``flush_ms``
+    after the first; the other, with nothing pending, emits nothing
+    more (real timers — the query runs live for a few seconds)."""
+    import time as _time
+
+    held, done = _same_group_names(spark, "LF")
+    df = pd.DataFrame(
+        {"pvname": [held, held, done], "time": [0.0, 1.0, 0.0], "value": [1.0, 2.0, 5.0]}
+    )
+    path = tmp_path / "lf"
+    path.mkdir()
+    df.to_parquet(path / "p.parquet", index=False)
+    batches = []
+
+    def sink(batch, batch_id):
+        rows = [(r.pvname, r.time, r.value) for r in batch.collect()]
+        if rows:
+            batches.append((batch_id, _time.time(), rows))
+
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(path))
+    q = (
+        compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=1000)
+        .writeStream.foreachBatch(sink)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_lf"))
+        .trigger(processingTime="300 milliseconds")
+        .start()
+    )
+    try:
+        deadline = _time.time() + 30
+        while _time.time() < deadline and len(batches) < 2:
+            _time.sleep(0.5)
+        _time.sleep(3)  # room for any further (wrong) emission
+    finally:
+        q.stop()
+    assert len(batches) == 2, batches
+    (b0, t0, first), (b1, t1, flushed) = batches
+    assert sorted(first) == sorted([(done, 0.0, 5.0), (held, 0.0, 1.0)])
+    assert flushed == [(held, 1.0, 2.0)]  # the limbo entry, original time
+    assert b1 > b0 and t1 - t0 >= 1.0
+
+
+def test_heartbeat_timer_emits_held_value_per_series_of_a_group(spark, tmp_path):
+    """W3 with two series in one key group and different jitter: each
+    re-emits its own held value on its own heartbeat."""
+    import time as _time
+
+    from epicsarchiver_spark.streaming.ingest import _heartbeat_jitter
+
+    a, b = _same_group_names(spark, "HB")
+    assert _heartbeat_jitter(a, 2.0) != _heartbeat_jitter(b, 2.0)
+    df = pd.DataFrame({"pvname": [a, b], "time": [100.0, 100.0], "value": [7.0, 8.0]})
+    path = tmp_path / "hb2"
+    path.mkdir()
+    df.to_parquet(path / "p.parquet", index=False)
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(path))
+    q = (
+        compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None, heartbeat_s=2.0)
+        .writeStream.format("memory")
+        .queryName("hb2_out")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_hb2"))
+        .trigger(processingTime="500 milliseconds")
+        .start()
+    )
+
+    def beats():
+        rows = spark.sql("select * from hb2_out").collect()
+        return {pv: [r for r in rows if r.pvname == pv and r.time != 100.0] for pv in (a, b)}
+
+    try:
+        deadline = _time.time() + 30
+        while _time.time() < deadline and not all(beats().values()):
+            _time.sleep(1)
+        got = beats()
+        rows = spark.sql("select * from hb2_out").collect()
+    finally:
+        q.stop()
+    assert all(got.values()), "a series of the group missed its heartbeat within 30 s"
+    assert sorted((r.pvname, r.value) for r in rows if r.time == 100.0) == sorted(
+        [(a, 7.0), (b, 8.0)]
+    )
+    for pv, value in ((a, 7.0), (b, 8.0)):
+        assert all(r.value == value and r.time > 1e9 for r in got[pv])
+
+
 def test_latest_value_upsert(spark, events_dir, tmp_path):
     cache_path = str(tmp_path / "cache")
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_dir)
@@ -889,6 +992,156 @@ def test_archive_resumes_checkpoint_of_unclustered_writer(spark, tmp_path):
     assert set(resumed) == batch_spec(events)
     assert set(first) < set(resumed)
     assert sorted(run(lambda c: archive_query(c, out, ckpt, buckets=16))) == sorted(resumed)
+
+
+def _exchanges(query) -> int:
+    """Shuffle exchanges in the last micro-batch's executed plan."""
+    todo, n = [query._jsq.streamingQuery().lastExecution().executedPlan()], 0
+    while todo:
+        node = todo.pop()
+        n += node.nodeName().startswith("Exchange")
+        it = node.children().iterator()
+        while it.hasNext():
+            todo.append(it.next())
+    return n
+
+
+@pytest.mark.parametrize("buckets, exchanges", [(128, 1), (16, 2)])
+def test_archive_plan_exchanges_by_bucket_count(spark, tmp_path, buckets, exchanges):
+    """At the default count each bucket is one key group of the fold, so
+    the plan's only shuffle is the fold's; a store with another count
+    keeps its bucket repartition. Both write at most one file per
+    touched bucket per micro-batch."""
+    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+
+    src = tmp_path / "px_events"
+    src.mkdir()
+    events = _two_batch_events(src, n_pvs=60)
+    out = str(tmp_path / "px_points")
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
+    )
+    q = (
+        archive_query(
+            compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
+            out, str(tmp_path / "px_ckpt"), buckets=buckets,
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    assert _exchanges(q) == exchanges
+    per_batch = _files_per_dir_per_batch(out)
+    assert len(per_batch) == 2
+    for counts in per_batch:
+        assert counts and max(counts.values()) == 1, counts
+    assert set(_archived(spark, out)) == batch_spec(events)
+
+
+def test_archive_stream_files_sorted_by_pvname_time(spark, tmp_path):
+    """One kernel call per bucket: every parquet file the archive stream
+    writes at the default count is sorted by (pvname, time)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+
+    src = tmp_path / "so_events"
+    src.mkdir()
+    _two_batch_events(src, n_pvs=500)
+    out = str(tmp_path / "so_points")
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
+    )
+    q = (
+        archive_query(
+            compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
+            out, str(tmp_path / "so_ckpt"),
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    files = glob.glob(os.path.join(out, "bucket=*", "*.parquet"))
+    assert len(files) > 100
+    multi = 0
+    for f in files:
+        t = pq.read_table(f, columns=["pvname", "time"])
+        rows = list(zip(t.column("pvname").to_pylist(), t.column("time").to_pylist()))
+        assert rows == sorted(rows), f
+        multi += len({pv for pv, _t in rows}) > 1
+    assert multi  # the sort is across series, not only within one
+
+
+def _per_key_archive(spark, src, out, ckpt):
+    """The archive writer as it ran with per-key fold state: the state
+    store keyed by ``pvname``, the compressor's four fields per key."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from epicsarchiver_spark.sources import points_store
+    from epicsarchiver_spark.streaming.ingest import OUT_SCHEMA, STATE_SCHEMA, _compress_step
+
+    def fold(key, pdfs, gs):
+        rows = pd.concat(list(pdfs)).sort_values("time", kind="stable")
+        state = gs.get if gs.exists else (None, None, None, None)
+        out_t, out_v, *state = _compress_step(
+            *state, rows["time"].tolist(), rows["value"].tolist(), DEADTIME, DEADBAND
+        )
+        gs.update(tuple(state))
+        if out_t:
+            yield pd.DataFrame({"pvname": key[0], "time": out_t, "value": out_v})
+
+    points_store.stamp_buckets(spark, out, 128)
+    compressed = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src)).groupBy(
+        "pvname"
+    ).applyInPandasWithState(
+        fold, OUT_SCHEMA, STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
+    )
+    q = (
+        compressed.withColumn("bucket", points_store.bucket_of(F.col("pvname")))
+        .repartition("bucket")
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .partitionBy("bucket")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+
+
+def test_archive_refuses_per_key_checkpoint(spark, tmp_path):
+    """A checkpoint holding per-key fold state cannot resume under key
+    groups: ``archive_query`` and the ``pvarch archive --follow`` daemon
+    refuse it with the restart path, before a query starts."""
+    from epicsarchiver_spark.cli import main
+    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+
+    src = tmp_path / "pk_events"
+    src.mkdir()
+    _two_batch_events(src, n_pvs=20)
+    out, ckpt = str(tmp_path / "pk_points"), str(tmp_path / "pk_ckpt")
+    _per_key_archive(spark, src, out, ckpt)
+    active = len(spark.streams.active)
+
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
+    with pytest.raises(ValueError, match="fresh checkpoint.*seeds=.*seed_col=.*limbo"):
+        archive_query(compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None), out, ckpt)
+    with pytest.raises(ValueError, match="per-key stream state"):
+        main(["--store", out, "archive", str(src), "--checkpoint", ckpt, "--follow"])
+    assert len(spark.streams.active) == active
+    # the restart path: a fresh checkpoint starts
+    fresh = archive_query(
+        compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
+        out, str(tmp_path / "pk_fresh"),
+    )
+    q = fresh.trigger(availableNow=True).start()
+    assert q.awaitTermination(120)
+    assert q.exception() is None
 
 
 def test_upsert_jdbc_parity_with_parquet_lane(spark, tmp_path):
@@ -2080,7 +2333,7 @@ def test_ingest_state_partitions_sized_by_volume(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "64")
     assert ingest_state_partitions(0) == 4
     assert ingest_state_partitions(100 * 1024 * 1024) == 4
-    assert ingest_state_partitions(10 * 1024**3) == 160
+    assert ingest_state_partitions(5 * 1024**3) == 80
     monkeypatch.setenv("SPARK_GRAFT_INGEST_STATE_PARTITIONS", "12")
     assert ingest_state_partitions(10 * 1024**3) == 12
 
@@ -2099,6 +2352,23 @@ def test_ingest_state_partitions_capped_by_parallelism(monkeypatch):
     assert ingest_state_partitions(100 * 1024**4) == 4
 
 
+def test_ingest_state_partitions_capped_at_key_groups(monkeypatch):
+    """The keyed fold keeps its state per key group (128, the store's
+    buckets): a partition past the group count would hold no state, so
+    neither volume, cores nor the env override size beyond it."""
+    from epicsarchiver_spark.streaming.fold import GROUPS
+    from epicsarchiver_spark.streaming.ingest import ingest_state_partitions
+
+    assert GROUPS == 128
+    monkeypatch.delenv("SPARK_GRAFT_INGEST_STATE_PARTITIONS", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "64")
+    assert ingest_state_partitions(10 * 1024**3) == GROUPS  # 160 by volume
+    assert ingest_state_partitions(8 * 1024**3) == GROUPS
+    assert ingest_state_partitions(8 * 1024**3 - 64 * 1024**2) == 127
+    monkeypatch.setenv("SPARK_GRAFT_INGEST_STATE_PARTITIONS", "4096")
+    assert ingest_state_partitions(0) == GROUPS
+
+
 def test_ingest_session_pins_sized_shuffle_partitions(spark, monkeypatch):
     """The sibling session carries the data-derived shuffle-partition
     conf while the caller's session keeps its own value — the stream
@@ -2106,8 +2376,8 @@ def test_ingest_session_pins_sized_shuffle_partitions(spark, monkeypatch):
     from epicsarchiver_spark.streaming.ingest import ingest_session
 
     monkeypatch.delenv("SPARK_GRAFT_INGEST_STATE_PARTITIONS", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "128")  # ceiling 384: volume decides
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "128")  # ceiling 128 (groups): volume decides
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    s2 = ingest_session(spark, 20 * 1024**3)
-    assert s2.conf.get("spark.sql.shuffle.partitions") == "320"
+    s2 = ingest_session(spark, 5 * 1024**3)
+    assert s2.conf.get("spark.sql.shuffle.partitions") == "80"
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
