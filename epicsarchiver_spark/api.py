@@ -24,7 +24,8 @@ class PVArchEngine:
     """Query surface over a points store + dimension tables.
 
     Single-series reads (``get_data``, ``get_value_at_time`` and the
-    plots built on them) scan one bucket per run when ``points`` carries
+    plots built on them) scan one bucket per run, and the run's delta
+    partition of pending small appends, when ``points`` carries
     the store's recorded bucket count — ``read_points`` attaches it to
     the ``bucket`` column from the store's ``_buckets`` record. Without
     that record (a legacy store, or a frame that dropped ``bucket``) they

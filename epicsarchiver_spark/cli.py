@@ -241,7 +241,7 @@ def cmd_import_zarr(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    from epicsarchiver_spark.sources.points_store import compact_store
+    from epicsarchiver_spark.sources.points_store import DELTA_BUCKET, compact_store
 
     spark = _spark("compact")
     try:
@@ -254,9 +254,11 @@ def cmd_compact(args) -> int:
     except ValueError as ex:
         print(str(ex), file=sys.stderr)
         return 1
+    delta = f"/bucket={DELTA_BUCKET}"
     for part, n in sorted(done.items()):
-        print(f"{part}: -> {n} file(s)")
-    print(f"compacted {len(done)} partition(s)")
+        print(f"{part}: folded" if part.endswith(delta) else f"{part}: -> {n} file(s)")
+    folded = sum(part.endswith(delta) for part in done)
+    print(f"folded {folded} delta partition(s); compacted {len(done) - folded} partition(s)")
     return 0
 
 
@@ -2329,7 +2331,11 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--json", help="write merges as JSON to this path")
     s.set_defaults(fn=cmd_bpe)
 
-    s = sub.add_parser("compact", help="merge streaming small files per (run,bucket)")
+    s = sub.add_parser(
+        "compact",
+        help="fold each run's delta partition (bucket=-1) into its buckets and "
+        "merge small files per (run, bucket)",
+    )
     s.add_argument("--runs", nargs="*", help="only these (rotated) runs; default all")
     s.add_argument("--target-mb", type=int, default=256, help="target file size")
     s.set_defaults(fn=cmd_compact)

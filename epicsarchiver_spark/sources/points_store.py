@@ -6,6 +6,7 @@ zarr columnar bolt-on (archiver.py:542-608). Engine layout: ONE parquet
 dataset,
 
     points/run=<run>/bucket=<xxhash64(pvname) % N>/*.parquet
+    points/run=<run>/bucket=-1/*.parquet (the run's delta partition)
     points/_buckets                      (the store's record: N, data schema)
 
 - ``run`` partition column  → the reference's run rotation becomes a
@@ -13,17 +14,26 @@ dataset,
   (J2 interval join done driver-side against a tiny table).
 - ``bucket`` partition column → the reference's 128-table fan-out
   ("eliminating more than 99% of the data", doc/setup.rst:238-241):
-  a single-series query scans 1/N of each run. Files written by
-  ``write_points`` (and rewritten by ``compact_store``) are sorted by
-  (pvname, time), so parquet row-group min/max stats prune further and
-  range reads are sequential. The streamed store
-  (``streaming.ingest.archive_query``) gets one file per touched bucket
-  per micro-batch; within it each series' points are contiguous and
-  time-ordered, but series are not sorted by pvname (streaming plans
-  cannot sort), so row-group pruning on pvname is weaker there. Nothing
-  compacts or re-sorts a streamed store yet: its files are listed in
+  a single-series query scans 1/N of each run, plus the run's delta
+  partition. Every file ``write_points`` writes (and ``compact_store``
+  rewrites) is sorted by (pvname, time), so parquet row-group min/max
+  stats prune further and range reads are sequential. The streamed
+  store (``streaming.ingest.archive_query``) gets one file per touched
+  bucket per micro-batch, sorted by (pvname, time) at the default
+  count. Nothing compacts a streamed store yet: its files are listed in
   the file sink's ``_spark_metadata`` manifest, so ``compact_store``
   refuses it.
+- ``bucket=-1`` → a run's delta partition. A small append into a
+  recorded store that holds data lands as ONE file there, not one file
+  per touched bucket: ``write_points`` takes this path when the write's
+  plan-estimated size is at most one scan split
+  (``spark.sql.files.maxPartitionBytes``), so a pruned read pays at most
+  one task's worth of bytes per pending delta. Reads prune with
+  ``bucket IN (k, -1)`` and see delta rows with ``bucket = -1``.
+  ``compact_store`` folds a run's delta files into the bucket
+  directories their rows hash to, behind one commit point (a journal),
+  so a crash at any step leaves every row visible exactly once after the
+  next pass.
 - ``_buckets`` → the store's record, written once by the first write
   into an empty or absent store (``write_points`` /
   ``streaming.ingest.archive_query``): line 1 is N, line 2 the data
@@ -59,9 +69,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 DEFAULT_BUCKETS = 128
+DELTA_BUCKET = -1  # a run's delta partition: small appends, folded in by compact_store
 BUCKETS_FILE = "_buckets"  # the store's record (bucket count, data schema), at its root
 BUCKETS_META = "n_buckets"  # read_points' metadata key on the bucket column
 PARTITION_COLS = ("run", "bucket")
+FOLD_DIR = ".fold"  # a run's compaction staging; the "." keeps it out of Spark's listing
 
 
 def bucket_of(name_col, n_buckets: int = DEFAULT_BUCKETS):
@@ -73,16 +85,35 @@ def _fs(spark: SparkSession, path: str):
     return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
 
 
+def _visible(fs, directory) -> list:
+    """The entries of ``directory`` Spark's reader lists (``_``/``.``
+    entries are bookkeeping: the bucket record, ``_SUCCESS``, checksums,
+    compaction staging)."""
+    return [
+        st for st in fs.listStatus(directory) if not st.getPath().getName().startswith(("_", "."))
+    ]
+
+
 def _holds_data(spark: SparkSession, path: str) -> bool | None:
-    """Whether the store directory holds an entry Spark's reader lists
-    (``_``/``.`` entries are bookkeeping: the bucket record,
-    ``_SUCCESS``, checksums); None if there is no such directory."""
+    """Whether the store directory holds an entry Spark's reader lists;
+    None if there is no such directory."""
     fs, P = _fs(spark, path)
     if not fs.exists(P(path)):
         return None
-    return any(
-        not st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(P(path))
-    )
+    return bool(_visible(fs, P(path)))
+
+
+def _read_lines(spark: SparkSession, path: str) -> list[str] | None:
+    """The lines of a small text file, or None if there is no such file."""
+    fs, P = _fs(spark, path)
+    if not fs.exists(P(path)):
+        return None
+    jio = spark._jvm.java.io
+    reader = jio.BufferedReader(jio.InputStreamReader(fs.open(P(path)), "UTF-8"))
+    try:
+        return list(iter(reader.readLine, None))
+    finally:
+        reader.close()
 
 
 def read_record(spark: SparkSession, path: str) -> tuple[int | None, StructType | None]:
@@ -90,17 +121,11 @@ def read_record(spark: SparkSession, path: str) -> tuple[int | None, StructType 
     None without a record (an absent store, or one written before the
     record existed); the schema alone is None for a one-line record
     (written before the record held the schema)."""
-    fs, P = _fs(spark, path)
-    rec = P(f"{path}/{BUCKETS_FILE}")
-    if not fs.exists(rec):
+    lines = _read_lines(spark, f"{path}/{BUCKETS_FILE}")
+    if lines is None:
         return None, None
-    jio = spark._jvm.java.io
-    reader = jio.BufferedReader(jio.InputStreamReader(fs.open(rec), "UTF-8"))
-    try:
-        n_buckets, schema = reader.readLine(), reader.readLine()
-    finally:
-        reader.close()
-    return int(n_buckets), StructType.fromJson(json.loads(schema)) if schema else None
+    schema = lines[1] if len(lines) > 1 else None
+    return int(lines[0]), StructType.fromJson(json.loads(schema)) if schema else None
 
 
 def data_schema(schema: StructType) -> StructType:
@@ -164,6 +189,18 @@ def _inferred(spark: SparkSession, path: str) -> StructType | None:
         return None
 
 
+def _write_aside(fs, P, path: str, text: str):
+    """Write ``text`` to ``<path>.tmp`` (whole, then closed) and return
+    that path, for the caller to rename onto ``path``."""
+    tmp = P(f"{path}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()
+    return tmp
+
+
 def stamp_buckets(
     spark: SparkSession,
     path: str,
@@ -178,13 +215,8 @@ def stamp_buckets(
     overwriting rename (a crash leaves the old record or the new one);
     otherwise the rename raises."""
     fs, P = _fs(spark, path)
-    tmp = P(f"{path}/{BUCKETS_FILE}.tmp")
     lines = [str(int(n_buckets))] + ([schema.json()] if schema is not None else [])
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray("".join(f"{line}\n" for line in lines).encode()))
-    finally:
-        out.close()
+    tmp = _write_aside(fs, P, f"{path}/{BUCKETS_FILE}", "".join(f"{line}\n" for line in lines))
     dst = P(f"{path}/{BUCKETS_FILE}")
     if replace:
         hfs = spark._jvm.org.apache.hadoop.fs
@@ -204,30 +236,58 @@ def write_points(
     mode: str = "append",
 ) -> None:
     """S10/S15 — append a (pvname, time, value, ...) frame to the store.
-    Adds run/bucket partition columns and sorts within partitions by
+    Adds run/bucket partition columns; every file is sorted by
     (pvname, time) for row-group stat pruning + sequential range reads.
     The first write into an empty or absent store records ``n_buckets``
     and the data columns' schema; a later write with another count or
     other data columns raises ``ValueError``. A static overwrite
-    replaces the whole store, record included."""
+    replaces the whole store, record included.
+
+    A small append lands as one file per run in the run's delta
+    partition (``bucket=-1``), with no shuffle, when the store records
+    its bucket count, already holds data, and the write's plan-estimated
+    size is at most one scan split (``spark.sql.files.maxPartitionBytes``):
+    a pruned single-series read then pays at most one split for each
+    pending delta. Any other write (the first into an empty store, every
+    overwrite, a larger write, or one whose size the plan cannot
+    estimate) lands bucketed, one file per touched (run, bucket).
+    ``compact_store`` folds deltas into their buckets."""
     spark = points.sparkSession
     schema = data_schema(points.schema)
     replaces = mode == "overwrite" and (
         spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
     )
     stamp = replaces or claim_buckets(spark, path, n_buckets, schema)
-    out = points.withColumn("bucket", bucket_of(F.col("pvname"), n_buckets))
+    delta = mode == "append" and _fits_a_delta(points, path)
+    bucket = F.lit(DELTA_BUCKET) if delta else bucket_of(F.col("pvname"), n_buckets)
+    out = points.withColumn("bucket", bucket)
     if run is not None:
         out = out.withColumn("run", F.lit(run))
+    out = out.coalesce(1) if delta else out.repartition(*PARTITION_COLS)
+    # the sort leads with the partition columns: the planned write needs
+    # that order, and would replace a sort without it by its own
     (
-        out.repartition("run", "bucket")
-        .sortWithinPartitions("pvname", "time")
+        out.sortWithinPartitions(*PARTITION_COLS, "pvname", "time")
         .write.mode(mode)
-        .partitionBy("run", "bucket")
+        .partitionBy(*PARTITION_COLS)
         .parquet(path)
     )
     if stamp:
         stamp_buckets(spark, path, n_buckets, schema)
+
+
+def _fits_a_delta(points: DataFrame, path: str) -> bool:
+    """Whether an append of ``points`` lands in the delta partition: the
+    store records its bucket count (the fold needs it), holds data, and
+    the plan estimates the write at most one scan split (an unestimable
+    plan reports a huge size)."""
+    spark = points.sparkSession
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return (
+        read_record(spark, path)[0] is not None
+        and bool(_holds_data(spark, path))
+        and int(points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) <= split
+    )
 
 
 # Data columns then partition columns in partition-spec order — the
@@ -255,7 +315,9 @@ def read_points(spark: SparkSession, path: str) -> DataFrame:
     hidden entries (the record, ``_SUCCESS``, checksums) may sit in an
     empty store. The recorded bucket count, if any, rides on the
     ``bucket`` column's metadata (``BUCKETS_META``) for
-    ``api.PVArchEngine``'s pruned reads."""
+    ``api.PVArchEngine``'s pruned reads. Rows of a pending delta (a small
+    append ``compact_store`` has not folded yet) read with ``bucket = -1``
+    (``DELTA_BUCKET``), not the bucket their pvname hashes to."""
     n_buckets, schema = read_record(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     try:
@@ -366,11 +428,12 @@ def prune_runs(
 def series_filter(
     points: DataFrame, pvname: str, n_buckets: int = DEFAULT_BUCKETS
 ) -> DataFrame:
-    """Filter to one series with bucket pruning: the bucket equality is on
-    a partition column (pruned at planning time), the pvname equality is
-    pushed into the scan."""
+    """Filter to one series with bucket pruning: the bucket predicate is
+    on a partition column (pruned at planning time) and keeps the
+    series' bucket and the runs' delta partitions; the pvname equality
+    is pushed into the scan."""
     return points.filter(
-        (F.col("bucket") == bucket_of(F.lit(pvname), n_buckets))
+        F.col("bucket").isin(bucket_of(F.lit(pvname), n_buckets), F.lit(DELTA_BUCKET))
         & (F.col("pvname") == pvname)
     )
 
@@ -400,28 +463,46 @@ def compact_store(
     runs: list[str] | None = None,
     target_file_bytes: int = 256 * 1024 * 1024,
 ) -> dict[str, int]:
-    """Small-file compaction for a ``run=/bucket=`` points store: every
-    append adds files to each (run, bucket) dir it touches — after
-    months of appends a bucket dir holds thousands of KB-sized files and
-    the scan cost is dominated by file-open overhead, the classic
-    small-file problem. Compaction rewrites each (run, bucket) partition
-    as ~size/target_file_bytes files, re-sorted by (pvname, time) so
-    row-group min/max stats prune again (appends interleave series).
+    """Delta fold and small-file compaction for a ``run=/bucket=`` points
+    store. Every append adds files: a large one a file per touched
+    (run, bucket), a small one a file in its run's delta partition
+    (``bucket=-1``). After months of appends the scan cost is dominated
+    by file-open overhead, the classic small-file problem. Per run, one
+    pass folds the delta files into the bucket directories their rows
+    hash to, and rewrites every bucket that holds more files than
+    ~size/target_file_bytes, re-sorted by (pvname, time) so row-group
+    min/max stats prune again. A rewritten bucket spreads its series
+    over its files by pvname hash, so each series stays in one file.
     A store written by the streaming ``archive_query`` (``bucket=`` at
-    its root, one file per touched bucket per micro-batch, listed in the
-    sink's ``_spark_metadata`` manifest) raises ``ValueError``: its
-    readers see only the files the manifest lists, so rewriting its
-    files without the manifest would hide them.
+    its root, listed in the sink's ``_spark_metadata`` manifest) raises
+    ``ValueError``: its readers see only the files the manifest lists,
+    so rewriting its files without the manifest would hide them.
 
-    Runs one partition-dir at a time with the same crash-safe two-rename
-    swap as the cache upsert: rewrite to ``<dir>.tmp``, park the old dir at
-    ``<dir>.bak``, swap, delete. A crash leaves the partition either old,
-    old-at-.bak (restored by the next compaction pass), or new — never
-    half-written, and readers of OTHER partitions are never disturbed.
+    One commit point per run, a roll-forward journal. The new bucket
+    directories are staged under the run's ``.fold/new``; then a journal
+    naming them and the folded delta files is written aside and renamed
+    to ``.fold/journal``. Rolling forward parks each live bucket at
+    ``.fold/old``, renames its staged one in, deletes the folded delta
+    files and drops ``.fold``. Every pass first rolls a journalled fold
+    forward (each step is idempotent) and drops staging that has no
+    journal, so after a crash at any step the next pass leaves every
+    row visible exactly once. A journal, not a staged copy of the whole
+    run, because a fold rewrites only the buckets its deltas touch:
+    the other buckets of the run are never copied or disturbed. Staging
+    and parking live under a ``.`` name, which Spark's listing skips, so
+    no reader sees them; a reader that lists the run during the
+    roll-forward itself (renames and deletes only) can see folded rows
+    twice or a bucket missing. Directories an earlier release left as
+    ``bucket=<k>.bak`` / ``bucket=<k>.tmp`` are recovered the way it
+    did: a parked directory whose live one is missing goes back, the
+    rest are dropped.
+
     The hot (currently-appended) run should be skipped via ``runs``:
     compact only rotated runs, which are immutable.
 
-    Returns {partition: files_after} for the partitions rewritten."""
+    Returns {partition: files_after} for the bucket partitions
+    rewritten, and ``run=<r>/bucket=-1: 0`` for each delta partition
+    folded."""
     fs, P = _fs(spark, path)
     if fs.exists(P(f"{path}/_spark_metadata")):
         raise ValueError(
@@ -429,49 +510,122 @@ def compact_store(
             "_spark_metadata): it cannot be compacted until compaction also "
             "rewrites the sink manifest (ROADMAP: compaction of the streamed store)"
         )
-
+    n_buckets, schema = read_record(spark, path)
     result: dict[str, int] = {}
-    for run_status in fs.listStatus(P(path)):
-        run_name = run_status.getPath().getName()
-        if not run_name.startswith("run="):
-            continue
-        if runs is not None and run_name.removeprefix("run=") not in runs:
-            continue
-        names = {st.getPath().getName() for st in fs.listStatus(run_status.getPath())}
-        # recover a previous half-swap first: a parked .bak whose live dir
-        # is missing goes back; stale .bak/.tmp next to a live dir are junk
-        for name in sorted(names):
-            if name.endswith(".bak"):
-                base = name.removesuffix(".bak")
-                if base not in names:
-                    fs.rename(P(f"{path}/{run_name}/{name}"), P(f"{path}/{run_name}/{base}"))
-                    names.add(base)
-                else:
-                    fs.delete(P(f"{path}/{run_name}/{name}"), True)
-            elif name.endswith(".tmp"):
-                fs.delete(P(f"{path}/{run_name}/{name}"), True)
-        for bk_name in sorted(names):
-            if not bk_name.startswith("bucket=") or bk_name.endswith((".bak", ".tmp")):
-                continue
-            part_dir = f"{path}/{run_name}/{bk_name}"
-            files = [st for st in fs.listStatus(P(part_dir)) if st.isFile()]
-            size = sum(st.getLen() for st in files)
-            n_out = max(1, -(-size // target_file_bytes))
-            if len(files) <= n_out:
-                continue  # already compact
-            (
-                spark.read.parquet(part_dir)
-                .repartition(int(n_out))
-                .sortWithinPartitions("pvname", "time")
-                .write.mode("overwrite")
-                .parquet(part_dir + ".tmp")
+    for run in list_runs(spark, path):
+        if runs is None or run in runs:
+            result.update(
+                _compact_run(spark, f"{path}/run={run}", n_buckets, schema, target_file_bytes)
             )
-            fs.delete(P(part_dir + ".bak"), True)
-            fs.rename(P(part_dir), P(part_dir + ".bak"))
-            fs.rename(P(part_dir + ".tmp"), P(part_dir))
-            fs.delete(P(part_dir + ".bak"), True)
-            result[f"{run_name}/{bk_name}"] = int(n_out)
     return result
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
+def _delete(fs, path) -> None:
+    fs.delete(path, True)
+
+
+def _bucket_dirs(fs, P, parent: str) -> dict[int, object]:
+    """The ``bucket=<k>`` directories under ``parent``, by k."""
+    return {
+        int(st.getPath().getName()[len("bucket="):]): st.getPath()
+        for st in fs.listStatus(P(parent))
+        if st.isDirectory() and st.getPath().getName().startswith("bucket=")
+    }
+
+
+def _recover_run(spark: SparkSession, run_dir: str) -> None:
+    """Finish an interrupted compaction of one run: roll a journalled
+    fold forward, drop staging without a journal, and recover the
+    ``bucket=<k>.bak`` / ``.tmp`` directories of earlier releases."""
+    fs, P = _fs(spark, run_dir)
+    for st in fs.listStatus(P(run_dir)):
+        name = st.getPath().getName()
+        if name.endswith(".bak") and not fs.exists(P(f"{run_dir}/{name[:-4]}")):
+            _rename(fs, st.getPath(), P(f"{run_dir}/{name[:-4]}"))
+        elif name.endswith((".bak", ".tmp")):
+            _delete(fs, st.getPath())
+    fold = f"{run_dir}/{FOLD_DIR}"
+    journal = _read_lines(spark, f"{fold}/journal")
+    if journal is not None:
+        done = json.loads(journal[0])
+        for k in done["buckets"]:
+            live, new = P(f"{run_dir}/bucket={k}"), P(f"{fold}/new/bucket={k}")
+            if fs.exists(new):  # not swapped in yet
+                if fs.exists(live):
+                    _rename(fs, live, P(f"{fold}/old/bucket={k}"))
+                _rename(fs, new, live)
+        delta = f"{run_dir}/bucket={DELTA_BUCKET}"
+        for name in done["deltas"]:
+            _delete(fs, P(f"{delta}/{name}"))
+        if fs.exists(P(delta)) and not _visible(fs, P(delta)):
+            _delete(fs, P(delta))
+    _delete(fs, P(fold))
+
+
+def _compact_run(
+    spark: SparkSession,
+    run_dir: str,
+    n_buckets: int | None,
+    schema: StructType | None,
+    target_file_bytes: int,
+) -> dict[str, int]:
+    """One run's pass of ``compact_store``: stage, commit, roll forward."""
+    fs, P = _fs(spark, run_dir)
+    _recover_run(spark, run_dir)
+    files = {
+        k: [st for st in _visible(fs, d) if st.isFile()]
+        for k, d in _bucket_dirs(fs, P, run_dir).items()
+    }
+    deltas = [st.getPath().getName() for st in files.pop(DELTA_BUCKET, [])]
+    ways = {
+        k: max(1, -(-sum(st.getLen() for st in fl) // target_file_bytes))
+        for k, fl in files.items()
+    }
+    rewrite = {k for k, fl in files.items() if len(fl) > ways[k]}
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    delta_paths = [f"{run_dir}/bucket={DELTA_BUCKET}/{name}" for name in deltas]
+    if deltas:
+        if n_buckets is None:
+            raise ValueError(f"{run_dir} holds deltas but its store records no bucket count")
+        home = bucket_of(F.col("pvname"), n_buckets)
+        rewrite |= {r[0] for r in reader.parquet(*delta_paths).select(home).distinct().collect()}
+    if not rewrite:
+        return {}
+    rows = reader.option("basePath", run_dir).parquet(
+        *[f"{run_dir}/bucket={k}" for k in sorted(rewrite) if k in files], *delta_paths
+    )
+    if deltas:
+        rows = rows.withColumn("bucket", home)
+    wide = [x for k in sorted(rewrite) if ways.get(k, 1) > 1 for x in (k, ways[k])]
+    slot = F.lit(0)
+    if wide:  # buckets sized for several files: spread their series by name
+        n_files = F.create_map(*map(F.lit, wide))[F.col("bucket")]
+        slot = F.pmod(F.xxhash64("pvname"), F.coalesce(n_files, F.lit(1)))
+    fold = f"{run_dir}/{FOLD_DIR}"
+    (
+        rows.repartition(F.col("bucket"), slot)
+        .sortWithinPartitions("bucket", "pvname", "time")
+        .write.partitionBy("bucket")
+        .parquet(f"{fold}/new")
+    )
+    staged = sorted(_bucket_dirs(fs, P, f"{fold}/new"))
+    fs.mkdirs(P(f"{fold}/old"))
+    journal = json.dumps({"buckets": staged, "deltas": deltas})
+    _rename(fs, _write_aside(fs, P, f"{fold}/journal", journal), P(f"{fold}/journal"))
+    _recover_run(spark, run_dir)  # the roll-forward
+    run = run_dir.rsplit("/", 1)[1]
+    out = {
+        f"{run}/bucket={k}": sum(st.isFile() for st in _visible(fs, P(f"{run_dir}/bucket={k}")))
+        for k in staged
+    }
+    if deltas:
+        out[f"{run}/bucket={DELTA_BUCKET}"] = 0
+    return out
 
 
 def range_read_store(

@@ -308,8 +308,10 @@ def group_kernel(
         if chunks:
             rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
             # a null row must not wedge the batch in an at-least-once
-            # retry loop (same guard as the JDBC lane)
-            rows = rows.dropna(subset=drop)
+            # retry loop (same guard as the JDBC lane); the frame is
+            # copied only when a null is there to drop
+            if any(pd.isna(rows[c].to_numpy()).any() for c in drop):
+                rows = rows.dropna(subset=drop)
             batch = _Batch(rows, names) if len(rows) else None
         else:
             batch = None

@@ -220,3 +220,33 @@ def test_group_kernel_fires_only_due_keys():
     got = _call(fn, gs, pd.DataFrame({"pvname": ["C"], "time": [0.0], "value": [3.0]}))
     assert list(got.itertuples(index=False, name=None)) == [("A", 2.0, 9.0), ("C", 0.0, 3.0)]
     assert gs.row[0] == ["A", "B", "C"] and gs.row[-1] == [0, 0, 0]
+
+
+def test_group_kernel_drops_null_rows_only_when_present():
+    """Rows null in a key or ``required`` column never reach the step;
+    a batch holding such rows emits what the same batch without them
+    emits, and a null-free batch emits its rows unchanged."""
+    import numpy as np
+
+    from epicsarchiver_spark.streaming.fold import group_kernel
+
+    def kernel():
+        return group_kernel(
+            ["pvname"],
+            columns=ingest.OUT_SCHEMA.fieldNames(),
+            n_fields=len(ingest.STATE_SCHEMA.fields),
+            required=("time", "value"),
+            **ingest._compress_fold(5.0, 0.5, None),
+        )
+
+    clean = pd.DataFrame(
+        {"pvname": ["A", "A", "B"], "time": [0.0, 10.0, 0.0], "value": [1.0, 2.0, 3.0]}
+    )
+    nulls = pd.DataFrame(
+        {"pvname": ["A", None, "B"], "time": [5.0, 1.0, np.nan], "value": [np.nan, 9.0, 9.0]}
+    )
+    want = [("A", 0.0, 1.0), ("A", 10.0, 2.0), ("B", 0.0, 3.0)]
+    got = _call(kernel(), _GroupState(), clean)
+    assert list(got.itertuples(index=False, name=None)) == want
+    got = _call(kernel(), _GroupState(), pd.concat([clean, nulls], ignore_index=True))
+    assert list(got.itertuples(index=False, name=None)) == want

@@ -295,6 +295,43 @@ def test_single_series_reads_run_one_scan_in_one_job(spark, tmp_path):
     assert got == (2500.0, 1.0) and jobs == 1
 
 
+def test_single_series_read_with_deltas_pending_prunes_to_its_bucket(spark, tmp_path):
+    """With small appends pending in a run's delta partition, a pruned
+    single-PV get_data lists only the PV's bucket and the delta
+    partition (bucket IN (k, -1)), plans no Exchange, runs one job, and
+    returns the appended rows."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from epicsarchiver_spark.api import PVArchEngine
+    from epicsarchiver_spark.sources.points_store import bucket_of, read_points, write_points
+
+    def frame(lo, hi):
+        pdf = pd.DataFrame(
+            [(pv, float(t), 1.0) for pv in ("P1", "P2", "P3") for t in range(lo, hi, 50)],
+            columns=["pvname", "time", "value"],
+        )
+        return spark.createDataFrame(pdf)
+
+    path = str(tmp_path / "pts")
+    write_points(frame(0, 2500), path, run="run_001", n_buckets=4)
+    for lo in (2500, 2600):
+        write_points(frame(lo, lo + 100), path, run="run_001", n_buckets=4)
+    assert len(list((tmp_path / "pts" / "run=run_001" / "bucket=-1").glob("*.parquet"))) == 2
+    eng = PVArchEngine(spark, read_points(spark, path))
+    k = spark.range(1).select(bucket_of(F.lit("P1"), 4)).head()[0]
+
+    df = eng.get_data("P1", 2400.0, 2700.0)
+    rows, jobs, _ = _jobs_and_tasks(spark, "single-pv-get-data-delta", df.collect)
+    assert [r.time for r in rows] == [2350.0 + 50 * i for i in range(7)]
+    assert jobs == 1
+    plan = explain_str(df)
+    assert "Exchange" not in plan, plan
+    (filters,) = re.findall(r"PartitionFilters: \[(.*)\]", plan)
+    (listed,) = re.findall(r"bucket#\d+ IN \(([^)]*)\)", filters)
+    assert {int(v) for v in listed.split(",")} == {k, -1}, filters
+
+
 def test_vocab_topk_is_take_ordered_no_count_distinct(spark):
     """vocabulary_topk: the final top-k must plan as
     TakeOrderedAndProject (per-partition heaps, no global sort) and df

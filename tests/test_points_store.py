@@ -602,3 +602,239 @@ def test_one_line_record_stays_when_inference_disagrees(spark, tmp_path):
     _restamp(spark, path, 4)
     write_points(_pts(spark, t0=100).select("value", "time", "pvname"), path, run="r2", n_buckets=4)
     assert read_record(spark, path) == (4, None)
+
+
+def _files(path, run, bucket):
+    import glob
+
+    return glob.glob(f"{path}/run={run}/bucket={bucket}/*.parquet")
+
+
+def _sorted_by_pvname_time(files):
+    import pyarrow.parquet as pq
+
+    for f in files:
+        t = pq.read_table(f, columns=["pvname", "time"]).to_pandas()
+        if not t.equals(t.sort_values(["pvname", "time"], kind="stable").reset_index(drop=True)):
+            return False
+    return True
+
+
+def _delta_store(spark, path, names=("PV:A", "PV:B", "PV:C", "PV:D", "PV:E")):
+    """A 4-bucket store: one bucketed write, then two small appends into
+    the same run, which land as delta files."""
+    write_points(_pts(spark, list(names)), path, run="r1", n_buckets=4)
+    write_points(_pts(spark, list(names), t0=100), path, run="r1", n_buckets=4)
+    write_points(_pts(spark, list(names[:2]) + ["PV:F"], t0=200), path, run="r1", n_buckets=4)
+
+
+def test_small_append_lands_as_one_delta_file(spark, tmp_path):
+    """The first write into an empty store is bucketed; a small append
+    into a store holding data lands as exactly one file in its run's
+    delta partition, sorted by (pvname, time), and reads back with
+    bucket = -1. Every file of either kind is sorted by (pvname, time)."""
+    import glob
+
+    path = str(tmp_path / "store")
+    names = [f"PV:{i:02d}" for i in range(12)]
+    write_points(_pts(spark, names), path, run="r1", n_buckets=4)
+    assert not _files(path, "r1", -1)
+    bucketed = glob.glob(f"{path}/run=r1/bucket=[0-9]*/*.parquet")
+    assert len(bucketed) == 4 and _sorted_by_pvname_time(bucketed)
+    write_points(_pts(spark, names, t0=100), path, run="r2", n_buckets=4)
+    (delta,) = _files(path, "r2", -1)
+    assert not glob.glob(f"{path}/run=r2/bucket=[0-9]*")
+    assert _sorted_by_pvname_time([delta])
+    pts = read_points(spark, path)
+    assert pts.schema["bucket"].dataType.simpleString() == "int"
+    assert {r.bucket for r in pts.filter(F.col("run") == "r2").select("bucket").distinct().collect()} == {-1}
+    assert pts.count() == 2 * 10 * len(names)
+
+
+def test_overwrite_and_large_appends_stay_bucketed(spark, tmp_path):
+    """An overwrite, and an append the plan sizes above one scan split,
+    land bucketed; so does an append whose size the plan cannot estimate
+    (a frame built from Python rows)."""
+    path = str(tmp_path / "store")
+    write_points(_pts(spark), path, run="r1", n_buckets=4)
+    write_points(_pts(spark, t0=100), path, run="r1", n_buckets=4, mode="overwrite")
+    assert not _files(path, "r1", -1)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        write_points(_pts(spark, t0=200), path, run="r1", n_buckets=4)
+    finally:
+        spark.conf.set(key, old)
+    assert not _files(path, "r1", -1)
+    rows = spark.createDataFrame(
+        [("PV:A", 300.0, 1.0)], "pvname string, time double, value double"
+    )
+    write_points(rows, path, run="r1", n_buckets=4)
+    assert not _files(path, "r1", -1)
+    assert read_points(spark, path).count() == 41
+
+
+def test_write_refuses_another_bucket_count_with_deltas_pending(spark, tmp_path):
+    """A store holding delta files still refuses a write with another
+    bucket count, and the deltas stay as they were."""
+    path = str(tmp_path / "store")
+    _delta_store(spark, path)
+    assert len(_files(path, "r1", -1)) == 2
+    with pytest.raises(ValueError, match="records 4 buckets"):
+        write_points(_pts(spark, t0=300), path, run="r1", n_buckets=8)
+    assert len(_files(path, "r1", -1)) == 2
+
+
+def _answers(spark, path, names):
+    """What the facade answers for every PV of the store (rows without
+    ``bucket``: a pending delta's rows read back with bucket = -1)."""
+    from epicsarchiver_spark.api import PVArchEngine
+
+    eng = PVArchEngine(spark, read_points(spark, path))
+    out = {}
+    for n in names:
+        out[n, "get_data"] = [tuple(r) for r in eng.get_data(n, 105.0, 250.0).drop("bucket").collect()]
+        out[n, "value_at"] = eng.get_value_at_time(n, 155.0)
+    out["get_values"] = sorted(
+        tuple(r) for r in eng.get_values(60.0, now=260.0).drop("bucket").collect()
+    )
+    out["search"] = [r.pvname for r in eng.search_names("PV:*").collect()]
+    return out
+
+
+def test_reads_answer_the_same_with_deltas_pending(spark, tmp_path):
+    """get_data, get_value_at_time, get_values and search_names answer
+    every PV the same with deltas pending, after compaction folds them,
+    and as a store that never held a delta."""
+    names = ["PV:A", "PV:B", "PV:C", "PV:D", "PV:E", "PV:F"]
+    path = str(tmp_path / "store")
+    _delta_store(spark, path)
+    pending = _answers(spark, path, names)
+    assert len(pending["PV:F", "get_data"]) == 6 and pending["PV:A", "value_at"] == (150.0, 1.0)
+    ref = str(tmp_path / "ref")
+    write_points(read_points(spark, path).drop("bucket"), ref, n_buckets=4, mode="overwrite")
+    assert not _files(ref, "r1", -1)
+    assert _answers(spark, ref, names) == pending
+    done = compact_store(spark, path)
+    assert done["run=r1/bucket=-1"] == 0 and not _files(path, "r1", -1)
+    assert _answers(spark, path, names) == pending
+    assert compact_store(spark, path) == {}  # a compacted run stays as it is
+
+
+def _crash_at(monkeypatch, step):
+    """Make the ``step``-th rename or delete of a compaction raise (a
+    crash right before it); returns the step counter."""
+    from epicsarchiver_spark.sources import points_store
+
+    calls = [0]
+
+    def wrap(op):
+        def run(*args):
+            calls[0] += 1
+            if calls[0] - 1 == step:
+                raise RuntimeError(f"injected crash at step {step}")
+            return op(*args)
+
+        return run
+
+    monkeypatch.setattr(points_store, "_rename", wrap(points_store._rename))
+    monkeypatch.setattr(points_store, "_delete", wrap(points_store._delete))
+    return calls
+
+
+def _fold_steps(spark, path, monkeypatch):
+    """How many renames and deletes a clean compact_store pass makes."""
+    with monkeypatch.context() as m:
+        calls = _crash_at(m, -1)
+        compact_store(spark, path)
+    return calls[0]
+
+
+def _store_rows(spark, path):
+    return _rows(read_points(spark, path).select("pvname", "time", "value", "run"))
+
+
+def test_fold_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    """A crash before any rename or delete of a fold, then one more
+    compact_store pass: the store holds the same rows, each once, no
+    delta and no staging."""
+    import os
+    import shutil
+
+    base = str(tmp_path / "base")
+    _delta_store(spark, base)
+    want = _store_rows(spark, base)
+    n_steps = _fold_steps(spark, shutil.copytree(base, str(tmp_path / "clean")), monkeypatch)
+    assert n_steps >= 8  # commit, two renames per bucket, deletes
+    for step in range(n_steps):
+        path = shutil.copytree(base, str(tmp_path / f"crash{step}"))
+        with monkeypatch.context() as m:
+            _crash_at(m, step)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                compact_store(spark, path)
+        compact_store(spark, path)
+        assert _store_rows(spark, path) == want, step
+        assert not _files(path, "r1", -1)
+        left = os.listdir(f"{path}/run=r1")
+        assert all(n.startswith("bucket=") and n != "bucket=-1" for n in left), left
+
+
+def test_compaction_staging_is_hidden_from_readers(spark, tmp_path, monkeypatch):
+    """A pass stopped after staging its rewrite (before the commit), and
+    one stopped after the swap with the old buckets still parked (before
+    the staging is dropped): a reader sees every row once, bucket stays
+    an int column, and a pruned single-PV read works."""
+    import os
+    import shutil
+
+    from epicsarchiver_spark.sources.points_store import series_of
+
+    base = str(tmp_path / "base")
+    _delta_store(spark, base)
+    want = _store_rows(spark, base)
+    n_steps = _fold_steps(spark, shutil.copytree(base, str(tmp_path / "clean")), monkeypatch)
+    for state, step in (("staged", 1), ("parked", n_steps - 1)):
+        path = shutil.copytree(base, str(tmp_path / state))
+        with monkeypatch.context() as m:
+            _crash_at(m, step)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                compact_store(spark, path)
+        fold = f"{path}/run=r1/.fold"
+        assert os.listdir(f"{fold}/new" if state == "staged" else f"{fold}/old"), state
+        pts = read_points(spark, path)
+        assert _store_rows(spark, path) == want, state
+        assert pts.schema["bucket"].dataType.simpleString() == "int"
+        assert series_of(pts, "PV:A").count() == 30
+
+
+def test_compaction_spreads_a_large_bucket_by_series(spark, tmp_path):
+    """A bucket sized for several files is rewritten as at most that many
+    files, each series in exactly one of them, sorted by (pvname, time),
+    with the rows unchanged."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "store")
+    names = [f"PV:{i:02d}" for i in range(16)]
+    for t0 in (0, 100, 200):
+        write_points(_pts(spark, names, t0=t0), path, run="r1", n_buckets=2)
+    want = _store_rows(spark, path)
+    # at this size adaptive execution would merge a bucket's slots into
+    # one task (it merges shuffle partitions below 64 MB, and a bucket is
+    # split only when it holds more than target_file_bytes)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        done = compact_store(spark, path, target_file_bytes=256)
+    finally:
+        spark.conf.set(key, old)
+    assert _store_rows(spark, path) == want
+    for k in (0, 1):
+        files = glob.glob(f"{path}/run=r1/bucket={k}/*.parquet")
+        assert 1 < len(files) == done[f"run=r1/bucket={k}"]
+        assert _sorted_by_pvname_time(files)
+        owners = [set(pq.read_table(f, columns=["pvname"]).column(0).to_pylist()) for f in files]
+        assert sum(len(o) for o in owners) == len(set().union(*owners))
