@@ -67,6 +67,8 @@ import argparse
 import sys
 import time
 
+from epicsarchiver_spark.sources import fsio
+
 
 def _spark(app: str):
     from epicsarchiver_spark.session import get_spark
@@ -262,41 +264,19 @@ def cmd_compact(args) -> int:
     return 0
 
 
-def _recover_dim(spark, path: str) -> None:
-    """Restore a dimension parked at .bak by a crash mid-swap."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(P(path + ".bak")) and not fs.exists(P(path)):
-        fs.rename(P(path + ".bak"), P(path))
-
-
-def _read_runs(spark, path: str):
-    _recover_dim(spark, path)
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
+def _open_dim(spark, path: str):
+    """A writer's read of a dimension: recover it (``fsio.recover``),
+    then read it; None only when there is no dimension at ``path``."""
+    fsio.recover(spark, path)
+    return fsio.read_parquet(spark, path)
 
 
 def _overwrite_dim(spark, df, path: str) -> None:
-    """Overwrite a tiny dimension parquet that the frame may itself be
-    reading from: fully materialize to .tmp first (overwriting a path
-    mid-read self-corrupts), then the same crash-safe two-rename swap as
-    the points-cache upsert — a crash leaves the dimension either old
-    (possibly parked at .bak, restored by the next call) or new, never
-    half-written."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp, bak = path + ".tmp", path + ".bak"
-    _recover_dim(spark, path)
-    fs.delete(P(bak), True)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if fs.exists(P(path)):
-        fs.rename(P(path), P(bak))
-    fs.rename(P(tmp), P(path))
-    fs.delete(P(bak), True)
+    """Replace a tiny dimension, opened with ``_open_dim``, by ``df``,
+    which may read it: ``df`` is staged whole before the ``fsio`` swap,
+    since overwriting a path mid-read self-corrupts."""
+    df.coalesce(1).write.parquet(fsio.staging(path))
+    fsio.commit(spark, path)
 
 
 def cmd_next(args) -> int:
@@ -308,7 +288,7 @@ def cmd_next(args) -> int:
 
     spark = _spark("next")
     now = time.time()
-    runs = _read_runs(spark, args.runs_file)
+    runs = _open_dim(spark, args.runs_file)
     if runs is None:
         next_name = args.name or "run_00001"
         rotated = spark.createDataFrame(
@@ -404,7 +384,7 @@ def cmd_save_position(args) -> int:
 
     spark = _spark("save_position")
     ts = args.ts if args.ts is not None else time.time()
-    existing = _read_runs(spark, args.positions_file)
+    existing = _open_dim(spark, args.positions_file)
     updated = save_position(existing, spark, args.instrument, args.position, ts)
     _overwrite_dim(spark, updated, args.positions_file)
     print(f"saved position {args.instrument}/{args.position} @ {ts:.3f}")
@@ -416,8 +396,9 @@ def cmd_restore_position(args) -> int:
     from epicsarchiver_spark.operators.control import restore_position
 
     spark = _spark("restore_position")
-    _recover_dim(spark, args.positions_file)
-    positions = spark.read.parquet(args.positions_file)
+    positions = fsio.read_parquet(spark, args.positions_file)
+    if positions is None:
+        raise FileNotFoundError(f"positions dimension not found: {args.positions_file}")
     out = restore_position(
         _points(spark, args), positions, args.pvs, args.instrument, args.position
     )
@@ -553,17 +534,16 @@ def _load_alert_rules(spark, args):
     only, trippoint rendered to the comparator's string form. Re-read
     on every call, which is what makes ``--follow`` a live daemon."""
     import csv
-    import os
 
     if args.table:
-        _recover_dim(spark, args.table)
-        if not os.path.isdir(args.table):
+        dim = fsio.read_parquet(spark, args.table)
+        if dim is None:
             # loud, like the CSV lane's FileNotFoundError — a typo'd
             # --table in a cron sweep must not exit 0 as "no rules"
             raise FileNotFoundError(f"alert rules table not found: {args.table}")
         from pyspark.sql import functions as F
 
-        dim = spark.read.parquet(args.table).filter(
+        dim = dim.filter(
             (F.col("active") == "yes") & F.col("trippoint").isNotNull()
         )
         rows = [
@@ -751,15 +731,14 @@ def cmd_rollup(args) -> int:
     The artifact is PER-RUN partials (``run=<name>`` partition dirs of
     (key, day, n, sum_q, min_q, max_q) rows; ``read_rollup``'s
     merge-on-read folds the split back out), which makes maintenance
-    structural: a full build swaps the whole dir through the
-    tmp→bak→live two-rename (crash recovery = restore bak, same as
-    ``index_words``); ``--refresh`` folds ONLY runs the artifact has
-    not seen — plus re-folds the newest already-folded run, the only
-    one an append-to-latest archiver can have grown since — each as
-    its own per-run-dir swap, so refresh cost is O(new runs), never
-    O(store). A ``_params.json`` sidecar pins the quantum; a
-    mismatched --quantum on refresh is refused (mixed quantizations
-    in one artifact would silently corrupt the sums)."""
+    structural: a full build swaps in the whole dir (``fsio``);
+    ``--refresh`` folds ONLY runs the artifact has not seen — plus
+    re-folds the newest already-folded run, the only one an
+    append-to-latest archiver can have grown since — and swaps in just
+    those run dirs, so refresh cost is O(new runs), never O(store). A
+    ``_params.json`` sidecar pins the quantum; a mismatched --quantum
+    on refresh is refused (mixed quantizations in one artifact would
+    silently corrupt the sums)."""
     from epicsarchiver_spark.sources.points_store import (
         list_runs,
         read_rollup,
@@ -771,24 +750,13 @@ def cmd_rollup(args) -> int:
     from pyspark.sql import functions as F
 
     out = args.out.rstrip("/")
-    tmp, bak = f"{out}.tmp", f"{out}.bak"
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(out).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(P(bak)):
-        if not fs.exists(P(out)):
-            fs.rename(P(bak), P(out))  # whole-dir crash recovery
-        else:  # per-run crash recovery: restore parked run dirs
-            for st in fs.listStatus(P(bak)):
-                name = st.getPath().getName()
-                if name.startswith("run=") and not fs.exists(P(f"{out}/{name}")):
-                    fs.rename(st.getPath(), P(f"{out}/{name}"))
-            fs.delete(P(bak), True)
+    fs, P = fsio.handle(spark, out)
+    fsio.recover(spark, out)
     quantum = args.quantum
     store_runs = list_runs(spark, args.store)
     refresh = args.refresh and fs.exists(P(out))
     if refresh:
-        side = _read_sidecar(fs, jvm, P, f"{out}/_params.json")
+        side = _read_sidecar(spark, f"{out}/_params.json")
         if side is not None and side.get("quantum") != quantum:
             print(
                 f"--quantum {quantum} contradicts the artifact's"
@@ -826,29 +794,16 @@ def cmd_rollup(args) -> int:
             pts.filter(F.col("run").isin(todo)), quantum=quantum,
             run_col="run",
         )
-        fs.delete(P(tmp), True)
-        parts.repartition("run").write.partitionBy("run").parquet(tmp)
-        fs.mkdirs(P(bak))
-        for r in todo:
-            part = f"run={r}"
-            if not fs.exists(P(f"{tmp}/{part}")):
-                continue  # an empty run folds to nothing: keep as-is
-            if fs.exists(P(f"{out}/{part}")):
-                fs.rename(P(f"{out}/{part}"), P(f"{bak}/{part}"))
-            fs.rename(P(f"{tmp}/{part}"), P(f"{out}/{part}"))
-        fs.delete(P(bak), True)
-        fs.delete(P(tmp), True)
+        parts.repartition("run").write.partitionBy("run").parquet(fsio.staging(out))
+        # an empty run folds to nothing and keeps its dir as-is
+        fsio.commit(spark, out, [f"run={r}" for r in todo])
         lane = f"refreshed {len(todo)} run(s)"
     else:
         parts = rollup_partials(pts, quantum=quantum, run_col="run")
-        fs.delete(P(tmp), True)
-        fs.delete(P(bak), True)
-        parts.repartition("run").write.partitionBy("run").parquet(tmp)
-        _write_sidecar(fs, P, f"{tmp}/_params.json", {"quantum": quantum})
-        if fs.exists(P(out)):
-            fs.rename(P(out), P(bak))
-        fs.rename(P(tmp), P(out))
-        fs.delete(P(bak), True)
+        staged = fsio.staging(out)
+        parts.repartition("run").write.partitionBy("run").parquet(staged)
+        _write_sidecar(spark, f"{staged}/_params.json", {"quantum": quantum})
+        fsio.commit(spark, out)
         lane = f"full build ({len(store_runs)} runs)"
     n = read_rollup(spark, out, quantum=quantum).count()
     print(f"rollup artifact at {out}: {n} (series, day) rows ({lane})")
@@ -873,10 +828,7 @@ def cmd_similar(args) -> int:
         # different window still RUNS (the query word comes from the
         # index, the re-rank from the query window) but compares
         # apples to oranges — warn loudly instead of silently
-        jvm = spark._jvm
-        P = jvm.org.apache.hadoop.fs.Path
-        fs = P(args.index).getFileSystem(spark._jsc.hadoopConfiguration())
-        side = _read_sidecar(fs, jvm, P, f"{args.index.rstrip('/')}/_params.json")
+        side = _read_sidecar(spark, f"{args.index.rstrip('/')}/_params.json")
         if side is not None:
             drift = {
                 k: (getattr(args, k), side[k])
@@ -904,33 +856,20 @@ def cmd_similar(args) -> int:
     return 0
 
 
-def _write_sidecar(fs, P, path: str, params: dict) -> None:
-    """Write a small JSON sidecar through the hadoop FS (works on any
-    scheme the store does). Underscore-prefixed names are ignored by
-    Spark's parquet reader, so the file can live INSIDE the artifact
-    dir and ride the two-rename swap atomically with the data."""
+def _write_sidecar(spark, path: str, params: dict) -> None:
+    """Write a small JSON sidecar. Spark's parquet reader ignores
+    underscore-prefixed names, so the file can live INSIDE a staged
+    artifact dir and be swapped in with the data."""
     import json
 
-    out = fs.create(P(path), True)
-    try:
-        out.write(bytearray(json.dumps(params, sort_keys=True).encode()))
-    finally:
-        out.close()
+    fsio.write_text(spark, path, json.dumps(params, sort_keys=True))
 
 
-def _read_sidecar(fs, jvm, P, path: str) -> dict | None:
+def _read_sidecar(spark, path: str) -> dict | None:
     import json
 
-    if not fs.exists(P(path)):
-        return None
-    stream = fs.open(P(path))
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(text)
+    text = fsio.read_text(spark, path)
+    return None if text is None else json.loads(text)
 
 
 def cmd_index_words(args) -> int:
@@ -946,7 +885,7 @@ def cmd_index_words(args) -> int:
     silently break sax_topk's equi-join and neighbor expansion — so
     --refresh derives the segment count from the artifact and refuses
     an explicit --segments that contradicts it (exit 1: rebuild
-    instead). Crash-safe two-rename swap.
+    instead). The words dir is replaced by an ``fsio`` swap.
 
     Every build writes a ``_params.json`` sidecar INSIDE the words dir
     (t0, t1, step, segments, alphabet, quantum — riding the same
@@ -974,18 +913,13 @@ def cmd_index_words(args) -> int:
 
     spark = _spark("index_words")
     pts = _points(spark, args)
-    out = args.out.rstrip("/")
-    cur, tmp, bak = f"{out}/words", f"{out}/words.tmp", f"{out}/words.bak"
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(out).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(P(bak)) and not fs.exists(P(cur)):
-        fs.rename(P(bak), P(cur))  # recover a crash parked mid-swap
-    refresh = args.refresh and fs.exists(P(cur))
+    cur = f"{args.out.rstrip('/')}/words"
+    fsio.recover(spark, cur)
+    refresh = args.refresh and fsio.exists(spark, cur)
     quantum = 0.01  # sax_words' quantum default — recorded so a future
     # knob cannot silently mix quantizations in one artifact
     if refresh:
-        side = _read_sidecar(fs, jvm, P, f"{cur}/_params.json")
+        side = _read_sidecar(spark, f"{cur}/_params.json")
         if side is not None:
             # the sidecar pins EVERYTHING the word depends on — refuse
             # any drift the same way a contradicting --segments is
@@ -1069,19 +1003,15 @@ def cmd_index_words(args) -> int:
             pts, args.t0, args.t1, args.step,
             n_segments=segments, alphabet=args.alphabet,
         )
-    fs.delete(P(tmp), True)
-    fs.delete(P(bak), True)
-    words.write.mode("overwrite").parquet(tmp)
+    staged = fsio.staging(cur)
+    words.write.parquet(staged)
     _write_sidecar(
-        fs, P, f"{tmp}/_params.json",
+        spark, f"{staged}/_params.json",
         {"t0": args.t0, "t1": args.t1, "step": args.step,
          "segments": segments, "alphabet": args.alphabet,
          "quantum": quantum},
     )
-    if fs.exists(P(cur)):
-        fs.rename(P(cur), P(bak))
-    fs.rename(P(tmp), P(cur))
-    fs.delete(P(bak), True)
+    fsio.commit(spark, cur)
     # the refresh lane PERSISTS the artifact's plan inside
     # sax_words_refresh (diamond dedup); after the in-place swap those
     # cache entries describe the replaced files, and Spark's cache
@@ -1221,11 +1151,10 @@ def cmd_bm25_watch(args) -> int:
     the "new hits" a subscriber gets mailed about. Subscriptions are a
     CSV (``query,terms`` — terms whitespace-separated) re-read every
     pass, so edits land without a restart (the alert-rules discipline).
-    State swaps through the crash-safe dimension rename, so a killed
-    sweep leaves the previous state intact. Exit 2 when hits fired
+    State is a dimension (``_overwrite_dim``), so a killed sweep leaves
+    the previous state intact. Exit 2 when hits fired
     (cron convention, same as ``alerts``)."""
     import csv
-    import os
 
     from epicsarchiver_spark.operators.text_ops import bm25_multi
 
@@ -1248,12 +1177,11 @@ def cmd_bm25_watch(args) -> int:
         # Σq·k rows: materialize off the corpus scan before the state
         # swap (the state dir may be an input of the delta join below)
         cur = cur.localCheckpoint(eager=True)
-        _recover_dim(spark, args.state)
-        if os.path.isdir(args.state):
-            prev = spark.read.parquet(args.state).select("query", "doc_id")
-            new = cur.join(prev, ["query", "doc_id"], "left_anti")
-        else:
+        prev = _open_dim(spark, args.state)
+        if prev is None:
             new = cur
+        else:
+            new = cur.join(prev.select("query", "doc_id"), ["query", "doc_id"], "left_anti")
         hits = new.orderBy("query", "rank").collect()
         for r in hits:
             print(
@@ -1302,8 +1230,6 @@ def cmd_alert_rules(args) -> int:
     through ``control.upsert_alerts`` (MERGE, last-write-wins on
     (pvname, compare)); the dimension is rule-sized, so the
     read-merge-rewrite is a driver-trivial parquet swap."""
-    import os
-
     from epicsarchiver_spark.operators.control import upsert_alerts
 
     action = (
@@ -1318,10 +1244,8 @@ def cmd_alert_rules(args) -> int:
               file=sys.stderr)
         return 1
     spark = _spark("alert_rules")
-    _recover_dim(spark, args.table)  # restore a crash-parked .bak first
-    if os.path.isdir(args.table):
-        current = spark.read.parquet(args.table)
-    else:
+    current = _open_dim(spark, args.table)
+    if current is None:
         current = spark.createDataFrame([], _ALERT_DIM_SCHEMA)
     if action is None:
         rows = current.orderBy("pvname", "compare").collect()
@@ -1364,10 +1288,8 @@ def cmd_alert_rules(args) -> int:
             )
             return 1
     merged = upsert_alerts(current, edit)
-    # the dimension is tiny (rule-count rows) — materialize before the
-    # swap so Spark never reads the path it is rewriting; the two-rename
-    # swap (_overwrite_dim) keeps a concurrent `alerts --follow` sweep
-    # from ever seeing a half-deleted table
+    # the dimension is tiny (rule-count rows): materialize before the swap
+    # so Spark never reads the path it is rewriting
     rows = merged.collect()
     _overwrite_dim(
         spark, spark.createDataFrame(rows, merged.schema), args.table
@@ -1423,16 +1345,13 @@ def cmd_process_requests(args) -> int:
     if n_req == 0:
         print("no requests")
         return 0
-    if os.path.isdir(args.catalog):
-        pv = spark.read.parquet(args.catalog)
-    else:
+    pv = _open_dim(spark, args.catalog)
+    if pv is None:
         pv = spark.createDataFrame([], "pvname string, active string")
     updated = apply_requests(pv, requests)
-    # Crash-safe two-rename swap (same as the alerts dimension): a crash
-    # mid-write leaves the catalog either old or new, never half-written,
-    # and since the queue files are only deleted AFTER the swap lands, a
-    # replay re-drains against the intact old catalog instead of an empty
-    # directory.
+    # a crash leaves the catalog old or new, and the queue files are only
+    # deleted after the swap lands, so a replay re-drains against the
+    # intact old catalog
     _overwrite_dim(spark, updated, args.catalog)
     n_pv = spark.read.parquet(args.catalog).count()
     for f in snapshot:
@@ -1906,26 +1825,15 @@ def cmd_update_dedup_artifacts(args) -> int:
     ``documents`` is the FULL corpus including the batch; ``--new-ids``
     names the batch (a parquet with a doc_id column). The batch pair
     lane prunes to new×corpus before the shuffle
-    (``jaccard_pairs_blocked(new_ids=)``); the swap is the crash-safe
-    two-rename (old labels either fully survive or are fully
+    (``jaccard_pairs_blocked(new_ids=)``); an ``fsio`` swap replaces
+    the labels (old labels either fully survive or are fully
     replaced)."""
     from epicsarchiver_spark.operators import dedup
 
     spark = _spark("update_dedup_artifacts")
-    out = args.out.rstrip("/")
-    cur, tmp, bak = (
-        f"{out}/components",
-        f"{out}/components.tmp",
-        f"{out}/components.bak",
-    )
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(out).getFileSystem(spark._jsc.hadoopConfiguration())
-    # recover a crash parked mid-swap: .bak exists and the live dir
-    # doesn't → the previous run died between renames
-    if fs.exists(P(bak)) and not fs.exists(P(cur)):
-        fs.rename(P(bak), P(cur))
-    if not fs.exists(P(cur)):
+    cur = f"{args.out.rstrip('/')}/components"
+    fsio.recover(spark, cur)
+    if not fsio.exists(spark, cur):
         print(
             f"no components artifact at {cur} — run build_dedup_artifacts first",
             file=sys.stderr,
@@ -1941,14 +1849,8 @@ def cmd_update_dedup_artifacts(args) -> int:
         new_ids=new_ids,
     )
     merged = dedup.merge_components(comp, pairs)
-    fs.delete(P(tmp), True)
-    fs.delete(P(bak), True)
-    merged.select("id", "component").repartition("id").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    fs.rename(P(cur), P(bak))
-    fs.rename(P(tmp), P(cur))
-    fs.delete(P(bak), True)
+    merged.select("id", "component").repartition("id").write.parquet(fsio.staging(cur))
+    fsio.commit(spark, cur)
     n = spark.read.parquet(cur).count()
     print(f"components: {n} rows -> {cur} (incremental merge)")
     return 0
@@ -2006,13 +1908,13 @@ def cmd_set_runinfo(args) -> int:
 
     One partition-pruned scan over just the target runs (min/max per
     run — distributed, never a per-run driver loop over data), then the
-    crash-safe two-rename dimension swap."""
+    dimension swap (``_overwrite_dim``)."""
     from pyspark.sql import functions as F
 
     from epicsarchiver_spark.operators.control import MAX_EPOCH
 
     spark = _spark("set_runinfo")
-    runs = _read_runs(spark, args.runs_file)
+    runs = _open_dim(spark, args.runs_file)
     if runs is None:
         print(f"no runs dimension at {args.runs_file}", file=sys.stderr)
         return 1
@@ -2067,9 +1969,7 @@ def cmd_init(args) -> int:
     from epicsarchiver_spark.operators.control import MAX_EPOCH
 
     spark = _spark("init")
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(args.store).getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, P = fsio.handle(spark, args.store)
     paths = {
         "store": args.store,
         "runs_file": args.runs_file,

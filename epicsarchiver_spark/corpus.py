@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from epicsarchiver_spark.operators import curation, dedup, text_ops
+from epicsarchiver_spark.sources import fsio
 
 
 class CorpusPipeline:
@@ -229,12 +230,9 @@ class CorpusPipeline:
         model = None
         if self.artifacts:
             lm = f"{self.artifacts}/bigram_lm"
-            jvm = self.spark._jvm
-            P = jvm.org.apache.hadoop.fs.Path
-            fs = P(lm).getFileSystem(self.spark._jsc.hadoopConfiguration())
             # artifact dirs written before the LM lane existed lack the
             # bigram_lm tables — self-train rather than crash
-            if fs.exists(P(f"{lm}/unigrams")):
+            if fsio.exists(self.spark, f"{lm}/unigrams"):
                 model = lm
         return text_ops.perplexity_buckets(
             self.docs, n_buckets=n_buckets, text=self.text, id_col=self.id_col,

@@ -68,52 +68,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from epicsarchiver_spark.sources import fsio
+
 DEFAULT_BUCKETS = 128
 DELTA_BUCKET = -1  # a run's delta partition: small appends, folded in by compact_store
 BUCKETS_FILE = "_buckets"  # the store's record (bucket count, data schema), at its root
 BUCKETS_META = "n_buckets"  # read_points' metadata key on the bucket column
 PARTITION_COLS = ("run", "bucket")
-FOLD_DIR = ".fold"  # a run's compaction staging; the "." keeps it out of Spark's listing
 
 
 def bucket_of(name_col, n_buckets: int = DEFAULT_BUCKETS):
     return F.pmod(F.xxhash64(name_col), F.lit(n_buckets)).cast("int")
 
 
-def _fs(spark: SparkSession, path: str):
-    P = spark._jvm.org.apache.hadoop.fs.Path
-    return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
-
-
-def _visible(fs, directory) -> list:
-    """The entries of ``directory`` Spark's reader lists (``_``/``.``
-    entries are bookkeeping: the bucket record, ``_SUCCESS``, checksums,
-    compaction staging)."""
-    return [
-        st for st in fs.listStatus(directory) if not st.getPath().getName().startswith(("_", "."))
-    ]
-
-
 def _holds_data(spark: SparkSession, path: str) -> bool | None:
     """Whether the store directory holds an entry Spark's reader lists;
     None if there is no such directory."""
-    fs, P = _fs(spark, path)
+    fs, P = fsio.handle(spark, path)
     if not fs.exists(P(path)):
         return None
-    return bool(_visible(fs, P(path)))
-
-
-def _read_lines(spark: SparkSession, path: str) -> list[str] | None:
-    """The lines of a small text file, or None if there is no such file."""
-    fs, P = _fs(spark, path)
-    if not fs.exists(P(path)):
-        return None
-    jio = spark._jvm.java.io
-    reader = jio.BufferedReader(jio.InputStreamReader(fs.open(P(path)), "UTF-8"))
-    try:
-        return list(iter(reader.readLine, None))
-    finally:
-        reader.close()
+    return bool(fsio.visible(fs, P(path)))
 
 
 def read_record(spark: SparkSession, path: str) -> tuple[int | None, StructType | None]:
@@ -121,9 +95,10 @@ def read_record(spark: SparkSession, path: str) -> tuple[int | None, StructType 
     None without a record (an absent store, or one written before the
     record existed); the schema alone is None for a one-line record
     (written before the record held the schema)."""
-    lines = _read_lines(spark, f"{path}/{BUCKETS_FILE}")
-    if lines is None:
+    text = fsio.read_text(spark, f"{path}/{BUCKETS_FILE}")
+    if text is None:
         return None, None
+    lines = text.splitlines()
     schema = lines[1] if len(lines) > 1 else None
     return int(lines[0]), StructType.fromJson(json.loads(schema)) if schema else None
 
@@ -189,18 +164,6 @@ def _inferred(spark: SparkSession, path: str) -> StructType | None:
         return None
 
 
-def _write_aside(fs, P, path: str, text: str):
-    """Write ``text`` to ``<path>.tmp`` (whole, then closed) and return
-    that path, for the caller to rename onto ``path``."""
-    tmp = P(f"{path}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(text.encode()))
-    finally:
-        out.close()
-    return tmp
-
-
 def stamp_buckets(
     spark: SparkSession,
     path: str,
@@ -210,22 +173,12 @@ def stamp_buckets(
 ) -> None:
     """Write the store's record (creating the store directory): the
     bucket count, then the data-column schema as JSON when given.
-    Written aside and renamed in, so a crash never leaves a torn record.
-    An existing record is replaced only with ``replace``, by one
-    overwriting rename (a crash leaves the old record or the new one);
-    otherwise the rename raises."""
-    fs, P = _fs(spark, path)
+    Written whole by ``fsio.write_text``, so a crash never leaves a torn
+    record. An existing record is replaced only with ``replace``;
+    otherwise the write raises ``OSError``."""
     lines = [str(int(n_buckets))] + ([schema.json()] if schema is not None else [])
-    tmp = _write_aside(fs, P, f"{path}/{BUCKETS_FILE}", "".join(f"{line}\n" for line in lines))
-    dst = P(f"{path}/{BUCKETS_FILE}")
-    if replace:
-        hfs = spark._jvm.org.apache.hadoop.fs
-        overwrite = spark.sparkContext._gateway.new_array(hfs.Options.Rename, 1)
-        overwrite[0] = hfs.Options.Rename.OVERWRITE
-        ctx = hfs.FileContext.getFileContext(dst.toUri(), spark._jsc.hadoopConfiguration())
-        ctx.rename(tmp, dst, overwrite)
-    elif not fs.rename(tmp, dst):
-        raise OSError(f"store {path}: could not record its buckets (a record exists?)")
+    text = "".join(f"{line}\n" for line in lines)
+    fsio.write_text(spark, f"{path}/{BUCKETS_FILE}", text, replace=replace)
 
 
 def write_points(
@@ -353,7 +306,7 @@ def list_runs(spark: SparkSession, path: str) -> list[str]:
     """The store's run partitions, name-sorted (run names are zero-padded
     or date-stamped, so lexical order IS chronological order — the same
     invariant ``rotate_runs`` maintains)."""
-    fs, P = _fs(spark, path)
+    fs, P = fsio.handle(spark, path)
     if not fs.exists(P(path)):
         return []
     return sorted(
@@ -419,7 +372,7 @@ def prune_runs(
         victims = [r for r in runs[:-1] if r < before]
     if not victims:
         return []
-    fs, P = _fs(spark, path)
+    fs, P = fsio.handle(spark, path)
     for r in victims:
         fs.delete(P(f"{path}/run={r}"), True)
     return victims
@@ -478,24 +431,16 @@ def compact_store(
     ``ValueError``: its readers see only the files the manifest lists,
     so rewriting its files without the manifest would hide them.
 
-    One commit point per run, a roll-forward journal. The new bucket
-    directories are staged under the run's ``.fold/new``; then a journal
-    naming them and the folded delta files is written aside and renamed
-    to ``.fold/journal``. Rolling forward parks each live bucket at
-    ``.fold/old``, renames its staged one in, deletes the folded delta
-    files and drops ``.fold``. Every pass first rolls a journalled fold
-    forward (each step is idempotent) and drops staging that has no
-    journal, so after a crash at any step the next pass leaves every
-    row visible exactly once. A journal, not a staged copy of the whole
-    run, because a fold rewrites only the buckets its deltas touch:
-    the other buckets of the run are never copied or disturbed. Staging
-    and parking live under a ``.`` name, which Spark's listing skips, so
-    no reader sees them; a reader that lists the run during the
-    roll-forward itself (renames and deletes only) can see folded rows
-    twice or a bucket missing. Directories an earlier release left as
-    ``bucket=<k>.bak`` / ``bucket=<k>.tmp`` are recovered the way it
-    did: a parked directory whose live one is missing goes back, the
-    rest are dropped.
+    Each run's pass is one ``fsio`` swap of the buckets it rewrites,
+    whose journal also lists the folded delta files, so after a crash at
+    any step the next pass leaves every row visible exactly once; the
+    run's other buckets are never copied or disturbed. Staging sits
+    under a hidden name Spark's listing skips, but a reader that lists
+    the run during the roll-forward itself (renames and deletes only)
+    can see folded rows twice or a bucket missing. The pass reads and
+    writes on a sibling session with adaptive partition coalescing off:
+    coalescing would merge a bucket's file slots below its 64 MB
+    advisory size, writing fewer files than sized for.
 
     The hot (currently-appended) run should be skipped via ``runs``:
     compact only rotated runs, which are immutable.
@@ -503,7 +448,7 @@ def compact_store(
     Returns {partition: files_after} for the bucket partitions
     rewritten, and ``run=<r>/bucket=-1: 0`` for each delta partition
     folded."""
-    fs, P = _fs(spark, path)
+    fs, P = fsio.handle(spark, path)
     if fs.exists(P(f"{path}/_spark_metadata")):
         raise ValueError(
             f"store {path} is a streaming file-sink store (it holds "
@@ -511,60 +456,15 @@ def compact_store(
             "rewrites the sink manifest (ROADMAP: compaction of the streamed store)"
         )
     n_buckets, schema = read_record(spark, path)
+    session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     result: dict[str, int] = {}
     for run in list_runs(spark, path):
         if runs is None or run in runs:
             result.update(
-                _compact_run(spark, f"{path}/run={run}", n_buckets, schema, target_file_bytes)
+                _compact_run(session, f"{path}/run={run}", n_buckets, schema, target_file_bytes)
             )
     return result
-
-
-def _rename(fs, src, dst) -> None:
-    if not fs.rename(src, dst):
-        raise OSError(f"could not rename {src} to {dst}")
-
-
-def _delete(fs, path) -> None:
-    fs.delete(path, True)
-
-
-def _bucket_dirs(fs, P, parent: str) -> dict[int, object]:
-    """The ``bucket=<k>`` directories under ``parent``, by k."""
-    return {
-        int(st.getPath().getName()[len("bucket="):]): st.getPath()
-        for st in fs.listStatus(P(parent))
-        if st.isDirectory() and st.getPath().getName().startswith("bucket=")
-    }
-
-
-def _recover_run(spark: SparkSession, run_dir: str) -> None:
-    """Finish an interrupted compaction of one run: roll a journalled
-    fold forward, drop staging without a journal, and recover the
-    ``bucket=<k>.bak`` / ``.tmp`` directories of earlier releases."""
-    fs, P = _fs(spark, run_dir)
-    for st in fs.listStatus(P(run_dir)):
-        name = st.getPath().getName()
-        if name.endswith(".bak") and not fs.exists(P(f"{run_dir}/{name[:-4]}")):
-            _rename(fs, st.getPath(), P(f"{run_dir}/{name[:-4]}"))
-        elif name.endswith((".bak", ".tmp")):
-            _delete(fs, st.getPath())
-    fold = f"{run_dir}/{FOLD_DIR}"
-    journal = _read_lines(spark, f"{fold}/journal")
-    if journal is not None:
-        done = json.loads(journal[0])
-        for k in done["buckets"]:
-            live, new = P(f"{run_dir}/bucket={k}"), P(f"{fold}/new/bucket={k}")
-            if fs.exists(new):  # not swapped in yet
-                if fs.exists(live):
-                    _rename(fs, live, P(f"{fold}/old/bucket={k}"))
-                _rename(fs, new, live)
-        delta = f"{run_dir}/bucket={DELTA_BUCKET}"
-        for name in done["deltas"]:
-            _delete(fs, P(f"{delta}/{name}"))
-        if fs.exists(P(delta)) and not _visible(fs, P(delta)):
-            _delete(fs, P(delta))
-    _delete(fs, P(fold))
 
 
 def _compact_run(
@@ -574,21 +474,25 @@ def _compact_run(
     schema: StructType | None,
     target_file_bytes: int,
 ) -> dict[str, int]:
-    """One run's pass of ``compact_store``: stage, commit, roll forward."""
-    fs, P = _fs(spark, run_dir)
-    _recover_run(spark, run_dir)
+    """One run's pass of ``compact_store``: recover, stage, commit."""
+    fs, P = fsio.handle(spark, run_dir)
+    fsio.recover(spark, run_dir)
     files = {
-        k: [st for st in _visible(fs, d) if st.isFile()]
-        for k, d in _bucket_dirs(fs, P, run_dir).items()
+        int(st.getPath().getName()[len("bucket="):]): [
+            f for f in fsio.visible(fs, st.getPath()) if f.isFile()
+        ]
+        for st in fs.listStatus(P(run_dir))
+        if st.isDirectory() and st.getPath().getName().startswith("bucket=")
     }
-    deltas = [st.getPath().getName() for st in files.pop(DELTA_BUCKET, [])]
+    delta = f"bucket={DELTA_BUCKET}"
+    deltas = [f"{delta}/{st.getPath().getName()}" for st in files.pop(DELTA_BUCKET, [])]
     ways = {
         k: max(1, -(-sum(st.getLen() for st in fl) // target_file_bytes))
         for k, fl in files.items()
     }
     rewrite = {k for k, fl in files.items() if len(fl) > ways[k]}
     reader = spark.read if schema is None else spark.read.schema(schema)
-    delta_paths = [f"{run_dir}/bucket={DELTA_BUCKET}/{name}" for name in deltas]
+    delta_paths = [f"{run_dir}/{name}" for name in deltas]
     if deltas:
         if n_buckets is None:
             raise ValueError(f"{run_dir} holds deltas but its store records no bucket count")
@@ -606,25 +510,21 @@ def _compact_run(
     if wide:  # buckets sized for several files: spread their series by name
         n_files = F.create_map(*map(F.lit, wide))[F.col("bucket")]
         slot = F.pmod(F.xxhash64("pvname"), F.coalesce(n_files, F.lit(1)))
-    fold = f"{run_dir}/{FOLD_DIR}"
     (
         rows.repartition(F.col("bucket"), slot)
         .sortWithinPartitions("bucket", "pvname", "time")
         .write.partitionBy("bucket")
-        .parquet(f"{fold}/new")
+        .parquet(fsio.staging(run_dir))
     )
-    staged = sorted(_bucket_dirs(fs, P, f"{fold}/new"))
-    fs.mkdirs(P(f"{fold}/old"))
-    journal = json.dumps({"buckets": staged, "deltas": deltas})
-    _rename(fs, _write_aside(fs, P, f"{fold}/journal", journal), P(f"{fold}/journal"))
-    _recover_run(spark, run_dir)  # the roll-forward
+    parts = [f"bucket={k}" for k in sorted(rewrite)]
+    fsio.commit(spark, run_dir, parts, drop=deltas)
     run = run_dir.rsplit("/", 1)[1]
     out = {
-        f"{run}/bucket={k}": sum(st.isFile() for st in _visible(fs, P(f"{run_dir}/bucket={k}")))
-        for k in staged
+        f"{run}/{part}": sum(st.isFile() for st in fsio.visible(fs, P(f"{run_dir}/{part}")))
+        for part in parts
     }
     if deltas:
-        out[f"{run}/bucket={DELTA_BUCKET}"] = 0
+        out[f"{run}/{delta}"] = 0
     return out
 
 

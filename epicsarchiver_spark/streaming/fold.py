@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import ArrayType, DataType, LongType, StructField, StructType
 
+from epicsarchiver_spark.sources import fsio
 from epicsarchiver_spark.sources.points_store import DEFAULT_BUCKETS, bucket_of
 
 GROUPS = DEFAULT_BUCKETS
@@ -231,16 +232,9 @@ def refuse_per_key_state(spark, checkpoint: str) -> None:
     the per-key layout that preceded key groups: the group layout keys
     the store by group, so Spark would refuse the checkpoint's key
     schema at the first batch. An absent or fresh checkpoint passes."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    root = P(checkpoint)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    for status in fs.globStatus(P(root, "state/*/0/_metadata/schema")) or []:
-        stream = fs.open(status.getPath())
-        try:
-            data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
+    fs, P = fsio.handle(spark, checkpoint)
+    for status in fs.globStatus(P(P(checkpoint), "state/*/0/_metadata/schema")) or []:
+        data = fsio.read_bytes(spark, status.getPath().toString())
         # a FlatMapGroupsWithState value is (groupState[, timeoutTimestamp]);
         # the group layout makes every groupState field an array
         states = [f["type"] for f in _schemas(data)[-1]["fields"] if f["name"] == "groupState"]

@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from epicsarchiver_spark.sources import points_store
+from epicsarchiver_spark.sources import fsio, points_store
 from epicsarchiver_spark.streaming.fold import GROUPS, keyed_fold, refuse_per_key_state
 
 EVENT_SCHEMA = StructType(
@@ -110,9 +110,8 @@ def ingest_session(spark, source: int | str, **kw):
     absent) — a fit for a bounded drain, whose input is what is there at
     start. Build the ``readStream`` on the returned session."""
     if isinstance(source, str):
-        path = spark._jvm.org.apache.hadoop.fs.Path(source)
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        source = fs.getContentSummary(path).getLength() if fs.exists(path) else 0
+        fs, P = fsio.handle(spark, source)
+        source = fs.getContentSummary(P(source)).getLength() if fs.exists(P(source)) else 0
     s2 = spark.newSession()
     s2.conf.set(
         "spark.sql.shuffle.partitions",
@@ -405,13 +404,6 @@ def session_stream(
     )
 
 
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf), jvm
-
-
 def upsert_latest(batch: DataFrame, cache_path: str, buckets: int = 64) -> None:
     """S14 — merge a micro-batch into the latest-value cache table
     (ref epicsarchiver/cache.py:454-462's per-batch UPDATE transaction).
@@ -424,20 +416,15 @@ def upsert_latest(batch: DataFrame, cache_path: str, buckets: int = 64) -> None:
     O(cache). A batch touching 100 of 10⁶ series reads and writes ~2 of
     64 buckets, while the untouched 62 directories are never opened.
 
-    Crash-safe write-temp + per-bucket atomic swap: merged buckets are
-    FULLY written to ``<path>.tmp`` while the live cache is untouched (so
-    the merge can re-read it safely — no cache()/count() materialization
-    dance, which is not a durability guarantee: an evicted block between
-    count() and an in-place overwrite recomputes from the path
-    mid-overwrite and corrupts the cache). Then each touched bucket dir is
-    swapped with two renames: live/bucket=k → .bak/bucket=k, tmp/bucket=k
-    → live/bucket=k. A crash mid-sequence leaves every bucket either old
-    (possibly parked in .bak — restored by the recovery step at the top of
-    the next batch / ``read_cache``) or fully merged; a mixed old/new
-    cache is safe because the merge is idempotent (max_by time) and the
-    checkpointed stream replays the interrupted batch. At production scale
-    the same contract is one Delta/Iceberg MERGE; this is the
-    filesystem-parquet equivalent.
+    The merged buckets are staged whole while the live cache is untouched
+    (so the merge can re-read it safely: a cache()/count() dance before
+    an in-place overwrite is no durability guarantee, since an evicted
+    block recomputes from the path mid-overwrite), then swapped in by
+    ``fsio``'s journalled bucket swap (the first merge swaps in the whole
+    directory). A crash leaves every bucket old or merged; the merge is
+    idempotent (max_by time) and the checkpointed stream replays the
+    interrupted batch. At production scale the same contract is one
+    Delta/Iceberg MERGE; this is the filesystem-parquet equivalent.
 
     Beside (value, time) each row carries ``np`` — the running COUNT of
     events merged for the series (VERDICT r12 task 3): one more
@@ -453,11 +440,7 @@ def upsert_latest(batch: DataFrame, cache_path: str, buckets: int = 64) -> None:
     cannot do for writes that flow through this cache. Caches written
     before ``np`` existed merge as count-so-far 0."""
     spark = batch.sparkSession
-    tmp, bak = cache_path + ".tmp", cache_path + ".bak"
-    fs, jvm = _hadoop_fs(spark, cache_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    _recover_cache_swap(fs, P, cache_path)
-
+    fsio.recover(spark, cache_path)
     bucket_of = F.pmod(F.xxhash64("pvname"), F.lit(buckets)).cast("int")
     order = F.struct(F.col("time"))
     fresh = batch.groupBy("pvname").agg(
@@ -468,7 +451,8 @@ def upsert_latest(batch: DataFrame, cache_path: str, buckets: int = 64) -> None:
     # tiny driver list (≤ buckets ints) — names which partitions this
     # batch touches; everything downstream is pruned to them
     touched = sorted(r[0] for r in fresh.select(bucket_of.alias("b")).distinct().collect())
-    if fs.exists(P(cache_path)):
+    merge = fsio.exists(spark, cache_path)
+    if merge:
         old = spark.read.parquet(cache_path).filter(F.col("bucket").isin(touched))
         if "np" not in old.columns:  # pre-np cache: counts start now
             old = old.withColumn("np", F.lit(0).cast("long"))
@@ -487,39 +471,8 @@ def upsert_latest(batch: DataFrame, cache_path: str, buckets: int = 64) -> None:
     # total no matter how many batches have merged into it
     fresh.withColumn("bucket", bucket_of).repartition(
         max(len(touched), 1), "bucket"
-    ).write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-
-    fs.delete(P(bak), True)
-    if not fs.exists(P(cache_path)):
-        fs.rename(P(tmp), P(cache_path))
-        return
-    fs.mkdirs(P(bak))
-    for k in touched:
-        part = f"bucket={k}"
-        if fs.exists(P(f"{cache_path}/{part}")):
-            fs.rename(P(f"{cache_path}/{part}"), P(f"{bak}/{part}"))
-        fs.rename(P(f"{tmp}/{part}"), P(f"{cache_path}/{part}"))
-    fs.delete(P(bak), True)
-    fs.delete(P(tmp), True)
-
-
-def _recover_cache_swap(fs, P, cache_path: str) -> None:
-    """If a previous swap died mid-rename, old state sits under .bak —
-    restore whatever the live tree is missing before merging (whole cache
-    dir, or individual bucket dirs), never overwriting a live entry that
-    already received its merged replacement. The half-finished .tmp is
-    discarded; its batch will be reprocessed by the checkpointed stream."""
-    tmp, bak = cache_path + ".tmp", cache_path + ".bak"
-    if fs.exists(P(bak)):
-        if not fs.exists(P(cache_path)):
-            fs.rename(P(bak), P(cache_path))
-        else:
-            for st in fs.listStatus(P(bak)):
-                name = st.getPath().getName()
-                if name.startswith("bucket=") and not fs.exists(P(f"{cache_path}/{name}")):
-                    fs.rename(st.getPath(), P(f"{cache_path}/{name}"))
-            fs.delete(P(bak), True)
-    fs.delete(P(tmp), True)
+    ).write.partitionBy("bucket").parquet(fsio.staging(cache_path))
+    fsio.commit(spark, cache_path, [f"bucket={k}" for k in touched] if merge else None)
 
 
 def upsert_latest_jdbc(
@@ -527,7 +480,6 @@ def upsert_latest_jdbc(
     url: str,
     table: str = "cache",
     ensure_table: bool = True,
-    n_shards: int = 1,
 ) -> None:
     """S14, JDBC lane — merge a micro-batch into a latest-value cache
     TABLE over JDBC, one transaction per batch. BASELINE.md's stated
@@ -545,58 +497,27 @@ def upsert_latest_jdbc(
     (``UPDATE … WHERE time <= ?``), so replaying a batch after a crash
     (foreachBatch is at-least-once) is a no-op and out-of-order batches
     never regress a newer value — the same idempotence contract the
-    parquet lane gets from max_by. Each shard's rows commit or roll
+    parquet lane gets from max_by. The batch's rows commit or roll
     back atomically; a duplicate-key race on INSERT (SQLState 23505)
-    means a newer row exists and is skipped.
-
-    ``n_shards > 1`` is the SCALE.md:97 escape hatch for ≥10⁵ active
-    series: the reduced rows are hashed ``pmod(xxhash64(pvname),
-    n_shards)`` (the same bucketing as the parquet cache lane) and each
-    shard runs its own connection + transaction concurrently. Shard key
-    sets are disjoint, so per-shard transactions preserve the only
-    invariant that matters — per-key monotonicity. A shard failure
-    raises after the others finish; already-committed shards replay as
-    no-ops when foreachBatch retries the batch (monotone upsert)."""
+    means a newer row exists and is skipped. For large series counts,
+    ``upsert_latest_jdbc_distributed`` keeps the rows off the driver."""
     spark = batch.sparkSession
     order = F.struct(F.col("time"))
-    fresh = batch.groupBy("pvname").agg(
-        F.max_by("value", order).alias("value"), F.max("time").alias("time")
+    rows = (
+        batch.groupBy("pvname")
+        .agg(F.max_by("value", order).alias("value"), F.max("time").alias("time"))
+        .collect()
     )
-    if n_shards > 1:
-        fresh = fresh.withColumn(
-            "_shard", F.pmod(F.xxhash64("pvname"), F.lit(int(n_shards))).cast("int")
-        )
-    rows = fresh.collect()
     if not rows:
         return
-
     jvm = spark._jvm
     if ensure_table:
-        # create once, up front — concurrent per-shard CREATEs would race
         conn = jvm.java.sql.DriverManager.getConnection(url)
         try:
             _jdbc_ensure_table(conn, table)
         finally:
             conn.close()
-
-    if n_shards <= 1:
-        _jdbc_upsert_rows(jvm, url, table, rows)
-        return
-
-    shards: dict[int, list] = {}
-    for r in rows:
-        shards.setdefault(r["_shard"], []).append(r)
-    from concurrent.futures import ThreadPoolExecutor
-
-    # py4j is thread-safe (one gateway connection per Python thread);
-    # each shard holds a private JDBC connection for its transaction
-    with ThreadPoolExecutor(max_workers=len(shards)) as pool:
-        futs = [
-            pool.submit(_jdbc_upsert_rows, jvm, url, table, part)
-            for part in shards.values()
-        ]
-        for f in futs:
-            f.result()
+    _jdbc_upsert_rows(jvm, url, table, rows)
 
 
 def _jdbc_merge_stmt(table: str, staging: str, dialect: str) -> str:
@@ -869,10 +790,12 @@ def latest_value_query_jdbc(
 
 
 def read_cache(spark, cache_path: str) -> DataFrame:
-    """Read the latest-value cache, recovering a half-swapped state first."""
-    fs, jvm = _hadoop_fs(spark, cache_path)
-    _recover_cache_swap(fs, jvm.org.apache.hadoop.fs.Path, cache_path)
-    return spark.read.parquet(cache_path)
+    """Read the latest-value cache as the next merge would find it after
+    its recovery (``fsio.read_parquet``); the read changes nothing."""
+    cache = fsio.read_parquet(spark, cache_path)
+    if cache is None:
+        raise FileNotFoundError(f"no latest-value cache at {cache_path}")
+    return cache
 
 
 def read_cache_stats(spark, cache_path: str) -> DataFrame:

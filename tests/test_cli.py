@@ -194,6 +194,46 @@ def test_dim_swap_crash_recovery(spark, tmp_path, capsys):
     assert runs == {"run_00001", "run_00002", "run_00003"}
 
 
+def _bytes_under(root) -> dict:
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
+def test_next_refuses_an_unreadable_runs_dimension(spark, tmp_path):
+    """A runs dimension that exists but cannot be read is an error, not
+    "no runs": `next` fails instead of replacing it with a lone
+    run_00001, and leaves it byte-identical."""
+    runs_file = str(tmp_path / "runs.parquet")
+    assert cli.main(["next", "--runs-file", runs_file]) == 0
+    for name in os.listdir(runs_file):
+        if name.endswith(".parquet"):
+            with open(os.path.join(runs_file, name), "wb") as fh:
+                fh.write(b"not parquet")
+    before = _bytes_under(tmp_path)
+    with pytest.raises(Exception):
+        cli.main(["next", "--runs-file", runs_file])
+    assert _bytes_under(tmp_path) == before
+
+
+def test_alert_rules_on_a_uri_table_keep_every_rule(spark, tmp_path, capsys):
+    """A rules table named by a file: URI (as a non-local store would
+    be) is found by an edit and by the sweep: the second add keeps the
+    first rule."""
+    table = (tmp_path / "alerts").as_uri()
+    for pv in ("URI:a", "URI:b"):
+        assert cli.main(["alert_rules", "--table", table, "--add", pv, "--trippoint", "1",
+                         "--active", "yes"]) == 0
+    assert "2 rule(s)" in capsys.readouterr().out
+    import argparse
+
+    rules, n = cli._load_alert_rules(spark, argparse.Namespace(table=table, rules=None))
+    assert n == 2 and {r.pvname for r in rules.collect()} == {"URI:a", "URI:b"}
+
+
 def test_health_report(spark, store, capsys):
     # points span time 0..2970 with 30 s cadence; heartbeat 60 → high
     # uptime inside [0, 3000]; deterministic --now pins the window

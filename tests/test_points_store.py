@@ -725,7 +725,7 @@ def test_reads_answer_the_same_with_deltas_pending(spark, tmp_path):
 def _crash_at(monkeypatch, step):
     """Make the ``step``-th rename or delete of a compaction raise (a
     crash right before it); returns the step counter."""
-    from epicsarchiver_spark.sources import points_store
+    from epicsarchiver_spark.sources import fsio
 
     calls = [0]
 
@@ -738,8 +738,8 @@ def _crash_at(monkeypatch, step):
 
         return run
 
-    monkeypatch.setattr(points_store, "_rename", wrap(points_store._rename))
-    monkeypatch.setattr(points_store, "_delete", wrap(points_store._delete))
+    monkeypatch.setattr(fsio, "_rename", wrap(fsio._rename))
+    monkeypatch.setattr(fsio, "_delete", wrap(fsio._delete))
     return calls
 
 
@@ -800,7 +800,7 @@ def test_compaction_staging_is_hidden_from_readers(spark, tmp_path, monkeypatch)
             _crash_at(m, step)
             with pytest.raises(RuntimeError, match="injected crash"):
                 compact_store(spark, path)
-        fold = f"{path}/run=r1/.fold"
+        fold = f"{path}/.run=r1.swap"
         assert os.listdir(f"{fold}/new" if state == "staged" else f"{fold}/old"), state
         pts = read_points(spark, path)
         assert _store_rows(spark, path) == want, state
@@ -821,16 +821,7 @@ def test_compaction_spreads_a_large_bucket_by_series(spark, tmp_path):
     for t0 in (0, 100, 200):
         write_points(_pts(spark, names, t0=t0), path, run="r1", n_buckets=2)
     want = _store_rows(spark, path)
-    # at this size adaptive execution would merge a bucket's slots into
-    # one task (it merges shuffle partitions below 64 MB, and a bucket is
-    # split only when it holds more than target_file_bytes)
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        done = compact_store(spark, path, target_file_bytes=256)
-    finally:
-        spark.conf.set(key, old)
+    done = compact_store(spark, path, target_file_bytes=256)
     assert _store_rows(spark, path) == want
     for k in (0, 1):
         files = glob.glob(f"{path}/run=r1/bucket={k}/*.parquet")
@@ -838,3 +829,33 @@ def test_compaction_spreads_a_large_bucket_by_series(spark, tmp_path):
         assert _sorted_by_pvname_time(files)
         owners = [set(pq.read_table(f, columns=["pvname"]).column(0).to_pylist()) for f in files]
         assert sum(len(o) for o in owners) == len(set().union(*owners))
+
+
+def test_a_fold_journal_of_the_previous_release_rolls_forward(spark, tmp_path):
+    """A fold the previous release committed under the run's ``.fold``
+    and crashed in (one bucket parked, none swapped in yet) is rolled
+    forward by the next pass: the same rows, each once, no delta and
+    no ``.fold`` left."""
+    import json
+    import os
+    import shutil
+
+    base = str(tmp_path / "base")
+    _delta_store(spark, base)
+    want = _store_rows(spark, base)
+    clean = shutil.copytree(base, str(tmp_path / "clean"))
+    staged = sorted(
+        int(p.split("=")[-1]) for p in compact_store(spark, clean) if not p.endswith("=-1")
+    )
+    path = shutil.copytree(base, str(tmp_path / "legacy"))
+    run, fold = f"{path}/run=r1", f"{path}/run=r1/.fold"
+    for k in staged:
+        shutil.copytree(f"{clean}/run=r1/bucket={k}", f"{fold}/new/bucket={k}")
+    os.makedirs(f"{fold}/old")
+    deltas = [os.path.basename(f) for f in _files(path, "r1", -1)]
+    with open(f"{fold}/journal", "w") as fh:
+        fh.write(json.dumps({"buckets": staged, "deltas": deltas}))
+    os.rename(f"{run}/bucket={staged[0]}", f"{fold}/old/bucket={staged[0]}")
+    compact_store(spark, path)
+    assert _store_rows(spark, path) == want
+    assert sorted(os.listdir(run)) == sorted(os.listdir(f"{clean}/run=r1"))

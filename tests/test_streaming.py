@@ -327,8 +327,8 @@ def test_latest_value_upsert(spark, events_dir, tmp_path):
 
 def test_upsert_crash_mid_swap_recovers(spark, tmp_path):
     """Kill mid-swap: live dir renamed away, .bak holding the old cache —
-    the next read/upsert must restore it (not lose the whole cache) and a
-    stale .tmp must be discarded."""
+    a read must see the old cache, and the next upsert must restore it
+    (not lose the whole cache) and discard the stale .tmp."""
     import os
     import shutil
 
@@ -344,13 +344,13 @@ def test_upsert_crash_mid_swap_recovers(spark, tmp_path):
 
     got = {(r.pvname, r.time, r.value) for r in read_cache(spark, cache).collect()}
     assert got == {("A", 1.0, 10.0)}  # old cache restored
-    assert not os.path.exists(cache + ".tmp")
 
     # and the next merge proceeds normally on the recovered cache
     b2 = spark.createDataFrame(
         [("A", 2.0, 20.0), ("B", 1.0, 5.0)], "pvname string, time double, value double"
     )
     upsert_latest(b2, cache)
+    assert not os.path.exists(cache + ".tmp")
     got = {(r.pvname, r.time, r.value) for r in read_cache(spark, cache).collect()}
     assert got == {("A", 2.0, 20.0), ("B", 1.0, 5.0)}
     assert not os.path.exists(cache + ".bak")
@@ -403,8 +403,9 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
 
 def test_upsert_crash_mid_bucket_swap_recovers(spark, tmp_path):
     """Kill between the two per-bucket renames: the bucket dir sits in
-    .bak and is missing from live — recovery must move it back without
-    touching buckets that already got their merged replacement."""
+    .bak and is missing from live — a read must see it, and the next
+    upsert's recovery must move it back without touching buckets that
+    already got their merged replacement."""
     import os
     import shutil
 
@@ -430,8 +431,12 @@ def test_upsert_crash_mid_bucket_swap_recovers(spark, tmp_path):
 
     got = {(r.pvname, r.time, r.value) for r in read_cache(spark, cache).collect()}
     assert got == {(a, 1.0, 10.0), (b, 1.0, 20.0)}  # bucket restored
+    empty = spark.createDataFrame([], "pvname string, time double, value double")
+    upsert_latest(empty, cache, buckets=16)  # the next merge recovers
     assert not os.path.exists(cache + ".bak")
     assert not os.path.exists(cache + ".tmp")
+    got = {(r.pvname, r.time, r.value) for r in read_cache(spark, cache).collect()}
+    assert got == {(a, 1.0, 10.0), (b, 1.0, 20.0)}
 
 
 # ---------------------------------------------------------------------------
@@ -1185,47 +1190,6 @@ def test_upsert_jdbc_parity_with_parquet_lane(spark, tmp_path):
     expected = {("A", 3.0, 12.0), ("B", 1.0, 5.0), ("C", 1.0, 7.0)}
     assert got_pq == expected
     assert got_jdbc == expected
-
-
-def test_upsert_jdbc_sharded_parity(spark, tmp_path):
-    """SCALE.md's JDBC escape hatch for ≥10⁵ active series: with
-    ``n_shards > 1`` the reduced rows split by pmod(xxhash64(pvname), B)
-    and each shard commits on its OWN concurrent connection. Shard key
-    sets are disjoint, so per-key monotonicity survives: the same batch
-    sequence — replay, out-of-order late batch, a NULL value — must
-    leave the sharded table identical to the single-connection lane's."""
-    from epicsarchiver_spark.streaming.ingest import upsert_latest_jdbc
-
-    url1 = f"jdbc:derby:{tmp_path}/shard1db;create=true"
-    url3 = f"jdbc:derby:{tmp_path}/shard3db;create=true"
-    schema = "pvname string, time double, value double"
-    # 12 series so every one of the 3 shards sees several keys
-    names = [f"PV{i:02d}" for i in range(12)]
-    batches = [
-        [(n, 1.0, float(i)) for i, n in enumerate(names)],
-        [(n, 2.0, float(i) + 100) for i, n in enumerate(names[::2])],
-        [(n, 2.0, float(i) + 100) for i, n in enumerate(names[::2])],  # replay
-        [(names[0], 0.5, 999.0), (names[5], 3.0, None)],  # late + NULL value
-    ]
-    for rows in batches:
-        b = spark.createDataFrame(rows, schema)
-        upsert_latest_jdbc(b, url1, table="cache")
-        upsert_latest_jdbc(b, url3, table="cache", n_shards=3)
-
-    def _read(url):
-        return {
-            (r[0], r[1], r[2])
-            for r in spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", "cache")
-            .load()
-            .collect()
-        }
-
-    got1, got3 = _read(url1), _read(url3)
-    assert got3 == got1
-    assert len(got1) == 12
-    assert ("PV00", 999.0, 0.5) not in got1  # late batch never regressed
 
 
 def test_upsert_jdbc_null_tolerance(spark, tmp_path):
