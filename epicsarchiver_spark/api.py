@@ -34,7 +34,15 @@ class PVArchEngine:
     one partition: ``get_data`` finds its early-point seed with a
     ``lead`` over the same scan (``timeseries.series_get_data``), so it
     plans no Exchange and runs as one Spark job, as does
-    ``get_value_at_time``.
+    ``get_value_at_time``. Reads answer the data columns only, never the
+    store's ``run``/``bucket`` partition columns.
+
+    Whole-store lookups (``latest``, ``get_values``, ``get_pvnames``,
+    ``search_names``, ``check``, ``process_alerts``) on the frame
+    ``read_points`` returned, unmodified, merge the store's per-file
+    partials (``points_store.series_summary``) and scan only the files
+    no partial covers; on any other frame, or a store without partials,
+    they scan ``points``.
 
     Parameters
     ----------
@@ -87,7 +95,7 @@ class PVArchEngine:
         t0, t1 = self._window(tmin, tmax)
         if lookback == "auto":
             lookback = self._default_lookback()
-        series = points_store.series_of(self.points, pvname)
+        series = points_store.series_of(self.points, pvname).drop(*points_store.PARTITION_COLS)
         out = timeseries.series_get_data(series, t0, t1, lookback=lookback)
         if with_current and self._cache is not None:
             out = timeseries.with_current(
@@ -141,15 +149,27 @@ class PVArchEngine:
 
     def get_pvnames(self) -> list[str]:
         """ref cache.py:160-169."""
-        return [r.pvname for r in search.distinct_names(self.points).collect()]
+        summary = points_store.series_summary(self.points)
+        if summary is None:
+            return [r.pvname for r in search.distinct_names(self.points).collect()]
+        if summary.names is not None:
+            return summary.names
+        return [r.pvname for r in search.distinct_names(summary.latest).collect()]
+
+    def latest(self) -> DataFrame:
+        """The newest row of every series, data columns only: the
+        reference's latest-value cache table (ref cache.py:433-462)."""
+        summary = points_store.series_summary(self.points)
+        if summary is None:
+            return timeseries.latest_per_key(self.points.drop(*points_store.PARTITION_COLS))
+        return summary.latest
 
     def get_values(self, time_ago: float = 60.0, now: float | None = None) -> DataFrame:
         """ref cache.py:464-473 — latest rows newer than now - time_ago."""
         import time as _time
 
         cutoff = (now if now is not None else _time.time()) - time_ago
-        latest = timeseries.latest_per_key(self.points)
-        return latest.filter(F.col("time") > cutoff)
+        return self.latest().filter(F.col("time") > cutoff)
 
     def get_related_pvs(self, pvname: str, limit: int = 20) -> DataFrame:
         """ref cache.py:785-802 — top-k related by pair score."""
@@ -199,9 +219,7 @@ class PVArchEngine:
         """ref cache.py:601-630 ``process_alerts`` — evaluate threshold
         rules (keyed by pvname) against the store's latest values;
         returns the tripped rows."""
-        cache = timeseries.latest_per_key(
-            self.points.select("pvname", "time", "value")
-        )
+        cache = self.latest().select("pvname", "value", "time")
         return control.alert_eval(cache, rules, rule_key="pvname")
 
     def update_alerts(self, alerts: DataFrame, edits: DataFrame) -> DataFrame:
@@ -235,8 +253,13 @@ class PVArchEngine:
         )
 
     def search_names(self, pattern: str) -> DataFrame:
-        """ref web/WebAdmin.py:56-57 — '*' wildcard search."""
-        return search.wildcard_search(self.points.select("pvname").distinct(), pattern)
+        """ref web/WebAdmin.py:56-57 — '*' wildcard search, name-ordered."""
+        summary = points_store.series_summary(self.points)
+        if summary is None:
+            return search.wildcard_search(self.points.select("pvname").distinct(), pattern)
+        if summary.names is not None:  # a local frame, already in name order
+            return summary.latest.select("pvname").filter(search.wildcard_match(pattern))
+        return search.wildcard_search(summary.latest.select("pvname"), pattern)
 
     # --- instrument surface (epicsarchiver/web/WebInstruments.py) ---
 
@@ -264,9 +287,11 @@ class PVArchEngine:
         archived within the cadence window."""
         import time as _time
 
-        row = control.check_liveness(
-            self.points, now if now is not None else _time.time(), cadence_s
-        ).head()
+        now = now if now is not None else _time.time()
+        summary = points_store.series_summary(self.points)
+        if summary is not None:
+            return bool(summary.latest.filter(F.col("time") > now - cadence_s).limit(1).collect())
+        row = control.check_liveness(self.points, now, cadence_s).head()
         return bool(row.alive) if row is not None else False
 
     # --- helpers ---

@@ -169,11 +169,12 @@ def cmd_status(args) -> int:
 
 
 def cmd_activity(args) -> int:
-    from epicsarchiver_spark.operators.timeseries import latest_per_key
+    from epicsarchiver_spark.api import PVArchEngine
 
     spark = _spark("activity")
     rows = (
-        latest_per_key(_points(spark, args))
+        PVArchEngine(spark, _points(spark, args))
+        .latest()
         .orderBy("time", ascending=False)
         .limit(args.limit)
         .collect()
@@ -203,11 +204,10 @@ def cmd_list(args) -> int:
 
 
 def cmd_search(args) -> int:
-    from epicsarchiver_spark.operators.search import wildcard_search
+    from epicsarchiver_spark.api import PVArchEngine
 
     spark = _spark("search")
-    names = _points(spark, args).select("pvname").distinct()
-    for r in wildcard_search(names, args.pattern).collect():
+    for r in PVArchEngine(spark, _points(spark, args)).search_names(args.pattern).collect():
         print(r.pvname)
     return 0
 
@@ -243,9 +243,10 @@ def cmd_import_zarr(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    from epicsarchiver_spark.sources.points_store import DELTA_BUCKET, compact_store
+    from epicsarchiver_spark.sources.points_store import DELTA_BUCKET, compact_store, summary_files
 
     spark = _spark("compact")
+    summary = len(summary_files(spark, args.store))
     try:
         done = compact_store(
             spark,
@@ -261,6 +262,7 @@ def cmd_compact(args) -> int:
         print(f"{part}: folded" if part.endswith(delta) else f"{part}: -> {n} file(s)")
     folded = sum(part.endswith(delta) for part in done)
     print(f"folded {folded} delta partition(s); compacted {len(done) - folded} partition(s)")
+    print(f"summary: {summary} partial file(s) -> {len(summary_files(spark, args.store))}")
     return 0
 
 
@@ -583,6 +585,7 @@ def cmd_alerts(args) -> int:
     land without a restart."""
     from pyspark.sql import functions as F
 
+    from epicsarchiver_spark.api import PVArchEngine
     from epicsarchiver_spark.functions.mail import render_alert_mail
     from epicsarchiver_spark.operators.control import alert_eval
     from epicsarchiver_spark.operators.timeseries import latest_per_key
@@ -602,17 +605,19 @@ def cmd_alerts(args) -> int:
         if rules is None:
             print("no rules")
             return 0
-        pts = _points(spark, args).select("pvname", "time", "value")
+        pts = _points(spark, args)
         if args.smooth_span:
             # anti-flapping: evaluate rules against the span-bounded
             # EWMA trend instead of the raw tick (same comparator; the
             # smoothed value rides the `value` seat)
             from epicsarchiver_spark.operators.timeseries import ewma
 
-            pts = ewma(pts, span=args.smooth_span).select(
-                "pvname", "time", F.col("ewma").alias("value")
+            smoothed = ewma(pts.select("pvname", "time", "value"), span=args.smooth_span)
+            cache = latest_per_key(
+                smoothed.select("pvname", "time", F.col("ewma").alias("value"))
             )
-        cache = latest_per_key(pts)
+        else:
+            cache = PVArchEngine(spark, pts).latest().select("pvname", "value", "time")
         fired = alert_eval(cache, rules, rule_key="pvname").collect()
         lookup = {r.pvname: str(r.value) for r in cache.collect()} if fired else {}
         for r in fired:

@@ -2,15 +2,19 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def wildcard_match(pattern: str, name_col: str = "pvname") -> Column:
+    """F4's predicate: ``name_col`` LIKE ``pattern`` with '*' as '%'
+    (ref epicsarchiver/web/WebAdmin.py:56-57)."""
+    return F.col(name_col).like(pattern.replace("*", "%"))
+
+
 def wildcard_search(frame: DataFrame, pattern: str, name_col: str = "pvname") -> DataFrame:
-    """F4 — '*' wildcard name search, ordered by name
-    (ref epicsarchiver/web/WebAdmin.py:56-57: '*'→'%' LIKE)."""
-    like_pat = pattern.replace("*", "%")
-    return frame.filter(F.col(name_col).like(like_pat)).orderBy(name_col)
+    """F4 — '*' wildcard name search, ordered by name."""
+    return frame.filter(wildcard_match(pattern, name_col)).orderBy(name_col)
 
 
 def distinct_names(frame: DataFrame, name_col: str = "pvname") -> DataFrame:

@@ -69,6 +69,14 @@ def visible(fs, directory) -> list:
 
 
 def _read(fs, path) -> bytes | None:
+    if fs.getScheme() == "file":
+        # read a local file directly: a py4j reply longer than a few KB
+        # stalls ~40 ms (local mode, 4 cores: 44 ms for 20 KB, 0.2 ms for 3 KB)
+        try:
+            with open(fs.makeQualified(path).toUri().getPath(), "rb") as fh:
+                return fh.read()
+        except (FileNotFoundError, IsADirectoryError):
+            return None
     if not fs.exists(path):
         return None
     stream = fs.open(path)
@@ -89,22 +97,30 @@ def read_text(spark: SparkSession, path: str) -> str | None:
     return None if data is None else data.decode()
 
 
-def _write_aside(fs, P, path: str, text: str):
+def _write_aside(fs, P, path: str, data: bytes):
     tmp = P(f"{path}.tmp")
     out = fs.create(tmp, True)
     try:
-        out.write(bytearray(text.encode()))
+        out.write(bytearray(data))
     finally:
         out.close()
     return tmp
 
 
-def write_text(spark: SparkSession, path: str, text: str, replace: bool = False) -> None:
+def write_bytes(spark: SparkSession, path: str, data: bytes, replace: bool = False) -> None:
     """Write a small file whole: aside, then one checked rename onto
     ``path``, so a crash leaves the old file or the new one. An existing
-    file is replaced only with ``replace``; otherwise the rename raises."""
+    file is replaced only with ``replace``; otherwise the rename raises.
+    The aside copy is ``<path>.tmp``: give ``path`` a hidden name (``_``
+    or ``.`` prefix, or under such a directory) when a reader lists its
+    directory."""
     fs, P = handle(spark, path)
-    _rename(fs, _write_aside(fs, P, path, text), P(path), replace)
+    _rename(fs, _write_aside(fs, P, path, data), P(path), replace)
+
+
+def write_text(spark: SparkSession, path: str, text: str, replace: bool = False) -> None:
+    """:func:`write_bytes` of ``text``."""
+    write_bytes(spark, path, text.encode(), replace)
 
 
 def _rename(fs, src, dst, replace: bool = False) -> None:
@@ -130,6 +146,13 @@ def _rename(fs, src, dst, replace: bool = False) -> None:
 
 def _delete(fs, path) -> None:
     fs.delete(path, True)
+
+
+def delete(spark: SparkSession, path: str) -> None:
+    """Delete a file, or a directory with everything in it; nothing if
+    there is nothing at ``path``."""
+    fs, P = handle(spark, path)
+    _delete(fs, P(path))
 
 
 def _stage(target: str) -> str:
@@ -183,7 +206,7 @@ def commit(
         parts = list(parts)
         fs.mkdirs(P(f"{stage}/old"))
     journal = json.dumps({"parts": parts, "drop": list(drop)})
-    _rename(fs, _write_aside(fs, P, f"{stage}/journal", journal), P(f"{stage}/journal"))
+    _rename(fs, _write_aside(fs, P, f"{stage}/journal", journal.encode()), P(f"{stage}/journal"))
     _roll_forward(fs, P, target, stage, parts, drop)
 
 

@@ -8,6 +8,7 @@ dataset,
     points/run=<run>/bucket=<xxhash64(pvname) % N>/*.parquet
     points/run=<run>/bucket=-1/*.parquet (the run's delta partition)
     points/_buckets                      (the store's record: N, data schema)
+    points/_summary/*.parquet            (per-file series partials)
 
 - ``run`` partition column  → the reference's run rotation becomes a
   metadata no-op; time-range queries prune runs via the runs dimension
@@ -56,24 +57,55 @@ dataset,
   inference, one footer-reading job per open, until its next write
   (``claim_buckets``) adds the line, provided the inferred schema is
   the write's.
+- ``_summary`` → per-file series partials, so whole-store lookups
+  (latest values, series names, name search, liveness, alerts) read
+  partials that grow with live files × series per file, not points. A
+  partial is a fact about one immutable data file, computed from its own
+  rows: one row per (file, pvname) with ``n``, ``tmin`` and the data
+  columns of the series' last row in the file, keyed by the file's path
+  relative to the store root. ``write_points`` lands the partials of
+  the files each write adds as one file (a delta's computed on the
+  driver, a bucketed write's by one Spark job); ``compact_store`` lands
+  those of the files it writes, backfills every uncovered file of the
+  runs it visits, and folds the partial files it listed into one. The
+  streamed store gets none. ``series_summary`` binds partials to files,
+  never to writes: a lookup on the frame ``read_points`` returned uses
+  only the partials of the files that frame lists and scans the listed
+  files none covers, so it answers as the scan does after any crash,
+  compaction or ``prune_runs`` (a partial of a file no longer listed is
+  ignored). A frame derived from it (a filter, a select), or a store
+  without partials, scans.
 - At cluster scale the same layout bucket-aligns the shuffle for
   per-series windows; local tests keep N small.
 """
 
 from __future__ import annotations
 
+import io
 import json
+import re
+import uuid
+from typing import NamedTuple
+from urllib.parse import unquote, urlsplit
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from epicsarchiver_spark.operators.ordering import TIEBREAK_COL, order_struct
+from epicsarchiver_spark.operators.timeseries import latest_per_key
 from epicsarchiver_spark.sources import fsio
 
 DEFAULT_BUCKETS = 128
 DELTA_BUCKET = -1  # a run's delta partition: small appends, folded in by compact_store
 BUCKETS_FILE = "_buckets"  # the store's record (bucket count, data schema), at its root
 BUCKETS_META = "n_buckets"  # read_points' metadata key on the bucket column
+SUMMARY_DIR = "_summary"  # the store's per-file series partials, at its root
 PARTITION_COLS = ("run", "bucket")
 
 
@@ -204,7 +236,12 @@ def write_points(
     pending delta. Any other write (the first into an empty store, every
     overwrite, a larger write, or one whose size the plan cannot
     estimate) lands bucketed, one file per touched (run, bucket).
-    ``compact_store`` folds deltas into their buckets."""
+    ``compact_store`` folds deltas into their buckets.
+
+    Every write into a store that records its data schema then lands the
+    partials of the files it added (found by listing the directories it
+    wrote before and after) as one file under ``_summary``: a delta's on
+    the driver, a bucketed write's in one Spark job over its files."""
     spark = points.sparkSession
     schema = data_schema(points.schema)
     replaces = mode == "overwrite" and (
@@ -212,6 +249,8 @@ def write_points(
     )
     stamp = replaces or claim_buckets(spark, path, n_buckets, schema)
     delta = mode == "append" and _fits_a_delta(points, path)
+    landing = DELTA_BUCKET if delta else None
+    before = set() if stamp else _store_files(spark, path, run, landing)
     bucket = F.lit(DELTA_BUCKET) if delta else bucket_of(F.col("pvname"), n_buckets)
     out = points.withColumn("bucket", bucket)
     if run is not None:
@@ -227,6 +266,7 @@ def write_points(
     )
     if stamp:
         stamp_buckets(spark, path, n_buckets, schema)
+    _summarize(spark, path, _store_files(spark, path, run, landing) - before, on_driver=delta)
 
 
 def _fits_a_delta(points: DataFrame, path: str) -> bool:
@@ -235,11 +275,11 @@ def _fits_a_delta(points: DataFrame, path: str) -> bool:
     the plan estimates the write at most one scan split (an unestimable
     plan reports a huge size)."""
     spark = points.sparkSession
-    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     return (
         read_record(spark, path)[0] is not None
         and bool(_holds_data(spark, path))
-        and int(points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) <= split
+        and int(points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        <= _split_bytes(spark)
     )
 
 
@@ -270,7 +310,9 @@ def read_points(spark: SparkSession, path: str) -> DataFrame:
     ``bucket`` column's metadata (``BUCKETS_META``) for
     ``api.PVArchEngine``'s pruned reads. Rows of a pending delta (a small
     append ``compact_store`` has not folded yet) read with ``bucket = -1``
-    (``DELTA_BUCKET``), not the bucket their pvname hashes to."""
+    (``DELTA_BUCKET``), not the bucket their pvname hashes to. The
+    returned frame object itself (not a view of it) answers whole-store
+    lookups from the store's partials (``series_summary``)."""
     n_buckets, schema = read_record(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     try:
@@ -284,14 +326,16 @@ def read_points(spark: SparkSession, path: str) -> DataFrame:
         empty = True
     if empty:
         pts = spark.createDataFrame([], POINTS_READ_SCHEMA)
-    if n_buckets is None:
-        return pts
-    return pts.select(
-        *(
-            F.col(c).alias(c, metadata={BUCKETS_META: n_buckets}) if c == "bucket" else c
-            for c in pts.columns
+    if n_buckets is not None:
+        pts = pts.select(
+            *(
+                F.col(c).alias(c, metadata={BUCKETS_META: n_buckets}) if c == "bucket" else c
+                for c in pts.columns
+            )
         )
-    )
+    if not empty and _summarizable(schema):
+        setattr(pts, _STORE_ATTR, (path, schema))
+    return pts
 
 
 def buckets_of_frame(points: DataFrame) -> int | None:
@@ -402,6 +446,246 @@ def series_of(points: DataFrame, pvname: str) -> DataFrame:
     return series_filter(points, pvname, n_buckets)
 
 
+# ---------------------------------------------------------------- summary
+#
+# A partial is a fact about one immutable data file, computed from its own
+# rows: one row per (file, pvname) holding ``file`` (the path relative to
+# the store root), ``n``, ``tmin`` and the data columns of the series'
+# last row in the file (its ``time`` is the file's tmax for the series),
+# in ``latest_per_key``'s column order. Writers land them as parquet files
+# under ``_summary/``; readers merge the partials of the files their frame
+# lists and scan only the listed files no partial covers.
+
+_PARTIAL_COLS = ("file", "n", "tmin")
+_STORE_ATTR = "_points_store"  # on a read_points frame object: (store path, data schema)
+
+
+class SeriesSummary(NamedTuple):
+    """Whole-store lookups of a ``read_points`` frame, from its store's
+    partials: ``latest`` is the newest row of every series (data columns,
+    ``latest_per_key``'s order); ``names`` the series names, sorted, when
+    the partials were merged on the driver, in which case ``latest`` is a
+    local frame in name order."""
+
+    latest: DataFrame
+    names: list[str] | None
+
+
+class _Root(NamedTuple):
+    """A store root in the two spellings its files come in: the decoded
+    path of a URI (``inputFiles``, ``_metadata.file_path``), and the
+    Hadoop ``Path`` string (listings, and what readers are given)."""
+
+    local: str
+    hadoop: str
+
+    def key_of_uri(self, uri: str) -> str:
+        return unquote(urlsplit(uri).path)[len(self.local) + 1 :]
+
+    def key_of(self, status) -> str:
+        return status.getPath().toString()[len(self.hadoop) + 1 :]
+
+    def path(self, key: str) -> str:
+        return f"{self.hadoop}/{key}"
+
+
+def _root(spark: SparkSession, path: str) -> _Root:
+    fs, P = fsio.handle(spark, path)
+    q = fs.makeQualified(P(path))
+    return _Root(q.toUri().getPath(), q.toString())
+
+
+def _glob_escape(text: str) -> str:
+    return re.sub(r"([\\{}\[\]*?])", r"\\\1", text)
+
+
+def _split_bytes(spark: SparkSession) -> int:
+    """One scan split: ``spark.sql.files.maxPartitionBytes``."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
+def _latest_columns(schema: StructType) -> list[str]:
+    """``latest_per_key``'s output columns over a store's data columns."""
+    return ["pvname", *[f.name for f in schema if f.name not in ("pvname", "time")], "time"]
+
+
+def _summarizable(schema: StructType | None) -> bool:
+    """Whether a store with this recorded data schema keeps partials."""
+    names = set() if schema is None else {f.name for f in schema}
+    return {"pvname", "time"} <= names and not names & set(_PARTIAL_COLS)
+
+
+def _partial_schema(schema: StructType) -> StructType:
+    return StructType(
+        [
+            StructField("file", StringType()),
+            StructField("n", LongType()),
+            StructField("tmin", schema["time"].dataType),
+            *(schema[c] for c in _latest_columns(schema)),
+        ]
+    )
+
+
+def _store_files(spark: SparkSession, path: str, run: str | None, bucket: int | None) -> set[str]:
+    """Store-relative paths of the data files under ``run=<run>/bucket=<bucket>``
+    (every run, or every bucket, for None): one glob."""
+    fs, P = fsio.handle(spark, path)
+    root = _root(spark, path)
+    if run is not None:
+        run = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(run)
+    part = "*" if run is None else _glob_escape(run)
+    pattern = f"{_glob_escape(root.hadoop)}/run={part}/bucket={'*' if bucket is None else bucket}/[^._]*"
+    return {root.key_of(st) for st in fs.globStatus(P(pattern)) or []}
+
+
+def _last_rows(t: pa.Table) -> tuple[pa.Table, np.ndarray]:
+    """``t`` sorted by (pvname, time[, event_id]), nulls first as Spark
+    orders them, and the index of each series' last row: the row
+    ``max_by(..., order_struct)`` picks (either row of a tie)."""
+    order = ["time"] + ([TIEBREAK_COL] if TIEBREAK_COL in t.column_names else [])
+    keys = [("pvname", "ascending")] + [(c, "ascending") for c in order]
+    t = t.take(pc.sort_indices(t, sort_keys=keys, null_placement="at_start"))
+    names = t["pvname"].to_numpy(zero_copy_only=False)
+    if not len(names):
+        return t, np.zeros(0, np.int64)
+    return t, np.flatnonzero(np.append(names[1:] != names[:-1], True))
+
+
+def _file_partial(rows: pa.Table, key: str, schema: StructType) -> pa.Table:
+    """The partial of one data file from its rows, on the driver."""
+    rows, last = _last_rows(rows)
+    counts = rows.group_by("pvname", use_threads=False).aggregate([([], "count_all"), ("time", "min")])
+    cols = _latest_columns(schema)
+    out = pa.table(
+        {
+            "file": pa.array([key] * len(last), pa.string()),
+            "n": counts["count_all"],
+            "tmin": counts["time_min"],
+            **{c: rows[c].take(pa.array(last)) for c in cols},
+        }
+    )
+    return out.cast(to_arrow_schema(_partial_schema(schema)))
+
+
+def _spark_partials(spark: SparkSession, root: _Root, schema: StructType, files: dict[str, str]) -> pa.Table:
+    """The partials of ``files`` ({store-relative path read: path recorded})
+    in one Spark job over them (``_metadata.file_path``)."""
+    rows = spark.read.schema(schema).parquet(*(root.path(k) for k in files))
+    order = order_struct(rows)
+    cols = _latest_columns(schema)
+    parts = rows.groupBy(F.col("_metadata.file_path").alias("file"), "pvname").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("time").alias("tmin"),
+        *[F.max_by(c, order).alias(c) for c in cols[1:-1]],
+        F.max("time").alias("time"),
+    )
+    t = parts.select(*_PARTIAL_COLS, *cols).toArrow()
+    keys = pa.array([files[root.key_of_uri(u)] for u in t["file"].to_pylist()], pa.string())
+    return t.set_column(0, "file", keys).cast(to_arrow_schema(_partial_schema(schema)))
+
+
+def _write_partials(spark: SparkSession, path: str, table: pa.Table) -> None:
+    """Land ``table`` as one new parquet file under the store's ``_summary``."""
+    buf = io.BytesIO()
+    pq.write_table(table, buf)
+    fsio.write_bytes(spark, f"{path}/{SUMMARY_DIR}/{uuid.uuid4().hex}.parquet", buf.getvalue())
+
+
+def _summarize(spark: SparkSession, path: str, keys: set[str], on_driver: bool) -> None:
+    """Write the partials of the store's data files ``keys``: read on the
+    driver (each file at most one split), or by one Spark job."""
+    schema = read_record(spark, path)[1]
+    if not keys or not _summarizable(schema):
+        return
+    root = _root(spark, path)
+    if on_driver:
+        table = pa.concat_tables(
+            _file_partial(pq.read_table(io.BytesIO(fsio.read_bytes(spark, root.path(k)))), k, schema)
+            for k in sorted(keys)
+        )
+    else:
+        table = _spark_partials(spark, root, schema, {k: k for k in keys})
+    _write_partials(spark, path, table)
+
+
+def summary_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """The store's partial files: (Hadoop path, bytes) each."""
+    fs, P = fsio.handle(spark, path)
+    pattern = f"{_glob_escape(_root(spark, path).hadoop)}/{SUMMARY_DIR}/[^._]*.parquet"
+    return [(st.getPath().toString(), st.getLen()) for st in fs.globStatus(P(pattern)) or []]
+
+
+def _read_partials(spark: SparkSession, files: list[tuple[str, int]], schema: StructType) -> pa.Table:
+    """The partial files read on the driver, the partials of one data
+    file taken from one of them (a compaction that crashed between its
+    fold and its deletes leaves two copies). A file deleted since it was
+    listed (a compaction folded it) is skipped: its data files scan."""
+    target = to_arrow_schema(_partial_schema(schema))
+    tables, covered = [target.empty_table()], set()
+    for data in (fsio.read_bytes(spark, p) for p, _ in files):
+        if data is None:
+            continue
+        t = pq.read_table(io.BytesIO(data)).select(target.names).cast(target)
+        seen = pa.array(sorted(covered), pa.string())
+        tables.append(t.filter(pc.invert(pc.is_in(t["file"], value_set=seen))))
+        covered.update(pc.unique(t["file"]).to_pylist())
+    return pa.concat_tables(tables)
+
+
+def series_summary(points: DataFrame) -> SeriesSummary | None:
+    """``points``' whole-store lookups from its store's partials, or None:
+    ``points`` is not a frame ``read_points`` returned (unmodified, of a
+    store that records its schema), or no partial covers a file it lists.
+    The caller then answers by scanning ``points``, as it would without
+    partials.
+
+    Only the partials of files in ``points``' own listing count; the
+    listed files no partial covers are scanned with ``latest_per_key``
+    and merged in, so the answer is the scan's in every case (a partial
+    written or lost around a crash, a file compaction replaced or
+    ``prune_runs`` dropped). Up to one scan split of partial files is
+    read and merged on the driver into a local frame; a larger summary
+    is read and merged by Spark."""
+    bound = vars(points).get(_STORE_ATTR)
+    if bound is None:
+        return None
+    path, schema = bound
+    spark = points.sparkSession
+    files = summary_files(spark, path)
+    if not files:
+        return None
+    root = _root(spark, path)
+    listed = {root.key_of_uri(u) for u in points.inputFiles()}
+    cols = _latest_columns(schema)
+
+    def scan(keys):
+        return latest_per_key(spark.read.schema(schema).parquet(*(root.path(k) for k in sorted(keys))))
+
+    if sum(size for _, size in files) > _split_bytes(spark):
+        parts = spark.read.schema(_partial_schema(schema)).parquet(*(p for p, _ in files))
+        live = spark.createDataFrame(pa.table({"file": pa.array(sorted(listed), pa.string())}))
+        parts = parts.join(F.broadcast(live), "file", "left_semi")
+        covered = {r.file for r in parts.select("file").distinct().collect()}
+        if not covered:
+            return None
+        rows = parts.select(*cols)
+        if listed - covered:
+            rows = rows.unionByName(scan(listed - covered))
+        return SeriesSummary(latest_per_key(rows).select(*cols), None)
+    parts = _read_partials(spark, files, schema)
+    parts = parts.filter(pc.is_in(parts["file"], value_set=pa.array(sorted(listed), pa.string())))
+    covered = set(pc.unique(parts["file"]).to_pylist())
+    if not covered:
+        return None
+    rows = parts.select(cols)
+    if listed - covered:
+        rows = pa.concat_tables([rows, scan(listed - covered).toArrow().select(cols).cast(rows.schema)])
+    rows, last = _last_rows(rows)
+    rows = rows.take(pa.array(last))
+    latest = spark.createDataFrame(rows, StructType([schema[c] for c in cols]))
+    return SeriesSummary(latest, rows["pvname"].to_pylist())
+
+
 def runs_for_window(runs: DataFrame, t0: float, t1: float) -> DataFrame:
     """J2 — interval join: runs whose [start_time, stop_time] overlaps
     [t0, t1] (ref epicsarchiver/archiver.py:104-110 dbs_for_time).
@@ -445,6 +729,12 @@ def compact_store(
     The hot (currently-appended) run should be skipped via ``runs``:
     compact only rotated runs, which are immutable.
 
+    The pass keeps the summary (``_summary``) proportional to the live
+    files: before a run's commit it lands the partials of the files it
+    staged (by their paths after the swap) and of the run's files no
+    partial covers, and the first such landing also folds every partial
+    file the pass listed into it (``_Fold``).
+
     Returns {partition: files_after} for the bucket partitions
     rewritten, and ``run=<r>/bucket=-1: 0`` for each delta partition
     folded."""
@@ -458,32 +748,107 @@ def compact_store(
     n_buckets, schema = read_record(spark, path)
     session = spark.newSession()
     session.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    visited = [run for run in list_runs(spark, path) if runs is None or run in runs]
+    listings = {}
+    for run in visited:
+        fsio.recover(spark, f"{path}/run={run}")
+        listings[run] = _run_files(spark, f"{path}/run={run}")
+    fold = _Fold(session, path, schema, listings) if _summarizable(schema) else None
     result: dict[str, int] = {}
-    for run in list_runs(spark, path):
-        if runs is None or run in runs:
-            result.update(
-                _compact_run(session, f"{path}/run={run}", n_buckets, schema, target_file_bytes)
+    for run in visited:
+        result.update(
+            _compact_run(
+                session, f"{path}/run={run}", listings[run], n_buckets, schema, target_file_bytes, fold
             )
+        )
+    if fold is not None:
+        fold.finish()
     return result
 
 
-def _compact_run(
-    spark: SparkSession,
-    run_dir: str,
-    n_buckets: int | None,
-    schema: StructType | None,
-    target_file_bytes: int,
-) -> dict[str, int]:
-    """One run's pass of ``compact_store``: recover, stage, commit."""
+def _run_files(spark: SparkSession, run_dir: str) -> dict[int, list]:
+    """A run's data files by bucket, as ``FileStatus``."""
     fs, P = fsio.handle(spark, run_dir)
-    fsio.recover(spark, run_dir)
-    files = {
+    return {
         int(st.getPath().getName()[len("bucket="):]): [
             f for f in fsio.visible(fs, st.getPath()) if f.isFile()
         ]
         for st in fs.listStatus(P(run_dir))
         if st.isDirectory() and st.getPath().getName().startswith("bucket=")
     }
+
+
+class _Fold:
+    """A compaction pass's upkeep of the summary. It lists the partial
+    files once and keeps the rows of files still live (in a visited run,
+    listed there; elsewhere, in a run that still exists), one copy per
+    file. The first run pass with partials to land writes them together
+    with those rows, minus the rows of the files the pass replaces, as
+    one file, and deletes the files it listed: never a partial file a
+    concurrent write landed after the listing. Later passes land theirs
+    as files of their own, and files they replace keep their (ignored)
+    rows until the next compaction."""
+
+    def __init__(self, spark: SparkSession, path: str, schema: StructType, listings: dict) -> None:
+        self.spark, self.path, self.schema = spark, path, schema
+        self.root = _root(spark, path)
+        self.files = summary_files(spark, path)
+        rows = _read_partials(spark, self.files, schema)
+        visited = {f"run={run}" for run in listings}
+        live = {
+            f"run={run}/bucket={k}/{st.getPath().getName()}"
+            for run, files in listings.items()
+            for k, fl in files.items()
+            for st in fl
+        }
+        runs = {f"run={run}" for run in list_runs(spark, path)}
+        keep = [
+            key in live if key.split("/", 1)[0] in visited else key.split("/", 1)[0] in runs
+            for key in rows["file"].to_pylist()
+        ]
+        self.rows = rows.filter(pa.array(keep, pa.bool_()))
+        self.stale = len(self.rows) < len(rows)
+        self.covered = set(self.rows["file"].to_pylist())
+
+    def land(self, replaced: set[str], files: dict[str, str]) -> None:
+        """Land the partials of ``files`` (store-relative path read: path
+        recorded) for a run pass that replaces the files ``replaced``."""
+        new = _spark_partials(self.spark, self.root, self.schema, files) if files else None
+        if self.files is None:  # folded already
+            if new is not None:
+                _write_partials(self.spark, self.path, new)
+            return
+        gone = pa.array(sorted(replaced), pa.string())
+        kept = self.rows.filter(pc.invert(pc.is_in(self.rows["file"], value_set=gone)))
+        self._replace(kept if new is None else pa.concat_tables([kept, new]))
+
+    def finish(self) -> None:
+        """Fold the listed files if no run pass did and they need it."""
+        if self.files is not None and (len(self.files) > 1 or self.stale):
+            self._replace(self.rows)
+
+    def _replace(self, table: pa.Table) -> None:
+        if len(table):
+            _write_partials(self.spark, self.path, table)
+        for file, _ in self.files:
+            fsio.delete(self.spark, file)
+        self.files = None
+
+
+def _compact_run(
+    spark: SparkSession,
+    run_dir: str,
+    files: dict[int, list],
+    n_buckets: int | None,
+    schema: StructType | None,
+    target_file_bytes: int,
+    fold: _Fold | None,
+) -> dict[str, int]:
+    """One run's pass of ``compact_store`` over its (recovered) listing:
+    stage, land the partials, commit."""
+    fs, P = fsio.handle(spark, run_dir)
+    run = run_dir.rsplit("/", 1)[1]
+    files = dict(files)
     delta = f"bucket={DELTA_BUCKET}"
     deltas = [f"{delta}/{st.getPath().getName()}" for st in files.pop(DELTA_BUCKET, [])]
     ways = {
@@ -498,27 +863,43 @@ def _compact_run(
             raise ValueError(f"{run_dir} holds deltas but its store records no bucket count")
         home = bucket_of(F.col("pvname"), n_buckets)
         rewrite |= {r[0] for r in reader.parquet(*delta_paths).select(home).distinct().collect()}
+    if rewrite:
+        rows = reader.option("basePath", run_dir).parquet(
+            *[f"{run_dir}/bucket={k}" for k in sorted(rewrite) if k in files], *delta_paths
+        )
+        if deltas:
+            rows = rows.withColumn("bucket", home)
+        wide = [x for k in sorted(rewrite) if ways.get(k, 1) > 1 for x in (k, ways[k])]
+        slot = F.lit(0)
+        if wide:  # buckets sized for several files: spread their series by name
+            n_files = F.create_map(*map(F.lit, wide))[F.col("bucket")]
+            slot = F.pmod(F.xxhash64("pvname"), F.coalesce(n_files, F.lit(1)))
+        (
+            rows.repartition(F.col("bucket"), slot)
+            .sortWithinPartitions("bucket", "pvname", "time")
+            .write.partitionBy("bucket")
+            .parquet(fsio.staging(run_dir))
+        )
+    if fold is not None:
+        # partials of the staged files, by their paths after the swap, and
+        # of the run's other files no partial covers yet
+        stage = fsio.staging(run)  # relative to the store root, as the run is
+        staged = {
+            key: f"{run}/{key[len(stage) + 1 :]}"
+            for key in (
+                fold.root.key_of(st)
+                for st in fs.globStatus(P(f"{_glob_escape(fold.root.path(stage))}/bucket=*/[^._]*")) or []
+            )
+        }
+        keys = {k: {f"{run}/bucket={k}/{st.getPath().getName()}" for st in fl} for k, fl in files.items()}
+        replaced = {f"{run}/{name}" for name in deltas}.union(*(keys[k] for k in rewrite if k in keys))
+        uncovered = set().union(*(v for k, v in keys.items() if k not in rewrite)) - fold.covered
+        if replaced or staged or uncovered:
+            fold.land(replaced, {**{key: key for key in uncovered}, **staged})
     if not rewrite:
         return {}
-    rows = reader.option("basePath", run_dir).parquet(
-        *[f"{run_dir}/bucket={k}" for k in sorted(rewrite) if k in files], *delta_paths
-    )
-    if deltas:
-        rows = rows.withColumn("bucket", home)
-    wide = [x for k in sorted(rewrite) if ways.get(k, 1) > 1 for x in (k, ways[k])]
-    slot = F.lit(0)
-    if wide:  # buckets sized for several files: spread their series by name
-        n_files = F.create_map(*map(F.lit, wide))[F.col("bucket")]
-        slot = F.pmod(F.xxhash64("pvname"), F.coalesce(n_files, F.lit(1)))
-    (
-        rows.repartition(F.col("bucket"), slot)
-        .sortWithinPartitions("bucket", "pvname", "time")
-        .write.partitionBy("bucket")
-        .parquet(fsio.staging(run_dir))
-    )
     parts = [f"bucket={k}" for k in sorted(rewrite)]
     fsio.commit(spark, run_dir, parts, drop=deltas)
-    run = run_dir.rsplit("/", 1)[1]
     out = {
         f"{run}/{part}": sum(st.isFile() for st in fsio.visible(fs, P(f"{run_dir}/{part}")))
         for part in parts

@@ -307,9 +307,10 @@ def test_pruned_facade_reads_match_unpruned(twin_stores, spark):
             got = [tuple(r) for r in rec.get_data(pv, t0, t1).collect()]
             want = [tuple(r) for r in leg.get_data(pv, t0, t1).collect()]
             assert got == want and got, (pv, t0, t1)
-        # the (2470, 2499) window holds no sample: the seed comes from run_001
+        # the (2470, 2499) window holds no sample: the seed comes from
+        # run_001 (run_002 starts at t = 2500); reads carry no run column
         seed = rec.get_data(pv, 2470.0, 2499.0).collect()
-        assert len(seed) == 1 and seed[0].run == "run_001"
+        assert len(seed) == 1 and seed[0].time < 2500.0 and "run" not in seed[0].asDict()
         for t in (2499.0, 4321.0):
             assert rec.get_value_at_time(pv, t) == leg.get_value_at_time(pv, t) is not None
 

@@ -87,6 +87,23 @@ def test_compact_cli(spark, tmp_path, capsys):
     assert read_points(spark, path).count() == 4
 
 
+def test_compact_cli_reports_the_summary_fold(spark, tmp_path, capsys):
+    """`pvarch compact` folds the partial files each write landed under
+    the store's `_summary` into one, and reports it."""
+    path = str(tmp_path / "fstore")
+    for i in range(3):
+        write_points(
+            spark.createDataFrame(
+                pd.DataFrame([("CLI:f.VAL", float(i), 1.0)], columns=["pvname", "time", "value"])
+            ),
+            path,
+            run="run_001",
+            n_buckets=2,
+        )
+    assert cli.main(["--store", path, "compact"]) == 0
+    assert "summary: 3 partial file(s) -> 1" in capsys.readouterr().out
+
+
 def test_compact_cli_refuses_a_streamed_store(spark, tmp_path, capsys):
     """`pvarch compact` on a store written by `pvarch archive` (a file
     sink with a _spark_metadata manifest) exits non-zero with the reason

@@ -687,18 +687,15 @@ def test_write_refuses_another_bucket_count_with_deltas_pending(spark, tmp_path)
 
 
 def _answers(spark, path, names):
-    """What the facade answers for every PV of the store (rows without
-    ``bucket``: a pending delta's rows read back with bucket = -1)."""
+    """What the facade answers for every PV of the store."""
     from epicsarchiver_spark.api import PVArchEngine
 
     eng = PVArchEngine(spark, read_points(spark, path))
     out = {}
     for n in names:
-        out[n, "get_data"] = [tuple(r) for r in eng.get_data(n, 105.0, 250.0).drop("bucket").collect()]
+        out[n, "get_data"] = [tuple(r) for r in eng.get_data(n, 105.0, 250.0).collect()]
         out[n, "value_at"] = eng.get_value_at_time(n, 155.0)
-    out["get_values"] = sorted(
-        tuple(r) for r in eng.get_values(60.0, now=260.0).drop("bucket").collect()
-    )
+    out["get_values"] = sorted(tuple(r) for r in eng.get_values(60.0, now=260.0).collect())
     out["search"] = [r.pvname for r in eng.search_names("PV:*").collect()]
     return out
 
@@ -859,3 +856,303 @@ def test_a_fold_journal_of_the_previous_release_rolls_forward(spark, tmp_path):
     compact_store(spark, path)
     assert _store_rows(spark, path) == want
     assert sorted(os.listdir(run)) == sorted(os.listdir(f"{clean}/run=r1"))
+
+
+# --------------------------------------------------------------- summary
+
+SUMMARY_PVS = [f"SV:{c}{i}" for c in "AB" for i in range(4)]
+
+
+def _series(spark, names, t0, n=10):
+    """``n`` points per PV from ``t0``: distinct times per series (each PV
+    has its own phase) and values that differ from row to row."""
+    pdf = pd.DataFrame(
+        [
+            (pv, t0 + 10.0 * j + 0.5 * i, float((7 * j + 3 * i) % 11))
+            for i, pv in enumerate(names)
+            for j in range(n)
+        ],
+        columns=["pvname", "time", "value"],
+    )
+    return spark.createDataFrame(pdf)
+
+
+@pytest.fixture(scope="module")
+def summary_store(spark, tmp_path_factory):
+    """A bucketed 2-run build of 8 PVs in 4 buckets, then two small
+    appends into the open run (delta files): tests copy it to mutate."""
+    path = str(tmp_path_factory.mktemp("summary") / "store")
+    build = _series(spark, SUMMARY_PVS, 0.0).withColumn(
+        "run", F.when(F.col("time") < 50.0, "r1").otherwise("r2")
+    )
+    write_points(build, path, n_buckets=4)
+    write_points(_series(spark, SUMMARY_PVS[:5], 200.0), path, run="r2", n_buckets=4)
+    write_points(_series(spark, SUMMARY_PVS[3:] + ["SV:C0"], 300.0, n=3), path, run="r2", n_buckets=4)
+    return path
+
+
+def _copy(src, tmp_path, name="store"):
+    import shutil
+
+    return shutil.copytree(src, str(tmp_path / name))
+
+
+def _lookups(spark, pts):
+    """Every whole-store lookup the facade answers over ``pts``."""
+    from epicsarchiver_spark.api import PVArchEngine
+
+    eng = PVArchEngine(spark, pts)
+    rules = spark.createDataFrame(
+        [(pv, op, "5") for pv in SUMMARY_PVS + ["SV:C0", "PV:A"] for op in ("gt", "le")],
+        "pvname string, compare string, trippoint string",
+    )
+    return {
+        "get_values": [
+            sorted(tuple(r) for r in eng.get_values(ago, now=330.0).collect())
+            for ago in (1e9, 100.0, 25.0)
+        ],
+        "get_pvnames": eng.get_pvnames(),
+        "search_names": [
+            [r.pvname for r in eng.search_names(p).collect()] for p in ("SV:*", "*1", "SV:_0", "nope*")
+        ],
+        "check": [eng.check(cadence, now=330.0) for cadence in (1e9, 200.0, 5.0)],
+        "process_alerts": sorted(tuple(r) for r in eng.process_alerts(rules).collect()),
+    }
+
+
+def _summary_is_scan(spark, path, summarized=True):
+    """The facade's lookups on the ``read_points`` frame equal those on a
+    view of it, which scans; ``summarized``: whether partials answer."""
+    from epicsarchiver_spark.sources.points_store import series_summary
+
+    pts = read_points(spark, path)
+    assert (series_summary(pts) is not None) == summarized
+    got = _lookups(spark, pts)
+    assert got == _lookups(spark, pts.select("*"))
+    return got
+
+
+def _uncovered(spark, path):
+    """Listed data files of the store that no partial covers."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from epicsarchiver_spark.sources.points_store import _root
+
+    root = _root(spark, path)
+    listed = {root.key_of_uri(u) for u in read_points(spark, path).inputFiles()}
+    covered = set()
+    for f in glob.glob(f"{path}/_summary/*.parquet"):
+        covered |= set(pq.read_table(f, columns=["file"]).column(0).to_pylist())
+    return listed - covered
+
+
+def _summary_files(path):
+    import glob
+
+    return glob.glob(f"{path}/_summary/*.parquet")
+
+
+def test_lookups_from_partials_equal_the_scan(spark, summary_store, tmp_path):
+    """get_values / get_pvnames / search_names / check / process_alerts
+    from the partials equal the scan's on a fresh build, with deltas
+    pending, after compact_store (one partial file, every file covered)
+    and after prune_runs; on the _delta_store shape too."""
+    from epicsarchiver_spark.sources.points_store import prune_runs
+
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    path = _copy(summary_store, tmp_path)
+    assert len(_files(path, "r2", -1)) == 2 and len(_summary_files(path)) == 3
+    assert not _uncovered(spark, path)
+    pending = _summary_is_scan(spark, path)
+    first = _summary_files(path)[0]
+    shutil.copy(first, f"{path}/_summary/copy.parquet")  # two partial files for the same data files
+    assert _summary_is_scan(spark, path) == pending
+    assert pending["get_pvnames"] == sorted(SUMMARY_PVS + ["SV:C0"])
+    assert pending["search_names"][2] == ["SV:A0", "SV:B0", "SV:C0"]
+    assert pending["check"] == [True, True, False]
+    compact_store(spark, path)
+    assert not _files(path, "r2", -1) and len(_summary_files(path)) == 1
+    assert not _uncovered(spark, path)
+    (folded,) = _summary_files(path)
+    keys = pq.read_table(folded, columns=["file", "pvname"]).to_pylist()
+    assert len(keys) == len({(k["file"], k["pvname"]) for k in keys})  # one copy per data file
+    assert _summary_is_scan(spark, path) == pending
+    assert prune_runs(spark, path, keep_last=1) == ["r1"]
+    _summary_is_scan(spark, path)
+    compact_store(spark, path)  # drops the pruned run's partials
+    assert not _uncovered(spark, path) and len(_summary_files(path)) == 1
+    _summary_is_scan(spark, path)
+
+    delta = str(tmp_path / "delta")
+    _delta_store(spark, delta)
+    assert len(_files(delta, "r1", -1)) == 2 and not _uncovered(spark, delta)
+    _summary_is_scan(spark, delta)
+    compact_store(spark, delta)
+    _summary_is_scan(spark, delta)
+
+
+def test_fresh_build_answers_from_partials(spark, tmp_path):
+    """A store's first (bucketed) write lands the partials of every file
+    it wrote, as one file."""
+    path = str(tmp_path / "store")
+    write_points(_series(spark, SUMMARY_PVS, 0.0), path, run="r1", n_buckets=4)
+    assert len(_summary_files(path)) == 1 and not _uncovered(spark, path)
+    _summary_is_scan(spark, path)
+
+
+def test_a_crash_before_the_partial_leaves_its_file_scanned(spark, summary_store, tmp_path, monkeypatch):
+    """An append that lands its data file and crashes before its partial
+    is renamed in: the file is scanned, and the lookups still equal the
+    scan; the next compaction covers it."""
+    path = _copy(summary_store, tmp_path)
+    with monkeypatch.context() as m:
+        _crash_at(m, 0)  # the partial's rename: a delta append's only one
+        with pytest.raises(RuntimeError, match="injected crash"):
+            write_points(_series(spark, ["SV:A1", "SV:D9"], 400.0, n=2), path, run="r2", n_buckets=4)
+    assert len(_files(path, "r2", -1)) == 3
+    (left,) = _uncovered(spark, path)
+    assert left.startswith("run=r2/bucket=-1/")
+    got = _summary_is_scan(spark, path)
+    assert "SV:D9" in got["get_pvnames"]
+    compact_store(spark, path)
+    assert not _uncovered(spark, path)
+    assert _summary_is_scan(spark, path) == got
+
+
+def test_a_partial_of_a_deleted_file_is_ignored(spark, summary_store, tmp_path):
+    """A partial whose data file is gone (here: deleted by hand) is not
+    used: the deleted file's newest rows and names leave the answers."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = _copy(summary_store, tmp_path)
+    (second,) = [
+        f for f in _files(path, "r2", -1) if "SV:C0" in pq.read_table(f).column("pvname").to_pylist()
+    ]
+    os.remove(second)
+    got = _summary_is_scan(spark, path)
+    assert "SV:C0" not in got["get_pvnames"]
+
+
+def test_a_view_of_the_frame_scans(spark, summary_store):
+    """A filtered view of a read_points frame gets no whole-store answer:
+    it scans, and answers for its own rows only."""
+    from epicsarchiver_spark.api import PVArchEngine
+    from epicsarchiver_spark.plans import explain_str
+    from epicsarchiver_spark.sources.points_store import series_summary
+
+    pts = read_points(spark, summary_store)
+    view = pts.filter(F.col("pvname") != "SV:C0")
+    assert series_summary(view) is None
+    eng = PVArchEngine(spark, view)
+    assert "SV:C0" not in eng.get_pvnames()
+    assert "Scan parquet" in explain_str(eng.get_values(1e9, now=330.0))
+    assert "Scan parquet" not in explain_str(PVArchEngine(spark, pts).get_values(1e9, now=330.0))
+
+
+def test_a_streamed_store_has_no_partials(spark, streamed_store):
+    """The file-sink store (``_spark_metadata``) lands no partials, and
+    its lookups take the scan."""
+    import os
+
+    assert not os.path.exists(f"{streamed_store}/_summary")
+    got = _summary_is_scan(spark, streamed_store, summarized=False)
+    assert got["get_pvnames"] == ["X", "Y"]
+
+
+def test_a_summary_above_one_split_is_merged_by_spark(spark, summary_store):
+    """Partial files totalling more than one scan split are read and
+    merged by Spark, with the same answers."""
+    from epicsarchiver_spark.sources.points_store import series_summary
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        assert series_summary(read_points(spark, summary_store)).names is None
+        _summary_is_scan(spark, summary_store)
+    finally:
+        spark.conf.set(key, old)
+
+
+def _jobs(spark, action):
+    """Spark jobs ``action`` launches."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"lookup-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookups_on_a_covered_store_launch_at_most_one_job(spark, summary_store, tmp_path):
+    """On a store whose partials cover every file, get_pvnames launches no
+    Spark job and get_values / search_names at most one each. Without
+    ``_summary`` each launches what the scan expressions do."""
+    import shutil
+
+    from epicsarchiver_spark.api import PVArchEngine
+    from epicsarchiver_spark.operators import search, timeseries
+
+    def counts(path):
+        eng = PVArchEngine(spark, read_points(spark, path))
+        return (
+            _jobs(spark, eng.get_pvnames),
+            _jobs(spark, lambda: eng.get_values(100.0, now=330.0).collect()),
+            _jobs(spark, lambda: eng.search_names("SV:*").collect()),
+        )
+
+    gv, gn, sn = counts(summary_store)
+    assert gv == 0 and gn <= 1 and sn <= 1, (gv, gn, sn)
+    path = _copy(summary_store, tmp_path)
+    shutil.rmtree(f"{path}/_summary")
+    pts = read_points(spark, path)
+    scans = (
+        _jobs(spark, lambda: search.distinct_names(pts).collect()),
+        _jobs(spark, lambda: timeseries.latest_per_key(pts).filter(F.col("time") > 230.0).collect()),
+        _jobs(spark, lambda: search.wildcard_search(pts.select("pvname").distinct(), "SV:*").collect()),
+    )
+    assert counts(path) == scans
+
+
+def test_compaction_backfills_and_spares_a_concurrent_partial(spark, summary_store, tmp_path, monkeypatch):
+    """A store without partials gets them for every file from one
+    compaction pass; a partial an append lands after the pass listed
+    ``_summary`` is neither folded nor deleted, and covers its file."""
+    import os
+    import shutil
+
+    from epicsarchiver_spark.sources import points_store
+
+    path = _copy(summary_store, tmp_path)
+    shutil.rmtree(f"{path}/_summary")
+    compact_store(spark, path, runs=["r1"])
+    assert {k.split("/")[0] for k in _uncovered(spark, path)} == {"run=r2"}
+    _summary_is_scan(spark, path)
+    listed = points_store.summary_files
+
+    def listing_then_append(*args):
+        out = listed(*args)
+        write_points(_series(spark, ["SV:A2"], 500.0, n=2), path, run="r2", n_buckets=4)
+        return out
+
+    before = set(_summary_files(path))
+    monkeypatch.setattr(points_store, "summary_files", listing_then_append)
+    compact_store(spark, path)
+    monkeypatch.undo()
+    after = set(_summary_files(path))
+    assert not before & after and len(after) == 2
+    assert len(_files(path, "r2", -1)) == 1 and not _uncovered(spark, path)
+    assert ("SV:A2", 7.0, 510.0) in _summary_is_scan(spark, path)["get_values"][0]
+    compact_store(spark, path)
+    assert len(_summary_files(path)) == 1 and not _uncovered(spark, path)
+    assert not [n for n in os.listdir(f"{path}/_summary") if n.endswith(".tmp")]
