@@ -2087,9 +2087,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _cache_readback(s, d):
         """S14 read-back — seed the parquet latest-value cache with one
-        upsert batch, advance it with a second (the merge path: pruned
-        bucket read + atomic swap), then read_cache. Result = latest per
-        key over both batches, the cache's contract."""
+        upsert batch (it lands as the base), advance it with a second
+        (one delta file, folded into the base once it reaches the bound),
+        then read_cache. Result = latest per key over both batches, the
+        cache's contract."""
         import atexit
         import os as _os
         import shutil
@@ -2101,12 +2102,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from epicsarchiver_spark.streaming.ingest import read_cache, upsert_latest
 
         pts = _points(s, d).select("pvname", "value", "time")
-        upsert_latest(pts.filter(F.col("time") < T_ASOF), path, buckets=8)
-        upsert_latest(
-            pts.filter((F.col("time") >= T_ASOF) & (F.col("time") <= T1)),
-            path,
-            buckets=8,
-        )
+        upsert_latest(pts.filter(F.col("time") < T_ASOF), path)
+        upsert_latest(pts.filter((F.col("time") >= T_ASOF) & (F.col("time") <= T1)), path)
         return read_cache(s, path).select("pvname", "value", "time")
 
     q["cache_upsert_readback"] = _cache_readback

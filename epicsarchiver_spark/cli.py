@@ -244,8 +244,12 @@ def cmd_import_zarr(args) -> int:
 
 def cmd_compact(args) -> int:
     from epicsarchiver_spark.sources.points_store import DELTA_BUCKET, compact_store, summary_files
+    from epicsarchiver_spark.streaming.ingest import compact_cache, is_cache
 
     spark = _spark("compact")
+    if is_cache(spark, args.store):
+        print(f"folded {compact_cache(spark, args.store)} cache delta file(s) into the base")
+        return 0
     summary = len(summary_files(spark, args.store))
     try:
         done = compact_store(
@@ -479,7 +483,8 @@ def cmd_archive(args) -> int:
 
 def cmd_cache_daemon(args) -> int:
     """``pvarch cache start`` analog: maintain the latest-value cache
-    (bucket-swap parquet lane, or the JDBC table lane with --jdbc-url)
+    (parquet base plus one delta per micro-batch, or the JDBC table lane
+    with --jdbc-url)
     from a parquet events directory. Bounded availableNow drain by
     default; ``--follow`` for the continuous daemon shape, managed via
     the pidfile/stop-sentinel control plane (``pvarch stop cache`` /
@@ -510,7 +515,7 @@ def cmd_cache_daemon(args) -> int:
             dialect=args.dialect,
         )
     else:
-        q = latest_value_query(stream, args.cache, args.checkpoint, buckets=args.buckets)
+        q = latest_value_query(stream, args.cache, args.checkpoint)
     q = (
         q.trigger(processingTime=f"{args.trigger_s} seconds")
         if args.follow
@@ -1396,8 +1401,6 @@ def cmd_restart(args) -> int:
         )
         return 1
     args.follow = True
-    if args.buckets is None:
-        args.buckets = 128 if args.proc == "archive" else 64
     return {"archive": cmd_archive, "cache": cmd_cache_daemon}[args.proc](args)
 
 
@@ -2239,7 +2242,8 @@ def build_parser() -> argparse.ArgumentParser:
     s = sub.add_parser(
         "compact",
         help="fold each run's delta partition (bucket=-1) into its buckets and "
-        "merge small files per (run, bucket)",
+        "merge small files per (run, bucket); on a latest-value cache path, "
+        "fold its pending deltas into its base",
     )
     s.add_argument("--runs", nargs="*", help="only these (rotated) runs; default all")
     s.add_argument("--target-mb", type=int, default=256, help="target file size")
@@ -2358,7 +2362,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="JDBC lane: executor-side staging + set-based MERGE")
     s.add_argument("--dialect", default=None, choices=["merge", "mysql"],
                    help="distributed MERGE dialect (default merge)")
-    s.add_argument("--buckets", type=int, default=64)
     s.add_argument("--follow", action="store_true", help="continuous daemon mode")
     s.add_argument("--trigger-s", type=int, default=10)
     s.add_argument("--timeout", type=int, default=600)
@@ -2385,8 +2388,8 @@ def build_parser() -> argparse.ArgumentParser:
     # archive lane
     s.add_argument("--deadtime", type=float, default=None, help="default 5.0 s")
     s.add_argument("--deadband", type=float, default=None, help="default 0.0")
-    s.add_argument("--buckets", type=int, default=None,
-                   help="default 128 (archive) / 64 (cache)")
+    s.add_argument("--buckets", type=int, default=128,
+                   help="archive lane only: the store's bucket count")
     s.add_argument("--flush-ms", type=int, default=1000)
     # cache lane
     s.add_argument("--cache", default=None, help="default ./cache")

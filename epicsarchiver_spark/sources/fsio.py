@@ -1,9 +1,9 @@
 """Every Hadoop-FS side effect of the engine, and its one crash-safe swap.
 
 The engine keeps each table it updates in place (the runs, positions,
-alert-rule, pv-catalog and bm25-state dimensions, the latest-value cache,
-the rollup, word-index and components artifacts, a compacted run of the
-points store) as a parquet directory, and replaces it, or some of its
+alert-rule, pv-catalog and bm25-state dimensions, the latest-value
+cache's base, the rollup, word-index and components artifacts, a
+compacted run of the points store) as a parquet directory, and replaces it, or some of its
 ``name=value`` subdirectories (``bucket=k``, ``run=r``), by one protocol:
 
 1. The writer calls :func:`recover`, reads what it needs, and writes the
@@ -31,6 +31,11 @@ two steps of a swap, or after a crash, returns the old rows or the new
 ones. It does not drop the files a journal deletes, which only
 compaction lists, and the points store is read by
 ``points_store.read_points``, which lists the store root directly.
+
+A table that grows by whole files instead (the latest-value cache's
+per-batch deltas) lands each one with :func:`write_file`: written aside,
+then renamed onto its name, so a rewrite under the same name replaces
+the file and a crash leaves the old file or the new one.
 
 Every rename is checked (:func:`_rename`): it raises when the source is
 missing or the destination exists. ``FileSystem.rename`` onto an existing
@@ -121,6 +126,25 @@ def write_bytes(spark: SparkSession, path: str, data: bytes, replace: bool = Fal
 def write_text(spark: SparkSession, path: str, text: str, replace: bool = False) -> None:
     """:func:`write_bytes` of ``text``."""
     write_bytes(spark, path, text.encode(), replace)
+
+
+def write_file(spark: SparkSession, frame: DataFrame, path: str) -> int:
+    """Write ``frame`` as ONE parquet file at ``path``: as one partition
+    into the aside directory ``<path>.tmp``, then one checked rename of
+    its data file onto ``path``, replacing a file there. A crash leaves
+    the old file or the new one, plus at most the aside directory, which
+    the next write of ``path`` replaces; give ``path`` a hidden
+    directory when a reader lists its parent. 0 when the frame wrote
+    no data file (``path`` is then left as it was); otherwise the
+    file's size in bytes."""
+    fs, P = handle(spark, path)
+    aside = P(f"{path}.tmp")
+    frame.coalesce(1).write.mode("overwrite").parquet(str(aside))
+    data = [st for st in visible(fs, aside) if st.isFile()]
+    if data:
+        _rename(fs, data[0].getPath(), P(path), bool(fs.exists(P(path))))
+    _delete(fs, aside)
+    return data[0].getLen() if data else 0
 
 
 def _rename(fs, src, dst, replace: bool = False) -> None:
@@ -245,6 +269,23 @@ def recover(spark: SparkSession, target: str) -> None:
     _delete(fs, P(stage))
 
 
+def current(spark: SparkSession, target: str) -> str:
+    """The directory that holds ``target``'s data as the next writer's
+    :func:`recover` would leave it, for a reader of the files a
+    whole-directory swap carries (hidden ones too): the staged copy while
+    a committed swap of the whole target has not been renamed in yet,
+    else ``target`` itself."""
+    fs, P = handle(spark, target)
+    target = target.rstrip("/")
+    return _current(fs, P, target, _journal(fs, P, _stage(target)))
+
+
+def _current(fs, P, target: str, journal: dict | None) -> str:
+    staged = f"{_stage(target)}/new"
+    whole = journal is not None and journal["parts"] is None
+    return staged if whole and fs.exists(P(staged)) else target
+
+
 def _with_parts(live: DataFrame, other: DataFrame, parts: list[str]) -> DataFrame:
     """``live`` with its ``parts`` (``name=value`` names) read from ``other``."""
     col = parts[0].split("=", 1)[0]
@@ -261,8 +302,8 @@ def read_parquet(spark: SparkSession, target: str) -> DataFrame | None:
     journal = _journal(fs, P, stage)
     read = spark.read.parquet
     if journal is not None and journal["parts"] is None:
-        if fs.exists(P(f"{stage}/new")):
-            return read(f"{stage}/new")
+        live = _current(fs, P, target, journal)
+        return read(live) if fs.exists(P(live)) else None
     elif journal is not None:
         pending = [p for p in journal["parts"] if fs.exists(P(f"{stage}/new/{p}"))]
         if pending:

@@ -279,7 +279,7 @@ def _fits_a_delta(points: DataFrame, path: str) -> bool:
         read_record(spark, path)[0] is not None
         and bool(_holds_data(spark, path))
         and int(points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        <= _split_bytes(spark)
+        <= split_bytes(spark)
     )
 
 
@@ -499,7 +499,7 @@ def _glob_escape(text: str) -> str:
     return re.sub(r"([\\{}\[\]*?])", r"\\\1", text)
 
 
-def _split_bytes(spark: SparkSession) -> int:
+def split_bytes(spark: SparkSession) -> int:
     """One scan split: ``spark.sql.files.maxPartitionBytes``."""
     return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
 
@@ -661,7 +661,7 @@ def series_summary(points: DataFrame) -> SeriesSummary | None:
     def scan(keys):
         return latest_per_key(spark.read.schema(schema).parquet(*(root.path(k) for k in sorted(keys))))
 
-    if sum(size for _, size in files) > _split_bytes(spark):
+    if sum(size for _, size in files) > split_bytes(spark):
         parts = spark.read.schema(_partial_schema(schema)).parquet(*(p for p, _ in files))
         live = spark.createDataFrame(pa.table({"file": pa.array(sorted(listed), pa.string())}))
         parts = parts.join(F.broadcast(live), "file", "left_semi")

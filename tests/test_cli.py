@@ -125,6 +125,30 @@ def test_compact_cli_refuses_a_streamed_store(spark, tmp_path, capsys):
     assert read_points(spark, path).count() == n > 0
 
 
+def test_compact_cli_folds_a_cache(spark, tmp_path, capsys):
+    """`pvarch compact` on a latest-value cache path (told from a points
+    store by its layout, with no flag) folds the cache's pending deltas
+    into its base: `read_cache` answers the same, with no delta left."""
+    from epicsarchiver_spark.streaming.ingest import read_cache, upsert_latest
+
+    cache = str(tmp_path / "cache")
+    schema = "pvname string, time double, value double"
+    upsert_latest(spark.createDataFrame([(f"C:{i}", 1.0, 1.0) for i in range(400)], schema), cache)
+    for t in (2.0, 3.0):
+        upsert_latest(spark.createDataFrame([("C:0", t, t), ("C:9", t, -t)], schema), cache)
+    assert sorted(f for f in os.listdir(f"{cache}/_delta") if not f.startswith(".")) == [
+        "1.parquet",
+        "2.parquet",
+    ]
+    before = sorted(map(tuple, read_cache(spark, cache).collect()))
+    assert ("C:9", -3.0, 3.0, 3) in before
+    capsys.readouterr()
+    assert cli.main(["--store", cache, "compact"]) == 0
+    assert "folded 2 cache delta file(s)" in capsys.readouterr().out
+    assert not os.path.exists(f"{cache}/_delta")
+    assert sorted(map(tuple, read_cache(spark, cache).collect())) == before
+
+
 def test_next_rotates_runs(spark, tmp_path, capsys):
     """pvarch next (ref pvarch.py:204-216): first call seeds the runs
     dimension; later calls close the open run and increment the name."""
@@ -372,7 +396,7 @@ def test_archive_and_cache_daemon_cli(spark, tmp_path, capsys):
             [
                 "cache_daemon", str(src),
                 "--checkpoint", str(tmp_path / "ck_c"),
-                "--cache", cache, "--buckets", "4",
+                "--cache", cache,
             ]
         )
         == 0
@@ -1594,7 +1618,7 @@ def test_index_words_refresh_from_cache_stats(spark, tmp_path, capsys):
         pd.DataFrame(base, columns=["pvname", "time", "value"])
     )
     write_points(b1, storep, run="run_001", n_buckets=4)
-    upsert_latest(b1.select("pvname", "value", "time"), cache, buckets=4)
+    upsert_latest(b1.select("pvname", "value", "time"), cache)
 
     out = str(tmp_path / "wordidx_cs")
     assert (
@@ -1611,7 +1635,7 @@ def test_index_words_refresh_from_cache_stats(spark, tmp_path, capsys):
         )
     )
     write_points(app, storep, run="run_002", n_buckets=4)
-    upsert_latest(app.select("pvname", "value", "time"), cache, buckets=4)
+    upsert_latest(app.select("pvname", "value", "time"), cache)
 
     assert (
         cli.main(["--store", storep, "index_words", "0", "2970", "30",

@@ -1,6 +1,6 @@
 """The one swap (``sources.fsio``): a checked rename, reads that land
 between any two steps of a writer's swap, a crash at every step of a
-dimension swap and of a cache merge, and the pin that keeps every
+dimension swap and of a cache delta write and fold, and the pin that keeps every
 rename and staging name inside the module."""
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import shutil
 import pytest
 
 from epicsarchiver_spark import cli
-from epicsarchiver_spark.sources import fsio
+from epicsarchiver_spark.sources import fsio, points_store
 from epicsarchiver_spark.streaming.ingest import read_cache, upsert_latest
 
 SCHEMA = "pvname string, time double, value double"
@@ -135,22 +135,28 @@ def test_a_rules_read_between_any_two_steps_sees_old_or_new_rules(spark, tmp_pat
     assert new in reads and not _nested(tmp_path)
 
 
+def _cache_base(spark, path, names):
+    """A cache whose base holds ``names`` at time 1 (batch id 0)."""
+    upsert_latest(spark.createDataFrame([(n, 1.0, 1.0) for n in names], SCHEMA), path, 0)
+
+
 def test_a_cache_read_between_any_two_steps_sees_old_or_new_rows(spark, tmp_path, monkeypatch):
-    """``read_cache`` injected before every step of a merge touching
-    several buckets changes nothing and returns the old cache or the
-    merged one; the merged buckets land whole, not nested."""
+    """``read_cache`` injected before every step of a delta write and the
+    fold it triggers changes nothing and returns the old cache or the
+    merged one; the new base lands whole, not nested."""
     cache = str(tmp_path / "cache")
     names = [f"PV{i}" for i in range(8)]
-    upsert_latest(spark.createDataFrame([(n, 1.0, 1.0) for n in names], SCHEMA), cache, buckets=4)
+    _cache_base(spark, cache, names)
     old = _cache_rows(spark, cache)
     batch = spark.createDataFrame([(n, 2.0, 2.0) for n in names[::2]], SCHEMA)
     with monkeypatch.context() as m:
+        m.setattr(points_store, "split_bytes", lambda spark: 1)  # the delta folds
         reads = _interleave(m, tmp_path, lambda: _cache_rows(spark, cache))
-        upsert_latest(batch, cache, buckets=4)
+        upsert_latest(batch, cache, 1)
     new = _cache_rows(spark, cache)
-    assert new != old and len(reads) >= 7
+    assert new != old and len(reads) >= 10
     assert all(r in (old, new) for r in reads), reads
-    assert new in reads and not _nested(cache)
+    assert old in reads and new in reads and not _nested(cache)
 
 
 def _committed(seen, step):
@@ -185,28 +191,42 @@ def test_a_dimension_swap_survives_a_crash_at_every_step(spark, tmp_path, monkey
 
 
 def test_a_cache_merge_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
-    """A crash before any step of a merge, then the stream's replay of
-    the batch: every series is in the cache once with its latest value,
-    and no staging is left."""
-    names = [f"PV{i}" for i in range(8)]
-    base = str(tmp_path / "base" / "cache")
-    upsert_latest(spark.createDataFrame([(n, 1.0, 1.0) for n in names], SCHEMA), base, buckets=4)
+    """A crash before any step of a delta write, and of a delta write
+    with the fold it triggers, then the stream's replay of the batch
+    under its id: every series is in the cache once with its latest
+    value, ``np`` counts each event once, and no staging is left."""
+    names = [f"PV{i}" for i in range(400)]  # a base well above one batch's delta
+    _cache_base(spark, str(tmp_path / "base" / "cache"), names)
     batch = spark.createDataFrame([(n, 2.0, 2.0) for n in names[::2]], SCHEMA)
-    want = sorted((n, 2.0 if i % 2 == 0 else 1.0) for i, n in enumerate(names))
-    with monkeypatch.context() as m:
-        seen = _crash_at(m, -1)
-        clean = shutil.copytree(tmp_path / "base", tmp_path / "clean")
-        upsert_latest(batch, str(clean / "cache"), buckets=4)
-    assert len(seen) >= 8  # recovery, aside, commit, two renames per bucket (2+), drop staging
-    for step in range(len(seen)):
-        cache = str(shutil.copytree(tmp_path / "base", tmp_path / f"crash{step}") / "cache")
-        with monkeypatch.context() as m:
-            _crash_at(m, step)
-            with pytest.raises(Crash):
-                upsert_latest(batch, cache, buckets=4)
-        upsert_latest(batch, cache, buckets=4)
-        assert sorted((r[0], r[1]) for r in _cache_rows(spark, cache)) == want, step
-        assert os.listdir(os.path.dirname(cache)) == ["cache"], step
+    want = sorted(
+        (n, 2.0, 2.0, 2) if i % 2 == 0 else (n, 1.0, 1.0, 1) for i, n in enumerate(names)
+    )
+    for fold, min_steps in ((False, 3), (True, 10)):
+        with monkeypatch.context() as bound:
+            if fold:  # every delta reaches the bound
+                bound.setattr(points_store, "split_bytes", lambda spark: 1)
+            with monkeypatch.context() as m:
+                seen = _crash_at(m, -1)
+                clean = shutil.copytree(tmp_path / "base", tmp_path / f"clean{fold}")
+                upsert_latest(batch, str(clean / "cache"), 1)
+            # recovery, the delta's rename and aside; the fold's
+            # watermark, journal, two renames and staging
+            assert len(seen) >= min_steps, seen
+            for step in range(len(seen)):
+                root = shutil.copytree(tmp_path / "base", tmp_path / f"crash{fold}{step}")
+                cache = str(root / "cache")
+                with monkeypatch.context() as m:
+                    _crash_at(m, step)
+                    with pytest.raises(Crash):
+                        upsert_latest(batch, cache, 1)
+                upsert_latest(batch, cache, 1)
+                assert _cache_rows(spark, cache) == want, (fold, step)
+                assert os.listdir(root) == ["cache"], (fold, step)
+                if fold:  # folded: the deltas went with the old base
+                    assert not os.path.exists(f"{cache}/_delta"), step
+                else:
+                    landed = [f for f in os.listdir(f"{cache}/_delta") if not f.startswith(".")]
+                    assert landed == ["1.parquet"], step
 
 
 def test_only_fsio_renames_or_stages():

@@ -126,23 +126,29 @@ def test_instrument_restore_pushes_membership(spark):
     assert "Join" not in plan
 
 
-def test_upsert_merge_read_prunes_cache_partitions(spark, tmp_path):
-    """The cache-merge read must carry the touched-bucket predicate as a
-    PartitionFilter — the property that makes the per-batch upsert
-    O(batch), not O(cache)."""
-    from pyspark.sql import functions as F
+def test_upsert_below_the_bound_opens_no_base_file(spark, tmp_path):
+    """A cache batch whose delta stays below the fold bound plans no read
+    of the base: with every base data file replaced by junk of the same
+    size, the upsert still lands its one delta file, while a read of
+    the cache, which does open the base, fails."""
+    import glob
+    import os
 
-    from epicsarchiver_spark.streaming.ingest import upsert_latest
+    from epicsarchiver_spark.streaming.ingest import read_cache, upsert_latest
 
     cache = str(tmp_path / "cache")
-    b = spark.createDataFrame(
-        [("A", 1.0, 1.0), ("B", 1.0, 2.0)], "pvname string, time double, value double"
-    )
-    upsert_latest(b, cache, buckets=16)
-    pruned = spark.read.parquet(cache).filter(F.col("bucket").isin([3, 7]))
-    plan = explain_str(pruned)
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "bucket" in m.group(1), plan[:1500]
+    schema = "pvname string, time double, value double"
+    upsert_latest(spark.createDataFrame([(f"PV{i}", 1.0, 1.0) for i in range(400)], schema), cache)
+    base = glob.glob(f"{cache}/*.parquet")
+    assert base
+    for path in base:
+        size = os.path.getsize(path)
+        with open(path, "wb") as fh:
+            fh.write(b"\0" * size)
+    upsert_latest(spark.createDataFrame([("PV0", 2.0, 2.0)], schema), cache)
+    assert [os.path.basename(p) for p in glob.glob(f"{cache}/_delta/*")] == ["1.parquet"]
+    with pytest.raises(Exception):
+        read_cache(spark, cache).collect()
 
 
 def test_global_shuffle_windows_per_bucket_not_globally(spark):

@@ -358,8 +358,8 @@ def test_upsert_latest_maintains_event_counts(spark, tmp_path):
     b2 = _mk_points(
         spark, [("P:1", 3.0, 12.0), ("P:3", 1.0, 7.0)]
     ).select("pvname", "value", "time")
-    upsert_latest(b1, cache, buckets=4)
-    upsert_latest(b2, cache, buckets=4)
+    upsert_latest(b1, cache)
+    upsert_latest(b2, cache)
 
     got = {r.pvname: (r.time, r.value, r.np) for r in read_cache(spark, cache).collect()}
     assert got == {
@@ -378,7 +378,7 @@ def test_upsert_latest_merges_pre_np_cache(spark, tmp_path):
 
     cache = str(tmp_path / "cache_legacy")
     legacy = _mk_points(spark, [("L:1", 1.0, 5.0)]).select("pvname", "value", "time")
-    upsert_latest(legacy, cache, buckets=4)
+    upsert_latest(legacy, cache)
     # strip np to simulate the pre-r13 layout
     import pyspark.sql.functions as SF
 
@@ -396,7 +396,7 @@ def test_upsert_latest_merges_pre_np_cache(spark, tmp_path):
     nxt = _mk_points(spark, [("L:1", 2.0, 6.0), ("L:2", 1.0, 3.0)]).select(
         "pvname", "value", "time"
     )
-    upsert_latest(nxt, cache, buckets=4)
+    upsert_latest(nxt, cache)
     got = {r.pvname: (r.time, r.np) for r in read_cache(spark, cache).collect()}
     assert got == {"L:1": (2.0, 1), "L:2": (1.0, 1)}
 
@@ -451,14 +451,14 @@ def test_stats_fed_refresh_drops_the_staleness_scan_and_matches_rebuild(
         base += [(f"S:{i}", j * 10.0, float((i + j) % 5)) for j in range(12)]
     b1 = _mk_points(spark, base)
     write_points(b1, storep, run="run_001", n_buckets=4)
-    upsert_latest(b1.select("pvname", "value", "time"), cache, buckets=4)
+    upsert_latest(b1.select("pvname", "value", "time"), cache)
 
     art = sax_words_build(read_points(spark, storep), t0, t1, step)
 
     # append: S:0 gets two new in-horizon points (stale); others move not
     app = _mk_points(spark, [("S:0", 45.0, 99.0), ("S:0", 105.0, 98.0)])
     write_points(app, storep, run="run_002", n_buckets=4)
-    upsert_latest(app.select("pvname", "value", "time"), cache, buckets=4)
+    upsert_latest(app.select("pvname", "value", "time"), cache)
 
     pts = read_points(spark, storep)
     stats = read_cache_stats(spark, cache)

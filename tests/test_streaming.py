@@ -17,6 +17,7 @@ from epicsarchiver_spark.streaming.ingest import (
     EVENT_SCHEMA,
     compressed_stream,
     latest_value_query,
+    upsert_latest,
 )
 
 DEADTIME, DEADBAND = 10.0, 0.5
@@ -356,87 +357,141 @@ def test_upsert_crash_mid_swap_recovers(spark, tmp_path):
     assert not os.path.exists(cache + ".bak")
 
 
-def _bucket_of(spark, names: list[str], buckets: int) -> dict[str, int]:
-    rows = (
-        spark.createDataFrame([(n,) for n in names], "pvname string")
-        .select(
-            "pvname",
-            F.pmod(F.xxhash64("pvname"), F.lit(buckets)).cast("int").alias("b"),
-        )
-        .collect()
-    )
-    return {r.pvname: r.b for r in rows}
-
-
-def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
-    """The 100 TB property of S14: a micro-batch touching one series must
-    not rewrite (or even reopen) bucket directories holding other series —
-    per-batch cost is O(touched buckets), not O(cache)."""
-    import glob
+def _cache_files(cache: str) -> dict[str, tuple[int, int]]:
+    """Every data file of a cache (base and deltas), with its size and
+    modification time."""
     import os
 
-    from epicsarchiver_spark.streaming.ingest import read_cache, upsert_latest
+    out = {}
+    for d, _, files in os.walk(cache):
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith("."):
+                st = os.stat(os.path.join(d, f))
+                out[os.path.relpath(os.path.join(d, f), cache)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _cache_np(spark, cache: str) -> dict:
+    from epicsarchiver_spark.streaming.ingest import read_cache
+
+    return {r.pvname: (r.time, r.value, r.np) for r in read_cache(spark, cache).collect()}
+
+
+CACHE_SCHEMA = "pvname string, time double, value double"
+
+
+def test_upsert_below_the_bound_adds_one_delta_file(spark, tmp_path):
+    """The 100 TB property of S14: a micro-batch whose delta stays below
+    the fold bound adds exactly one file and leaves every base file
+    byte-identical on disk — per-batch cost is O(batch), not O(cache)."""
+    cache = str(tmp_path / "cache")
+    names = [f"PV{i}" for i in range(400)]
+    upsert_latest(spark.createDataFrame([(n, 1.0, 10.0) for n in names], CACHE_SCHEMA), cache)
+    before = _cache_files(cache)
+    assert before and not any(p.startswith("_delta") for p in before)
+
+    b2 = spark.createDataFrame([(names[0], 2.0, 11.0)], CACHE_SCHEMA)
+    upsert_latest(b2, cache)
+    after = _cache_files(cache)
+    assert {p: after[p] for p in before} == before  # base files untouched
+    assert sorted(set(after) - set(before)) == ["_delta/1.parquet"]
+
+    got = _cache_np(spark, cache)
+    assert got[names[0]] == (2.0, 11.0, 2) and got[names[1]] == (1.0, 10.0, 1)
+    assert len(got) == len(names)
+
+
+def test_upsert_replay_keeps_np_exact(spark, tmp_path, monkeypatch):
+    """A stream replays a batch under its own id: the replay replaces the
+    batch's delta file (one file, np unchanged), and a replay of a batch
+    the base has folded (id at or below the watermark) writes nothing."""
+    from epicsarchiver_spark.sources import points_store
 
     cache = str(tmp_path / "cache")
-    # pick two keys hashing to different buckets (deterministic)
-    names = [f"PV{i}" for i in range(20)]
-    bk = _bucket_of(spark, names, 16)
-    a = names[0]
-    b = next(n for n in names if bk[n] != bk[a])
+    names = [f"PV{i}" for i in range(400)]
+    upsert_latest(spark.createDataFrame([(n, 1.0, 1.0) for n in names], CACHE_SCHEMA), cache, 0)
+    batch = spark.createDataFrame([(names[0], 2.0, 2.0), (names[0], 3.0, 3.0)], CACHE_SCHEMA)
+    upsert_latest(batch, cache, 1)
+    once = _cache_np(spark, cache)
+    assert once[names[0]] == (3.0, 3.0, 3)
+    upsert_latest(batch, cache, 1)
+    assert _cache_np(spark, cache) == once
+    assert [p for p in _cache_files(cache) if p.startswith("_delta")] == ["_delta/1.parquet"]
 
-    b1 = spark.createDataFrame(
-        [(a, 1.0, 10.0), (b, 1.0, 20.0)], "pvname string, time double, value double"
-    )
-    upsert_latest(b1, cache, buckets=16)
-    other_dir = f"{cache}/bucket={bk[b]}"
-    before = {p: os.stat(p).st_mtime_ns for p in glob.glob(other_dir + "/*")}
-    assert before, "expected bucket dir for untouched key"
-
-    b2 = spark.createDataFrame([(a, 2.0, 11.0)], "pvname string, time double, value double")
-    upsert_latest(b2, cache, buckets=16)
-    after = {p: os.stat(p).st_mtime_ns for p in glob.glob(other_dir + "/*")}
-    assert after == before  # untouched bucket files byte-identical on disk
-
-    got = {(r.pvname, r.time, r.value) for r in read_cache(spark, cache).collect()}
-    assert got == {(a, 2.0, 11.0), (b, 1.0, 20.0)}
+    with monkeypatch.context() as m:  # every delta now reaches the bound
+        m.setattr(points_store, "split_bytes", lambda spark: 1)
+        upsert_latest(batch.withColumn("time", batch.time + 10), cache, 2)
+    folded = _cache_files(cache)
+    assert not any(p.startswith("_delta") for p in folded)
+    assert _cache_np(spark, cache)[names[0]] == (13.0, 3.0, 5)
+    upsert_latest(batch.withColumn("time", batch.time + 10), cache, 2)
+    upsert_latest(batch, cache, 1)
+    assert _cache_files(cache) == folded  # nothing written
+    assert _cache_np(spark, cache)[names[0]] == (13.0, 3.0, 5)
 
 
-def test_upsert_crash_mid_bucket_swap_recovers(spark, tmp_path):
-    """Kill between the two per-bucket renames: the bucket dir sits in
-    .bak and is missing from live — a read must see it, and the next
-    upsert's recovery must move it back without touching buckets that
-    already got their merged replacement."""
+def _job_descriptions(spark) -> set[str]:
+    """The descriptions of every job the application has run."""
+    it = spark._jsc.sc().statusStore().jobsList(None).iterator()
+    out = set()
+    while it.hasNext():
+        label = it.next().description()
+        if label.isDefined():
+            out.add(label.get())
+    return out
+
+
+def test_upsert_labels_its_jobs_and_restores_the_description(spark, tmp_path, monkeypatch):
+    """The cache lane labels its jobs ("cache delta batch N", "cache fold
+    ≤N") and hands the caller's job description back afterwards."""
+    from epicsarchiver_spark.sources import points_store
+
+    sc = spark.sparkContext
+    cache = str(tmp_path / "cache")
+    batch = spark.createDataFrame([("PV:desc", 1.0, 1.0)], CACHE_SCHEMA)
+    monkeypatch.setattr(points_store, "split_bytes", lambda spark: 1)
+    sc.setJobDescription("caller's label")
+    try:
+        for i in range(2):
+            upsert_latest(batch.withColumn("time", batch.time + i), cache, 100 + i)
+            assert sc.getLocalProperty("spark.job.description") == "caller's label"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert {"cache delta batch 101", "cache fold ≤101"} <= _job_descriptions(spark)
+
+
+def test_upsert_crash_mid_fold_recovers(spark, tmp_path, monkeypatch):
+    """Kill a fold between parking the live cache and renaming the new
+    base in: a read must see the merged rows, and the next upsert's
+    recovery must finish the swap (the folded delta gone with the old
+    base) without counting the batch twice."""
     import os
-    import shutil
 
-    from epicsarchiver_spark.streaming.ingest import read_cache, upsert_latest
+    from epicsarchiver_spark.sources import fsio, points_store
 
     cache = str(tmp_path / "cache")
-    names = [f"PV{i}" for i in range(20)]
-    bk = _bucket_of(spark, names, 16)
-    a = names[0]
-    b = next(n for n in names if bk[n] != bk[a])
+    b1 = spark.createDataFrame([("A", 1.0, 10.0), ("B", 1.0, 20.0)], CACHE_SCHEMA)
+    upsert_latest(b1, cache)
+    b2 = spark.createDataFrame([("A", 2.0, 11.0)], CACHE_SCHEMA)
+    real = fsio._rename
 
-    b1 = spark.createDataFrame(
-        [(a, 1.0, 10.0), (b, 1.0, 20.0)], "pvname string, time double, value double"
-    )
-    upsert_latest(b1, cache, buckets=16)
+    def crash(fs, src, dst, replace=False):
+        if str(src).endswith("/new") and not str(dst).endswith("/new"):
+            raise RuntimeError("injected crash mid-fold")
+        return real(fs, src, dst, replace)
 
-    # simulate a crash mid-swap: bucket for `b` parked in .bak, gone from
-    # live; a stale tmp left behind
-    part = f"bucket={bk[b]}"
-    os.makedirs(cache + ".bak")
-    os.rename(f"{cache}/{part}", f"{cache}.bak/{part}")
-    shutil.copytree(cache + ".bak", cache + ".tmp")
-
-    got = {(r.pvname, r.time, r.value) for r in read_cache(spark, cache).collect()}
-    assert got == {(a, 1.0, 10.0), (b, 1.0, 20.0)}  # bucket restored
-    empty = spark.createDataFrame([], "pvname string, time double, value double")
-    upsert_latest(empty, cache, buckets=16)  # the next merge recovers
-    assert not os.path.exists(cache + ".bak")
-    assert not os.path.exists(cache + ".tmp")
-    got = {(r.pvname, r.time, r.value) for r in read_cache(spark, cache).collect()}
-    assert got == {(a, 1.0, 10.0), (b, 1.0, 20.0)}
+    with monkeypatch.context() as m:
+        m.setattr(fsio, "_rename", crash)
+        m.setattr(points_store, "split_bytes", lambda spark: 1)
+        with pytest.raises(RuntimeError, match="mid-fold"):
+            upsert_latest(b2, cache, 1)
+    assert not os.path.exists(cache)  # parked, the new base not yet in
+    want = {"A": (2.0, 11.0, 2), "B": (1.0, 20.0, 1)}
+    assert _cache_np(spark, cache) == want
+    upsert_latest(b2, cache, 1)  # the stream's replay: recovery, then nothing to add
+    assert _cache_np(spark, cache) == want
+    assert sorted(os.listdir(tmp_path)) == ["cache"]
+    assert not os.path.exists(f"{cache}/_delta")
 
 
 # ---------------------------------------------------------------------------
@@ -1153,7 +1208,7 @@ def test_upsert_jdbc_parity_with_parquet_lane(spark, tmp_path):
     """S14 JDBC lane (ref cache.py:454-462, north-star 'Structured
     Streaming + JDBC sink'): the same micro-batch sequence — including
     a replayed batch (at-least-once foreachBatch) and an out-of-order
-    late batch — must leave the Derby table and the parquet bucket-swap
+    late batch — must leave the Derby table and the parquet delta
     cache with IDENTICAL contents, each batch one transaction."""
     from epicsarchiver_spark.streaming.ingest import (
         read_cache,
