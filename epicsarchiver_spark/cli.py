@@ -2243,7 +2243,10 @@ def build_parser() -> argparse.ArgumentParser:
         "compact",
         help="fold each run's delta partition (bucket=-1) into its buckets and "
         "merge small files per (run, bucket); on a latest-value cache path, "
-        "fold its pending deltas into its base",
+        "fold its pending deltas into its base (safe beside a running cache "
+        "daemon: a delta it lands meanwhile stays pending; should the daemon "
+        "fold at the same moment, one of the two folds fails without "
+        "committing)",
     )
     s.add_argument("--runs", nargs="*", help="only these (rotated) runs; default all")
     s.add_argument("--target-mb", type=int, default=256, help="target file size")

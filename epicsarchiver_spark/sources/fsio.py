@@ -1,10 +1,11 @@
 """Every Hadoop-FS side effect of the engine, and its one crash-safe swap.
 
 The engine keeps each table it updates in place (the runs, positions,
-alert-rule, pv-catalog and bm25-state dimensions, the latest-value
-cache's base, the rollup, word-index and components artifacts, a
-compacted run of the points store) as a parquet directory, and replaces it, or some of its
-``name=value`` subdirectories (``bucket=k``, ``run=r``), by one protocol:
+alert-rule, pv-catalog and bm25-state dimensions, the rollup, word-index
+and components artifacts, a compacted run of the points store, the
+latest-value cache) as a parquet directory, and replaces it, or some of
+its ``name=value`` subdirectories (``bucket=k``, ``run=r``), by one
+protocol:
 
 1. The writer calls :func:`recover`, reads what it needs, and writes the
    new data under the target's hidden staging directory
@@ -29,8 +30,10 @@ Readers rename and delete nothing. :func:`read_parquet` reads a target as
 the next writer's recovery would leave it, so a read that lands between
 two steps of a swap, or after a crash, returns the old rows or the new
 ones. It does not drop the files a journal deletes, which only
-compaction lists, and the points store is read by
-``points_store.read_points``, which lists the store root directly.
+compactions and the cache's fold list: the points store is read by
+``points_store.read_points``, which lists the store root directly, and
+the cache by ``ingest.read_cache``, which reads its base at
+:func:`current`.
 
 A table that grows by whole files instead (the latest-value cache's
 per-batch deltas) lands each one with :func:`write_file`: written aside,
@@ -269,21 +272,28 @@ def recover(spark: SparkSession, target: str) -> None:
     _delete(fs, P(stage))
 
 
-def current(spark: SparkSession, target: str) -> str:
-    """The directory that holds ``target``'s data as the next writer's
-    :func:`recover` would leave it, for a reader of the files a
-    whole-directory swap carries (hidden ones too): the staged copy while
-    a committed swap of the whole target has not been renamed in yet,
-    else ``target`` itself."""
+def unfinished(spark: SparkSession, target: str) -> bool:
+    """Whether a committed swap of ``target`` waits for the roll-forward
+    the next writer's :func:`recover` gives it."""
+    fs, P = handle(spark, target)
+    return _journal(fs, P, _stage(target.rstrip("/"))) is not None
+
+
+def current(spark: SparkSession, target: str, part: str = "") -> str:
+    """The directory that holds ``target``'s data, or its subdirectory
+    ``part``, as the next writer's :func:`recover` would leave it, for a
+    reader of the files a swap carries (hidden ones too): the staged copy
+    while a committed swap of the whole target, or of ``part``, has not
+    been renamed in yet, else the live one."""
     fs, P = handle(spark, target)
     target = target.rstrip("/")
-    return _current(fs, P, target, _journal(fs, P, _stage(target)))
+    return _current(fs, P, target, _journal(fs, P, _stage(target)), part)
 
 
-def _current(fs, P, target: str, journal: dict | None) -> str:
-    staged = f"{_stage(target)}/new"
-    whole = journal is not None and journal["parts"] is None
-    return staged if whole and fs.exists(P(staged)) else target
+def _current(fs, P, target: str, journal: dict | None, part: str = "") -> str:
+    staged, live = (f"{d}/{part}" if part else d for d in (f"{_stage(target)}/new", target))
+    swapped = journal is not None and (journal["parts"] is None or part in journal["parts"])
+    return staged if swapped and fs.exists(P(staged)) else live
 
 
 def _with_parts(live: DataFrame, other: DataFrame, parts: list[str]) -> DataFrame:

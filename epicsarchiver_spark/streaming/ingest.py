@@ -26,8 +26,9 @@ tests/test_streaming.py with sentinel tail events).
 
 from __future__ import annotations
 
+import json
 from contextlib import contextmanager
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -406,8 +407,21 @@ def session_stream(
     )
 
 
-CACHE_DELTAS = "_delta"  # a cache's pending per-batch files, <batch id>.parquet
-CACHE_WATERMARK = "_watermark"  # the highest batch id the cache's base has folded
+# A cache's folded rows, as one partition swapped whole. Its name is an
+# earlier layout's bucket, so the cache directory still reads as one
+# parquet table (with a ``bucket`` column) and an earlier cache reads as
+# the base.
+CACHE_BASE = "bucket=0"
+CACHE_DELTAS = "_delta"  # a cache's per-batch files, <batch id>[.<writer>].parquet
+CACHE_WATERMARK = "_watermark"  # in the base: {writer: the highest batch id folded}
+
+
+class _Cache(NamedTuple):
+    """What a cache holds, as the next writer's recovery would leave it."""
+
+    base: str | None  # the base's directory; None: an earlier layout's base, or none
+    marks: dict[str, int]  # the base's watermark per writer
+    pending: dict[tuple[str, int], tuple[str, int]]  # (writer, id) above it: (path, bytes)
 
 
 @contextmanager
@@ -442,130 +456,167 @@ def _data_bytes(fs, directory) -> int:
     )
 
 
-def _cache_state(spark, cache_path: str) -> tuple[int, dict[int, tuple[str, int]]]:
-    """A cache's watermark (-1 without one) and its pending deltas, those
-    above the watermark, as {batch id: (path, bytes)}; read where
-    ``fsio.current`` says the cache's data is."""
-    live = fsio.current(spark, cache_path)
-    mark = fsio.read_text(spark, f"{live}/{CACHE_WATERMARK}")
-    mark = -1 if mark is None else int(mark)
-    fs, P = fsio.handle(spark, live)
-    deltas = P(f"{live}/{CACHE_DELTAS}")
+def _cache_state(spark, cache_path: str) -> _Cache:
+    """The cache's base (read where ``fsio.current`` says it is), its
+    watermark, and the deltas above it. A delta of writer ``w`` is
+    pending while its id is above the base's mark for ``w``."""
+    base = fsio.current(spark, cache_path, CACHE_BASE)
+    marks = fsio.read_text(spark, f"{base}/{CACHE_WATERMARK}")
+    if marks is None:
+        base, marks = None, "{}"
+    marks = json.loads(marks)
+    fs, P = fsio.handle(spark, cache_path)
+    deltas = P(f"{cache_path}/{CACHE_DELTAS}")
     pending = {}
     for st in fsio.visible(fs, deltas) if fs.exists(deltas) else []:
-        stem, _, ext = st.getPath().getName().partition(".")
-        if st.isFile() and ext == "parquet" and stem.isdigit() and int(stem) > mark:
-            pending[int(stem)] = (str(st.getPath()), st.getLen())
-    return mark, pending
+        name = st.getPath().getName()
+        stem, _, writer = name.removesuffix(".parquet").partition(".")
+        if name.endswith(".parquet") and stem.isdigit() and "." not in writer and st.isFile():
+            if int(stem) > marks.get(writer, -1):
+                pending[writer, int(stem)] = (str(st.getPath()), st.getLen())
+    return _Cache(base, marks, pending)
 
 
-def _write_base(rows: DataFrame, cache_path: str, mark: int, size: int) -> None:
+def _stage_base(rows: DataFrame, cache_path: str, marks: dict[str, int], size: int) -> None:
     """Stage ``rows`` as the cache's base, in files of at most one scan
     split for ``size`` bytes of input (an unestimated size leaves the
-    file count to Spark), with the watermark ``mark``; swap it in whole."""
+    file count to Spark), with the watermark ``marks``."""
     spark = rows.sparkSession
     files = -(-size // points_store.split_bytes(spark))
     if files <= int(spark.conf.get("spark.sql.shuffle.partitions")):
         rows = rows.coalesce(max(files, 1))
-    stage = fsio.staging(cache_path)
+    stage = f"{fsio.staging(cache_path)}/{CACHE_BASE}"
     rows.write.parquet(stage)
-    fsio.write_text(spark, f"{stage}/{CACHE_WATERMARK}", str(mark))
-    fsio.commit(spark, cache_path)
+    fsio.write_text(spark, f"{stage}/{CACHE_WATERMARK}", json.dumps(marks, sort_keys=True))
 
 
-def _fold(spark, cache_path: str, deltas: dict[int, tuple[str, int]], schema=None) -> None:
-    """Rewrite the base with ``deltas`` (all pending) merged in; the new
-    base's watermark is their highest batch id. A base of an earlier
-    layout (``bucket=k`` directories, no ``np``) is read as the base."""
-    top = max(deltas)
-    with _described(spark, f"cache fold ≤{top}"):
+def _fold(spark, cache_path: str, state: _Cache, schema=None) -> None:
+    """Rewrite the base with the ``state``'s pending deltas merged in,
+    its watermark raised to their ids, and swap it in with one
+    ``fsio.commit`` of its partition that drops exactly those deltas: a
+    delta landed since ``state`` was read stays, pending. A base of an
+    earlier layout (the cache's top level: ``bucket=k`` directories, no
+    ``np``) is read as the base, and its files go with the swap. Raises
+    instead of committing if another writer folded meanwhile: the base
+    changed since ``state``, or its recovery dropped this fold's staging."""
+    marks = dict(state.marks)
+    for writer, i in state.pending:
+        marks[writer] = max(marks.get(writer, -1), i)
+    with _described(spark, f"cache fold ≤{max(i for _, i in state.pending)}"):
         read = spark.read if schema is None else spark.read.schema(schema)
-        new = read.parquet(*(path for path, _ in deltas.values()))
-        base = spark.read.schema(new.schema).parquet(cache_path).select(
+        new = read.parquet(*(path for path, _ in state.pending.values()))
+        src = state.base or cache_path
+        base = spark.read.schema(new.schema).parquet(src).select(
             "pvname", "value", "time", F.coalesce("np", F.lit(0).cast("long")).alias("np")
         )
         fs, P = fsio.handle(spark, cache_path)
-        size = _data_bytes(fs, P(cache_path)) + sum(n for _, n in deltas.values())
-        _write_base(_latest(base.unionByName(new)), cache_path, top, size)
+        size = _data_bytes(fs, P(src)) + sum(n for _, n in state.pending.values())
+        _stage_base(_latest(base.unionByName(new)), cache_path, marks, size)
+    drop = [f"{CACHE_DELTAS}/{path.rpartition('/')[2]}" for path, _ in state.pending.values()]
+    if state.base is None:  # an earlier layout's files go, but for the part swapped in
+        names = (st.getPath().getName() for st in fsio.visible(fs, P(cache_path)))
+        drop += [name for name in names if name != CACHE_BASE]
+    staged = P(f"{fsio.staging(cache_path)}/{CACHE_BASE}")
+    if not (fs.exists(staged) and fsio.visible(fs, staged)) or (
+        _cache_state(spark, cache_path).marks != state.marks
+    ):
+        raise OSError(f"another writer folded {cache_path} during this fold")
+    fsio.commit(spark, cache_path, [CACHE_BASE], drop)
 
 
-def upsert_latest(batch: DataFrame, cache_path: str, batch_id: int | None = None) -> None:
+def upsert_latest(
+    batch: DataFrame, cache_path: str, batch_id: int | None = None, writer: str = ""
+) -> None:
     """S14 — merge a micro-batch into the latest-value cache table
     (ref epicsarchiver/cache.py:454-462's per-batch UPDATE transaction).
 
-    The cache is a base plus per-batch deltas. The batch is aggregated
-    per series (the value at the latest time, that time, the event count
-    ``np``) and lands as ONE parquet file ``_delta/<batch_id>.parquet``
-    (``fsio.write_file``: written aside, renamed in), so per-batch work
-    is O(batch): no cache file is read or rewritten. ``batch_id`` is the
-    ``foreachBatch`` id (:func:`latest_value_query`); a direct call
-    takes the next one. The first write into an absent cache lands as
-    the base instead.
+    The cache is a base (the partition ``bucket=0``) plus per-batch
+    deltas (``_delta``).
+    The batch is aggregated per series (the value at the latest time,
+    that time, the event count ``np``) and lands as ONE parquet file
+    ``_delta/<batch_id>.<writer>.parquet`` (``<batch_id>.parquet`` for
+    the default writer; ``fsio.write_file``: written aside, renamed in).
+    No base file is read or rewritten, and no staging is touched (unless
+    a crashed fold left its swap to finish), so the per-batch work is
+    O(batch + pending deltas): the deltas are listed, and summed against
+    the bound below. ``batch_id`` and ``writer`` are the ``foreachBatch``
+    id and the stream's query id (:func:`latest_value_query`); a direct
+    call takes the next id of its writer. The first write into an absent
+    cache lands as the base instead.
 
     A fold runs once the pending deltas' bytes reach the base's bytes or
     one scan split (``spark.sql.files.maxPartitionBytes``), whichever is
     smaller: it merges base and deltas into a new base of files of at
-    most one split each, staged, and swaps it in with one whole-directory
-    ``fsio.commit``, which drops the folded deltas with the old base. So
-    a read opens at most about twice the base and one split, and each
-    cached byte is rewritten about twice. The base records the highest
-    batch id it has folded (its watermark, ``_watermark``), inside the
-    swapped directory.
+    most one split each, staged, and swaps it in with one ``fsio.commit``
+    of its partition that drops the deltas it folded. So a read opens at most
+    about twice the base and one split, and each cached byte is
+    rewritten about twice. The bound counts bytes, not files: many tiny
+    deltas against a large base pile up until their bytes reach it. The
+    base records, per writer, the highest batch id it has folded (its
+    watermark, ``_watermark``), inside the swapped directory.
 
     ``np`` (VERDICT r12 task 3) is what makes the cache the O(1)
     staleness feed of ``sax_words_refresh(stats=...)``
     (:func:`read_cache_stats`), and it is exact under the stream's
-    replays: a replayed id above the watermark replaces its own delta
-    file, and one at or below it (its rows are in the base) writes
-    nothing. As with Spark's file sink, a
-    cache belongs to one stream checkpoint: a fresh checkpoint restarts
-    ids at 0 and would skip ids the base has folded. A crash at any step
-    leaves every series once, with its latest value, after the replay.
-    A cache of an earlier layout (``bucket=k`` directories, or no ``np``
-    column: counts start at 0) is read as the base, and its first fold
-    rewrites it in this layout.
+    replays: a replayed id above its writer's watermark replaces its own
+    delta file, and one at or below it (its rows are in the base) writes
+    nothing. Ids count per writer, so a stream on a fresh checkpoint
+    (a new query id, ids from 0 again) lands all its batches. A crash at
+    any step leaves every series once, with its latest value, after the
+    replay. A cache of an earlier layout (``bucket=k`` directories, or
+    no ``np`` column: counts start at 0) is read as the base, and its
+    first fold rewrites it in this layout.
 
     Each write is labelled for Spark's UI and event log ("cache delta
     batch N", "cache fold ≤N"), and the caller's job description is
     restored after."""
     spark = batch.sparkSession
-    fsio.recover(spark, cache_path)
-    mark, deltas = _cache_state(spark, cache_path)
+    state = _cache_state(spark, cache_path)
+    if state.base is None or fsio.unfinished(spark, cache_path):
+        # no base, an earlier layout's, or a crashed fold: finish its swaps
+        fsio.recover(spark, cache_path)
+        state = _cache_state(spark, cache_path)
+    mark = state.marks.get(writer, -1)
     if batch_id is None:
-        batch_id = max([mark, *deltas]) + 1
+        batch_id = max([mark, *(i for w, i in state.pending if w == writer)]) + 1
     if batch_id <= mark:
         return
     fresh = _latest(batch.select("pvname", "value", "time", F.lit(1).cast("long").alias("np")))
     with _described(spark, f"cache delta batch {batch_id}"):
-        if not fsio.exists(spark, cache_path):
+        if state.base is None and not fsio.exists(spark, cache_path):
             size = int(fresh._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            _write_base(fresh, cache_path, batch_id, size)
+            _stage_base(fresh, cache_path, {writer: batch_id}, size)
+            fsio.commit(spark, cache_path)
             return
-        path = f"{cache_path}/{CACHE_DELTAS}/{batch_id}.parquet"
-        size = fsio.write_file(spark, fresh, path)
-    if size:
-        deltas[batch_id] = (path, size)
+        name = f"{batch_id}.{writer}.parquet" if writer else f"{batch_id}.parquet"
+        size = fsio.write_file(spark, fresh, f"{cache_path}/{CACHE_DELTAS}/{name}")
+    pending = size + sum(n for k, (_, n) in state.pending.items() if k != (writer, batch_id))
     fs, P = fsio.handle(spark, cache_path)
-    bound = min(_data_bytes(fs, P(cache_path)), points_store.split_bytes(spark))
-    if deltas and sum(n for _, n in deltas.values()) >= bound:
-        _fold(spark, cache_path, deltas, fresh.schema)
+    if pending and pending >= min(
+        _data_bytes(fs, P(state.base or cache_path)), points_store.split_bytes(spark)
+    ):
+        compact_cache(spark, cache_path, fresh.schema)
 
 
-def compact_cache(spark, cache_path: str) -> int:
+def compact_cache(spark, cache_path: str, schema=None) -> int:
     """Fold a cache's pending deltas into its base now, whatever their
-    size (``pvarch compact`` on a cache); the number of deltas folded."""
+    size (``pvarch compact`` on a cache); the number of deltas folded.
+    Safe beside the cache's daemon: a delta it lands meanwhile stays
+    pending, and if it folds at the same moment one of the two folds
+    raises instead of committing."""
     fsio.recover(spark, cache_path)
-    _, deltas = _cache_state(spark, cache_path)
-    if deltas:
-        _fold(spark, cache_path, deltas)
-    return len(deltas)
+    state = _cache_state(spark, cache_path)
+    if state.pending:
+        _fold(spark, cache_path, state, schema)
+    return len(state.pending)
 
 
 def is_cache(spark, path: str) -> bool:
-    """Whether ``path`` holds a latest-value cache of this layout (a
-    watermark or delta files), not a points store."""
-    live = fsio.current(spark, path)
-    return any(fsio.exists(spark, f"{live}/{n}") for n in (CACHE_WATERMARK, CACHE_DELTAS))
+    """Whether ``path`` holds a latest-value cache of this layout (a base
+    with a watermark, or delta files), not a points store."""
+    return _cache_state(spark, path).base is not None or fsio.exists(
+        spark, f"{path}/{CACHE_DELTAS}"
+    )
 
 
 def upsert_latest_jdbc(
@@ -885,17 +936,19 @@ def latest_value_query_jdbc(
 def read_cache(spark, cache_path: str) -> DataFrame:
     """Read the latest-value cache (``pvname``, ``value``, ``time``,
     ``np``) as the next merge would find it after its recovery: the base
-    as ``fsio.read_parquet`` reads it, merged with the deltas above its
+    where ``fsio.current`` says it is (a cache of an earlier layout as
+    ``fsio.read_parquet`` reads it), merged with the deltas above its
     watermark (the value at the latest time, ``np`` summed). The read
     changes nothing."""
-    _, deltas = _cache_state(spark, cache_path)
-    base = fsio.read_parquet(spark, cache_path)
-    if base is None:
+    state = _cache_state(spark, cache_path)
+    if state.base is not None:
+        base = spark.read.parquet(state.base)
+    elif (base := fsio.read_parquet(spark, cache_path)) is None:
         raise FileNotFoundError(f"no latest-value cache at {cache_path}")
     base = base.drop("bucket")
-    if not deltas:
+    if not state.pending:
         return base
-    new = spark.read.parquet(*(path for path, _ in deltas.values()))
+    new = spark.read.parquet(*(path for path, _ in state.pending.values()))
     if "np" not in base.columns:
         base = base.withColumn("np", F.lit(0).cast("long"))
     return _latest(base.select("pvname", "value", "time", "np").unionByName(new))
@@ -930,11 +983,20 @@ def read_cache_stats(spark, cache_path: str) -> DataFrame:
 
 def latest_value_query(events: DataFrame, cache_path: str, checkpoint: str) -> Any:
     """The cache daemon as one streaming query: last-per-key upsert, one
-    delta per micro-batch keyed by its batch id (:func:`upsert_latest`)."""
+    delta per micro-batch keyed by its batch id and the query's id
+    (:func:`upsert_latest`). The query id is kept in the checkpoint: a
+    restart keeps it, so a replay replaces its own delta, and a fresh
+    checkpoint gets a new one, so its ids from 0 are not taken for
+    batches the cache has already folded."""
+
+    def merge(batch: DataFrame, batch_id: int) -> None:
+        query = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+        upsert_latest(batch, cache_path, batch_id, query)
+
     return (
         events.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda b, batch_id: upsert_latest(b, cache_path, batch_id))
+        .foreachBatch(merge)
     )
 
 

@@ -201,7 +201,7 @@ def test_a_cache_merge_survives_a_crash_at_every_step(spark, tmp_path, monkeypat
     want = sorted(
         (n, 2.0, 2.0, 2) if i % 2 == 0 else (n, 1.0, 1.0, 1) for i, n in enumerate(names)
     )
-    for fold, min_steps in ((False, 3), (True, 10)):
+    for fold, min_steps in ((False, 2), (True, 10)):
         with monkeypatch.context() as bound:
             if fold:  # every delta reaches the bound
                 bound.setattr(points_store, "split_bytes", lambda spark: 1)
@@ -209,8 +209,8 @@ def test_a_cache_merge_survives_a_crash_at_every_step(spark, tmp_path, monkeypat
                 seen = _crash_at(m, -1)
                 clean = shutil.copytree(tmp_path / "base", tmp_path / f"clean{fold}")
                 upsert_latest(batch, str(clean / "cache"), 1)
-            # recovery, the delta's rename and aside; the fold's
-            # watermark, journal, two renames and staging
+            # the delta's rename and aside; the fold's recovery,
+            # watermark, journal, two renames, dropped delta and staging
             assert len(seen) >= min_steps, seen
             for step in range(len(seen)):
                 root = shutil.copytree(tmp_path / "base", tmp_path / f"crash{fold}{step}")
@@ -222,11 +222,37 @@ def test_a_cache_merge_survives_a_crash_at_every_step(spark, tmp_path, monkeypat
                 upsert_latest(batch, cache, 1)
                 assert _cache_rows(spark, cache) == want, (fold, step)
                 assert os.listdir(root) == ["cache"], (fold, step)
-                if fold:  # folded: the deltas went with the old base
+                if fold:  # folded: the swap dropped the deltas
                     assert not os.path.exists(f"{cache}/_delta"), step
                 else:
                     landed = [f for f in os.listdir(f"{cache}/_delta") if not f.startswith(".")]
                     assert landed == ["1.parquet"], step
+
+
+def test_a_delta_landed_during_a_cache_fold_survives(spark, tmp_path, monkeypatch):
+    """``pvarch compact`` on a cache lists its pending deltas and folds
+    them; the cache's daemon lands its next batch's delta before the
+    fold commits. The fold drops only the deltas it listed: the late one
+    stays pending and every event counts once."""
+    from epicsarchiver_spark.streaming.ingest import compact_cache
+
+    cache = str(tmp_path / "cache")
+    _cache_base(spark, cache, [f"PV{i}" for i in range(400)])
+    upsert_latest(spark.createDataFrame([("PV0", 2.0, 2.0)], SCHEMA), cache, 1)
+    late = spark.createDataFrame([("PV0", 3.0, 3.0), ("PV1", 3.0, 3.0)], SCHEMA)
+    commit = fsio.commit
+
+    def land_then_commit(*args, **kw):
+        monkeypatch.setattr(fsio, "commit", commit)
+        upsert_latest(late, cache, 2)  # the daemon's next batch
+        return commit(*args, **kw)
+
+    monkeypatch.setattr(fsio, "commit", land_then_commit)
+    assert compact_cache(spark, cache) == 1
+    assert [f for f in os.listdir(f"{cache}/_delta") if not f.startswith(".")] == ["2.parquet"]
+    got = {r[0]: r[1:] for r in _cache_rows(spark, cache)}
+    assert got["PV0"] == (3.0, 3.0, 3) and got["PV1"] == (3.0, 3.0, 2)
+    assert got["PV2"] == (1.0, 1.0, 1) and len(got) == 400
 
 
 def test_only_fsio_renames_or_stages():

@@ -139,7 +139,7 @@ def test_upsert_below_the_bound_opens_no_base_file(spark, tmp_path):
     cache = str(tmp_path / "cache")
     schema = "pvname string, time double, value double"
     upsert_latest(spark.createDataFrame([(f"PV{i}", 1.0, 1.0) for i in range(400)], schema), cache)
-    base = glob.glob(f"{cache}/*.parquet")
+    base = glob.glob(f"{cache}/bucket=0/*.parquet")
     assert base
     for path in base:
         size = os.path.getsize(path)

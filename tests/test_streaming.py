@@ -461,10 +461,10 @@ def test_upsert_labels_its_jobs_and_restores_the_description(spark, tmp_path, mo
 
 
 def test_upsert_crash_mid_fold_recovers(spark, tmp_path, monkeypatch):
-    """Kill a fold between parking the live cache and renaming the new
-    base in: a read must see the merged rows, and the next upsert's
-    recovery must finish the swap (the folded delta gone with the old
-    base) without counting the batch twice."""
+    """Kill a fold between parking the live base and renaming the new
+    one in: a read must see the merged rows, and the next upsert's
+    recovery must finish the swap (dropping the folded delta) without
+    counting the batch twice."""
     import os
 
     from epicsarchiver_spark.sources import fsio, points_store
@@ -476,7 +476,7 @@ def test_upsert_crash_mid_fold_recovers(spark, tmp_path, monkeypatch):
     real = fsio._rename
 
     def crash(fs, src, dst, replace=False):
-        if str(src).endswith("/new") and not str(dst).endswith("/new"):
+        if str(src).endswith("/new/bucket=0"):
             raise RuntimeError("injected crash mid-fold")
         return real(fs, src, dst, replace)
 
@@ -485,13 +485,56 @@ def test_upsert_crash_mid_fold_recovers(spark, tmp_path, monkeypatch):
         m.setattr(points_store, "split_bytes", lambda spark: 1)
         with pytest.raises(RuntimeError, match="mid-fold"):
             upsert_latest(b2, cache, 1)
-    assert not os.path.exists(cache)  # parked, the new base not yet in
+    assert not os.path.exists(f"{cache}/bucket=0")  # parked, the new base not yet in
     want = {"A": (2.0, 11.0, 2), "B": (1.0, 20.0, 1)}
     assert _cache_np(spark, cache) == want
     upsert_latest(b2, cache, 1)  # the stream's replay: recovery, then nothing to add
     assert _cache_np(spark, cache) == want
     assert sorted(os.listdir(tmp_path)) == ["cache"]
     assert not os.path.exists(f"{cache}/_delta")
+
+
+def test_upsert_crash_mid_bucket_swap_recovers(spark, tmp_path):
+    """A cache of the earlier bucketed layout, caught by a crash between
+    the two renames of its per-bucket swap: one bucket parked in
+    ``<cache>.bak``, a stale ``.tmp`` beside it. A read must see the
+    parked bucket, and the next upsert's recovery must move it back."""
+    import os
+    import shutil
+
+    cache = str(tmp_path / "cache")
+    rows = [("A", 1.0, 10.0, 1, 3), ("B", 1.0, 20.0, 1, 5)]
+    old = spark.createDataFrame(rows, CACHE_SCHEMA + ", np long, bucket int")
+    old.write.partitionBy("bucket").parquet(cache)
+    os.makedirs(cache + ".bak")
+    os.rename(f"{cache}/bucket=5", f"{cache}.bak/bucket=5")
+    shutil.copytree(cache + ".bak", cache + ".tmp")
+
+    want = {"A": (1.0, 10.0, 1), "B": (1.0, 20.0, 1)}
+    assert _cache_np(spark, cache) == want  # the parked bucket read back
+    upsert_latest(spark.createDataFrame([("C", 2.0, 5.0)], CACHE_SCHEMA), cache)
+    assert not os.path.exists(cache + ".bak") and not os.path.exists(cache + ".tmp")
+    assert _cache_np(spark, cache) == {**want, "C": (2.0, 5.0, 1)}
+
+
+def test_cache_stream_on_a_fresh_checkpoint_lands_every_batch(spark, tmp_path):
+    """A cache seeded by a direct upsert, then fed by streams on two fresh
+    checkpoints (batch ids from 0 each time): ids count per stream query,
+    so no batch is taken for one the base has folded, and each stream's
+    events count once."""
+    cache, events = str(tmp_path / "cache"), str(tmp_path / "events")
+    upsert_latest(spark.createDataFrame([("A", 1.0, 1.0), ("B", 1.0, 2.0)], CACHE_SCHEMA), cache)
+    spark.createDataFrame([("A", 5.0, 50.0), ("C", 5.0, 7.0)], CACHE_SCHEMA).write.parquet(events)
+    for n, ckpt in enumerate(("ckpt1", "ckpt2"), 1):
+        stream = spark.readStream.schema(CACHE_SCHEMA).parquet(events)
+        q = latest_value_query(stream, cache, str(tmp_path / ckpt)).trigger(availableNow=True)
+        q = q.start()
+        q.awaitTermination(120)
+        assert _cache_np(spark, cache) == {
+            "A": (5.0, 50.0, 1 + n),
+            "B": (1.0, 2.0, 1),
+            "C": (5.0, 7.0, n),
+        }
 
 
 # ---------------------------------------------------------------------------
