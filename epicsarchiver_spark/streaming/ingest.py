@@ -570,6 +570,8 @@ def upsert_latest(
     Each write is labelled for Spark's UI and event log ("cache delta
     batch N", "cache fold ≤N"), and the caller's job description is
     restored after."""
+    if "." in writer or "/" in writer:
+        raise ValueError(f"a cache writer's name holds no '.' or '/': {writer!r}")
     spark = batch.sparkSession
     state = _cache_state(spark, cache_path)
     if state.base is None or fsio.unfinished(spark, cache_path):

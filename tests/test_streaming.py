@@ -428,6 +428,8 @@ def test_upsert_replay_keeps_np_exact(spark, tmp_path, monkeypatch):
     upsert_latest(batch, cache, 1)
     assert _cache_files(cache) == folded  # nothing written
     assert _cache_np(spark, cache)[names[0]] == (13.0, 3.0, 5)
+    with pytest.raises(ValueError, match="writer"):  # its deltas' names would not parse
+        upsert_latest(batch, cache, 3, "query.1")
 
 
 def _job_descriptions(spark) -> set[str]:
