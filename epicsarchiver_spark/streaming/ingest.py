@@ -531,11 +531,11 @@ def upsert_latest(
     (ref epicsarchiver/cache.py:454-462's per-batch UPDATE transaction).
 
     The cache is a base (the partition ``bucket=0``) plus per-batch
-    deltas (``_delta``).
-    The batch is aggregated per series (the value at the latest time,
-    that time, the event count ``np``) and lands as ONE parquet file
-    ``_delta/<batch_id>.<writer>.parquet`` (``<batch_id>.parquet`` for
-    the default writer; ``fsio.write_file``: written aside, renamed in).
+    deltas (``_delta``). The batch is aggregated per series (the value
+    at the latest time, that time, the event count ``np``) and lands as
+    ONE parquet file ``_delta/<batch_id>.<writer>.parquet``
+    (``<batch_id>.parquet`` for the default writer; ``fsio.write_file``:
+    written aside, renamed in).
     No base file is read or rewritten, and no staging is touched (unless
     a crashed fold left its swap to finish), so the per-batch work is
     O(batch + pending deltas): the deltas are listed, and summed against
@@ -548,8 +548,8 @@ def upsert_latest(
     one scan split (``spark.sql.files.maxPartitionBytes``), whichever is
     smaller: it merges base and deltas into a new base of files of at
     most one split each, staged, and swaps it in with one ``fsio.commit``
-    of its partition that drops the deltas it folded. So a read opens at most
-    about twice the base and one split, and each cached byte is
+    of its partition that drops the deltas it folded. So a read opens at
+    most about twice the base and one split, and each cached byte is
     rewritten about twice. The bound counts bytes, not files: many tiny
     deltas against a large base pile up until their bytes reach it. The
     base records, per writer, the highest batch id it has folded (its
