@@ -64,6 +64,7 @@ JDBC cache URL.
 from __future__ import annotations
 
 import argparse
+import re
 import sys
 import time
 
@@ -93,7 +94,11 @@ _CONFIG_DESTS: dict[str | None, list[tuple[str, str, object]]] = {
         ("catalog", "catalog", "./pv_catalog"),
         ("alerts_table", "table", "./alerts"),
     ],
-    "archive": [("deadtime", "deadtime", 5.0), ("deadband", "deadband", 0.0)],
+    "archive": [
+        ("deadtime", "deadtime", 5.0),
+        ("deadband", "deadband", 0.0),
+        ("runs_file", "runs_file", "./runs.parquet"),
+    ],
     "cache_daemon": [
         ("cache", "cache", "./cache"),
         ("jdbc_url", "jdbc_url", None),
@@ -104,6 +109,7 @@ _CONFIG_DESTS: dict[str | None, list[tuple[str, str, object]]] = {
     "restart": [
         ("deadtime", "deadtime", 5.0),
         ("deadband", "deadband", 0.0),
+        ("runs_file", "runs_file", "./runs.parquet"),
         ("cache", "cache", "./cache"),
         ("jdbc_url", "jdbc_url", None),
         ("dialect", "dialect", "merge"),
@@ -187,19 +193,16 @@ def cmd_activity(args) -> int:
 def cmd_list(args) -> int:
     spark = _spark("list")
     pts = _points(spark, args)
-    if "run" in pts.columns:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        rows = (
-            pts.groupBy("run")
-            .agg(F.min("time").alias("t0"), F.max("time").alias("t1"), F.count(F.lit(1)).alias("n"))
-            .orderBy("run")
-            .collect()
-        )
-        for r in rows:
-            print(f"{r.run:<20} {r.n:>10} points   {time.ctime(r.t0)} .. {time.ctime(r.t1)}")
-    else:
-        print("(store has no run partitions)")
+    rows = (
+        pts.groupBy("run")
+        .agg(F.min("time").alias("t0"), F.max("time").alias("t1"), F.count(F.lit(1)).alias("n"))
+        .orderBy("run")
+        .collect()
+    )
+    for r in rows:
+        print(f"{r.run:<20} {r.n:>10} points   {time.ctime(r.t0)} .. {time.ctime(r.t1)}")
     return 0
 
 
@@ -285,38 +288,49 @@ def _overwrite_dim(spark, df, path: str) -> None:
     fsio.commit(spark, path)
 
 
+def _current_run(runs) -> str | None:
+    """The runs dimension's current run: its OPEN row (stop_time pinned
+    at MAX_EPOCH), not a lexicographic max — "run_99999" > "run_100000"
+    as strings, so string max would re-mint run_100000 forever once the
+    counter outgrows its padding (ADVICE r3). A numeric tiebreak covers
+    dims that were hand-edited to have no open row. None without a
+    dimension, or with an empty one."""
+    from epicsarchiver_spark.operators.control import MAX_EPOCH
+
+    if runs is None:
+        return None
+
+    def _runkey(db: str):
+        m = re.search(r"(\d+)$", db)
+        return (int(m.group(1)) if m else -1, db)
+
+    rows = runs.collect()
+    open_rows = [r.db for r in rows if r.stop_time >= MAX_EPOCH]
+    return max(open_rows or [r.db for r in rows], key=_runkey, default=None)
+
+
 def cmd_next(args) -> int:
     """``pvarch next`` (ref epicsarchiver/pvarch.py:204-216 + set_runinfo
     297-306): close the current run at now, open the next one. The
     engine's rotation is pure metadata over the runs dimension — the
-    partitioned store needs no data move."""
+    partitioned store needs no data move. A running archive daemon keeps
+    appending to the run it started in until ``pvarch restart archive``
+    (the reference's ``next`` also starts a fresh archiver loop)."""
     from epicsarchiver_spark.operators.control import MAX_EPOCH, rotate_runs
+    from epicsarchiver_spark.sources.points_store import FIRST_RUN
 
     spark = _spark("next")
     now = time.time()
     runs = _open_dim(spark, args.runs_file)
-    if runs is None:
-        next_name = args.name or "run_00001"
+    current = _current_run(runs)
+    if current is None:
+        next_name = args.name or FIRST_RUN
         rotated = spark.createDataFrame(
             [(next_name, float(now), MAX_EPOCH)],
             "db string, start_time double, stop_time double",
         )
     else:
-        import re as _re
-
-        def _runkey(db: str):
-            m = _re.search(r"(\d+)$", db)
-            return (int(m.group(1)) if m else -1, db)
-
-        # current run = the OPEN row (stop_time pinned at MAX_EPOCH), not
-        # a lexicographic max — "run_99999" > "run_100000" as strings, so
-        # string max would re-mint run_100000 forever once the counter
-        # outgrows its padding (ADVICE r3). Numeric tiebreak covers dims
-        # that were hand-edited to have no open row.
-        rows = runs.collect()
-        open_rows = [r.db for r in rows if r.stop_time >= MAX_EPOCH]
-        current = max(open_rows or [r.db for r in rows], key=_runkey)
-        m = _re.search(r"(\d+)$", current)
+        m = re.search(r"(\d+)$", current)
         next_name = args.name or (
             f"{current[: m.start()]}{int(m.group(1)) + 1:0{len(m.group(1))}d}"
             if m
@@ -425,15 +439,19 @@ def cmd_add_pvfile(args) -> int:
 
 def cmd_archive(args) -> int:
     """``pvarch start`` analog: run the archiver pipeline — gate →
-    deadtime/deadband compression → bucketed parquet append — as a
+    deadtime/deadband compression → append to the store — as a
     Structured Streaming query over a parquet events directory. Default
     is a BOUNDED availableNow drain (processes everything present, then
     exits — cron-able backfill); ``--follow`` keeps the query running on
     a processing-time trigger, which is the reference daemon's shape —
     managed via the pidfile/stop-sentinel control plane (``pvarch stop
     archive`` / ``pvarch restart archive``, ref pvarch.py:196-202; the
-    checkpoint resumes exactly-once)."""
+    checkpoint resumes exactly-once). Points land in the runs
+    dimension's current run (``runs_file``; ``run_00001`` without one),
+    read when the query starts: a ``pvarch next`` takes effect at the
+    next start, e.g. ``pvarch restart archive``."""
     from epicsarchiver_spark import daemon
+    from epicsarchiver_spark.sources.points_store import FIRST_RUN
     from epicsarchiver_spark.streaming.ingest import (
         archive_query,
         compressed_stream,
@@ -447,6 +465,7 @@ def cmd_archive(args) -> int:
         )
         return 1
     spark = _spark("archive")
+    run = _current_run(fsio.read_parquet(spark, args.runs_file)) or FIRST_RUN
     # a bounded drain's input is what is there now, so size the state
     # partitions (pinned into the checkpoint) from it; a daemon's start
     # bytes say nothing of its future input, so it keeps the session's
@@ -464,6 +483,7 @@ def cmd_archive(args) -> int:
         args.store,
         args.checkpoint,
         buckets=args.buckets,
+        run=run,
     )
     q = (
         q.trigger(processingTime=f"{args.trigger_s} seconds")
@@ -471,7 +491,7 @@ def cmd_archive(args) -> int:
         else q.trigger(availableNow=True)
     ).start()
     if args.follow:
-        print(f"archiving {args.events} -> {args.store} (pvarch stop archive to stop)")
+        print(f"archiving {args.events} -> {args.store} run {run} (pvarch stop archive to stop)")
         daemon.watch(q, args.checkpoint, "archive")
     else:
         if not _drain_or_stop(q, args.timeout):
@@ -1476,7 +1496,7 @@ def cmd_land(args) -> int:
         try:
             n = spark.read.parquet(args.out).count()
         except Exception:
-            n = 0  # every doc gated out: the sink holds only _spark_metadata
+            n = 0  # every doc gated out: the sink holds only its manifest
         print(f"landed {n} curated docs -> {args.out}")
     return 0
 
@@ -1975,6 +1995,7 @@ def cmd_init(args) -> int:
     touch anything that already exists (bootstrap must never clobber a
     live store)."""
     from epicsarchiver_spark.operators.control import MAX_EPOCH
+    from epicsarchiver_spark.sources.points_store import FIRST_RUN
 
     spark = _spark("init")
     fs, P = fsio.handle(spark, args.store)
@@ -1990,7 +2011,7 @@ def cmd_init(args) -> int:
             print(f"refusing to init: {k} already exists at {v}", file=sys.stderr)
         return 1
     fs.mkdirs(P(args.store))
-    first = args.name or "run_00001"
+    first = args.name or FIRST_RUN
     spark.createDataFrame(
         [(first, float(time.time()), MAX_EPOCH)],
         "db string, start_time double, stop_time double",
@@ -2256,7 +2277,11 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("file")
     s.set_defaults(fn=cmd_add_pvfile)
 
-    s = sub.add_parser("next", help="rotate to the next run (metadata only)")
+    s = sub.add_parser(
+        "next",
+        help="rotate to the next run (metadata only; a running archive "
+        "daemon moves to it at `pvarch restart archive`)",
+    )
     s.add_argument("--runs-file", default=None, help="runs dimension path (default ./runs.parquet)")
     s.add_argument("--name", help="explicit next run name (default: increment)")
     s.set_defaults(fn=cmd_next)
@@ -2342,7 +2367,11 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--catalog", default=None, help="pv dimension parquet path (default ./pv_catalog)")
     s.set_defaults(fn=cmd_process_requests)
 
-    s = sub.add_parser("archive", help="run the archiver pipeline (pvarch start)")
+    s = sub.add_parser(
+        "archive",
+        help="run the archiver pipeline into the current run (pvarch start; "
+        "a rotation takes effect at `pvarch restart archive`)",
+    )
     s.add_argument("events", help="parquet events source directory")
     s.add_argument("--checkpoint", required=True)
     s.add_argument("--deadtime", type=float, default=None, help="default 5.0 s")

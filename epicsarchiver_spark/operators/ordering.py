@@ -1,9 +1,10 @@
 """Shared per-series ordering contract.
 
 Operators tie-break equal timestamps on ``event_id`` when the frame has
-one (the driver testdata does), but the engine's own write path —
-``points_store.write_points`` and the streaming ``archive_query`` — emits
-``(pvname, time, value, bucket, run)`` with no event_id. Hard-coding the
+one (the driver testdata does), but the engine's one write path —
+``points_store.write_points``, which the streaming ``archive_query``
+calls per micro-batch — emits ``(pvname, time, value, run, bucket)``
+with no event_id. Hard-coding the
 column would make every windowed operator fail with an unresolved-column
 AnalysisException on a store the engine itself wrote, so the tiebreak is
 derived from the frame's columns: (time, event_id) when present, else

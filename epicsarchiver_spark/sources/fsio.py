@@ -11,7 +11,8 @@ protocol:
    new data under the target's hidden staging directory
    ``<parent>/.<name>.swap``, at :func:`staging` (``.swap/new``).
 2. :func:`commit` writes a journal naming the parts being replaced (the
-   whole target, or some of its subdirectories) and any files to delete.
+   whole target, or some of its subdirectories or files) and any files
+   to delete.
    The journal is written aside and renamed into the staging directory:
    that rename is the commit point.
 3. The roll-forward parks each live part at ``.swap/old``, renames the
@@ -36,9 +37,10 @@ the cache by ``ingest.read_cache``, which reads its base at
 :func:`current`.
 
 A table that grows by whole files instead (the latest-value cache's
-per-batch deltas) lands each one with :func:`write_file`: written aside,
-then renamed onto its name, so a rewrite under the same name replaces
-the file and a crash leaves the old file or the new one.
+per-batch deltas, a points store's delta files) lands each one with
+:func:`write_file`: written aside, then renamed onto its name, so a
+rewrite under the same name replaces the file and a crash leaves the
+old file or the new one.
 
 Every rename is checked (:func:`_rename`): it raises when the source is
 missing or the destination exists. ``FileSystem.rename`` onto an existing
@@ -137,17 +139,29 @@ def write_file(spark: SparkSession, frame: DataFrame, path: str) -> int:
     its data file onto ``path``, replacing a file there. A crash leaves
     the old file or the new one, plus at most the aside directory, which
     the next write of ``path`` replaces; give ``path`` a hidden
-    directory when a reader lists its parent. 0 when the frame wrote
-    no data file (``path`` is then left as it was); otherwise the
-    file's size in bytes."""
+    directory when a reader lists its parent. 0 when the frame had no
+    rows (Spark still writes a file then; it is not renamed in, and
+    ``path`` is left as it was); otherwise the file's size in bytes."""
     fs, P = handle(spark, path)
     aside = P(f"{path}.tmp")
     frame.coalesce(1).write.mode("overwrite").parquet(str(aside))
     data = [st for st in visible(fs, aside) if st.isFile()]
-    if data:
+    size = data[0].getLen() if data and _parquet_rows(spark, data[0].getPath()) else 0
+    if size:
         _rename(fs, data[0].getPath(), P(path), bool(fs.exists(P(path))))
     _delete(fs, aside)
-    return data[0].getLen() if data else 0
+    return size
+
+
+def _parquet_rows(spark: SparkSession, path) -> int:
+    """The row count in a parquet file's footer."""
+    hadoop = spark._jvm.org.apache.parquet.hadoop
+    source = hadoop.util.HadoopInputFile.fromPath(path, spark._jsc.hadoopConfiguration())
+    reader = hadoop.ParquetFileReader.open(source)
+    try:
+        return reader.getRecordCount()
+    finally:
+        reader.close()
 
 
 def _rename(fs, src, dst, replace: bool = False) -> None:
@@ -224,9 +238,10 @@ def commit(
     drop: Sequence[str] = (),
 ) -> None:
     """Swap what is staged at :func:`staging` into ``target``: the whole
-    directory, or only its ``parts`` (``name=value`` subdirectories; one
-    the writer did not stage stays as it is). ``drop`` names files under
-    ``target`` to delete with the swap."""
+    directory, or only its ``parts`` (``name=value`` subdirectories, or
+    files such as a run's ``_watermark``; one the writer did not stage
+    stays as it is). ``drop`` names files under ``target`` to delete
+    with the swap."""
     fs, P = handle(spark, target)
     stage = _stage(target)
     if parts is not None:

@@ -7,8 +7,13 @@ dataset,
 
     points/run=<run>/bucket=<xxhash64(pvname) % N>/*.parquet
     points/run=<run>/bucket=-1/*.parquet (the run's delta partition)
+    points/run=<run>/_watermark          (per stream query: the highest batch id folded)
     points/_buckets                      (the store's record: N, data schema)
     points/_summary/*.parquet            (per-file series partials)
+
+Every writer lands this one layout: ``write_points`` (batch appends,
+imports, and the streaming archiver's micro-batches) and
+``compact_store``.
 
 - ``run`` partition column  → the reference's run rotation becomes a
   metadata no-op; time-range queries prune runs via the runs dimension
@@ -18,31 +23,33 @@ dataset,
   a single-series query scans 1/N of each run, plus the run's delta
   partition. Every file ``write_points`` writes (and ``compact_store``
   rewrites) is sorted by (pvname, time), so parquet row-group min/max
-  stats prune further and range reads are sequential. The streamed
-  store (``streaming.ingest.archive_query``) gets one file per touched
-  bucket per micro-batch, sorted by (pvname, time) at the default
-  count. Nothing compacts a streamed store yet: its files are listed in
-  the file sink's ``_spark_metadata`` manifest, so ``compact_store``
-  refuses it.
+  stats prune further and range reads are sequential.
 - ``bucket=-1`` → a run's delta partition. A small append into a
   recorded store that holds data lands as ONE file there, not one file
   per touched bucket: ``write_points`` takes this path when the write's
   plan-estimated size is at most one scan split
   (``spark.sql.files.maxPartitionBytes``), so a pruned read pays at most
-  one task's worth of bytes per pending delta. Reads prune with
+  one task's worth of bytes per pending delta. The streaming archiver
+  (``streaming.ingest.archive_query``) lands every micro-batch there
+  too, whatever its size (a large batch is one file, written by one
+  task, until a compaction folds it), named by its batch id and query
+  id, so a replayed batch replaces its own file. Reads prune with
   ``bucket IN (k, -1)`` and see delta rows with ``bucket = -1``.
   ``compact_store`` folds a run's delta files into the bucket
   directories their rows hash to, behind one commit point (a journal),
   so a crash at any step leaves every row visible exactly once after the
-  next pass.
+  next pass. The same commit raises the run's ``_watermark`` (per
+  stream query, the highest batch id folded), at or below which a
+  replayed batch writes nothing.
 - ``_buckets`` → the store's record, written once by the first write
-  into an empty or absent store (``write_points`` /
-  ``streaming.ingest.archive_query``): line 1 is N, line 2 the data
-  columns' schema as JSON (nullable, without ``run``/``bucket``). Later
-  writes with another N, or other data column names or types, are
-  refused: the first would spread one series over two buckets, the
-  second would not read back under the recorded schema. The ``_``
-  prefix keeps it out of Spark's file listing.
+  into an empty or absent store (``write_points``, or
+  ``streaming.ingest.archive_query`` before its stream starts): line 1
+  is N, line 2 the data columns' schema as JSON (nullable, without
+  ``run``/``bucket``). Later writes with another N, or other data
+  column names or types, are refused: the first would spread one
+  series over two buckets, the second would not read back under the
+  recorded schema. The ``_`` prefix keeps it out of Spark's file
+  listing.
 - ``read_points`` attaches the recorded N to the ``bucket`` column's
   metadata, and ``api.PVArchEngine`` prunes single-series reads with
   ``series_filter`` only from that recorded N: a store written before
@@ -67,14 +74,17 @@ dataset,
   the files each write adds as one file (a delta's computed on the
   driver, a bucketed write's by one Spark job); ``compact_store`` lands
   those of the files it writes, backfills every uncovered file of the
-  runs it visits, and folds the partial files it listed into one. The
-  streamed store gets none. ``series_summary`` binds partials to files,
-  never to writes: a lookup on the frame ``read_points`` returned uses
-  only the partials of the files that frame lists and scans the listed
-  files none covers, so it answers as the scan does after any crash,
-  compaction or ``prune_runs`` (a partial of a file no longer listed is
-  ignored). A frame derived from it (a filter, a select), or a store
-  without partials, scans.
+  runs it visits, and folds the partial files it listed into one.
+  ``series_summary`` binds partials to files, never to writes: a lookup
+  on the frame ``read_points`` returned uses only the partials of the
+  files that frame lists and scans the listed files none covers, so it
+  answers as the scan does after any crash, compaction or
+  ``prune_runs`` (a partial of a file no longer listed is ignored). A
+  frame derived from it (a filter, a select), or a store without
+  partials, scans.
+- A store written by the streaming file sink of earlier releases
+  (``bucket=`` at its root, its files listed in the sink's manifest) is
+  refused by every writer (``refuse_file_sink``), not migrated.
 - At cluster scale the same layout bucket-aligns the shuffle for
   per-series windows; local tests keep N small.
 """
@@ -106,6 +116,8 @@ DELTA_BUCKET = -1  # a run's delta partition: small appends, folded in by compac
 BUCKETS_FILE = "_buckets"  # the store's record (bucket count, data schema), at its root
 BUCKETS_META = "n_buckets"  # read_points' metadata key on the bucket column
 SUMMARY_DIR = "_summary"  # the store's per-file series partials, at its root
+RUN_WATERMARK = "_watermark"  # in a run: {writer: the highest batch id folded}
+FIRST_RUN = "run_00001"  # the run a fresh runs dimension opens
 PARTITION_COLS = ("run", "bucket")
 
 
@@ -213,67 +225,102 @@ def stamp_buckets(
     fsio.write_text(spark, f"{path}/{BUCKETS_FILE}", text, replace=replace)
 
 
+def refuse_file_sink(spark: SparkSession, path: str) -> None:
+    """Raise ``ValueError`` for a store the streaming file sink of earlier
+    releases wrote (a ``_spark_metadata`` manifest at its root): its
+    readers see only the files that manifest lists, so no writer may add
+    or rewrite files there. Such a store is not migrated."""
+    if fsio.exists(spark, f"{path}/_spark_metadata"):
+        raise ValueError(
+            f"store {path} was written by the streaming file sink of an earlier "
+            "release (it holds _spark_metadata, and its readers see only the "
+            "files listed there): refusing to write or compact it; archive "
+            "into a new store"
+        )
+
+
 def write_points(
     points: DataFrame,
     path: str,
     run: str | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
     mode: str = "append",
+    batch: tuple[str, int] | None = None,
 ) -> None:
     """S10/S15 — append a (pvname, time, value, ...) frame to the store.
     Adds run/bucket partition columns; every file is sorted by
     (pvname, time) for row-group stat pruning + sequential range reads.
     The first write into an empty or absent store records ``n_buckets``
     and the data columns' schema; a later write with another count or
-    other data columns raises ``ValueError``. A static overwrite
-    replaces the whole store, record included.
+    other data columns raises ``ValueError``, and so does a write into a
+    file-sink store (``refuse_file_sink``). A static overwrite replaces
+    the whole store, record included.
 
-    A small append lands as one file per run in the run's delta
-    partition (``bucket=-1``), with no shuffle, when the store records
-    its bucket count, already holds data, and the write's plan-estimated
-    size is at most one scan split (``spark.sql.files.maxPartitionBytes``):
-    a pruned single-series read then pays at most one split for each
-    pending delta. Any other write (the first into an empty store, every
-    overwrite, a larger write, or one whose size the plan cannot
-    estimate) lands bucketed, one file per touched (run, bucket).
+    An append into ``run`` lands as ONE file in the run's delta
+    partition (``bucket=-1``), with no bucket shuffle, when it is a
+    keyed batch (``batch``), or when the store records its bucket count,
+    already holds data, and the write's plan-estimated size is at most
+    one scan split (``spark.sql.files.maxPartitionBytes``): a pruned
+    single-series read then pays at most one split for each pending
+    delta. The file is written aside and renamed in (``fsio.write_file``)
+    after one exchange to a single partition, so whatever computes the
+    rows (a stream's stateful stage) keeps its parallelism. Any other
+    write (the first plain write into an empty store, every overwrite, a
+    larger write, one whose size the plan cannot estimate, or one with
+    no ``run``) lands bucketed, one file per touched (run, bucket).
     ``compact_store`` folds deltas into their buckets.
 
+    ``batch`` = (writer, batch id) — a stream's query id and micro-batch
+    id (``streaming.ingest.archive_query``) — makes the write exactly
+    once: the delta is named ``<batch id>.<writer>.parquet``, so a
+    replayed batch replaces its own file, and a batch at or below the
+    run's ``_watermark`` for its writer (folded by ``compact_store``)
+    writes nothing; its frame still runs, into Spark's ``noop`` sink, so
+    a stateful stream commits the batch. A plain delta gets a fresh
+    uuid name.
+
     Every write into a store that records its data schema then lands the
-    partials of the files it added (found by listing the directories it
-    wrote before and after) as one file under ``_summary``: a delta's on
-    the driver, a bucketed write's in one Spark job over its files."""
+    partials of the files it added as one file under ``_summary``: a
+    delta's on the driver from its one file, a bucketed write's in one
+    Spark job over the files it added (found by listing the directories
+    it wrote before and after)."""
     spark = points.sparkSession
+    refuse_file_sink(spark, path)
+    if batch is not None and (run is None or mode != "append"):
+        raise ValueError("a keyed batch is appended into one run: pass run and mode='append'")
     schema = data_schema(points.schema)
     replaces = mode == "overwrite" and (
         spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
     )
     stamp = replaces or claim_buckets(spark, path, n_buckets, schema)
-    delta = mode == "append" and _fits_a_delta(points, path)
-    landing = DELTA_BUCKET if delta else None
-    before = set() if stamp else _store_files(spark, path, run, landing)
-    bucket = F.lit(DELTA_BUCKET) if delta else bucket_of(F.col("pvname"), n_buckets)
-    out = points.withColumn("bucket", bucket)
+    if batch is not None or (run is not None and mode == "append" and _fits_a_delta(points, path)):
+        if stamp:
+            stamp_buckets(spark, path, n_buckets, schema)
+        _land_delta(points, path, run, batch)
+        return
+    before = set() if stamp else _store_files(spark, path, run)
+    out = points.withColumn("bucket", bucket_of(F.col("pvname"), n_buckets))
     if run is not None:
         out = out.withColumn("run", F.lit(run))
-    out = out.coalesce(1) if delta else out.repartition(*PARTITION_COLS)
     # the sort leads with the partition columns: the planned write needs
     # that order, and would replace a sort without it by its own
     (
-        out.sortWithinPartitions(*PARTITION_COLS, "pvname", "time")
+        out.repartition(*PARTITION_COLS)
+        .sortWithinPartitions(*PARTITION_COLS, "pvname", "time")
         .write.mode(mode)
         .partitionBy(*PARTITION_COLS)
         .parquet(path)
     )
     if stamp:
         stamp_buckets(spark, path, n_buckets, schema)
-    _summarize(spark, path, _store_files(spark, path, run, landing) - before, on_driver=delta)
+    _summarize(spark, path, _store_files(spark, path, run) - before, on_driver=False)
 
 
 def _fits_a_delta(points: DataFrame, path: str) -> bool:
-    """Whether an append of ``points`` lands in the delta partition: the
-    store records its bucket count (the fold needs it), holds data, and
-    the plan estimates the write at most one scan split (an unestimable
-    plan reports a huge size)."""
+    """Whether a plain append of ``points`` lands in the delta partition:
+    the store records its bucket count (the fold needs it), holds data,
+    and the plan estimates the write at most one scan split (an
+    unestimable plan reports a huge size)."""
     spark = points.sparkSession
     return (
         read_record(spark, path)[0] is not None
@@ -281,6 +328,60 @@ def _fits_a_delta(points: DataFrame, path: str) -> bool:
         and int(points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         <= split_bytes(spark)
     )
+
+
+def _run_part(spark: SparkSession, run: str) -> str:
+    """A run's directory name, escaped as Spark's partitioned write escapes it."""
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    return f"run={escape(run)}"
+
+
+def _land_delta(points: DataFrame, path: str, run: str, batch: tuple[str, int] | None) -> None:
+    """Land ``points`` as one sorted file in ``run``'s delta partition,
+    and its partials; a keyed ``batch`` the run has folded runs into the
+    ``noop`` sink instead."""
+    spark = points.sparkSession
+    part = _run_part(spark, run)
+    if batch is None:
+        name = f"{uuid.uuid4().hex}.parquet"
+    else:
+        writer, batch_id = batch
+        name = batch_file(writer, batch_id)
+        if batch_id <= _run_marks(spark, f"{path}/{part}").get(writer, -1):
+            points.write.format("noop").mode("overwrite").save()
+            return
+    key = f"{part}/bucket={DELTA_BUCKET}/{name}"
+    # the exchange keeps whatever computes the rows (a stream's stateful
+    # stage) parallel; write_file's own coalesce(1) would run it in one task
+    rows = points.drop(*PARTITION_COLS).repartition(1).sortWithinPartitions("pvname", "time")
+    size = fsio.write_file(spark, rows, f"{path}/{key}")
+    if size:
+        _summarize(spark, path, {key}, on_driver=size <= split_bytes(spark))
+
+
+def batch_file(writer: str, batch_id: int) -> str:
+    """The file name of ``writer``'s batch ``batch_id`` (a store's keyed
+    delta, a cache's delta): ``<batch id>.<writer>.parquet``, or
+    ``<batch id>.parquet`` for the empty writer. A writer name with '.'
+    or '/' raises ``ValueError``: ``batch_of`` could not read it back."""
+    if "." in writer or "/" in writer:
+        raise ValueError(f"a batch writer's name holds no '.' or '/': {writer!r}")
+    return f"{batch_id}.{writer}.parquet" if writer else f"{batch_id}.parquet"
+
+
+def batch_of(name: str) -> tuple[str, int] | None:
+    """(writer, batch id) of a ``batch_file`` name, else None."""
+    stem, _, writer = name.removesuffix(".parquet").partition(".")
+    if name.endswith(".parquet") and stem.isdigit() and "." not in writer:
+        return writer, int(stem)
+    return None
+
+
+def _run_marks(spark: SparkSession, run_dir: str) -> dict[str, int]:
+    """A run's watermark: {writer: the highest batch id ``compact_store``
+    folded into its buckets}, as the next writer's recovery leaves it."""
+    text = fsio.read_text(spark, fsio.current(spark, run_dir, RUN_WATERMARK))
+    return json.loads(text) if text else {}
 
 
 # Data columns then partition columns in partition-spec order — the
@@ -526,15 +627,13 @@ def _partial_schema(schema: StructType) -> StructType:
     )
 
 
-def _store_files(spark: SparkSession, path: str, run: str | None, bucket: int | None) -> set[str]:
-    """Store-relative paths of the data files under ``run=<run>/bucket=<bucket>``
-    (every run, or every bucket, for None): one glob."""
+def _store_files(spark: SparkSession, path: str, run: str | None) -> set[str]:
+    """Store-relative paths of the data files of ``run`` (every run, for
+    None): one glob."""
     fs, P = fsio.handle(spark, path)
     root = _root(spark, path)
-    if run is not None:
-        run = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(run)
-    part = "*" if run is None else _glob_escape(run)
-    pattern = f"{_glob_escape(root.hadoop)}/run={part}/bucket={'*' if bucket is None else bucket}/[^._]*"
+    part = "run=*" if run is None else _glob_escape(_run_part(spark, run))
+    pattern = f"{_glob_escape(root.hadoop)}/{part}/bucket=*/[^._]*"
     return {root.key_of(st) for st in fs.globStatus(P(pattern)) or []}
 
 
@@ -710,15 +809,15 @@ def compact_store(
     ~size/target_file_bytes, re-sorted by (pvname, time) so row-group
     min/max stats prune again. A rewritten bucket spreads its series
     over its files by pvname hash, so each series stays in one file.
-    A store written by the streaming ``archive_query`` (``bucket=`` at
-    its root, listed in the sink's ``_spark_metadata`` manifest) raises
-    ``ValueError``: its readers see only the files the manifest lists,
-    so rewriting its files without the manifest would hide them.
+    A file-sink store (``refuse_file_sink``) raises ``ValueError``.
 
     Each run's pass is one ``fsio`` swap of the buckets it rewrites,
     whose journal also lists the folded delta files, so after a crash at
     any step the next pass leaves every row visible exactly once; the
-    run's other buckets are never copied or disturbed. Staging sits
+    run's other buckets are never copied or disturbed. When it folds
+    keyed deltas (``write_points(batch=...)``) the same swap raises the
+    run's ``_watermark`` to the highest batch id it folded per writer,
+    so a replay of a folded batch writes nothing. Staging sits
     under a hidden name Spark's listing skips, but a reader that lists
     the run during the roll-forward itself (renames and deletes only)
     can see folded rows twice or a bucket missing. The pass reads and
@@ -738,13 +837,7 @@ def compact_store(
     Returns {partition: files_after} for the bucket partitions
     rewritten, and ``run=<r>/bucket=-1: 0`` for each delta partition
     folded."""
-    fs, P = fsio.handle(spark, path)
-    if fs.exists(P(f"{path}/_spark_metadata")):
-        raise ValueError(
-            f"store {path} is a streaming file-sink store (it holds "
-            "_spark_metadata): it cannot be compacted until compaction also "
-            "rewrites the sink manifest (ROADMAP: compaction of the streamed store)"
-        )
+    refuse_file_sink(spark, path)
     n_buckets, schema = read_record(spark, path)
     session = spark.newSession()
     session.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -899,10 +992,18 @@ def _compact_run(
     if not rewrite:
         return {}
     parts = [f"bucket={k}" for k in sorted(rewrite)]
+    marks = _run_marks(spark, run_dir)
+    batches = [b for b in (batch_of(name.rpartition("/")[2]) for name in deltas) if b is not None]
+    for writer, batch_id in batches:
+        marks[writer] = max(marks.get(writer, -1), batch_id)
+    if batches:  # the watermark swaps in with the fold
+        fsio.write_text(spark, f"{fsio.staging(run_dir)}/{RUN_WATERMARK}", json.dumps(marks, sort_keys=True))
+        parts.append(RUN_WATERMARK)
     fsio.commit(spark, run_dir, parts, drop=deltas)
     out = {
         f"{run}/{part}": sum(st.isFile() for st in fsio.visible(fs, P(f"{run_dir}/{part}")))
         for part in parts
+        if part != RUN_WATERMARK
     }
     if deltas:
         out[f"{run}/{delta}"] = 0

@@ -15,7 +15,9 @@ Streaming queries over one event stream:
   one delta file per micro-batch beside a parquet base, folded into it
   once the deltas grow (S14).
 - ``archive_query``       : compressed stream appended to the points
-  store (S15).
+  store's current run via ``foreachBatch``: one delta file per
+  micro-batch through ``points_store.write_points``, exactly once by
+  batch id (S15).
 
 Semantics contract: on the same finite event set, ``compressed_stream``
 output == ``operators.deadband.compress_reference`` (the executable spec);
@@ -469,11 +471,9 @@ def _cache_state(spark, cache_path: str) -> _Cache:
     deltas = P(f"{cache_path}/{CACHE_DELTAS}")
     pending = {}
     for st in fsio.visible(fs, deltas) if fs.exists(deltas) else []:
-        name = st.getPath().getName()
-        stem, _, writer = name.removesuffix(".parquet").partition(".")
-        if name.endswith(".parquet") and stem.isdigit() and "." not in writer and st.isFile():
-            if int(stem) > marks.get(writer, -1):
-                pending[writer, int(stem)] = (str(st.getPath()), st.getLen())
+        key = points_store.batch_of(st.getPath().getName())
+        if key is not None and st.isFile() and key[1] > marks.get(key[0], -1):
+            pending[key] = (str(st.getPath()), st.getLen())
     return _Cache(base, marks, pending)
 
 
@@ -570,8 +570,7 @@ def upsert_latest(
     Each write is labelled for Spark's UI and event log ("cache delta
     batch N", "cache fold ≤N"), and the caller's job description is
     restored after."""
-    if "." in writer or "/" in writer:
-        raise ValueError(f"a cache writer's name holds no '.' or '/': {writer!r}")
+    points_store.batch_file(writer, 0)  # raises for a writer name its deltas could not carry
     spark = batch.sparkSession
     state = _cache_state(spark, cache_path)
     if state.base is None or fsio.unfinished(spark, cache_path):
@@ -590,7 +589,7 @@ def upsert_latest(
             _stage_base(fresh, cache_path, {writer: batch_id}, size)
             fsio.commit(spark, cache_path)
             return
-        name = f"{batch_id}.{writer}.parquet" if writer else f"{batch_id}.parquet"
+        name = points_store.batch_file(writer, batch_id)
         size = fsio.write_file(spark, fresh, f"{cache_path}/{CACHE_DELTAS}/{name}")
     pending = size + sum(n for k, (_, n) in state.pending.items() if k != (writer, batch_id))
     fs, P = fsio.handle(spark, cache_path)
@@ -1003,43 +1002,49 @@ def latest_value_query(events: DataFrame, cache_path: str, checkpoint: str) -> A
 
 
 def archive_query(
-    compressed: DataFrame, points_path: str, checkpoint: str, buckets: int = 128
+    compressed: DataFrame,
+    points_path: str,
+    checkpoint: str,
+    buckets: int = points_store.DEFAULT_BUCKETS,
+    run: str = points_store.FIRST_RUN,
 ) -> Any:
-    """S15 — append the compressed stream to the points store, hashed into
-    series buckets (the reference's 128 pvdat tables as a partition
-    column, epicsarchiver/schema.py:21-23). An empty or absent store
-    records ``buckets`` and the data columns' schema here, before the
-    stream starts; a store that records another count or other data
-    columns raises ``ValueError``, and so does a checkpoint that holds
-    per-key fold state (:func:`fold.refuse_per_key_state`).
+    """S15 — append the compressed stream to the points store's ``run``
+    (the reference appends into the 128 pvdat tables of the current
+    run's database, epicsarchiver/schema.py:21-23), one micro-batch at a
+    time through ``points_store.write_points``: the store has one layout
+    and one writer, streamed or not.
 
-    At the default count (``buckets`` = ``fold.GROUPS``) a bucket is one
-    key group of the fold, so each bucket's rows come out of one state
-    partition in one kernel call: a micro-batch writes at most one
-    parquet file per touched bucket with no exchange beyond the fold's,
-    and every file is sorted by (``pvname``, ``time``). Another count
-    clusters the rows by ``bucket`` ahead of the file sink (one more
-    exchange, as many sink tasks as the query's shuffle-partition count,
-    which the checkpoint pins) for the same one file per touched bucket;
-    there a file holds each series' points contiguous and time-ordered,
-    not sorted by ``pvname``. The bucket exchange is stateless, so a
-    checkpoint written with or without it resumes unchanged. Nothing
-    compacts a streamed store yet (``points_store.compact_store`` refuses
-    a file-sink store; see ROADMAP)."""
+    Each batch lands as ONE file in the run's delta partition, sorted by
+    (``pvname``, ``time``) and keyed by its batch id and the stream's
+    query id (kept in the checkpoint), so a replayed batch replaces its
+    own file, and one whose delta ``points_store.compact_store`` has
+    folded writes nothing: exactly once without a sink manifest. The
+    batch reaches the file through one exchange, so the fold's stateful
+    stage keeps its tasks. ``compact_store`` folds the deltas into their
+    buckets, as it does any other append's.
+
+    An empty or absent store records ``buckets`` and the data columns'
+    schema here, before the stream starts; a store that records another
+    count or other data columns raises ``ValueError``, and so do a store
+    the file sink of earlier releases wrote
+    (``points_store.refuse_file_sink``) and a checkpoint that holds
+    per-key fold state (:func:`fold.refuse_per_key_state`). Each batch's
+    jobs are labelled "archive batch N"."""
     spark = compressed.sparkSession
     refuse_per_key_state(spark, checkpoint)
+    points_store.refuse_file_sink(spark, points_path)
     schema = points_store.data_schema(compressed.schema)
     if points_store.claim_buckets(spark, points_path, buckets, schema):
         points_store.stamp_buckets(spark, points_path, buckets, schema)
-    bucketed = compressed.withColumn(
-        "bucket", points_store.bucket_of(F.col("pvname"), buckets)
-    )
-    if buckets != GROUPS:
-        bucketed = bucketed.repartition("bucket")
+
+    def land(batch: DataFrame, batch_id: int) -> None:
+        session = batch.sparkSession
+        query = session.sparkContext.getLocalProperty("sql.streaming.queryId")
+        with _described(session, f"archive batch {batch_id}"):
+            points_store.write_points(batch, points_path, run, buckets, batch=(query, batch_id))
+
     return (
-        bucketed.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", points_path)
+        compressed.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
-        .partitionBy("bucket")
+        .foreachBatch(land)
     )

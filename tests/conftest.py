@@ -66,3 +66,34 @@ def normalize_rows(cols, rows):
         tuple(coerce(v) for v in r)
         for r in pdf.astype(object).itertuples(index=False, name=None)
     ]
+
+
+def file_sink_store(spark, root) -> str:
+    """A points store as the streaming file sink of earlier releases left
+    it: ``bucket=`` directories at its root, its three rows listed in the
+    sink's ``_spark_metadata`` manifest, and a bucket record. Returns its
+    path."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from epicsarchiver_spark.sources import points_store
+
+    src = root / "file_sink_events"
+    src.mkdir()
+    pd.DataFrame(
+        {"pvname": ["X", "Y", "X"], "time": [0.0, 50.0, 100.0], "value": [1.0, 2.0, 3.0]}
+    ).to_parquet(src / "p0.parquet", index=False)
+    stream = spark.readStream.schema("pvname string, time double, value double").parquet(str(src))
+    path = str(root / "file_sink_store")
+    points_store.stamp_buckets(spark, path, 4, points_store.data_schema(stream.schema))
+    q = (
+        stream.withColumn("bucket", points_store.bucket_of(F.col("pvname"), 4))
+        .writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", str(root / "file_sink_ckpt"))
+        .partitionBy("bucket")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120) and q.exception() is None
+    return path

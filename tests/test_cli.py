@@ -105,24 +105,54 @@ def test_compact_cli_reports_the_summary_fold(spark, tmp_path, capsys):
 
 
 def test_compact_cli_refuses_a_streamed_store(spark, tmp_path, capsys):
-    """`pvarch compact` on a store written by `pvarch archive` (a file
-    sink with a _spark_metadata manifest) exits non-zero with the reason
-    instead of reporting 0 partitions compacted; the store is intact."""
-    src = tmp_path / "events_in"
-    src.mkdir()
-    pd.DataFrame(
-        [("S:a", float(t), float(t)) for t in range(0, 400, 100)],
-        columns=["pvname", "time", "value"],
-    ).to_parquet(src / "b0.parquet", index=False)
-    path = str(tmp_path / "store")
-    argv = ["--store", path, "archive", str(src), "--checkpoint", str(tmp_path / "ck")]
-    assert cli.main([*argv, "--buckets", "4"]) == 0
-    n = read_points(spark, path).count()
+    """`pvarch compact` on a store the file sink of earlier releases
+    streamed (a _spark_metadata manifest at its root) exits non-zero with
+    the refusal instead of reporting 0 partitions compacted; the store is
+    intact."""
+    from tests.conftest import file_sink_store
+
+    path = file_sink_store(spark, tmp_path)
     capsys.readouterr()
     assert cli.main(["--store", path, "compact"]) == 1
     out, err = capsys.readouterr()
-    assert "_spark_metadata" in err and "compacted" not in out
-    assert read_points(spark, path).count() == n > 0
+    assert "written by the streaming file sink of an earlier release" in err
+    assert "compacted" not in out
+    assert read_points(spark, path).count() == 3
+
+
+def test_archive_lands_in_the_current_run(spark, tmp_path, capsys):
+    """`pvarch archive` appends to the runs dimension's open run, read
+    from the config's runs_file when it starts: after `init` and `next`
+    its points land in run_00002, and `list` shows that run; without a
+    runs dimension it appends to run_00001."""
+    src = tmp_path / "events_in"
+    src.mkdir()
+    pd.DataFrame(
+        [("R:a", float(t), float(t)) for t in range(0, 400, 100)],
+        columns=["pvname", "time", "value"],
+    ).to_parquet(src / "b0.parquet", index=False)
+    store, runs_file = str(tmp_path / "store"), str(tmp_path / "runs.parquet")
+    cfg = tmp_path / "dep.toml"
+    cfg.write_text(f'store = "{store}"\nruns_file = "{runs_file}"\n')
+    init = ["init", "--catalog", str(tmp_path / "cat"), "--table", str(tmp_path / "alerts")]
+    assert cli.main(["--config", str(cfg), *init]) == 0
+    assert cli.main(["--config", str(cfg), "next"]) == 0
+    argv = ["archive", str(src), "--checkpoint", str(tmp_path / "ck"), "--buckets", "4"]
+    assert cli.main(["--config", str(cfg), *argv]) == 0
+    assert {r.run for r in read_points(spark, store).select("run").distinct().collect()} == {
+        "run_00002"
+    }
+    capsys.readouterr()
+    assert cli.main(["--config", str(cfg), "list"]) == 0
+    assert "run_00002" in capsys.readouterr().out
+
+    bare = str(tmp_path / "bare")
+    ck = str(tmp_path / "ck_bare")
+    cfg.write_text(f'runs_file = "{tmp_path / "no_runs.parquet"}"\n')
+    assert cli.main(["--config", str(cfg), "--store", bare, "archive", str(src), "--checkpoint", ck]) == 0
+    assert {r.run for r in read_points(spark, bare).select("run").distinct().collect()} == {
+        "run_00001"
+    }
 
 
 def test_compact_cli_folds_a_cache(spark, tmp_path, capsys):

@@ -487,7 +487,8 @@ def test_write_refuses_mismatched_data_columns(spark, tmp_path):
 def test_stamped_store_without_data_reads_empty(spark, tmp_path):
     """A store stamped with a schema but holding no data file — an
     archive_query store before its first batch, and after a run with no
-    batch — reads as the canonical empty frame, in no job."""
+    batch, which leaves only the record — reads as the canonical empty
+    frame, in no job."""
     from epicsarchiver_spark.streaming.ingest import EVENT_SCHEMA, archive_query
 
     (tmp_path / "events").mkdir()
@@ -505,13 +506,14 @@ def test_stamped_store_without_data_reads_empty(spark, tmp_path):
     check()
     q = writer.trigger(availableNow=True).start()
     assert q.awaitTermination(120)
-    assert (tmp_path / "store" / "_spark_metadata").is_dir()
+    assert {p.name for p in (tmp_path / "store").iterdir()} == {"_buckets", "._buckets.crc"}
     check()
 
 
 @pytest.fixture(scope="module")
 def streamed_store(spark, tmp_path_factory):
-    """A 4-bucket store written by the archive stream (one batch)."""
+    """A 4-bucket store written by the archive stream (one batch, one
+    keyed delta in its first run)."""
     from epicsarchiver_spark.streaming.ingest import (
         EVENT_SCHEMA,
         archive_query,
@@ -535,8 +537,9 @@ def streamed_store(spark, tmp_path_factory):
 
 
 def test_streamed_store_reads_with_the_recorded_schema(spark, streamed_store):
-    """A file-sink store reads the same schema and rows with its recorded
-    schema as by inference from its manifest's files."""
+    """A streamed store reads the same schema and rows with its recorded
+    schema as by inference from its files: the store layout every writer
+    lands, runs included."""
     _, schema = read_record(spark, streamed_store)
     recorded = read_points(spark, streamed_store)
     rows = _rows(recorded)
@@ -544,18 +547,33 @@ def test_streamed_store_reads_with_the_recorded_schema(spark, streamed_store):
     try:
         inferred = read_points(spark, streamed_store)
         assert inferred.schema == recorded.schema
-        assert recorded.columns == ["pvname", "time", "value", "bucket"]
+        assert recorded.columns == ["pvname", "time", "value", "run", "bucket"]
         assert _rows(inferred) == rows
         assert [r[:3] for r in rows] == [("X", 0.0, 1.0), ("X", 100.0, 3.0), ("Y", 50.0, 2.0)]
     finally:
         _restamp(spark, streamed_store, 4, schema)
 
 
-def test_compact_refuses_a_streamed_store(spark, streamed_store):
-    """compact_store fails loudly on a file-sink store (its readers see
-    only the files its manifest lists) instead of compacting nothing."""
-    with pytest.raises(ValueError, match="_spark_metadata"):
-        compact_store(spark, streamed_store)
+def test_compact_refuses_a_streamed_store(spark, tmp_path):
+    """A store the file sink of earlier releases streamed (its readers see
+    only the files its manifest lists) is refused loudly, not migrated:
+    by compact_store, write_points and archive_query alike, and its rows
+    stay as they were."""
+    from epicsarchiver_spark.streaming.ingest import EVENT_SCHEMA, archive_query
+    from tests.conftest import file_sink_store
+
+    path = file_sink_store(spark, tmp_path)
+    rows = _rows(spark.read.parquet(path))
+    refused = "file sink of an earlier release"
+    with pytest.raises(ValueError, match=refused):
+        compact_store(spark, path)
+    with pytest.raises(ValueError, match=refused):
+        write_points(_pts(spark), path, run="r1", n_buckets=4)
+    (tmp_path / "events").mkdir()
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(tmp_path / "events"))
+    with pytest.raises(ValueError, match=refused):
+        archive_query(stream, path, str(tmp_path / "ckpt"), buckets=4)
+    assert _rows(spark.read.parquet(path)) == rows and len(rows) == 3
 
 
 def _open_jobs(spark, path):
@@ -686,6 +704,33 @@ def test_write_refuses_another_bucket_count_with_deltas_pending(spark, tmp_path)
     assert len(_files(path, "r1", -1)) == 2
 
 
+def test_a_keyed_batch_lands_once_by_batch_id(spark, tmp_path):
+    """A keyed batch lands as one delta file named by its batch id and
+    writer, even into an empty store; its replay replaces that file; a
+    batch of another writer, or a later id, lands beside it. A keyed
+    batch needs a run and an append, and a writer name without '.'."""
+    import os
+
+    path = str(tmp_path / "store")
+    write_points(_pts(spark), path, run="r1", n_buckets=4, batch=("qa", 0))
+    assert [os.path.basename(f) for f in _files(path, "r1", -1)] == ["0.qa.parquet"]
+    write_points(_pts(spark), path, run="r1", n_buckets=4, batch=("qa", 0))
+    write_points(_pts(spark, t0=100), path, run="r1", n_buckets=4, batch=("qa", 1))
+    write_points(_pts(spark, t0=200), path, run="r1", n_buckets=4, batch=("qb", 0))
+    assert sorted(os.path.basename(f) for f in _files(path, "r1", -1)) == [
+        "0.qa.parquet", "0.qb.parquet", "1.qa.parquet"
+    ]
+    assert _sorted_by_pvname_time(_files(path, "r1", -1))
+    assert _rows(read_points(spark, path).select("pvname", "time", "value")) == sorted(
+        _rows(_pts(spark)) + _rows(_pts(spark, t0=100)) + _rows(_pts(spark, t0=200))
+    )
+    for bad in (dict(run=None), dict(run="r1", mode="overwrite")):
+        with pytest.raises(ValueError, match="keyed batch"):
+            write_points(_pts(spark), path, n_buckets=4, batch=("qa", 2), **{"run": "r1", **bad})
+    with pytest.raises(ValueError, match="writer"):
+        write_points(_pts(spark), path, run="r1", n_buckets=4, batch=("q.a", 2))
+
+
 def _answers(spark, path, names):
     """What the facade answers for every PV of the store."""
     from epicsarchiver_spark.api import PVArchEngine
@@ -755,12 +800,17 @@ def _store_rows(spark, path):
 def test_fold_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
     """A crash before any rename or delete of a fold, then one more
     compact_store pass: the store holds the same rows, each once, no
-    delta and no staging."""
+    delta and no staging, and the run's watermark holds the keyed
+    delta's batch id, so a replay of that batch appends nothing."""
+    import json
     import os
     import shutil
 
     base = str(tmp_path / "base")
     _delta_store(spark, base)
+    keyed = _pts(spark, ["PV:A", "PV:G"], t0=300)
+    write_points(keyed, base, run="r1", n_buckets=4, batch=("q1", 7))
+    assert len(_files(base, "r1", -1)) == 3
     want = _store_rows(spark, base)
     n_steps = _fold_steps(spark, shutil.copytree(base, str(tmp_path / "clean")), monkeypatch)
     assert n_steps >= 8  # commit, two renames per bucket, deletes
@@ -773,8 +823,12 @@ def test_fold_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
         compact_store(spark, path)
         assert _store_rows(spark, path) == want, step
         assert not _files(path, "r1", -1)
-        left = os.listdir(f"{path}/run=r1")
+        left = set(os.listdir(f"{path}/run=r1")) - {"_watermark", "._watermark.crc"}
         assert all(n.startswith("bucket=") and n != "bucket=-1" for n in left), left
+        with open(f"{path}/run=r1/_watermark") as fh:
+            assert json.load(fh) == {"q1": 7}, step
+    write_points(keyed, path, run="r1", n_buckets=4, batch=("q1", 7))
+    assert not _files(path, "r1", -1) and _store_rows(spark, path) == want
 
 
 def test_compaction_staging_is_hidden_from_readers(spark, tmp_path, monkeypatch):
@@ -1011,7 +1065,7 @@ def test_a_crash_before_the_partial_leaves_its_file_scanned(spark, summary_store
     scan; the next compaction covers it."""
     path = _copy(summary_store, tmp_path)
     with monkeypatch.context() as m:
-        _crash_at(m, 0)  # the partial's rename: a delta append's only one
+        _crash_at(m, 2)  # the partial's rename, after the delta's rename and its aside dir's delete
         with pytest.raises(RuntimeError, match="injected crash"):
             write_points(_series(spark, ["SV:A1", "SV:D9"], 400.0, n=2), path, run="r2", n_buckets=4)
     assert len(_files(path, "r2", -1)) == 3
@@ -1056,14 +1110,27 @@ def test_a_view_of_the_frame_scans(spark, summary_store):
     assert "Scan parquet" not in explain_str(PVArchEngine(spark, pts).get_values(1e9, now=330.0))
 
 
-def test_a_streamed_store_has_no_partials(spark, streamed_store):
-    """The file-sink store (``_spark_metadata``) lands no partials, and
-    its lookups take the scan."""
+def test_a_streamed_store_has_partials_and_compacts(spark, streamed_store, tmp_path):
+    """The archive stream lands a run, a delta and its partials, so its
+    lookups answer from the partials as the scan does; compact_store
+    folds the delta into its buckets and raises the run's watermark to
+    the folded batch, with the rows and lookups unchanged."""
+    import json
     import os
 
-    assert not os.path.exists(f"{streamed_store}/_summary")
-    got = _summary_is_scan(spark, streamed_store, summarized=False)
+    (delta,) = _files(streamed_store, "run_00001", -1)
+    assert os.path.basename(delta).startswith("0.")
+    assert not _uncovered(spark, streamed_store)
+    got = _summary_is_scan(spark, streamed_store)
     assert got["get_pvnames"] == ["X", "Y"]
+    path = _copy(streamed_store, tmp_path)
+    rows = _store_rows(spark, path)
+    done = compact_store(spark, path)
+    assert done["run=run_00001/bucket=-1"] == 0 and not _files(path, "run_00001", -1)
+    assert _store_rows(spark, path) == rows
+    with open(f"{path}/run=run_00001/_watermark") as fh:
+        assert list(json.load(fh).values()) == [0]
+    assert _summary_is_scan(spark, path) == got and not _uncovered(spark, path)
 
 
 def test_a_summary_above_one_split_is_merged_by_spark(spark, summary_store):

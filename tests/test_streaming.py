@@ -931,11 +931,20 @@ def test_seeded_warm_start_continues_deadtime_window(spark, tmp_path):
     assert ("W:a", 62.0, 3.1) in got  # limbo flushed with original ts
 
 
+def _deltas(out) -> list[str]:
+    """The names of the store's delta files, every run."""
+    import glob
+    import os
+
+    return sorted(os.path.basename(f) for f in glob.glob(f"{out}/run=*/bucket=-1/*.parquet"))
+
+
 def test_archive_append_exactly_once_across_restarts(spark, tmp_path):
     """§2.9 exactly-once: re-running the archive query from its
-    checkpoint with no new source data appends NOTHING (offsets + file
-    sink transaction log make replays idempotent); adding a source file
-    and re-running appends exactly the new events once."""
+    checkpoint with no new source data appends NOTHING (the offsets say
+    the batch is done, and a replayed batch would replace its own delta
+    file, named by batch id and query id); adding a source file and
+    re-running appends exactly the new events once, as batch 1's file."""
     from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
 
     src = tmp_path / "ao_events"
@@ -960,13 +969,56 @@ def test_archive_append_exactly_once_across_restarts(spark, tmp_path):
 
     first = run_once()
     assert first == {("X", 0.0, 1.0), ("X", 50.0, 2.0), ("X", 100.0, 3.0)}
+    (delta,) = _deltas(out)
+    assert delta.startswith("0.")
     assert run_once() == first  # replay from checkpoint: no duplicates
+    assert _deltas(out) == [delta]
 
     pd.DataFrame(
         {"pvname": ["X"], "time": [200.0], "value": [4.0]}
     ).to_parquet(src / "p1.parquet", index=False)
     third = run_once()
     assert third == first | {("X", 200.0, 4.0)}  # only the new event, once
+    assert _deltas(out) == [delta, "1" + delta[1:]]
+
+
+def test_archive_replay_of_a_compacted_batch_appends_nothing(spark, tmp_path):
+    """A batch replayed after compact_store folded its delta (a crash
+    before the batch's commit, simulated by deleting its commit entry)
+    writes nothing at or below the run's watermark, still consumes the
+    batch, so the query does not fail, and appends no row."""
+    import os
+
+    from epicsarchiver_spark.sources.points_store import compact_store
+    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+
+    src = tmp_path / "rc_events"
+    src.mkdir()
+    events = _two_batch_events(src, n_pvs=20)
+    out, ckpt = str(tmp_path / "rc_points"), str(tmp_path / "rc_ckpt")
+
+    def run_once():
+        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
+        q = (
+            archive_query(
+                compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None), out, ckpt, buckets=4
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+        return _archived(spark, out)
+
+    first = run_once()
+    assert len(_deltas(out)) == 1 and set(first) == batch_spec(events)
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    assert compact_store(spark, out)["run=run_00001/bucket=-1"] == 0
+    again = run_once()
+    assert not _deltas(out)
+    assert sorted(again) == sorted(first) and len(again) == len(set(again))
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
 
 
 def _two_batch_events(src, n_pvs: int = 200) -> pd.DataFrame:
@@ -995,28 +1047,11 @@ def _archived(spark, out) -> list[tuple]:
     ]
 
 
-def _files_per_dir_per_batch(out) -> list[dict[str, int]]:
-    """From the file sink's manifest log: per committed batch, the number
-    of data files written into each partition directory."""
-    import collections
-    import json
-    import os
-
-    log = os.path.join(out, "_spark_metadata")
-    batches = []
-    for name in sorted((n for n in os.listdir(log) if n.isdigit()), key=int):
-        with open(os.path.join(log, name)) as fh:
-            paths = [json.loads(line)["path"] for line in fh.read().splitlines()[1:]]
-        batches.append(
-            collections.Counter(p.rsplit("/", 2)[-2] for p in paths)
-        )
-    return batches
-
-
-def test_archive_stream_writes_one_file_per_bucket_per_batch(spark, tmp_path):
-    """The archive sink clusters each micro-batch by bucket: at most one
-    data file per bucket directory per batch (not one per state
-    partition), and the archived rows still equal the batch spec."""
+def test_archive_stream_lands_one_file_per_batch(spark, tmp_path):
+    """The archive sink keeps the fold parallel and lands each micro-batch
+    as one data file: every batch's stateful stage runs as many tasks as
+    the checkpoint's state partitions, then one exchange feeds the single
+    write task. The archived rows still equal the batch spec."""
     import os
 
     from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
@@ -1024,128 +1059,43 @@ def test_archive_stream_writes_one_file_per_bucket_per_batch(spark, tmp_path):
     src = tmp_path / "fb_events"
     src.mkdir()
     events = _two_batch_events(src)
-    out = str(tmp_path / "fb_points")
+    out, ckpt = str(tmp_path / "fb_points"), str(tmp_path / "fb_ckpt")
+    session = spark.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", "8")
     stream = (
-        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
+        session.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
     )
     q = (
         archive_query(
-            compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
-            out, str(tmp_path / "fb_ckpt"), buckets=16,
+            compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None), out, ckpt, buckets=16
         )
         .trigger(availableNow=True)
         .start()
     )
     assert q.awaitTermination(180)
+    assert q.exception() is None
 
-    per_batch = _files_per_dir_per_batch(out)
-    assert len(per_batch) == 2
-    for counts in per_batch:
-        assert counts and max(counts.values()) == 1, counts
-    for d in os.listdir(out):
-        if d.startswith("bucket="):
-            data = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
-            assert len(data) <= 2, (d, data)
+    state_partitions = sum(n.isdigit() for n in os.listdir(os.path.join(ckpt, "state", "0")))
+    assert state_partitions == 8
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    per_batch = [
+        [st.getStageInfo(s).numTasks for s in sorted(st.getJobInfo(j).stageIds)]
+        for j in sorted(st.getJobIdsForGroup(str(q.runId)))
+    ]
+    assert len(per_batch) == 2, per_batch  # one job per batch: its write
+    for tasks in per_batch:
+        assert state_partitions in tasks and tasks[-1] == 1, tasks
+    assert [d.split(".")[0] for d in _deltas(out)] == ["0", "1"]
     got = _archived(spark, out)
     assert len(got) == len(set(got))
     assert set(got) == batch_spec(events)
 
 
-def test_archive_resumes_checkpoint_of_unclustered_writer(spark, tmp_path):
-    """A store and checkpoint written by the writer without the bucket
-    clustering (the file sink straight off the stateful stage) resume
-    under ``archive_query``: the held limbo entries of batch one flush in
-    batch two from the same state, a replay appends nothing, and no
-    point is lost or duplicated."""
-    from epicsarchiver_spark.sources import points_store
-    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
-
-    src = tmp_path / "rs_events"
-    src.mkdir()
-    events = _two_batch_events(src, n_pvs=40)
-    later = src / "b1.parquet"
-    held = tmp_path / "b1.parquet"
-    later.rename(held)
-    out, ckpt = str(tmp_path / "rs_points"), str(tmp_path / "rs_ckpt")
-
-    def unclustered_writer(compressed, buckets=16):
-        points_store.stamp_buckets(spark, out, buckets)
-        return (
-            compressed.withColumn("bucket", points_store.bucket_of(F.col("pvname"), buckets))
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .partitionBy("bucket")
-        )
-
-    def run(build):
-        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
-        q = (
-            build(compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-        assert q.exception() is None
-        return _archived(spark, out)
-
-    first = run(unclustered_writer)
-    held.rename(later)
-    resumed = run(lambda c: archive_query(c, out, ckpt, buckets=16))
-    assert len(resumed) == len(set(resumed))
-    assert set(resumed) == batch_spec(events)
-    assert set(first) < set(resumed)
-    assert sorted(run(lambda c: archive_query(c, out, ckpt, buckets=16))) == sorted(resumed)
-
-
-def _exchanges(query) -> int:
-    """Shuffle exchanges in the last micro-batch's executed plan."""
-    todo, n = [query._jsq.streamingQuery().lastExecution().executedPlan()], 0
-    while todo:
-        node = todo.pop()
-        n += node.nodeName().startswith("Exchange")
-        it = node.children().iterator()
-        while it.hasNext():
-            todo.append(it.next())
-    return n
-
-
-@pytest.mark.parametrize("buckets, exchanges", [(128, 1), (16, 2)])
-def test_archive_plan_exchanges_by_bucket_count(spark, tmp_path, buckets, exchanges):
-    """At the default count each bucket is one key group of the fold, so
-    the plan's only shuffle is the fold's; a store with another count
-    keeps its bucket repartition. Both write at most one file per
-    touched bucket per micro-batch."""
-    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
-
-    src = tmp_path / "px_events"
-    src.mkdir()
-    events = _two_batch_events(src, n_pvs=60)
-    out = str(tmp_path / "px_points")
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
-    )
-    q = (
-        archive_query(
-            compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
-            out, str(tmp_path / "px_ckpt"), buckets=buckets,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180)
-    assert _exchanges(q) == exchanges
-    per_batch = _files_per_dir_per_batch(out)
-    assert len(per_batch) == 2
-    for counts in per_batch:
-        assert counts and max(counts.values()) == 1, counts
-    assert set(_archived(spark, out)) == batch_spec(events)
-
-
 def test_archive_stream_files_sorted_by_pvname_time(spark, tmp_path):
-    """One kernel call per bucket: every parquet file the archive stream
-    writes at the default count is sorted by (pvname, time)."""
+    """Every parquet file the archive stream writes (one per batch) is
+    sorted by (pvname, time), across series."""
     import glob
     import os
 
@@ -1169,8 +1119,8 @@ def test_archive_stream_files_sorted_by_pvname_time(spark, tmp_path):
         .start()
     )
     assert q.awaitTermination(180)
-    files = glob.glob(os.path.join(out, "bucket=*", "*.parquet"))
-    assert len(files) > 100
+    files = glob.glob(os.path.join(out, "run=*", "bucket=*", "*.parquet"))
+    assert len(files) == 2
     multi = 0
     for f in files:
         t = pq.read_table(f, columns=["pvname", "time"])
@@ -1239,10 +1189,11 @@ def test_archive_refuses_per_key_checkpoint(spark, tmp_path):
     with pytest.raises(ValueError, match="per-key stream state"):
         main(["--store", out, "archive", str(src), "--checkpoint", ckpt, "--follow"])
     assert len(spark.streams.active) == active
-    # the restart path: a fresh checkpoint starts
+    # the restart path: a fresh checkpoint starts, into a new store (the
+    # per-key writer's file-sink store is refused)
     fresh = archive_query(
         compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
-        out, str(tmp_path / "pk_fresh"),
+        str(tmp_path / "pk_store"), str(tmp_path / "pk_fresh"),
     )
     q = fresh.trigger(availableNow=True).start()
     assert q.awaitTermination(120)
