@@ -1093,6 +1093,121 @@ def test_archive_stream_lands_one_file_per_batch(spark, tmp_path):
     assert set(got) == batch_spec(events)
 
 
+def _files_per_dir_per_batch(out) -> list[dict[str, int]]:
+    """From the store's keyed delta names (``points_store.batch_of``):
+    per micro-batch, the number of data files it landed in each
+    partition directory."""
+    import collections
+    import glob
+    import os
+
+    from epicsarchiver_spark.sources.points_store import batch_of
+
+    batches: dict[int, collections.Counter] = {}
+    for f in glob.glob(os.path.join(out, "run=*", "bucket=*", "*.parquet")):
+        key = batch_of(os.path.basename(f))
+        assert key is not None, f
+        batches.setdefault(key[1], collections.Counter())[os.path.dirname(f)] += 1
+    return [batches[b] for b in sorted(batches)]
+
+
+def test_archive_stream_writes_one_file_per_bucket_per_batch(spark, tmp_path):
+    """The archive sink writes at most one data file per bucket directory
+    per micro-batch: each batch lands as one file in its run's delta
+    partition, and ``compact_store`` folds the deltas into one file per
+    touched bucket. The archived rows equal the batch spec before and
+    after the fold."""
+    import os
+
+    from epicsarchiver_spark.sources.points_store import compact_store
+    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+
+    src = tmp_path / "fb_events"
+    src.mkdir()
+    events = _two_batch_events(src)
+    out = str(tmp_path / "fb_points")
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
+    )
+    q = (
+        archive_query(
+            compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
+            out, str(tmp_path / "fb_ckpt"), buckets=16,
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    assert q.exception() is None
+
+    per_batch = _files_per_dir_per_batch(out)
+    assert len(per_batch) == 2
+    for counts in per_batch:
+        assert counts and max(counts.values()) == 1, counts
+    before = _archived(spark, out)
+    assert len(before) == len(set(before)) and set(before) == batch_spec(events)
+
+    folded = compact_store(spark, out)
+    assert folded.pop("run=run_00001/bucket=-1") == 0 and not _deltas(out)
+    assert len(folded) == 16 and set(folded.values()) == {1}, folded
+    for d in os.listdir(os.path.join(out, "run=run_00001")):
+        if d.startswith("bucket="):
+            data = [
+                f for f in os.listdir(os.path.join(out, "run=run_00001", d))
+                if f.endswith(".parquet")
+            ]
+            assert len(data) == 1, (d, data)
+    assert sorted(_archived(spark, out)) == sorted(before)
+
+
+def _exchanges(query) -> int:
+    """Shuffle exchanges in the last micro-batch's executed plan."""
+    todo, n = [query._jsq.streamingQuery().lastExecution().executedPlan()], 0
+    while todo:
+        node = todo.pop()
+        n += node.nodeName().startswith("Exchange")
+        it = node.children().iterator()
+        while it.hasNext():
+            todo.append(it.next())
+    return n
+
+
+@pytest.mark.parametrize("buckets, per_trigger", [(128, 1), (16, 2)])
+def test_archive_plan_exchanges_by_bucket_count(spark, tmp_path, buckets, per_trigger):
+    """At every bucket count the stream's plan has one exchange, the
+    fold's: the sink adds no bucket repartition (the single-partition
+    exchange of ``write_points`` runs in each batch's own write job).
+    Fed ``per_trigger`` source files a trigger, the stream lands one
+    delta file per micro-batch, and the archived rows equal the spec."""
+    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+
+    src = tmp_path / "px_events"
+    src.mkdir()
+    events = _two_batch_events(src, n_pvs=60)
+    out = str(tmp_path / "px_points")
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", per_trigger)
+        .parquet(str(src))
+    )
+    q = (
+        archive_query(
+            compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
+            out, str(tmp_path / "px_ckpt"), buckets=buckets,
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    assert q.exception() is None
+    assert _exchanges(q) == 1
+    per_batch = _files_per_dir_per_batch(out)
+    assert len(per_batch) == 2 // per_trigger
+    for counts in per_batch:
+        assert sum(counts.values()) == 1, counts
+    assert set(_archived(spark, out)) == batch_spec(events)
+
+
 def test_archive_stream_files_sorted_by_pvname_time(spark, tmp_path):
     """Every parquet file the archive stream writes (one per batch) is
     sorted by (pvname, time), across series."""
