@@ -193,16 +193,19 @@ def cmd_activity(args) -> int:
 def cmd_list(args) -> int:
     spark = _spark("list")
     pts = _points(spark, args)
-    from pyspark.sql import functions as F
+    if "run" in pts.columns:
+        from pyspark.sql import functions as F
 
-    rows = (
-        pts.groupBy("run")
-        .agg(F.min("time").alias("t0"), F.max("time").alias("t1"), F.count(F.lit(1)).alias("n"))
-        .orderBy("run")
-        .collect()
-    )
-    for r in rows:
-        print(f"{r.run:<20} {r.n:>10} points   {time.ctime(r.t0)} .. {time.ctime(r.t1)}")
+        rows = (
+            pts.groupBy("run")
+            .agg(F.min("time").alias("t0"), F.max("time").alias("t1"), F.count(F.lit(1)).alias("n"))
+            .orderBy("run")
+            .collect()
+        )
+        for r in rows:
+            print(f"{r.run:<20} {r.n:>10} points   {time.ctime(r.t0)} .. {time.ctime(r.t1)}")
+    else:
+        print("(store has no run partitions)")
     return 0
 
 

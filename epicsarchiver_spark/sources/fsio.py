@@ -11,8 +11,7 @@ protocol:
    new data under the target's hidden staging directory
    ``<parent>/.<name>.swap``, at :func:`staging` (``.swap/new``).
 2. :func:`commit` writes a journal naming the parts being replaced (the
-   whole target, or some of its subdirectories or files) and any files
-   to delete.
+   whole target, or some of its subdirectories) and any files to delete.
    The journal is written aside and renamed into the staging directory:
    that rename is the commit point.
 3. The roll-forward parks each live part at ``.swap/old``, renames the
@@ -38,9 +37,9 @@ the cache by ``ingest.read_cache``, which reads its base at
 
 A table that grows by whole files instead (the latest-value cache's
 per-batch deltas, a points store's delta files) lands each one with
-:func:`write_file`: written aside, then renamed onto its name, so a
-rewrite under the same name replaces the file and a crash leaves the
-old file or the new one.
+:func:`write_files`: written aside, under a hidden name readers do not
+list, then renamed onto its name, so a rewrite under the same name
+replaces the file and a crash leaves the old file or the new one.
 
 Every rename is checked (:func:`_rename`): it raises when the source is
 missing or the destination exists. ``FileSystem.rename`` onto an existing
@@ -133,24 +132,43 @@ def write_text(spark: SparkSession, path: str, text: str, replace: bool = False)
     write_bytes(spark, path, text.encode(), replace)
 
 
-def write_file(spark: SparkSession, frame: DataFrame, path: str) -> int:
-    """Write ``frame`` as ONE parquet file at ``path``: as one partition
-    into the aside directory ``<path>.tmp``, then one checked rename of
-    its data file onto ``path``, replacing a file there. A crash leaves
-    the old file or the new one, plus at most the aside directory, which
-    the next write of ``path`` replaces; give ``path`` a hidden
-    directory when a reader lists its parent. 0 when the frame had no
-    rows (Spark still writes a file then; it is not renamed in, and
-    ``path`` is left as it was); otherwise the file's size in bytes."""
-    fs, P = handle(spark, path)
-    aside = P(f"{path}.tmp")
-    frame.coalesce(1).write.mode("overwrite").parquet(str(aside))
-    data = [st for st in visible(fs, aside) if st.isFile()]
-    size = data[0].getLen() if data and _parquet_rows(spark, data[0].getPath()) else 0
-    if size:
-        _rename(fs, data[0].getPath(), P(path), bool(fs.exists(P(path))))
+def drop_asides(spark: SparkSession, directory: str) -> None:
+    """Delete what :func:`write_files` calls that crashed left in
+    ``directory``: every aside (``.<name>.tmp``) there. Only the
+    directory's writer runs this, while it writes nothing there."""
+    fs, P = handle(spark, directory)
+    for st in fs.globStatus(P(f"{directory}/.*.tmp")) or []:
+        _delete(fs, st.getPath())
+
+
+def write_files(spark: SparkSession, frame: DataFrame, paths: Sequence[str]) -> list[int]:
+    """Write ``frame``, at most ``len(paths)`` partitions, as parquet files
+    at ``paths``: into the aside directory ``<dir>/.<name>.tmp`` of
+    ``paths[0]`` (hidden, so Spark's reader skips it when it lists
+    ``<dir>``), then one checked rename of each partition's data file,
+    in partition order, onto the next path, replacing a file there. A
+    path left without a file (its partitions held no rows) is deleted,
+    so a rewrite of the same paths replaces every file an earlier write
+    left. A crash leaves each path's old file or its new one, plus at
+    most the aside, which the next write of ``paths`` (or
+    :func:`drop_asides`) deletes. Returns each path's file size in
+    bytes, 0 where it got no file (Spark writes an empty file for a
+    frame without rows; it is not renamed in)."""
+    fs, P = handle(spark, paths[0])
+    head, sep, name = paths[0].rpartition("/")
+    aside = P(f"{head}{sep}.{name}.tmp")
+    frame.write.mode("overwrite").parquet(str(aside))
+    data = sorted((st for st in visible(fs, aside) if st.isFile()), key=lambda st: st.getPath().getName())
+    data = [st for st in data if _parquet_rows(spark, st.getPath())]
+    if len(data) > len(paths):
+        raise ValueError(f"{len(data)} data files for {len(paths)} paths")
+    for path, st in zip(paths, data):
+        _rename(fs, st.getPath(), P(path), bool(fs.exists(P(path))))
+    for path in paths[len(data):]:
+        if fs.exists(P(path)):
+            _delete(fs, P(path))
     _delete(fs, aside)
-    return size
+    return [st.getLen() for st in data] + [0] * (len(paths) - len(data))
 
 
 def _parquet_rows(spark: SparkSession, path) -> int:
@@ -238,10 +256,9 @@ def commit(
     drop: Sequence[str] = (),
 ) -> None:
     """Swap what is staged at :func:`staging` into ``target``: the whole
-    directory, or only its ``parts`` (``name=value`` subdirectories, or
-    files such as a run's ``_watermark``; one the writer did not stage
-    stays as it is). ``drop`` names files under ``target`` to delete
-    with the swap."""
+    directory, or only its ``parts`` (``name=value`` subdirectories; one
+    the writer did not stage stays as it is). ``drop`` names files under
+    ``target`` to delete with the swap."""
     fs, P = handle(spark, target)
     stage = _stage(target)
     if parts is not None:

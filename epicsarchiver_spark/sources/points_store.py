@@ -7,7 +7,6 @@ dataset,
 
     points/run=<run>/bucket=<xxhash64(pvname) % N>/*.parquet
     points/run=<run>/bucket=-1/*.parquet (the run's delta partition)
-    points/run=<run>/_watermark          (per stream query: the highest batch id folded)
     points/_buckets                      (the store's record: N, data schema)
     points/_summary/*.parquet            (per-file series partials)
 
@@ -31,16 +30,19 @@ imports, and the streaming archiver's micro-batches) and
   (``spark.sql.files.maxPartitionBytes``), so a pruned read pays at most
   one task's worth of bytes per pending delta. The streaming archiver
   (``streaming.ingest.archive_query``) lands every micro-batch there
-  too, whatever its size (a large batch is one file, written by one
-  task, until a compaction folds it), named by its batch id and query
-  id, so a replayed batch replaces its own file. Reads prune with
+  too, whatever its size (a batch above one split as one file per state
+  partition, written by the stateful stage's own tasks), named by its
+  batch id and query id, so a replayed batch replaces its own files.
+  Reads prune with
   ``bucket IN (k, -1)`` and see delta rows with ``bucket = -1``.
   ``compact_store`` folds a run's delta files into the bucket
   directories their rows hash to, behind one commit point (a journal),
   so a crash at any step leaves every row visible exactly once after the
-  next pass. The same commit raises the run's ``_watermark`` (per
-  stream query, the highest batch id folded), at or below which a
-  replayed batch writes nothing.
+  next pass. It leaves each stream query's highest batch unfolded, so
+  the one batch a restarted stream replays still finds its own file.
+  Each delta is written under a hidden aside name and renamed in
+  (``fsio.write_files``), so a reader never lists a partly landed delta;
+  ``compact_store`` deletes the asides crashed writes left.
 - ``_buckets`` → the store's record, written once by the first write
   into an empty or absent store (``write_points``, or
   ``streaming.ingest.archive_query`` before its stream starts): line 1
@@ -116,7 +118,6 @@ DELTA_BUCKET = -1  # a run's delta partition: small appends, folded in by compac
 BUCKETS_FILE = "_buckets"  # the store's record (bucket count, data schema), at its root
 BUCKETS_META = "n_buckets"  # read_points' metadata key on the bucket column
 SUMMARY_DIR = "_summary"  # the store's per-file series partials, at its root
-RUN_WATERMARK = "_watermark"  # in a run: {writer: the highest batch id folded}
 FIRST_RUN = "run_00001"  # the run a fresh runs dimension opens
 PARTITION_COLS = ("run", "bucket")
 
@@ -262,9 +263,13 @@ def write_points(
     already holds data, and the write's plan-estimated size is at most
     one scan split (``spark.sql.files.maxPartitionBytes``): a pruned
     single-series read then pays at most one split for each pending
-    delta. The file is written aside and renamed in (``fsio.write_file``)
+    delta. The file is written aside and renamed in (``fsio.write_files``)
     after one exchange to a single partition, so whatever computes the
-    rows (a stream's stateful stage) keeps its parallelism. Any other
+    rows (a stream's stateful stage) keeps its parallelism. A keyed
+    batch the plan sizes above one split instead lands one file per
+    partition of its frame, at most ``spark.sql.shuffle.partitions``,
+    with no exchange (``_batch_parts``); a crash between their renames
+    shows part of the batch until its replay. Any other
     write (the first plain write into an empty store, every overwrite, a
     larger write, one whose size the plan cannot estimate, or one with
     no ``run``) lands bucketed, one file per touched (run, bucket).
@@ -272,12 +277,12 @@ def write_points(
 
     ``batch`` = (writer, batch id) — a stream's query id and micro-batch
     id (``streaming.ingest.archive_query``) — makes the write exactly
-    once: the delta is named ``<batch id>.<writer>.parquet``, so a
-    replayed batch replaces its own file, and a batch at or below the
-    run's ``_watermark`` for its writer (folded by ``compact_store``)
-    writes nothing; its frame still runs, into Spark's ``noop`` sink, so
-    a stateful stream commits the batch. A plain delta gets a fresh
-    uuid name.
+    once: the delta is named ``<batch id>.<writer>.parquet`` (later
+    files of a large batch ``<batch id>.<writer>.<i>.parquet``), so a
+    replayed batch first deletes any file an earlier attempt left past
+    its count, then replaces its own files (``compact_store`` never folds a
+    writer's highest batch, the only one a stream replays). A plain
+    delta gets a fresh uuid name.
 
     Every write into a store that records its data schema then lands the
     partials of the files it added as one file under ``_summary``: a
@@ -337,51 +342,67 @@ def _run_part(spark: SparkSession, run: str) -> str:
 
 
 def _land_delta(points: DataFrame, path: str, run: str, batch: tuple[str, int] | None) -> None:
-    """Land ``points`` as one sorted file in ``run``'s delta partition,
-    and its partials; a keyed ``batch`` the run has folded runs into the
-    ``noop`` sink instead."""
+    """Land ``points`` in ``run``'s delta partition, and its partials: a
+    plain append as one sorted file under a fresh uuid name, a keyed
+    ``batch`` as files named by its key (``_batch_parts``)."""
     spark = points.sparkSession
-    part = _run_part(spark, run)
+    rows = points.drop(*PARTITION_COLS)
     if batch is None:
-        name = f"{uuid.uuid4().hex}.parquet"
+        names = [f"{uuid.uuid4().hex}.parquet"]
     else:
-        writer, batch_id = batch
-        name = batch_file(writer, batch_id)
-        if batch_id <= _run_marks(spark, f"{path}/{part}").get(writer, -1):
-            points.write.format("noop").mode("overwrite").save()
-            return
-    key = f"{part}/bucket={DELTA_BUCKET}/{name}"
-    # the exchange keeps whatever computes the rows (a stream's stateful
-    # stage) parallel; write_file's own coalesce(1) would run it in one task
-    rows = points.drop(*PARTITION_COLS).repartition(1).sortWithinPartitions("pvname", "time")
-    size = fsio.write_file(spark, rows, f"{path}/{key}")
-    if size:
-        _summarize(spark, path, {key}, on_driver=size <= split_bytes(spark))
+        names = [batch_file(*batch, part=i) for i in range(_batch_parts(points))]
+    # one file: the exchange keeps whatever computes the rows (a stream's
+    # stateful stage) parallel, where a coalesce would run it in one task;
+    # several: each task of that stage writes its own file, with no exchange
+    rows = rows.coalesce(len(names)) if len(names) > 1 else rows.repartition(1)
+    keys = [f"{_run_part(spark, run)}/bucket={DELTA_BUCKET}/{name}" for name in names]
+    if batch is not None:  # an earlier attempt's files past this one's count
+        fs, P = fsio.handle(spark, path)
+        pattern = _glob_escape(f"{path}/{keys[0]}".removesuffix(".parquet")) + ".*.parquet"
+        for st in fs.globStatus(P(pattern)) or []:
+            if st.getPath().getName() not in names:
+                fsio.delete(spark, str(st.getPath()))
+    sizes = fsio.write_files(
+        spark, rows.sortWithinPartitions("pvname", "time"), [f"{path}/{key}" for key in keys]
+    )
+    landed = {key for key, size in zip(keys, sizes) if size}
+    _summarize(spark, path, landed, on_driver=sum(sizes) <= split_bytes(spark))
 
 
-def batch_file(writer: str, batch_id: int) -> str:
+def _batch_parts(points: DataFrame) -> int:
+    """How many files a keyed batch may land as: one when its
+    plan-estimated size is at most one scan split, or unknown; else
+    ``spark.sql.shuffle.partitions`` (a stream's state partitions), one
+    per partition of the frame, so a large batch is written in parallel
+    with no exchange (a stream's key groups keep each series in one
+    partition, so in one file)."""
+    conf = points.sparkSession._jsparkSession.sessionState().conf()
+    size = int(points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if size <= conf.filesMaxPartitionBytes() or size >= conf.defaultSizeInBytes():
+        return 1
+    return conf.numShufflePartitions()
+
+
+def batch_file(writer: str, batch_id: int, part: int = 0) -> str:
     """The file name of ``writer``'s batch ``batch_id`` (a store's keyed
     delta, a cache's delta): ``<batch id>.<writer>.parquet``, or
-    ``<batch id>.parquet`` for the empty writer. A writer name with '.'
-    or '/' raises ``ValueError``: ``batch_of`` could not read it back."""
+    ``<batch id>.parquet`` for the empty writer, and
+    ``<batch id>.<writer>.<part>.parquet`` for a batch's later files. A
+    writer name with '.' or '/' raises ``ValueError``: ``batch_of``
+    could not read it back."""
     if "." in writer or "/" in writer:
         raise ValueError(f"a batch writer's name holds no '.' or '/': {writer!r}")
-    return f"{batch_id}.{writer}.parquet" if writer else f"{batch_id}.parquet"
+    stem = f"{batch_id}.{writer}" if writer else f"{batch_id}"
+    return f"{stem}.{part}.parquet" if part else f"{stem}.parquet"
 
 
 def batch_of(name: str) -> tuple[str, int] | None:
     """(writer, batch id) of a ``batch_file`` name, else None."""
-    stem, _, writer = name.removesuffix(".parquet").partition(".")
-    if name.endswith(".parquet") and stem.isdigit() and "." not in writer:
+    stem, _, rest = name.removesuffix(".parquet").partition(".")
+    writer, _, part = rest.partition(".")
+    if name.endswith(".parquet") and stem.isdigit() and (part == "" or part.isdigit()):
         return writer, int(stem)
     return None
-
-
-def _run_marks(spark: SparkSession, run_dir: str) -> dict[str, int]:
-    """A run's watermark: {writer: the highest batch id ``compact_store``
-    folded into its buckets}, as the next writer's recovery leaves it."""
-    text = fsio.read_text(spark, fsio.current(spark, run_dir, RUN_WATERMARK))
-    return json.loads(text) if text else {}
 
 
 # Data columns then partition columns in partition-spec order — the
@@ -814,10 +835,12 @@ def compact_store(
     Each run's pass is one ``fsio`` swap of the buckets it rewrites,
     whose journal also lists the folded delta files, so after a crash at
     any step the next pass leaves every row visible exactly once; the
-    run's other buckets are never copied or disturbed. When it folds
-    keyed deltas (``write_points(batch=...)``) the same swap raises the
-    run's ``_watermark`` to the highest batch id it folded per writer,
-    so a replay of a folded batch writes nothing. Staging sits
+    run's other buckets are never copied or disturbed. Of the keyed
+    deltas (``write_points(batch=...)``) it leaves each writer's highest
+    batch unfolded: that is the only batch a stream replays, so a replay
+    replaces its own file and never lands rows already folded. Before it
+    lists a run, the pass deletes the asides crashed delta writes left
+    there (``fsio.drop_asides``). Staging sits
     under a hidden name Spark's listing skips, but a reader that lists
     the run during the roll-forward itself (renames and deletes only)
     can see folded rows twice or a bucket missing. The pass reads and
@@ -826,7 +849,9 @@ def compact_store(
     advisory size, writing fewer files than sized for.
 
     The hot (currently-appended) run should be skipped via ``runs``:
-    compact only rotated runs, which are immutable.
+    compact only rotated runs, which are immutable. A write that lands
+    in a run while it is compacted can fail (its aside is deleted); it
+    raises, and its retry or replay lands it once.
 
     The pass keeps the summary (``_summary``) proportional to the live
     files: before a run's commit it lands the partials of the files it
@@ -835,8 +860,8 @@ def compact_store(
     file the pass listed into it (``_Fold``).
 
     Returns {partition: files_after} for the bucket partitions
-    rewritten, and ``run=<r>/bucket=-1: 0`` for each delta partition
-    folded."""
+    rewritten, and ``run=<r>/bucket=-1: n`` for each delta partition
+    folded, ``n`` the keyed deltas left in it."""
     refuse_file_sink(spark, path)
     n_buckets, schema = read_record(spark, path)
     session = spark.newSession()
@@ -845,6 +870,7 @@ def compact_store(
     listings = {}
     for run in visited:
         fsio.recover(spark, f"{path}/run={run}")
+        fsio.drop_asides(spark, f"{path}/run={run}/bucket={DELTA_BUCKET}")
         listings[run] = _run_files(spark, f"{path}/run={run}")
     fold = _Fold(session, path, schema, listings) if _summarizable(schema) else None
     result: dict[str, int] = {}
@@ -943,7 +969,9 @@ def _compact_run(
     run = run_dir.rsplit("/", 1)[1]
     files = dict(files)
     delta = f"bucket={DELTA_BUCKET}"
-    deltas = [f"{delta}/{st.getPath().getName()}" for st in files.pop(DELTA_BUCKET, [])]
+    pending = [st.getPath().getName() for st in files.pop(DELTA_BUCKET, [])]
+    kept = _last_batches(pending)
+    deltas = [f"{delta}/{name}" for name in pending if name not in kept]
     ways = {
         k: max(1, -(-sum(st.getLen() for st in fl) // target_file_bytes))
         for k, fl in files.items()
@@ -992,22 +1020,27 @@ def _compact_run(
     if not rewrite:
         return {}
     parts = [f"bucket={k}" for k in sorted(rewrite)]
-    marks = _run_marks(spark, run_dir)
-    batches = [b for b in (batch_of(name.rpartition("/")[2]) for name in deltas) if b is not None]
-    for writer, batch_id in batches:
-        marks[writer] = max(marks.get(writer, -1), batch_id)
-    if batches:  # the watermark swaps in with the fold
-        fsio.write_text(spark, f"{fsio.staging(run_dir)}/{RUN_WATERMARK}", json.dumps(marks, sort_keys=True))
-        parts.append(RUN_WATERMARK)
     fsio.commit(spark, run_dir, parts, drop=deltas)
     out = {
         f"{run}/{part}": sum(st.isFile() for st in fsio.visible(fs, P(f"{run_dir}/{part}")))
         for part in parts
-        if part != RUN_WATERMARK
     }
     if deltas:
-        out[f"{run}/{delta}"] = 0
+        out[f"{run}/{delta}"] = len(kept)
     return out
+
+
+def _last_batches(names: list[str]) -> set[str]:
+    """Of a run's delta file names, the files of each writer's highest
+    keyed batch (``batch_of``): ``compact_store`` leaves them unfolded,
+    so a stream that replays its last batch after a crash (the only
+    batch Structured Streaming replays) finds the batch's own files and
+    replaces them."""
+    keys = {name: batch_of(name) for name in names}
+    last: dict[str, int] = {}
+    for key in filter(None, keys.values()):
+        last[key[0]] = max(last.get(key[0], -1), key[1])
+    return {name for name, key in keys.items() if key is not None and last[key[0]] == key[1]}
 
 
 def range_read_store(

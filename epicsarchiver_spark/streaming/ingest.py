@@ -534,7 +534,7 @@ def upsert_latest(
     deltas (``_delta``). The batch is aggregated per series (the value
     at the latest time, that time, the event count ``np``) and lands as
     ONE parquet file ``_delta/<batch_id>.<writer>.parquet``
-    (``<batch_id>.parquet`` for the default writer; ``fsio.write_file``:
+    (``<batch_id>.parquet`` for the default writer; ``fsio.write_files``:
     written aside, renamed in).
     No base file is read or rewritten, and no staging is touched (unless
     a crashed fold left its swap to finish), so the per-batch work is
@@ -590,7 +590,7 @@ def upsert_latest(
             fsio.commit(spark, cache_path)
             return
         name = points_store.batch_file(writer, batch_id)
-        size = fsio.write_file(spark, fresh, f"{cache_path}/{CACHE_DELTAS}/{name}")
+        (size,) = fsio.write_files(spark, fresh.coalesce(1), [f"{cache_path}/{CACHE_DELTAS}/{name}"])
     pending = size + sum(n for k, (_, n) in state.pending.items() if k != (writer, batch_id))
     fs, P = fsio.handle(spark, cache_path)
     if pending and pending >= min(
@@ -1017,11 +1017,13 @@ def archive_query(
     Each batch lands as ONE file in the run's delta partition, sorted by
     (``pvname``, ``time``) and keyed by its batch id and the stream's
     query id (kept in the checkpoint), so a replayed batch replaces its
-    own file, and one whose delta ``points_store.compact_store`` has
-    folded writes nothing: exactly once without a sink manifest. The
-    batch reaches the file through one exchange, so the fold's stateful
-    stage keeps its tasks. ``compact_store`` folds the deltas into their
-    buckets, as it does any other append's.
+    own file: exactly once without a sink manifest. The batch reaches
+    the file through one exchange, so the fold's stateful stage keeps
+    its tasks; a batch above one scan split (a backfill's drain) lands
+    one file per state partition instead, each written by that stage's
+    own task. ``points_store.compact_store`` folds the deltas into
+    their buckets, as it does any other append's, but for the stream's
+    last batch, the one a restart replays.
 
     An empty or absent store records ``buckets`` and the data columns'
     schema here, before the stream starts; a store that records another

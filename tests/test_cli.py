@@ -108,7 +108,7 @@ def test_compact_cli_refuses_a_streamed_store(spark, tmp_path, capsys):
     """`pvarch compact` on a store the file sink of earlier releases
     streamed (a _spark_metadata manifest at its root) exits non-zero with
     the refusal instead of reporting 0 partitions compacted; the store is
-    intact."""
+    intact, and `pvarch list` still reads it as a store without runs."""
     from tests.conftest import file_sink_store
 
     path = file_sink_store(spark, tmp_path)
@@ -118,6 +118,8 @@ def test_compact_cli_refuses_a_streamed_store(spark, tmp_path, capsys):
     assert "written by the streaming file sink of an earlier release" in err
     assert "compacted" not in out
     assert read_points(spark, path).count() == 3
+    assert cli.main(["--store", path, "list"]) == 0
+    assert "(store has no run partitions)" in capsys.readouterr().out
 
 
 def test_archive_lands_in_the_current_run(spark, tmp_path, capsys):

@@ -16,6 +16,7 @@ from epicsarchiver_spark.plans import (
 from epicsarchiver_spark.sources.points_store import (
     BUCKETS_META,
     POINTS_READ_SCHEMA,
+    batch_of,
     bucket_of,
     compact_store,
     data_schema,
@@ -512,8 +513,10 @@ def test_stamped_store_without_data_reads_empty(spark, tmp_path):
 
 @pytest.fixture(scope="module")
 def streamed_store(spark, tmp_path_factory):
-    """A 4-bucket store written by the archive stream (one batch, one
-    keyed delta in its first run)."""
+    """A 4-bucket store written by the archive stream (two batches, two
+    keyed deltas in its first run)."""
+    import os
+
     from epicsarchiver_spark.streaming.ingest import (
         EVENT_SCHEMA,
         archive_query,
@@ -522,10 +525,13 @@ def streamed_store(spark, tmp_path_factory):
 
     root = tmp_path_factory.mktemp("streamed")
     (root / "events").mkdir()
-    pd.DataFrame(
-        {"pvname": ["X", "Y", "X"], "time": [0.0, 50.0, 100.0], "value": [1.0, 2.0, 3.0]}
-    ).to_parquet(root / "events" / "p0.parquet", index=False)
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(root / "events"))
+    for i, rows in enumerate(((["X", "Y"], [0.0, 50.0], [1.0, 2.0]), (["X"], [100.0], [3.0]))):
+        f = root / "events" / f"p{i}.parquet"
+        pd.DataFrame(dict(zip(("pvname", "time", "value"), rows))).to_parquet(f, index=False)
+        os.utime(f, (1e9 + i, 1e9 + i))  # the source takes files in modification order
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(root / "events"))
+    )
     path = str(root / "store")
     q = (
         archive_query(compressed_stream(stream, 5.0, 0.0, flush_ms=None), path, str(root / "ckpt"), buckets=4)
@@ -731,6 +737,57 @@ def test_a_keyed_batch_lands_once_by_batch_id(spark, tmp_path):
         write_points(_pts(spark), path, run="r1", n_buckets=4, batch=("q.a", 2))
 
 
+def test_a_large_keyed_batch_lands_a_file_per_partition(spark, tmp_path):
+    """A keyed batch the plan sizes above one scan split lands one sorted
+    file per partition of its frame, at most the shuffle partitions, each
+    series in one file and every file named by the batch key. Its replay
+    replaces them, and a replay landing fewer files deletes the rest;
+    compact_store folds an earlier batch and leaves every file of the
+    writer's last one."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "store")
+    names = [f"PV:{i:02d}" for i in range(16)]
+    batches = {i: _pts(spark, names, t0=100 * i).repartition(4, "pvname") for i in (0, 1)}
+    want = sorted(r for b in batches.values() for r in _rows(b))
+    confs = {"spark.sql.files.maxPartitionBytes": "64", "spark.sql.shuffle.partitions": "4"}
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        write_points(batches[0], path, run="r1", n_buckets=4, batch=("qa", 0))
+        first = sorted(os.path.basename(f) for f in _files(path, "r1", -1))
+        write_points(batches[0], path, run="r1", n_buckets=4, batch=("qa", 0))
+        assert sorted(os.path.basename(f) for f in _files(path, "r1", -1)) == first
+        write_points(batches[1], path, run="r1", n_buckets=4, batch=("qa", 1))
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert 1 < len(first) <= 4 and first[-1] == "0.qa.parquet"
+    assert all(batch_of(n) == ("qa", 0) for n in first)
+    files = _files(path, "r1", -1)
+    assert _sorted_by_pvname_time(files)
+    for i in (0, 1):
+        owners = [
+            set(pq.read_table(f, columns=["pvname"]).column(0).to_pylist())
+            for f in files
+            if os.path.basename(f).startswith(f"{i}.")
+        ]
+        assert sum(map(len, owners)) == len(set().union(*owners)) == len(names)
+    assert _rows(read_points(spark, path).select("pvname", "time", "value")) == want
+    last = sorted(os.path.basename(f) for f in files if os.path.basename(f).startswith("1."))
+    write_points(batches[0], path, run="r1", n_buckets=4, batch=("qa", 0))  # one file now
+    assert [n for n in sorted(map(os.path.basename, _files(path, "r1", -1))) if n.startswith("0.")] == [
+        "0.qa.parquet"
+    ]
+    assert _rows(read_points(spark, path).select("pvname", "time", "value")) == want
+    assert compact_store(spark, path)["run=r1/bucket=-1"] == len(last)
+    assert sorted(os.path.basename(f) for f in _files(path, "r1", -1)) == last
+    assert _rows(read_points(spark, path).select("pvname", "time", "value")) == want
+
+
 def _answers(spark, path, names):
     """What the facade answers for every PV of the store."""
     from epicsarchiver_spark.api import PVArchEngine
@@ -800,17 +857,17 @@ def _store_rows(spark, path):
 def test_fold_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
     """A crash before any rename or delete of a fold, then one more
     compact_store pass: the store holds the same rows, each once, no
-    delta and no staging, and the run's watermark holds the keyed
-    delta's batch id, so a replay of that batch appends nothing."""
-    import json
+    staging, and no delta but the keyed writer's highest batch, left
+    unfolded, so a replay of that batch replaces its own file."""
     import os
     import shutil
 
     base = str(tmp_path / "base")
     _delta_store(spark, base)
-    keyed = _pts(spark, ["PV:A", "PV:G"], t0=300)
-    write_points(keyed, base, run="r1", n_buckets=4, batch=("q1", 7))
-    assert len(_files(base, "r1", -1)) == 3
+    keyed = {i: _pts(spark, ["PV:A", "PV:G"], t0=t0) for i, t0 in ((6, 300), (7, 400))}
+    for i, rows in keyed.items():
+        write_points(rows, base, run="r1", n_buckets=4, batch=("q1", i))
+    assert len(_files(base, "r1", -1)) == 4
     want = _store_rows(spark, base)
     n_steps = _fold_steps(spark, shutil.copytree(base, str(tmp_path / "clean")), monkeypatch)
     assert n_steps >= 8  # commit, two renames per bucket, deletes
@@ -822,13 +879,51 @@ def test_fold_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
                 compact_store(spark, path)
         compact_store(spark, path)
         assert _store_rows(spark, path) == want, step
-        assert not _files(path, "r1", -1)
-        left = set(os.listdir(f"{path}/run=r1")) - {"_watermark", "._watermark.crc"}
-        assert all(n.startswith("bucket=") and n != "bucket=-1" for n in left), left
-        with open(f"{path}/run=r1/_watermark") as fh:
-            assert json.load(fh) == {"q1": 7}, step
-    write_points(keyed, path, run="r1", n_buckets=4, batch=("q1", 7))
-    assert not _files(path, "r1", -1) and _store_rows(spark, path) == want
+        assert [os.path.basename(f) for f in _files(path, "r1", -1)] == ["7.q1.parquet"], step
+        left = os.listdir(f"{path}/run=r1")
+        assert all(n.startswith("bucket=") for n in left), left
+    write_points(keyed[7], path, run="r1", n_buckets=4, batch=("q1", 7))
+    assert len(_files(path, "r1", -1)) == 1 and _store_rows(spark, path) == want
+
+
+def test_a_delta_write_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    """A plain delta append and a keyed batch, each crashed before every
+    rename or delete it makes: the store reads the rows of before the
+    write or of after it, never a partly landed file (the aside is
+    hidden). A keyed batch's replay then lands its rows once whatever
+    the step; a plain append's retry does when the crash left the rows
+    of before. compact_store deletes the asides crashes left."""
+    import glob
+    import shutil
+
+    base = str(tmp_path / "base")
+    _delta_store(spark, base)
+    before = _store_rows(spark, base)
+    new = _pts(spark, ["PV:A", "PV:H"], t0=300)
+    for batch in (None, ("q1", 0)):
+        tag = "plain" if batch is None else "keyed"
+        clean = shutil.copytree(base, str(tmp_path / f"{tag}_clean"))
+        with monkeypatch.context() as m:
+            calls = _crash_at(m, -1)
+            write_points(new, clean, run="r1", n_buckets=4, batch=batch)
+        after = _store_rows(spark, clean)
+        assert len(after) == len(before) + new.count()
+        assert calls[0] == 3  # the delta's rename, its aside's delete, the partial's rename
+        for step in range(calls[0]):
+            path = shutil.copytree(base, str(tmp_path / f"{tag}{step}"))
+            with monkeypatch.context() as m:
+                _crash_at(m, step)
+                with pytest.raises(RuntimeError, match="injected crash"):
+                    write_points(new, path, run="r1", n_buckets=4, batch=batch)
+            got = _store_rows(spark, path)
+            assert got == (before if step == 0 else after), (tag, step)
+            assert bool(glob.glob(f"{path}/run=r1/bucket=-1/.*.tmp")) == (step < 2), (tag, step)
+            if batch is not None or got == before:
+                write_points(new, path, run="r1", n_buckets=4, batch=batch)
+                assert _store_rows(spark, path) == after, (tag, step)
+            compact_store(spark, path)
+            assert not glob.glob(f"{path}/run=r1/bucket=-1/.*.tmp"), (tag, step)
+            assert _store_rows(spark, path) == after, (tag, step)
 
 
 def test_compaction_staging_is_hidden_from_readers(spark, tmp_path, monkeypatch):
@@ -1111,25 +1206,24 @@ def test_a_view_of_the_frame_scans(spark, summary_store):
 
 
 def test_a_streamed_store_has_partials_and_compacts(spark, streamed_store, tmp_path):
-    """The archive stream lands a run, a delta and its partials, so its
-    lookups answer from the partials as the scan does; compact_store
-    folds the delta into its buckets and raises the run's watermark to
-    the folded batch, with the rows and lookups unchanged."""
-    import json
+    """The archive stream lands a run, a delta per batch and their
+    partials, so its lookups answer from the partials as the scan does;
+    compact_store folds the first batch's delta into its buckets and
+    leaves the last one (the batch a restarted stream replays), with the
+    rows and lookups unchanged."""
     import os
 
-    (delta,) = _files(streamed_store, "run_00001", -1)
-    assert os.path.basename(delta).startswith("0.")
+    assert [os.path.basename(f)[:2] for f in sorted(_files(streamed_store, "run_00001", -1))] == ["0.", "1."]
     assert not _uncovered(spark, streamed_store)
     got = _summary_is_scan(spark, streamed_store)
     assert got["get_pvnames"] == ["X", "Y"]
     path = _copy(streamed_store, tmp_path)
     rows = _store_rows(spark, path)
     done = compact_store(spark, path)
-    assert done["run=run_00001/bucket=-1"] == 0 and not _files(path, "run_00001", -1)
+    assert done.pop("run=run_00001/bucket=-1") == 1 and done
+    (left,) = _files(path, "run_00001", -1)
+    assert os.path.basename(left).startswith("1.")
     assert _store_rows(spark, path) == rows
-    with open(f"{path}/run=run_00001/_watermark") as fh:
-        assert list(json.load(fh).values()) == [0]
     assert _summary_is_scan(spark, path) == got and not _uncovered(spark, path)
 
 

@@ -983,10 +983,11 @@ def test_archive_append_exactly_once_across_restarts(spark, tmp_path):
 
 
 def test_archive_replay_of_a_compacted_batch_appends_nothing(spark, tmp_path):
-    """A batch replayed after compact_store folded its delta (a crash
-    before the batch's commit, simulated by deleting its commit entry)
-    writes nothing at or below the run's watermark, still consumes the
-    batch, so the query does not fail, and appends no row."""
+    """A batch replayed after compact_store ran (a crash before the
+    batch's commit, simulated by deleting its commit entry) finds its
+    own delta, which the compaction left unfolded as the stream's
+    highest batch while it folded the one before, and replaces it: the
+    query does not fail and appends no row."""
     import os
 
     from epicsarchiver_spark.sources.points_store import compact_store
@@ -998,7 +999,9 @@ def test_archive_replay_of_a_compacted_batch_appends_nothing(spark, tmp_path):
     out, ckpt = str(tmp_path / "rc_points"), str(tmp_path / "rc_ckpt")
 
     def run_once():
-        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
+        stream = (
+            spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
+        )
         q = (
             archive_query(
                 compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None), out, ckpt, buckets=4
@@ -1011,14 +1014,16 @@ def test_archive_replay_of_a_compacted_batch_appends_nothing(spark, tmp_path):
         return _archived(spark, out)
 
     first = run_once()
-    assert len(_deltas(out)) == 1 and set(first) == batch_spec(events)
-    for name in ("0", ".0.crc"):
+    assert [d[:2] for d in _deltas(out)] == ["0.", "1."] and set(first) == batch_spec(events)
+    for name in ("1", ".1.crc"):
         os.remove(os.path.join(ckpt, "commits", name))
-    assert compact_store(spark, out)["run=run_00001/bucket=-1"] == 0
+    assert compact_store(spark, out)["run=run_00001/bucket=-1"] == 1
+    (last,) = _deltas(out)
+    assert last.startswith("1.")
     again = run_once()
-    assert not _deltas(out)
+    assert _deltas(out) == [last]
     assert sorted(again) == sorted(first) and len(again) == len(set(again))
-    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+    assert os.path.exists(os.path.join(ckpt, "commits", "1"))
 
 
 def _two_batch_events(src, n_pvs: int = 200) -> pd.DataFrame:
@@ -1093,6 +1098,57 @@ def test_archive_stream_lands_one_file_per_batch(spark, tmp_path):
     assert set(got) == batch_spec(events)
 
 
+def test_archive_stream_writes_a_large_batch_in_parallel(spark, tmp_path):
+    """A micro-batch the plan sizes above one scan split lands as at most
+    one file per state partition, each written by the stateful stage's
+    own task (a write job per batch ends in a stage of as many tasks as
+    the checkpoint's state partitions, and no job has a single-task
+    stage), each sorted by (pvname, time) and named by the batch key;
+    the archived rows equal the batch spec."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from epicsarchiver_spark.sources.points_store import batch_of
+    from epicsarchiver_spark.streaming.ingest import archive_query, compressed_stream
+
+    src = tmp_path / "lb_events"
+    src.mkdir()
+    events = _two_batch_events(src)
+    out = str(tmp_path / "lb_points")
+    session = spark.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", "8")
+    session.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    stream = (
+        session.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
+    )
+    q = (
+        archive_query(
+            compressed_stream(stream, DEADTIME, DEADBAND, flush_ms=None),
+            out, str(tmp_path / "lb_ckpt"), buckets=16,
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    assert q.exception() is None
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = [
+        [st.getStageInfo(s).numTasks for s in sorted(st.getJobInfo(j).stageIds)]
+        for j in sorted(st.getJobIdsForGroup(str(q.runId)))
+    ]
+    assert sum(tasks[-1] == 8 for tasks in jobs) >= 2 and all(1 not in tasks for tasks in jobs), jobs
+    per_batch = [[d for d in _deltas(out) if batch_of(d)[1] == i] for i in (0, 1)]
+    assert all(1 < len(names) <= 8 for names in per_batch), per_batch
+    for f in glob.glob(f"{out}/run=*/bucket=-1/*.parquet"):
+        rows = pq.read_table(f, columns=["pvname", "time"]).to_pylist()
+        assert rows == sorted(rows, key=lambda r: (r["pvname"], r["time"])), f
+    got = _archived(spark, out)
+    assert len(got) == len(set(got)) and set(got) == batch_spec(events)
+
+
 def _files_per_dir_per_batch(out) -> list[dict[str, int]]:
     """From the store's keyed delta names (``points_store.batch_of``):
     per micro-batch, the number of data files it landed in each
@@ -1114,9 +1170,9 @@ def _files_per_dir_per_batch(out) -> list[dict[str, int]]:
 def test_archive_stream_writes_one_file_per_bucket_per_batch(spark, tmp_path):
     """The archive sink writes at most one data file per bucket directory
     per micro-batch: each batch lands as one file in its run's delta
-    partition, and ``compact_store`` folds the deltas into one file per
-    touched bucket. The archived rows equal the batch spec before and
-    after the fold."""
+    partition, and ``compact_store`` folds the first batch's delta into
+    one file per touched bucket, leaving the last. The archived rows
+    equal the batch spec before and after the fold."""
     import os
 
     from epicsarchiver_spark.sources.points_store import compact_store
@@ -1148,7 +1204,8 @@ def test_archive_stream_writes_one_file_per_bucket_per_batch(spark, tmp_path):
     assert len(before) == len(set(before)) and set(before) == batch_spec(events)
 
     folded = compact_store(spark, out)
-    assert folded.pop("run=run_00001/bucket=-1") == 0 and not _deltas(out)
+    assert folded.pop("run=run_00001/bucket=-1") == 1  # the last batch stays a delta
+    assert [d[:2] for d in _deltas(out)] == ["1."]
     assert len(folded) == 16 and set(folded.values()) == {1}, folded
     for d in os.listdir(os.path.join(out, "run=run_00001")):
         if d.startswith("bucket="):
